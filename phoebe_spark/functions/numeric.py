@@ -82,9 +82,9 @@ def lit_long_array(xs) -> "Column":
     if not vals:
         return F.array().cast("array<bigint>")
     # a BIGINT literal must fit in int64 or the parsed `NNNL` form fails
-    # at analysis time with an opaque error — assert at construction
-    # (ADVICE r11; no current caller passes values outside int64)
-    assert all(-(2**63) <= x < 2**63 for x in vals), "lit_long_array: int64 overflow"
+    # at analysis time with an opaque error — reject at construction
+    if not all(-(2**63) <= x < 2**63 for x in vals):
+        raise ValueError("lit_long_array: value outside int64")
     return F.expr("array(" + ",".join(f"{x}L" for x in vals) + ")")
 
 
@@ -96,9 +96,8 @@ def lit_long_matrix(rows) -> "Column":
     if not mat:
         # typed empty guard (ADVICE r11): F.expr("array()") is array<void>
         return F.array().cast("array<array<bigint>>")
-    assert all(
-        -(2**63) <= x < 2**63 for row in mat for x in row
-    ), "lit_long_matrix: int64 overflow"
+    if not all(-(2**63) <= x < 2**63 for row in mat for x in row):
+        raise ValueError("lit_long_matrix: value outside int64")
     return F.expr(
         "array("
         + ",".join("array(" + ",".join(f"{x}L" for x in row) + ")" for row in mat)

@@ -1748,15 +1748,12 @@ def q179_streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     TTL-bounded; here the drain is one availableNow pass (state =
     distinct fingerprints). The survivor join back to sources is
     fingerprint-keyed."""
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_dedup_gate
 
     d = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="q179_")
-    src_dir = f"{work}/src"
-    try:
+    with drain.scratch("q179_") as work:
+        src_dir = f"{work}/src"
         # ONE fingerprint scan, materialized once: the same parquet is the
         # streaming source (schema-pruned to the gate's 3 columns) AND the
         # batch side of the final per-source aggregate. The gate tie-breaks
@@ -1773,29 +1770,7 @@ def q179_streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fp STRING, doc_id STRING, event_time TIMESTAMP"
         ).parquet(src_dir)
         gate = streaming_dedup_gate(stream)  # ttl_ms=None: drain terminates
-        sink = f"{work}/survivors"
-        # fingerprint state doesn't need the session's shuffle width: the
-        # state store pins its partition count from the first batch and
-        # every micro-batch pays per-partition state/Python-worker
-        # overhead — drain narrow (fresh checkpoint each run) and restore
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                gate.writeStream.outputMode("append")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q179: streaming dedup drain did not finish within 300 s — "
-                    "refusing to report a partial survivor set"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(gate, work, output_mode="append")
 
         staged = spark.read.parquet(src_dir)
         # unhinted join: survivors ~= distinct fingerprints (corpus-sized at
@@ -1809,15 +1784,7 @@ def q179_streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("_sid").alias("n_survivors"),
             )
         )
-        # materialize (sources-sized) so the scratch dir can be removed —
-        # a lazily-returned frame would still be reading from it
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1844,13 +1811,11 @@ def q180_streaming_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/jobs.py `windowed_keyed_agg`). The value sum rides the
     DECIMAL policy so streaming partial-aggregation order matches the
     batch engines."""
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain
 
     ev = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q180_")
-    src_dir = f"{work}/src"
-    try:
+    with drain.scratch("q180_") as work:
+        src_dir = f"{work}/src"
         ev.select(
             F.expr("timestamp_micros(ts div 1000)").alias("event_time"),
             "event_type",
@@ -1867,27 +1832,7 @@ def q180_streaming_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("v"), 2).cast("double").alias("total_value"),
             )
         )
-        sink = f"{work}/windows"
-        # minute-bucket state doesn't need the session's shuffle width —
-        # drain narrow (fresh checkpoint each run) and restore
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                agg.writeStream.outputMode("complete")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("overwrite").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q180: streaming window drain did not finish within 300 s — "
-                    "refusing to report a partial state snapshot"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(agg, work, output_mode="complete")
 
         out = spark.read.parquet(sink).select(
             F.col("window.start").cast("long").alias("win_start"),
@@ -1895,14 +1840,7 @@ def q180_streaming_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "total_value",
         )
-        # materialize (minute-buckets-sized) so the scratch dir can go
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -2099,12 +2037,10 @@ def q184_streaming_profile_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer the DuckDB oracle computes. Money-sum policy: DECIMAL(18,4)
     accumulate, round(2), cast DOUBLE — exact under any batch/partial
     ordering."""
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain
 
-    work = tempfile.mkdtemp(prefix="q184_")
-    src_dir, sink, ck = f"{work}/src", f"{work}/profiles", f"{work}/ck"
-    try:
+    with drain.scratch("q184_") as work:
+        src_dir, sink = f"{work}/src", f"{work}/profiles"
         e = _t(spark, sf_dir, "events").select("event_type", "value")
         e.repartition(8).write.parquet(src_dir)
 
@@ -2123,42 +2059,13 @@ def q184_streaming_profile_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _append_version(bdf, bid: int) -> None:
             bdf.withColumn("_ver", F.lit(bid)).write.mode("append").parquet(sink)
 
-        # per-event-type state doesn't need the session's shuffle width —
-        # drain narrow (fresh checkpoint each run) and restore
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                prof.writeStream.outputMode("update")
-                .foreachBatch(_append_version)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q184: streaming profile drain did not finish within 300 s — "
-                    "refusing to read a partial profile store"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        drain.run(prof, work, output_mode="update", sink=_append_version)
 
         store = spark.read.parquet(sink)
-        latest = Window.partitionBy("event_type").orderBy(F.desc("_ver"))
-        out = (
-            store.withColumn("_rn", F.row_number().over(latest))
-            .filter(F.col("_rn") == 1)
-            .select("event_type", "n_events", "total_value")
+        out = drain.latest(store, key="event_type", order="_ver").select(
+            "event_type", "n_events", "total_value"
         )
-        # materialize before the scratch dir vanishes
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -2398,29 +2305,16 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     production source is a Kafka topic whose per-partition order is the
     arrival order. Money policy: DECIMAL(18,4) accumulate, round(2),
     cast DOUBLE."""
-    import glob
-    import os
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain, stateful
 
-    from phoebe_spark.streaming import stateful
-
-    work = tempfile.mkdtemp(prefix="q188_")
-    stage, src_dir, sink, ck = (
-        f"{work}/stage",
-        f"{work}/src",
-        f"{work}/out",
-        f"{work}/ck",
-    )
-    try:
-        os.makedirs(src_dir)
+    with drain.scratch("q188_") as work:
+        stage, src_dir = f"{work}/stage", f"{work}/src"
         e = _t(spark, sf_dir, "events").select(
             F.col("user_id").cast("string").alias("key"),
             F.lpad(F.col("event_id").cast("string"), 12, "0").alias("sid"),
             F.col("ts").alias("ord_ns"),
             F.col("value").cast("double").alias("value"),
         )
-        n_files = 4
         # Staging in ONE pruned pass. Two facts make this cheap without
         # touching the answer:
         #   1. The admitted set only needs the files to hold DISJOINT
@@ -2451,11 +2345,7 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_rn")
         )
         pruned.repartition(1).write.partitionBy("_slice").parquet(stage)
-        parts = sorted(glob.glob(f"{stage}/_slice=*/part-*.parquet"))
-        for i, part in enumerate(parts, start=1):
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+        drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
 
         stream = (
             spark.readStream.schema("key STRING, sid STRING, ord_ns LONG, value DOUBLE")
@@ -2472,29 +2362,7 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, quota=40, key_col="key", id_col="sid", ord_col="ord_ns",
             shards=8,
         )
-        # ~150 keys don't need the session's shuffle width: the state
-        # store pins its partition count from the first batch, and every
-        # micro-batch pays per-partition state/Python-worker overhead, so
-        # drain with 8 partitions (fresh checkpoint each run) and restore
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                admitted.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q188: streaming quota drain did not finish within 300 s — "
-                    "refusing to read a partial admitted set"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(admitted, work, output_mode="append")
         out = (
             spark.read.parquet(sink)
             .groupBy("key")
@@ -2506,13 +2374,7 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("ord").alias("max_ord"),
             )
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -3064,15 +2926,12 @@ def q197_stream_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-bounded, so state eviction is exactly the production contract
     (Spark drops buffered rows older than watermark + 30 min); the
     drained join output is aggregated before leaving the executors.
-    ~75 keys don't need the session's shuffle width, so the drain runs
-    with a narrow state store (same rationale as q188) and a fresh
-    checkpoint per run."""
-    import shutil
-    import tempfile
+    The drain runs with 8 state partitions and a fresh checkpoint
+    (streaming/drain.py)."""
+    from phoebe_spark.streaming import drain
 
     ev = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q197_")
-    try:
+    with drain.scratch("q197_") as work:
         staged = ev.select(
             "event_id",
             "user_id",
@@ -3112,27 +2971,7 @@ def q197_stream_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "lag_s"
             ),
         )
-        sink = f"{work}/pairs"
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                joined.writeStream.outputMode("append")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q197: stream-stream join drain did not finish within "
-                    "300 s — refusing to report a partial pair set"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(joined, work, output_mode="append")
 
         out = (
             spark.read.parquet(sink)
@@ -3143,13 +2982,7 @@ def q197_stream_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("lag_s").alias("max_lag_s"),
             )
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(

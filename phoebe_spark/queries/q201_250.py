@@ -217,14 +217,12 @@ def q203_session_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: complete mode is the DRAIN contract only; production
     session aggregation runs append + watermark so closed sessions emit
-    and state stays bounded by open sessions per key. ~150 keys drain
-    with a narrow state store (q188's rationale)."""
-    import shutil
-    import tempfile
+    and state stays bounded by open sessions per key. The drain runs
+    with 8 state partitions (streaming/drain.py)."""
+    from phoebe_spark.streaming import drain
 
     ev = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q203_")
-    try:
+    with drain.scratch("q203_") as work:
         ev.select(
             "user_id", F.expr("timestamp_micros(ts div 1000)").alias("event_time")
         ).write.parquet(f"{work}/src")
@@ -235,27 +233,7 @@ def q203_session_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessions = stream.groupBy(
             "user_id", F.session_window("event_time", "30 minutes").alias("sw")
         ).agg(F.count(F.lit(1)).alias("ev"))
-        sink = f"{work}/sessions"
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                sessions.writeStream.outputMode("complete")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("overwrite").parquet(sink)
-                )
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q203: session-window drain did not finish within 300 s — "
-                    "refusing to report a partial session snapshot"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(sessions, work, output_mode="complete")
 
         out = (
             spark.read.parquet(sink)
@@ -276,13 +254,7 @@ def q203_session_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.avg("dur"), 6).alias("avg_session_dur_s"),
             )
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -443,16 +415,11 @@ def q205_watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: this IS the production late-data contract (state
     evicted at the watermark, bounded by in-flight windows x keys);
     the drain's slice staging is one sorted write (q188's pattern)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain
 
     ev = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q205_")
-    src_dir = f"{work}/src"
-    os.makedirs(src_dir)
-    try:
+    with drain.scratch("q205_") as work:
+        src_dir = f"{work}/src"
         stage = f"{work}/stage"
         (
             ev.select(
@@ -464,11 +431,7 @@ def q205_watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.partitionBy("_slice")
             .parquet(stage)
         )
-        for i in range(1, 5):
-            (part,) = glob.glob(f"{stage}/_slice={i}/part-*.parquet")
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+        drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
 
         stream = (
             spark.readStream.schema("event_time TIMESTAMP, event_type STRING")
@@ -479,40 +442,14 @@ def q205_watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = stream.groupBy(
             F.window("event_time", "1 hour"), "event_type"
         ).agg(F.count(F.lit(1)).alias("n_events"))
-        sink = f"{work}/windows"
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                agg.writeStream.outputMode("append")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q205: watermark drain did not finish within 300 s — "
-                    "refusing to report a partial window set"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(agg, work, output_mode="append")
 
         out = spark.read.parquet(sink).select(
             "event_type",
             F.col("window.start").cast("long").alias("win_start"),
             "n_events",
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -911,22 +848,10 @@ def q209_streaming_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalars per key. The closed form is also WHY the offline/online
     split is safe at 100 TB: thresholds tuned on the batch prefix-sum
     window plan transfer unchanged to the streaming fold."""
-    import glob
-    import os
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain, stateful
 
-    from phoebe_spark.streaming import stateful
-
-    work = tempfile.mkdtemp(prefix="q209_")
-    stage, src_dir, sink, ck = (
-        f"{work}/stage",
-        f"{work}/src",
-        f"{work}/out",
-        f"{work}/ck",
-    )
-    try:
-        os.makedirs(src_dir)
+    with drain.scratch("q209_") as work:
+        stage, src_dir = f"{work}/stage", f"{work}/src"
         e = (
             _t(spark, sf_dir, "events")
             .filter(F.col("value").isNotNull())
@@ -947,11 +872,7 @@ def q209_streaming_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.ntile(4).over(w_ord).alias("_slice"),
         )
         staged.repartition(1).write.partitionBy("_slice").parquet(stage)
-        for i in range(1, 5):
-            (part,) = glob.glob(f"{stage}/_slice={i}/part-*.parquet")
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+        drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
 
         stream = (
             spark.readStream.schema("key STRING, dev DOUBLE, ord LONG")
@@ -966,26 +887,7 @@ def q209_streaming_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             ts_col="ord",
             value_col="dev",
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                monitored.writeStream.outputMode("update")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q209: streaming CUSUM drain did not finish within 300 s — "
-                    "refusing to report a partial monitor history"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(monitored, work, output_mode="update")
 
         out = (
             spark.read.parquet(sink)
@@ -996,13 +898,7 @@ def q209_streaming_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("alarm").cast("long")).alias("n_alarm_batches"),
             )
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1037,23 +933,11 @@ def q210_streaming_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: O(k) state per key vs the unbounded groupBy a naive
     top-k would carry; the exact-count audit side is sf-test scaffolding
     (at 100 TB you'd audit a sampled key subset)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from phoebe_spark.streaming import stateful
+    from phoebe_spark.streaming import drain, stateful
 
     K = 10
-    work = tempfile.mkdtemp(prefix="q210_")
-    stage, src_dir, sink, ck = (
-        f"{work}/stage",
-        f"{work}/src",
-        f"{work}/out",
-        f"{work}/ck",
-    )
-    try:
-        os.makedirs(src_dir)
+    with drain.scratch("q210_") as work:
+        stage, src_dir = f"{work}/stage", f"{work}/src"
         ev = _t(spark, sf_dir, "events")
         e = ev.select(
             F.col("event_type").alias("key"),
@@ -1066,11 +950,7 @@ def q210_streaming_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "key", "item", F.ntile(4).over(w_ord).alias("_slice")
         )
         staged.repartition(1).write.partitionBy("_slice").parquet(stage)
-        for i in range(1, 5):
-            (part,) = glob.glob(f"{stage}/_slice={i}/part-*.parquet")
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+        drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
 
         stream = (
             spark.readStream.schema("key STRING, item STRING")
@@ -1078,26 +958,7 @@ def q210_streaming_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         hh = stateful.keyed_heavy_hitters(stream, k=K)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                hh.writeStream.outputMode("update")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q210: streaming top-k drain did not finish within 300 s — "
-                    "refusing to audit a partial summary"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(hh, work, output_mode="update")
 
         emitted = spark.read.parquet(sink)
         w_last = Window.partitionBy("key")
@@ -1150,13 +1011,7 @@ def q210_streaming_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumnRenamed("key", "event_type")
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return audit.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1806,14 +1661,12 @@ def q218_stream_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: both sides are watermarked so join state is
     eviction-bounded exactly as in production; per-user aggregation
-    happens before anything leaves the executors; narrow state store
-    for the drain (q188 rationale), fresh checkpoint per run."""
-    import shutil
-    import tempfile
+    happens before anything leaves the executors; the drain runs with 8
+    state partitions and a fresh checkpoint (streaming/drain.py)."""
+    from phoebe_spark.streaming import drain
 
     ev = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q218_")
-    try:
+    with drain.scratch("q218_") as work:
         staged = ev.select(
             "event_id",
             "user_id",
@@ -1848,27 +1701,7 @@ def q218_stream_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "leftOuter",
         ).select("user_id", "v", F.col("r_user").isNotNull().alias("matched"))
-        sink = f"{work}/rows"
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                joined.writeStream.outputMode("append")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q218: stream outer-join drain did not finish within "
-                    "300 s — refusing to report a partial row set"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(joined, work, output_mode="append")
 
         out = (
             spark.read.parquet(sink)
@@ -1881,13 +1714,7 @@ def q218_stream_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.when(~F.col("matched"), 1)).alias("n_expired_null"),
             )
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _q219_oracle(iterations: int = 2, scale: int = 1_000_000) -> str:
@@ -2034,16 +1861,11 @@ def q220_dedup_within_watermark_drain(spark: SparkSession, sf_dir: str) -> DataF
 
     Scale: state is per-fingerprint with watermark-bounded TTL — the
     production ingest-dedup shape; per-fp aggregation before output."""
-    import glob
-    import os
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain
 
     d = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="q220_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
+    with drain.scratch("q220_") as work:
+        src_dir = f"{work}/src"
         base = d.select(
             _prefix_fp().alias("fp"),
             (F.col("doc_id") % 4).alias("slice"),
@@ -2058,11 +1880,7 @@ def q220_dedup_within_watermark_drain(spark: SparkSession, sf_dir: str) -> DataF
             ).alias("event_time"),
         )
         rows.repartition(1).write.partitionBy("slice").parquet(f"{work}/stage")
-        for i in range(4):
-            (part,) = glob.glob(f"{work}/stage/slice={i}/part-*.parquet")
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+        drain.stage_files(f"{work}/stage/slice=*/part-*.parquet", src_dir)
 
         stream = (
             spark.readStream.schema("fp STRING, event_time TIMESTAMP")
@@ -2071,27 +1889,7 @@ def q220_dedup_within_watermark_drain(spark: SparkSession, sf_dir: str) -> DataF
             .withWatermark("event_time", "61 seconds")
             .dropDuplicatesWithinWatermark(["fp"])
         )
-        sink = f"{work}/admitted"
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                stream.writeStream.outputMode("append")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q220: dedup-within-watermark drain did not finish within "
-                    "300 s — refusing to report a partial admitted set"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(stream, work, output_mode="append")
 
         admits = (
             spark.read.parquet(sink)
@@ -2106,13 +1904,7 @@ def q220_dedup_within_watermark_drain(spark: SparkSession, sf_dir: str) -> DataF
                 "n_dropped"
             ),
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _q221_oracle(seed_mod: int = 11, rounds: int = 2, num_hashes: int = 8, bands: int = 8) -> str:
@@ -2219,15 +2011,13 @@ def q222_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production guidance (docstring contract) is: quote-heavy text
     columns belong in parquet, CSV is an interchange edge — which is
     exactly what this entry demonstrates by needing multiLine."""
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain
 
     d = _t(spark, sf_dir, "documents")
     payload = F.concat(
         F.lit('pre,"fix\n'), F.col("text"), F.lit('\tsuf\\fix,"')
     )
-    work = tempfile.mkdtemp(prefix="q222_")
-    try:
+    with drain.scratch("q222_") as work:
         (
             d.select("doc_id", payload.alias("content"))
             .write.option("header", True)
@@ -2242,13 +2032,7 @@ def q222_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(f"{work}/csv")
         )
         out = back.select("doc_id", F.md5("content").alias("content_md5"))
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -2282,12 +2066,10 @@ def q223_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     data scan); the census itself is one map-side-combining groupBy.
     Guidance encoded here: evolved columns must be added nullable-only —
     exactly what parquet merge enforces."""
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain
 
     d = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="q223_")
-    try:
+    with drain.scratch("q223_") as work:
         d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "source").write.parquet(
             f"{work}/data/v=1"
         )
@@ -2301,13 +2083,7 @@ def q223_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("quality").isNull(), 1)).alias("n_missing_quality"),
             F.coalesce(F.sum("quality"), F.lit(0)).cast("long").alias("quality_total"),
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -2772,18 +2548,12 @@ def q229_event_timer_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFra
 
     Scale: state is three scalars per OPEN session; emission is
     exactly-once append."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import session_close_event_time
 
     ev = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q229_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
+    with drain.scratch("q229_") as work:
+        src_dir = f"{work}/src"
         staged = ev.select(
             F.col("user_id"),
             F.expr(
@@ -2803,11 +2573,7 @@ def q229_event_timer_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFra
         # state handoff and the timer paths (nonvacuity asserted in
         # tests/test_plans.py against the staging-independent oracle).
         staged.repartitionByRange(3, "event_time").write.parquet(f"{work}/stage")
-        parts = sorted(glob.glob(f"{work}/stage/part-*.parquet"))
-        for i, part in enumerate(parts, start=1):
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+        drain.stage_files(f"{work}/stage/part-*.parquet", src_dir)
 
         stream = (
             spark.readStream.schema("user_id LONG, event_time TIMESTAMP")
@@ -2818,38 +2584,12 @@ def q229_event_timer_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFra
         sessions = session_close_event_time(
             stream, gap_ms=_Q229_GAP_MS, key_col="user_id"
         )
-        sink = f"{work}/sessions"
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                sessions.writeStream.outputMode("append")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q229: event-timer session drain did not finish within "
-                    "300 s — refusing to report a partial session set"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(sessions, work, output_mode="append")
 
         out = spark.read.parquet(sink).select(
             "key", "session_start", "session_end", "n_events"
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -4025,18 +3765,12 @@ def q246_stream_first_match_drain(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: state per user is the live-window event times only (watermark
     pruned both sides); one shuffle on the key; exactly-once append.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import first_match_within
 
     ev = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="q246_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
+    with drain.scratch("q246_") as work:
+        src_dir = f"{work}/src"
         staged = ev.filter(F.col("event_type").isin("view", "purchase")).select(
             F.col("user_id"),
             F.col("event_type"),
@@ -4057,11 +3791,7 @@ def q246_stream_first_match_drain(spark: SparkSession, sf_dir: str) -> DataFrame
         # state handoff and the timer paths (nonvacuity asserted in
         # tests/test_plans.py against the staging-independent oracle).
         staged.repartitionByRange(3, "event_time").write.parquet(f"{work}/stage")
-        parts = sorted(glob.glob(f"{work}/stage/part-*.parquet"))
-        for i, part in enumerate(parts, start=1):
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+        drain.stage_files(f"{work}/stage/part-*.parquet", src_dir)
 
         stream = (
             spark.readStream.schema(
@@ -4078,36 +3808,10 @@ def q246_stream_first_match_drain(spark: SparkSession, sf_dir: str) -> DataFrame
             b_type="purchase",
             key_col="user_id",
         )
-        sink = f"{work}/matches"
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                matches.writeStream.outputMode("append")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q246: first-match drain did not finish within 300 s — "
-                    "refusing to report a partial match set"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(matches, work, output_mode="append")
 
         out = spark.read.parquet(sink).select("key", "a_time", "b_time", "lag_ms")
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -4131,8 +3835,8 @@ def q246_stream_first_match_drain(spark: SparkSession, sf_dir: str) -> DataFrame
 def q247_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DYNAMIC partition overwrite lifecycle: a day-partitioned fact table
     receives a restatement batch covering only the days with day%10==3
-    (values doubled), written with
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` — so ONLY the
+    (values doubled), written with the writer option
+    ``partitionOverwriteMode=dynamic`` — so ONLY the
     restated day directories are replaced and every other partition's
     files are untouched (verified by reading the final table back; the
     oracle states the expected post-restatement content). This is the
@@ -4144,24 +3848,25 @@ def q247_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     default!) would drop every partition first, which is the
     footgun this query pins the guard against.
     """
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain
 
     e = _t(spark, sf_dir, "events")
     base = e.select(
         (F.expr("ts div 1000000000") / 86400).cast("long").alias("day"),
         "value",
     )
-    work = tempfile.mkdtemp(prefix="q247_")
-    tbl = f"{work}/facts"
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
+    with drain.scratch("q247_") as work:
+        tbl = f"{work}/facts"
         base.write.partitionBy("day").parquet(tbl)
         restate = base.filter(F.col("day") % 10 == 3).select(
             "day", (F.col("value") * 2.0).alias("value")
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        restate.write.mode("overwrite").partitionBy("day").parquet(tbl)
+        (
+            restate.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("day")
+            .parquet(tbl)
+        )
         out = (
             spark.read.parquet(tbl)
             .groupBy("day")
@@ -4170,14 +3875,7 @@ def q247_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _dsum2(_dec("value")).alias("day_sum"),
             )
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -4272,9 +3970,8 @@ def q249_streaming_cdc_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFra
     replay (a re-run of batch N deterministically rewrites snapshot N+1).
     """
     import glob
-    import os
-    import shutil
-    import tempfile
+
+    from phoebe_spark.streaming import drain
 
     o = _t(spark, sf_dir, "orders")
     log_parts = [
@@ -4304,17 +4001,10 @@ def q249_streaming_cdc_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFra
             F.lit(None).cast("decimal(18,4)").alias("price"),
         ),
     ]
-    work = tempfile.mkdtemp(prefix="q249_")
-    src_dir = f"{work}/src"
-    store = f"{work}/store"
-    try:
-        os.makedirs(src_dir)
-        for v, part in enumerate(log_parts, start=1):
-            part.coalesce(1).write.parquet(f"{work}/stage{v}")
-            pf = glob.glob(f"{work}/stage{v}/part-*.parquet")[0]
-            dst = f"{src_dir}/{v:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * v, 1_000_000_000 + 10 * v))
+    with drain.scratch("q249_") as work:
+        src_dir = f"{work}/src"
+        store = f"{work}/store"
+        drain.stage_slices(log_parts, src_dir)
 
         def _merge(batch_df, batch_id: int) -> None:
             snaps = sorted(glob.glob(f"{store}/v*"))
@@ -4323,12 +4013,7 @@ def q249_streaming_cdc_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFra
                 merged_src = cur.unionByName(batch_df)
             else:
                 merged_src = batch_df
-            w = Window.partitionBy("k").orderBy(F.col("version").desc())
-            merged = (
-                merged_src.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
+            merged = drain.latest(merged_src, key="k", order="version")
             merged.write.mode("overwrite").parquet(f"{store}/v{batch_id:05d}")
 
         stream = (
@@ -4338,18 +4023,11 @@ def q249_streaming_cdc_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFra
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        q = (
-            stream.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
+        # no stateful exchange for the override to narrow: the merge job's
+        # own shuffle keeps the session width (8 partitions measured slower)
+        drain.run(
+            stream, work, output_mode="append", sink=_merge, state_partitions=None
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "q249: CDC upsert drain did not finish within 300 s — "
-                "refusing to report a partial store state"
-            )
         snaps = sorted(glob.glob(f"{store}/v*"))
         final = spark.read.parquet(snaps[-1])
         out = (
@@ -4360,13 +4038,7 @@ def q249_streaming_cdc_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFra
                 F.round(F.sum("price"), 2).cast("double").alias("total_price"),
             )
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(

@@ -2013,11 +2013,7 @@ def q275_streaming_holt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     work — the streaming form is how a million series smooth INCREMENTALLY
     every day without re-reading history.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_holt
 
     e = _t(spark, sf_dir, "events")
@@ -2041,17 +2037,15 @@ def q275_streaming_holt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         hc, (grid.k == hc.k) & (grid.lo + grid.d == hc.day), "left"
     ).select(grid.k, grid.d.cast("int").alias("d"), F.coalesce("c", F.lit(0.0)).alias("c"))
 
-    work = tempfile.mkdtemp(prefix="q275_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
-        for i, (d_lo, d_hi) in enumerate(((0, 10), (10, 20), (20, 30)), start=1):
-            part = dense.filter((F.col("d") >= d_lo) & (F.col("d") < d_hi))
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+    with drain.scratch("q275_") as work:
+        src_dir = f"{work}/src"
+        drain.stage_slices(
+            (
+                dense.filter((F.col("d") >= d_lo) & (F.col("d") < d_hi))
+                for d_lo, d_hi in ((0, 10), (10, 20), (20, 30))
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("k STRING, d INT, c DOUBLE")
@@ -2059,58 +2053,16 @@ def q275_streaming_holt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_holt(stream, alpha=a, gamma=g, key_col="k")
-        sink = f"{work}/holt"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q275: streaming Holt drain did not finish within 300 s — "
-                    "refusing to report a partial smooth"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = spark.read.parquet(sink)
-        final = (
-            states.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("key").orderBy(F.col("n").desc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .select(
-                F.col("key").alias("event_type"),
-                (F.round("level", 6) + F.lit(0.0)).alias("level"),
-                (F.round("trend", 6) + F.lit(0.0)).alias("trend"),
-                (F.round(F.col("level") + 1 * F.col("trend"), 6) + F.lit(0.0)).alias("f1"),
-                (F.round(F.col("level") + 2 * F.col("trend"), 6) + F.lit(0.0)).alias("f2"),
-                (F.round(F.col("level") + 3 * F.col("trend"), 6) + F.lit(0.0)).alias("f3"),
-            )
+        sink = drain.run(out, work, output_mode="update")
+        final = drain.latest(spark.read.parquet(sink)).select(
+            F.col("key").alias("event_type"),
+            (F.round("level", 6) + F.lit(0.0)).alias("level"),
+            (F.round("trend", 6) + F.lit(0.0)).alias("trend"),
+            (F.round(F.col("level") + 1 * F.col("trend"), 6) + F.lit(0.0)).alias("f1"),
+            (F.round(F.col("level") + 2 * F.col("trend"), 6) + F.lit(0.0)).alias("f2"),
+            (F.round(F.col("level") + 3 * F.col("trend"), 6) + F.lit(0.0)).alias("f3"),
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 # ---------------------------------------------------------------------------
 # Round 7: QoS / operations analytics (the reference's own domain — QoS-aware
@@ -3536,11 +3488,7 @@ def q289_streaming_burn_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(new hours) work — the streaming form alerts on an unbounded metric
     stream with O(1) memory, no re-reading history.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_burn_rate
 
     e = _t(spark, sf_dir, "events")
@@ -3548,20 +3496,16 @@ def q289_streaming_burn_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("errs"),
     )
-    work = tempfile.mkdtemp(prefix="q289_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
+    with drain.scratch("q289_") as work:
+        src_dir = f"{work}/src"
         lo = h.agg(F.min("hr")).collect()[0][0]
-        for i, (h_lo, h_hi) in enumerate(((0, 240), (240, 480), (480, 100000)), start=1):
-            part = h.filter(
-                (F.col("hr") >= lo + h_lo) & (F.col("hr") < lo + h_hi)
-            )
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+        drain.stage_slices(
+            (
+                h.filter((F.col("hr") >= lo + h_lo) & (F.col("hr") < lo + h_hi))
+                for h_lo, h_hi in ((0, 240), (240, 480), (480, 100000))
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("hr LONG, n LONG, errs LONG")
@@ -3569,33 +3513,7 @@ def q289_streaming_burn_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_burn_rate(stream)
-        sink = f"{work}/burn"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q289: streaming burn drain did not finish within 300 s — "
-                    "refusing to report a partial alert stream"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(out, work, output_mode="update")
         res = spark.read.parquet(sink).select(
             "hr",
             "n",
@@ -3604,13 +3522,7 @@ def q289_streaming_burn_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("burn_long", 6).alias("burn_long"),
             "page",
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # the drain must reproduce the batch operator's oracle exactly — batch
@@ -4540,31 +4452,20 @@ def q300_streaming_hist_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: the streaming agg is all-JVM (no Python stateful
     operator) with O(256) state cells; the drain stages narrow
-    (shuffle=8, fresh checkpoint, scratch cleaned in try/finally).
+    (8 state partitions, fresh checkpoint; see streaming/drain.py).
     """
-    import shutil
-    import tempfile
+    from phoebe_spark.streaming import drain
 
     o = _t(spark, sf_dir, "orders")
     vals, binned = _order_price_bins(o)
-    work = tempfile.mkdtemp(prefix="q300_")
-    src_dir = f"{work}/src"
-    sink = f"{work}/hist"
-    try:
-        import glob
-        import os
-
+    with drain.scratch("q300_") as work:
+        src_dir = f"{work}/src"
         # one file per half: batch 1 streams half 0, batch 2 half 1 —
         # state after the drain holds the merged sketch
-        os.makedirs(src_dir)
-        for idx, hv in enumerate((0, 1), start=1):
-            binned.filter(F.col("half") == hv).repartition(1).write.parquet(
-                f"{work}/h{hv}"
-            )
-            part = sorted(glob.glob(f"{work}/h{hv}/part-*.parquet"))[0]
-            dst = f"{src_dir}/{idx:03d}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 10 * idx, 1_000_000_000 + 10 * idx))
+        drain.stage_slices(
+            (binned.filter(F.col("half") == hv).repartition(1) for hv in (0, 1)),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("half LONG, bin LONG")
@@ -4572,33 +4473,11 @@ def q300_streaming_hist_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         agg = stream.groupBy("half", "bin").agg(F.count(F.lit(1)).alias("c"))
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                agg.writeStream.outputMode("complete")
-                .foreachBatch(
-                    lambda bdf, _bid: bdf.write.mode("overwrite").parquet(sink)
-                )
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q300: streaming histogram drain did not finish within 300 s — "
-                    "refusing to assemble from a partial sketch"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(agg, work, output_mode="complete")
 
         hb = spark.read.parquet(sink).select("half", "bin", "c")
         out = _hist_sketch_assembly(spark, vals, binned, hb)
-        out = out.localCheckpoint(eager=True)  # materialize before cleanup
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 # the streaming drain must reproduce the batch sketch's oracle exactly —

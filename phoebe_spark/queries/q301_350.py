@@ -500,13 +500,11 @@ def q306_streaming_sprt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the live event feed and stopping EARLY).
 
     Scale notes: five integers of state per experiment key; the drain
-    stages narrow (shuffle=8, fresh checkpoint, scratch cleaned)."""
-    import glob
+    stages narrow (8 state partitions, fresh checkpoint; see
+    streaming/drain.py)."""
     import math
-    import os
-    import shutil
-    import tempfile
 
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_sprt
 
     e = _t(spark, sf_dir, "events")
@@ -518,21 +516,17 @@ def q306_streaming_sprt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("x"),
         F.lit("exp1").alias("key"),
     )
-    work = tempfile.mkdtemp(prefix="q306_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
+    with drain.scratch("q306_") as work:
+        src_dir = f"{work}/src"
         n_total = s.count()
         cut1, cut2 = n_total // 3, 2 * n_total // 3
-        for idx, (lo_i, hi_i) in enumerate(
-            ((0, cut1), (cut1, cut2), (cut2, n_total + 1)), start=1
-        ):
-            part = s.filter((F.col("i") > lo_i) & (F.col("i") <= hi_i))
-            part.coalesce(1).write.parquet(f"{work}/stage{idx}")
-            pf = glob.glob(f"{work}/stage{idx}/part-*.parquet")[0]
-            dst = f"{src_dir}/{idx:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * idx, 1_000_000_000 + 10 * idx))
+        drain.stage_slices(
+            (
+                s.filter((F.col("i") > lo_i) & (F.col("i") <= hi_i))
+                for lo_i, hi_i in ((0, cut1), (cut1, cut2), (cut2, n_total + 1))
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("i LONG, x INT, key STRING")
@@ -540,44 +534,15 @@ def q306_streaming_sprt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_sprt(stream, d_threshold=15)
-        sink = f"{work}/sprt"
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q306: streaming SPRT drain did not finish within 300 s — "
-                    "refusing to report a partial decision"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        sink = drain.run(out, work, output_mode="update")
 
-        states = spark.read.parquet(sink)
-        final = (
-            states.withColumn(
-                "rk",
-                F.row_number().over(Window.partitionBy("key").orderBy(F.col("n").desc())),
-            )
-            .filter(F.col("rk") == 1)
-            .select(
-                F.col("n_obs").cast("long").alias("n_obs"),
-                F.col("decision").cast("int").alias("decision"),
-                F.round(F.col("d_stop") * float(math.log(11.0 / 9.0)), 6).alias("llr"),
-                F.lit(15).cast("long").alias("d_threshold"),
-            )
-            .localCheckpoint(eager=True)
+        final = drain.latest(spark.read.parquet(sink)).select(
+            F.col("n_obs").cast("long").alias("n_obs"),
+            F.col("decision").cast("int").alias("decision"),
+            F.round(F.col("d_stop") * float(math.log(11.0 / 9.0)), 6).alias("llr"),
+            F.lit(15).cast("long").alias("d_threshold"),
         )
-        return final
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return final.localCheckpoint(eager=True)
 
 
 # the streaming drain must reproduce the batch monitor's oracle exactly —
@@ -1520,11 +1485,7 @@ def q315_streaming_page_hinkley_drain(spark: SparkSession, sf_dir: str) -> DataF
     rows) work — drift monitoring over unbounded streams at O(1) memory
     per series.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_page_hinkley
 
     e = _t(spark, sf_dir, "events")
@@ -1550,17 +1511,15 @@ def q315_streaming_page_hinkley_drain(spark: SparkSession, sf_dir: str) -> DataF
         grid.k, grid.d.cast("int").alias("d"), F.coalesce("c", F.lit(0.0)).alias("c")
     )
 
-    work = tempfile.mkdtemp(prefix="q315_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
-        for i, (d_lo, d_hi) in enumerate(((0, 10), (10, 20), (20, 30)), start=1):
-            part = dense.filter((F.col("d") >= d_lo) & (F.col("d") < d_hi))
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+    with drain.scratch("q315_") as work:
+        src_dir = f"{work}/src"
+        drain.stage_slices(
+            (
+                dense.filter((F.col("d") >= d_lo) & (F.col("d") < d_hi))
+                for d_lo, d_hi in ((0, 10), (10, 20), (20, 30))
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("k STRING, d INT, c DOUBLE")
@@ -1568,61 +1527,17 @@ def q315_streaming_page_hinkley_drain(spark: SparkSession, sf_dir: str) -> DataF
             .parquet(src_dir)
         )
         out = streaming_page_hinkley(stream, delta=delta, lam=lam, key_col="k")
-        sink = f"{work}/ph"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q315: streaming Page-Hinkley drain did not finish within"
-                    " 300 s — refusing to report a partial drift state"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = spark.read.parquet(sink)
-        final = (
-            states.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("key").orderBy(F.col("n").desc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .select(
-                F.col("key").alias("event_type"),
-                F.col("n").alias("n_days"),
-                (F.round("mean", 6) + F.lit(0.0)).alias("mean"),
-                (F.round("u", 6) + F.lit(0.0)).alias("u"),
-                (F.round("min_u", 6) + F.lit(0.0)).alias("min_u"),
-                (F.round(F.col("u") - F.col("min_u"), 6) + F.lit(0.0)).alias(
-                    "ph_stat"
-                ),
-                F.col("alarm").alias("alarm_day"),
-            )
+        sink = drain.run(out, work, output_mode="update")
+        final = drain.latest(spark.read.parquet(sink)).select(
+            F.col("key").alias("event_type"),
+            F.col("n").alias("n_days"),
+            (F.round("mean", 6) + F.lit(0.0)).alias("mean"),
+            (F.round("u", 6) + F.lit(0.0)).alias("u"),
+            (F.round("min_u", 6) + F.lit(0.0)).alias("min_u"),
+            (F.round(F.col("u") - F.col("min_u"), 6) + F.lit(0.0)).alias("ph_stat"),
+            F.col("alarm").alias("alarm_day"),
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # the streaming drain must reproduce the batch detector's oracle exactly —
@@ -2594,11 +2509,7 @@ def q324_streaming_psi_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is 20 longs per key; each micro-batch does O(new bins)
     work — continuous drift scoring at O(1) memory per monitored stream.
     """
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_bin_counts
 
     e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
@@ -2615,23 +2526,17 @@ def q324_streaming_psi_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = lo_hi["lo"], lo_hi["hi"]
     third = max(1, (hi - lo + 1) // 3)
 
-    work = tempfile.mkdtemp(prefix="q324_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
-        for i, (d_lo, d_hi) in enumerate(
-            ((0, third), (third, 2 * third), (2 * third, 10**9)), start=1
-        ):
-            part = (
+    with drain.scratch("q324_") as work:
+        src_dir = f"{work}/src"
+        drain.stage_slices(
+            (
                 s.filter((F.col("day") >= lo + d_lo) & (F.col("day") < lo + d_hi))
                 .groupBy("event_type", "bin", "arm")
                 .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+                for d_lo, d_hi in ((0, third), (third, 2 * third), (2 * third, 10**9))
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("event_type STRING, bin INT, arm INT, cnt LONG")
@@ -2639,43 +2544,9 @@ def q324_streaming_psi_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_bin_counts(stream, n_bins=10, key_col="event_type")
-        sink = f"{work}/psi"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q324: streaming PSI drain did not finish within 300 s — "
-                    "refusing to score a partial distribution"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = spark.read.parquet(sink)
-        final = (
-            states.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("key").orderBy(F.col("n").desc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .select(F.col("key").alias("event_type"), "c0", "c1")
+        sink = drain.run(out, work, output_mode="update")
+        final = drain.latest(spark.read.parquet(sink)).select(
+            F.col("key").alias("event_type"), "c0", "c1"
         )
         grid = final.select(
             "event_type",
@@ -2700,13 +2571,7 @@ def q324_streaming_psi_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round(psi, 6) + F.lit(0.0)).alias("psi"),
             F.when(psi > 0.2, 1).otherwise(0).alias("drifted"),
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # the streaming drain must reproduce the batch PSI's oracle exactly —

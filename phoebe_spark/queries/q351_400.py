@@ -807,12 +807,8 @@ def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     state traffic to d x w = 1,024 cells per slice; state is O(seeds),
     TTL-free; the probe join broadcasts 20 rows. One operator, two
     execution models, one answer."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from phoebe_spark.operators.dedup import md5_hash64
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_bin_counts
 
     d = _t(spark, sf_dir, "documents").filter(F.trim("text") != "")
@@ -835,13 +831,11 @@ def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(256),
     )
 
-    work = tempfile.mkdtemp(prefix="q353_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
-        for i in range(1, 4):
-            part = (
-                slice_counts.filter(F.col("sl") == i - 1)
+    with drain.scratch("q353_") as work:
+        src_dir = f"{work}/src"
+        drain.stage_slices(
+            (
+                slice_counts.filter(F.col("sl") == sl)
                 .select("tok", "tn", seeds)
                 .select(
                     F.col("s").cast("string").alias("key"),
@@ -851,12 +845,10 @@ def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .groupBy("key", "bin", "arm")
                 .agg(F.sum("cnt").alias("cnt"))
-            )
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+                for sl in range(3)
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("key STRING, bin INT, arm INT, cnt LONG")
@@ -864,43 +856,9 @@ def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_bin_counts(stream, n_bins=256, key_col="key")
-        sink = f"{work}/cms"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q353: streaming CMS drain did not finish within 300 s — "
-                    "refusing to score a partial sketch"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = spark.read.parquet(sink)
-        final = (
-            states.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("key").orderBy(F.col("n").desc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .select(F.col("key").cast("int").alias("s"), "c0")
+        sink = drain.run(out, work, output_mode="update")
+        final = drain.latest(spark.read.parquet(sink)).select(
+            F.col("key").cast("int").alias("s"), "c0"
         )
         counters = final.select(
             "s", F.posexplode("c0").alias("bucket", "c")
@@ -918,13 +876,7 @@ def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cms_est").cast("long").alias("cms_est"),
             (F.col("cms_est") - F.col("n")).cast("long").alias("overcount"),
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # Poisson(1) cumulative probabilities for k = 0..7 (literal, both engines)
@@ -4794,12 +4746,8 @@ def q391_streaming_bottomk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB story: the reservoir is O(k * keys) state, TTL-free; the
     pre-reduction is a keyed window on each micro-batch slice."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from phoebe_spark.operators.dedup import md5_hash64
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_bottom_k
 
     e = _t(spark, sf_dir, "events").select("event_type", "event_id")
@@ -4812,13 +4760,11 @@ def q391_streaming_bottomk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wk = Window.partitionBy("event_type").orderBy("h", "event_id")
 
-    work = tempfile.mkdtemp(prefix="q391_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
-        for i in range(1, 4):
-            part = (
-                hashed.filter(F.col("event_id") % 3 == i - 1)
+    with drain.scratch("q391_") as work:
+        src_dir = f"{work}/src"
+        drain.stage_slices(
+            (
+                hashed.filter(F.col("event_id") % 3 == r)
                 .withColumn("rnk", F.row_number().over(wk))
                 .filter(F.col("rnk") <= 20)
                 .select(
@@ -4826,12 +4772,10 @@ def q391_streaming_bottomk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("h"),
                     F.col("event_id").alias("id"),
                 )
-            )
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+                for r in range(3)
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("key STRING, h LONG, id LONG")
@@ -4839,43 +4783,9 @@ def q391_streaming_bottomk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_bottom_k(stream, k=20, key_col="key", hash_col="h", id_col="id")
-        sink = f"{work}/bk"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q391: streaming bottom-k drain did not finish within 300 s — "
-                    "refusing to score a partial sample"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = spark.read.parquet(sink)
-        final = (
-            states.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("key").orderBy(F.col("n_seen").desc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .select("key", F.arrays_zip("hs", "ids").alias("z"))
+        sink = drain.run(out, work, output_mode="update")
+        final = drain.latest(spark.read.parquet(sink), order="n_seen").select(
+            "key", F.arrays_zip("hs", "ids").alias("z")
         )
         res = (
             final.select("key", F.posexplode("z").alias("pos", "pair"))
@@ -4887,13 +4797,7 @@ def q391_streaming_bottomk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type", "rank")
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(

@@ -1770,11 +1770,7 @@ def q415_streaming_moments_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB story: O(keys) state (three longs per key), one row per key
     per micro-batch of state traffic; the final statistics are computed
     from the drained state frame, corpus-size-independent."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_moments
 
     e = (
@@ -1787,25 +1783,21 @@ def q415_streaming_moments_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    work = tempfile.mkdtemp(prefix="q415_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
-        for i in range(1, 4):
-            part = (
-                e.filter(F.col("event_id") % 3 == i - 1)
+    with drain.scratch("q415_") as work:
+        src_dir = f"{work}/src"
+        drain.stage_slices(
+            (
+                e.filter(F.col("event_id") % 3 == r)
                 .groupBy(F.col("event_type").alias("key"))
                 .agg(
                     F.count(F.lit(1)).cast("long").alias("n"),
                     F.sum("yc").cast("long").alias("s1"),
                     F.sum(F.col("yc") * F.col("yc")).cast("long").alias("s2"),
                 )
-            )
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+                for r in range(3)
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("key STRING, n LONG, s1 LONG, s2 LONG")
@@ -1813,41 +1805,12 @@ def q415_streaming_moments_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_moments(stream)
-        sink = f"{work}/mo"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q415: streaming moments drain did not finish within 300 s — "
-                    "refusing to score partial state"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = spark.read.parquet(sink)
-        # last emitted state per key == final accumulated moments
-        wlast = Window.partitionBy("key").orderBy(F.col("n").desc())
+        sink = drain.run(out, work, output_mode="update")
         final = (
-            states.withColumn("rk", F.row_number().over(wlast))
-            .filter(F.col("rk") == 1)
+            drain.latest(spark.read.parquet(sink))
             .select("key", "n", "s1", "s2")
-        ).localCheckpoint(eager=True)
+            .localCheckpoint(eager=True)
+        )
         return final.select(
             F.col("key").alias("event_type"),
             "n",
@@ -1858,8 +1821,6 @@ def q415_streaming_moments_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("var_value"),
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -4100,11 +4061,7 @@ def q433_streaming_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB story: O(keys * 64) state, at most 64 rows/key/batch of
     state traffic; the estimate is computed from the drained register
     frame, corpus-size-independent."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_hll
 
     e = _t(spark, sf_dir, "events").select(
@@ -4132,21 +4089,17 @@ def q433_streaming_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("r"),
         )
     )
-    work = tempfile.mkdtemp(prefix="q433_")
-    try:
+    with drain.scratch("q433_") as work:
         src_dir = f"{work}/src"
-        os.makedirs(src_dir)
-        for i in (1, 2, 3):
-            part = (
-                rho.filter(F.col("event_id") % 3 == i - 1)
+        drain.stage_slices(
+            (
+                rho.filter(F.col("event_id") % 3 == rem)
                 .groupBy("key", "idx")
                 .agg(F.max("r").cast("long").alias("r"))
-            )
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+                for rem in range(3)
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("key STRING, idx LONG, r LONG")
@@ -4154,40 +4107,12 @@ def q433_streaming_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_hll(stream)
-        sink = f"{work}/hll"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q433: streaming HLL drain did not finish within 300 s — "
-                    "refusing to score partial state"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = spark.read.parquet(sink)
-        wlast = Window.partitionBy("key").orderBy(F.col("n_batches").desc())
+        sink = drain.run(out, work, output_mode="update")
         final = (
-            states.withColumn("rk", F.row_number().over(wlast))
-            .filter(F.col("rk") == 1)
+            drain.latest(spark.read.parquet(sink), order="n_batches")
             .select("key", "regs")
-        ).localCheckpoint(eager=True)
+            .localCheckpoint(eager=True)
+        )
         est = final.select(
             "key",
             F.expr(
@@ -4222,8 +4147,6 @@ def q433_streaming_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "rel_err"
             ),
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -5276,11 +5276,7 @@ def q496_streaming_croston_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is six scalars per key; each micro-batch does O(new
     rows) work — the streaming form is how a million sparse SKUs
     re-forecast INCREMENTALLY per day without re-reading history."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.stateful import streaming_croston
 
     T, a = 60, 0.2
@@ -5310,17 +5306,15 @@ def q496_streaming_croston_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "brand", F.col("d").cast("int").alias("d"), F.coalesce("c", F.lit(0.0)).alias("c")
     )
 
-    work = tempfile.mkdtemp(prefix="q496_")
-    src_dir = f"{work}/src"
-    try:
-        os.makedirs(src_dir)
-        for i, (d_lo, d_hi) in enumerate(((0, 20), (20, 40), (40, 60)), start=1):
-            part = dense.filter((F.col("d") >= d_lo) & (F.col("d") < d_hi))
-            part.coalesce(1).write.parquet(f"{work}/stage{i}")
-            pf = glob.glob(f"{work}/stage{i}/part-*.parquet")[0]
-            dst = f"{src_dir}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+    with drain.scratch("q496_") as work:
+        src_dir = f"{work}/src"
+        drain.stage_slices(
+            (
+                dense.filter((F.col("d") >= d_lo) & (F.col("d") < d_hi))
+                for d_lo, d_hi in ((0, 20), (20, 40), (40, 60))
+            ),
+            src_dir,
+        )
 
         stream = (
             spark.readStream.schema("brand STRING, d INT, c DOUBLE")
@@ -5328,66 +5322,19 @@ def q496_streaming_croston_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = streaming_croston(stream, alpha=a, key_col="brand")
-        sink = f"{work}/croston"
-        # 8 state partitions while the stream runs (round-12: same
-        # measured override the earlier drains carry — the stateful
-        # exchange sizes its state-store tasks from
-        # spark.sql.shuffle.partitions, and 32 near-empty state
-        # partitions per micro-batch are pure fixed cost at this key
-        # cardinality; partition count does not affect results, only
-        # task bucketing. Scale note: at real key cardinality this is
-        # the knob that scales OUT, sized to keys, not cores).
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda bdf, _bid: bdf.write.mode("append").parquet(sink))
-                .option("checkpointLocation", f"{work}/ck")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "q496: streaming Croston drain did not finish within 300 s — "
-                    "refusing to report a partial state"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        states = spark.read.parquet(sink)
-        final = (
-            states.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("key").orderBy(F.col("n").desc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .select(
-                F.col("key").alias("brand"),
-                F.col("nd").cast("long").alias("n_demand_days"),
-                (F.round("z", 6) + F.lit(0.0)).alias("demand_size"),
-                (F.round("p", 6) + F.lit(0.0)).alias("demand_interval"),
-                (F.round(F.col("z") / F.col("p"), 6) + F.lit(0.0)).alias(
-                    "croston_rate"
-                ),
-                (
-                    F.round(
-                        F.lit(round(1.0 - a / 2.0, 12)) * (F.col("z") / F.col("p")),
-                        6,
-                    )
-                    + F.lit(0.0)
-                ).alias("sba_rate"),
-            )
+        sink = drain.run(out, work, output_mode="update")
+        final = drain.latest(spark.read.parquet(sink)).select(
+            F.col("key").alias("brand"),
+            F.col("nd").cast("long").alias("n_demand_days"),
+            (F.round("z", 6) + F.lit(0.0)).alias("demand_size"),
+            (F.round("p", 6) + F.lit(0.0)).alias("demand_interval"),
+            (F.round(F.col("z") / F.col("p"), 6) + F.lit(0.0)).alias("croston_rate"),
+            (
+                F.round(F.lit(round(1.0 - a / 2.0, 12)) * (F.col("z") / F.col("p")), 6)
+                + F.lit(0.0)
+            ).alias("sba_rate"),
         )
-        # freeze JVM-side: eager localCheckpoint materializes every partition
-        # before the temp sink is deleted (round-11 optimization: the former
-        # collect+createDataFrame ferried all rows driver-side and re-shipped
-        # them through Python on every downstream action)
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # O'Brien-Fleming two-sided group-sequential z boundaries for K=4 equally

@@ -241,9 +241,8 @@ def streaming_dedup_gate(
     passes again (first-seen TTL: later duplicates do NOT extend the
     window, so "dedup within N days of first occurrence", not
     last-seen). An unbounded fingerprint domain cannot keep state
-    forever; first-seen keeps the hot path write-free for duplicates and
-    matches the RocksDB-native TTL of the transformWithState form. State is one (doc_id, ts) pair per live
-    fingerprint, checkpointed and rescale-safe; within a micro-batch ties
+    forever; first-seen keeps the hot path write-free for duplicates.
+    State is one (doc_id, ts) pair per live fingerprint, checkpointed and rescale-safe; within a micro-batch ties
     break on (event time, doc_id), deterministically.
 
     Trigger note: with ``ttl_ms`` set, armed processing-time timeouts keep
@@ -344,150 +343,6 @@ def idle_session_finalizer(
         stateStructType=SESSION_FINAL_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState operators (Spark 4 arbitrary-state v2: typed state
-# variables with per-state native TTL, and explicit per-key timers —
-# capabilities applyInPandasWithState cannot express). The Python side of
-# transformWithState talks to the JVM state server over protobuf, so these
-# EXECUTE only where `google.protobuf` is installed (plan construction works
-# anywhere); this container lacks protobuf, hence the import-gated e2e tests.
-# The applyInPandasWithState forms above carry the same contracts and run
-# everywhere; at cluster scale prefer these: RocksDB-native TTL eviction
-# beats per-key timeout bookkeeping, and multiple typed state variables per
-# key come for free.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
-
-
-class _DedupGateProcessor(StatefulProcessor):
-    """transformWithState form of :func:`streaming_dedup_gate`: ValueState
-    per fingerprint with RocksDB-native TTL — no timeout re-arm dance."""
-
-    def __init__(self, ttl_ms: int | None):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getValueState(
-            "seen", DEDUP_GATE_STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues: TimerValues):
-        if self._seen.exists():
-            return
-        frames = list(rows)
-        if not frames:
-            return
-        batch = pd.concat(frames)
-        first = batch.sort_values(["ts_ms", "doc_id"]).iloc[0]
-        self._seen.update((str(first["doc_id"]), int(first["ts_ms"])))
-        yield pd.DataFrame(
-            {
-                "fp": [str(key[0])],
-                "doc_id": [str(first["doc_id"])],
-                "first_seen_ms": [int(first["ts_ms"])],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_dedup_gate_tws(
-    stream: DataFrame,
-    fp_col: str = "fp",
-    id_col: str = "doc_id",
-    ts_col: str = "event_time",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """See :func:`streaming_dedup_gate`; same semantics on the Spark 4
-    transformWithState API (requires the RocksDB state store provider and
-    a Python environment with protobuf)."""
-    rows = stream.select(
-        F.col(fp_col).cast("string").alias("fp"),
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.expr(f"unix_millis(cast({ts_col} AS TIMESTAMP))").alias("ts_ms"),
-    )
-    # State TTL requires the processing-time clock: Spark 4 raises
-    # STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL if a TTL'd
-    # state variable is created under timeMode="None".
-    return rows.groupBy("fp").transformWithStateInPandas(
-        statefulProcessor=_DedupGateProcessor(ttl_ms),
-        outputStructType=DEDUP_GATE_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="ProcessingTime" if ttl_ms else "None",
-    )
-
-
-class _IdleSessionProcessor(StatefulProcessor):
-    """transformWithState form of :func:`idle_session_finalizer`: explicit
-    per-key processing-time timers (extended on every touch) instead of
-    the group-timeout re-arm."""
-
-    def __init__(self, gap_ms: int):
-        self._gap_ms = gap_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._sess = handle.getValueState("sess", SESSION_FINAL_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues: TimerValues):
-        n, total = self._sess.get() or (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._sess.update((int(n), float(total)))
-        # single live timer per key: drop the previous deadline, arm anew
-        for t in list(self._handle.listTimers()):
-            self._handle.deleteTimer(t)
-        self._handle.registerTimer(timerValues.getCurrentProcessingTimeInMs() + self._gap_ms)
-        return iter(())
-
-    def handleExpiredTimer(self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo):
-        state = self._sess.get()
-        if state is None:
-            return
-        n, total = state
-        self._sess.clear()
-        yield pd.DataFrame(
-            {
-                "key": [str(key[0])],
-                "n_events": [int(n)],
-                "total_value": [float(total)],
-                "closed": [True],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def idle_session_finalizer_tws(
-    stream: DataFrame,
-    gap_ms: int,
-    key_col: str = "key",
-    value_col: str = "value",
-) -> DataFrame:
-    """See :func:`idle_session_finalizer`; same semantics on the Spark 4
-    transformWithState API (requires the RocksDB state store provider and
-    a Python environment with protobuf)."""
-    rows = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return rows.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=_IdleSessionProcessor(gap_ms),
-        outputStructType=SESSION_FINAL_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="ProcessingTime",
     )
 
 

@@ -16,7 +16,8 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 # correctness gate, the plan-shape/property suites assert static plan
 # invariants, and the streaming loops are heavyweight e2e. Run EVERYTHING
 # with SPARK_GRAFT_FULL_TESTS=1 (the builder's close-out gate). Explicitly
-# naming any .py file on the command line disables tiering for that run.
+# naming any .py file (or a file.py::test node id) on the command line
+# disables tiering for that run.
 SLOW_FILES = {
     "test_oracle_parity.py",     # 1058 s
     "test_plans.py",             # 488 s
@@ -37,8 +38,8 @@ SLOW_FILES = {
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
-    if any(str(a).endswith(".py") for a in config.args):
-        return  # explicit file targets always run in full
+    if any(str(a).split("::")[0].endswith(".py") for a in config.args):
+        return  # explicit file or node-id targets always run in full
     deselected = [
         i
         for i in items

@@ -106,3 +106,8 @@ def test_lit_array_helpers_bit_identical(spark):
     df = spark.range(1).select(lit_long_array([1]).alias("x"),
                                lit_double_array([1.0]).alias("y"))
     assert dict(df.dtypes) == {"x": "array<bigint>", "y": "array<double>"}
+    # int64 overflow is rejected at construction, not at analysis time
+    with pytest.raises(ValueError, match="int64"):
+        lit_long_array([2**63])
+    with pytest.raises(ValueError, match="int64"):
+        lit_long_matrix([[0], [-(2**63) - 1]])

@@ -1374,12 +1374,12 @@ def test_q247_dynamic_mode_preserves_other_partitions(spark, sf_dir, tmp_path):
     n_days = spark.read.parquet(tbl).select("day").distinct().count()
     restate = base.filter(F.col("day") % 10 == 3)
     n_restate_days = restate.select("day").distinct().count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        restate.write.mode("overwrite").partitionBy("day").parquet(tbl)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        restate.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(tbl)
+    )
     assert spark.read.parquet(tbl).select("day").distinct().count() == n_days
     assert n_restate_days < n_days  # the restatement is genuinely partial
 

@@ -1,11 +1,6 @@
-"""Streaming dedup gate and idle-session finalizer.
+"""Streaming dedup gate and idle-session finalizer (applyInPandasWithState), e2e.
 
-The applyInPandasWithState forms run e2e here. The transformWithState
-forms need `google.protobuf` for the Python<->JVM state server, which this
-container lacks: for those we assert plan construction (schema + streaming
-plan resolve without execution) and gate the e2e runs on importorskip.
-
-Both e2e tests drive a multi-batch file stream (maxFilesPerTrigger=1,
+The e2e tests drive a multi-batch file stream (maxFilesPerTrigger=1,
 files written with mtime spacing so replay order is deterministic).
 """
 
@@ -13,18 +8,8 @@ from __future__ import annotations
 
 import time
 
-import pytest
-from pyspark.sql import functions as F
-
 from phoebe_spark.streaming.jobs import run_to_sink
-from phoebe_spark.streaming.stateful import (
-    idle_session_finalizer,
-    idle_session_finalizer_tws,
-    streaming_dedup_gate,
-    streaming_dedup_gate_tws,
-)
-
-ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+from phoebe_spark.streaming.stateful import idle_session_finalizer, streaming_dedup_gate
 
 
 def _write_batches(spark, src: str, batches):
@@ -147,74 +132,6 @@ def test_idle_session_finalizer_closes_on_silence(spark, tmp_path):
     # depending on micro-batch timing vs the idle gap — totals must agree)
     assert by_key["k1"] == (2, 3.0)
     assert by_key["k2"] == (3, 60.0)
-
-
-def test_tws_forms_build_plans(spark):
-    """transformWithState cannot EXECUTE without protobuf, but the typed
-    plan (analysis + output schema) must resolve — catching schema or
-    API drift without the state server."""
-    stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-    dedup_in = stream.select(
-        (F.col("value") % 5).alias("fp"),
-        F.col("value").alias("doc_id"),
-        F.col("timestamp").alias("event_time"),
-    )
-    out1 = streaming_dedup_gate_tws(dedup_in, ttl_ms=1000)
-    assert [f.name for f in out1.schema.fields] == ["fp", "doc_id", "first_seen_ms"]
-    assert out1.isStreaming
-    # TTL'd ValueState REQUIRES the processing-time clock — under
-    # timeMode="None" Spark 4 raises
-    # STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL at runtime,
-    # which the protobuf-gated e2e test can't catch in this container.
-    # The chosen time mode is printed in the analyzed plan's
-    # TransformWithStateInPySpark node, so assert it there.
-    assert "ProcessingTime" in out1._jdf.queryExecution().analyzed().toString()
-    out1_nottl = streaming_dedup_gate_tws(dedup_in, ttl_ms=None)
-    assert "NoTime" in out1_nottl._jdf.queryExecution().analyzed().toString()
-
-    sess_in = stream.select((F.col("value") % 5).alias("key"), F.col("value").alias("value"))
-    out2 = idle_session_finalizer_tws(sess_in, gap_ms=1000)
-    assert [f.name for f in out2.schema.fields] == [
-        "key", "n_events", "total_value", "closed",
-    ]
-    assert out2.isStreaming
-
-
-@pytest.mark.parametrize("which", ["dedup", "session"])
-def test_tws_forms_e2e_when_protobuf_available(spark, tmp_path, which):
-    pytest.importorskip("google.protobuf")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-    try:
-        src = str(tmp_path / "src")
-        if which == "dedup":
-            _write_batches(spark, src, _dedup_batches())
-            stream = (
-                spark.readStream.schema(DEDUP_BATCHES_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            out = streaming_dedup_gate_tws(stream, ttl_ms=3_600_000)
-            q = run_to_sink(out, str(tmp_path / "ck"), output_mode="append", queryName="tws_d")
-            got = {r["fp"]: r["doc_id"] for r in _wait_for(
-                spark, q, "SELECT * FROM tws_d", lambda rs: len(rs) >= 4)}
-            assert got == {"A": "doc1", "B": "doc2", "C": "doc4", "D": "doc7"}
-        else:
-            schema = "key STRING, value DOUBLE"
-            _write_batches(
-                spark, src,
-                [([("k1", 1.0), ("k1", 2.0)], schema), ([("_n", 0.0)], schema),
-                 ([("_n2", 0.0)], schema)],
-            )
-            stream = (
-                spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-            )
-            out = idle_session_finalizer_tws(stream, gap_ms=100)
-            q = run_to_sink(out, str(tmp_path / "ck"), output_mode="append", queryName="tws_s")
-            rows = {r["key"]: (r["n_events"], r["total_value"]) for r in _wait_for(
-                spark, q, "SELECT * FROM tws_s", lambda rs: any(r["key"] == "k1" for r in rs))}
-            assert rows.get("k1") == (2, 3.0)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_streaming_dedup_gate_checkpoint_restart(spark, tmp_path):
