@@ -58,6 +58,20 @@ def arrays_to_ts(t: np.ndarray, v: np.ndarray) -> dict:
     }
 
 
+def latency_candidates(rows: list[dict]) -> list[dict]:
+    """``LatencyModel.predict`` rows on the wire; the reference rounds
+    latency to 2 decimals (LatencyInformationModel validator)."""
+    return [
+        {
+            "scale_out": r["scale_outs"],
+            "latency": round(float(r["latency"]), 2),
+            "is_valid": bool(r["is_valid"]),
+            "is_best": bool(r["is_best"]),
+        }
+        for r in rows
+    ]
+
+
 def create_app(spark=None) -> Flask:
     app = Flask("phoebe-spark")
     if spark is None:
@@ -151,22 +165,14 @@ def create_app(spark=None) -> Flask:
         m = latency_models.get(body["job"])
         if m is None or m.regressor_model is None:
             return jsonify({"message": "The required model was not yet trained!"}), 412
-        out = m.predict(
-            spark,
-            float(body["throughput_rate"]),
-            int(body["min_scale_out"]),
-            int(body["max_scale_out"]),
-        ).orderBy("scale_outs").collect()
-        cands = [
-            {
-                "scale_out": r["scale_outs"],
-                # reference rounds to 2 decimals (LatencyInformationModel validator)
-                "latency": round(float(r["latency"]), 2),
-                "is_valid": bool(r["is_valid"]),
-                "is_best": bool(r["is_best"]),
-            }
-            for r in out
-        ]
+        try:
+            out = m.predict(
+                float(body["throughput_rate"]),
+                range(int(body["min_scale_out"]), int(body["max_scale_out"]) + 1),
+            )
+        except ValueError as ex:
+            return jsonify({"message": str(ex)}), 400
+        cands = latency_candidates(out)
         current = next(
             (c for c in cands if c["scale_out"] == int(body["scale_out"])), cands[0]
         )
@@ -188,26 +194,17 @@ def create_app(spark=None) -> Flask:
         if m is None or m.regressor_model is None:
             return jsonify({"message": "The required model was not yet trained!"}), 412
         cand_in = body["candidates"]
-        scale_outs = sorted({int(c["scale_out"]) for c in cand_in})
         prev_valid = [int(c["scale_out"]) for c in cand_in if c.get("is_valid")]
         thr = body.get("predicted_throughput_rate", body.get("throughput_rate"))
-        out = m.predict(
-            spark,
-            float(thr),
-            min(scale_outs),
-            max(scale_outs),
-            previously_valid=prev_valid or None,
-        )
-        rows = [r for r in out.orderBy("scale_outs").collect() if r["scale_outs"] in set(scale_outs)]
-        cands = [
-            {
-                "scale_out": r["scale_outs"],
-                "latency": round(float(r["latency"]), 2),
-                "is_valid": bool(r["is_valid"]),
-                "is_best": bool(r["is_best"]),
-            }
-            for r in rows
-        ]
+        try:
+            out = m.predict(
+                float(thr),
+                [int(c["scale_out"]) for c in cand_in],
+                previously_valid=prev_valid or None,
+            )
+        except ValueError as ex:
+            return jsonify({"message": str(ex)}), 400
+        cands = latency_candidates(out)
         current = next(
             (c for c in cands if c["scale_out"] == int(body["current"]["scale_out"])), cands[0]
         )

@@ -9,44 +9,80 @@ Reference (/root/reference/analytics/app/latency/models.py):
 - regressor (``:47-54``): StandardScaler on (scale_outs, throughput_rates) ->
   GradientBoostingRegressor(max_depth=10, n_estimators=3*len(data)).
 - fit (``:86-114``): optional append of previous training data.
-- predict/evaluate (``:116-148``): candidate grid over the scale-out range
-  (replicated request row), dropDuplicates on scale_outs, regressor predicts
-  latency, clusterer predicts class, ResponseFinalizer with restriction=1
-  (class must be 'low') marks validity/best.
+- predict/evaluate (``:116-148``): one request row per candidate scale-out
+  (deduplicated), regressor predicts latency, clusterer predicts class,
+  ResponseFinalizer with restriction=1 (class must be 'low') marks
+  validity/best.
 
 MLlib mapping (no sklearn in container): Birch -> BisectingKMeans(k=2) —
 same two-cluster low/high-latency intent; GradientBoostingRegressor ->
 GBTRegressor (maxIter capped; 3*n trees on tiny profile tables is the
 reference's intent of "enough capacity to memorize", not a tuned number).
+
+Scale note: fitting is the Spark-distributed stage. A candidate grid is at
+most one row per scale-out (<= 23), so ``predict`` scores it on the driver,
+like the recovery-time and TWRES grids, and runs no Spark job. Each row goes
+through the fitted models' single-instance ``predict`` — the JVM call their
+``transform`` UDFs make — with ``StandardScalerModel``'s arithmetic and
+Spark's ``log`` (``java.lang.StrictMath``) in between, so the rows are
+bit-identical to the assemble -> scale -> transform -> window DataFrame
+pipeline (``tests/test_latency_scoring.py`` keeps that pipeline as its
+oracle).
+
+A fit builds its models off to the side and publishes them with one
+attribute store (``fitted``); ``predict`` reads that snapshot once, so a
+read served during a refit never mixes old and new models, and a refit that
+raises leaves the previous models serving.
 """
 
 from __future__ import annotations
 
+from typing import Iterable, NamedTuple
+
 import numpy as np
-from pyspark.ml.clustering import BisectingKMeans
-from pyspark.ml.feature import StandardScaler, VectorAssembler
-from pyspark.ml.regression import GBTRegressor
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import SparkContext
+from pyspark.ml.clustering import BisectingKMeans, BisectingKMeansModel
+from pyspark.ml.feature import StandardScaler, StandardScalerModel, VectorAssembler
+from pyspark.ml.linalg import Vectors
+from pyspark.ml.regression import GBTRegressionModel, GBTRegressor
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ESTIMATOR_FACTOR = 3
 
 
+class Fitted(NamedTuple):
+    """One fit's models, published together."""
+
+    data: DataFrame  # training rows, the base of an append refit
+    cluster_model: BisectingKMeansModel
+    label_map: dict[int, int]  # cluster id -> class, 0 = low latency
+    med: float  # clustering feature: log(max(1, (latency - med) / scale))
+    scale: float
+    scaler_model: StandardScalerModel
+    regressor_model: GBTRegressionModel
+
+
 class LatencyModel:
     def __init__(self):
-        self.cluster_model = None
-        self.regressor_model = None
-        self.scaler_model = None
-        self.label_map: dict[int, int] = {}
-        self.previous_data: DataFrame | None = None
+        self.fitted: Fitted | None = None
+
+    @property
+    def previous_data(self) -> DataFrame | None:
+        return self.fitted.data if self.fitted else None
+
+    @property
+    def regressor_model(self) -> GBTRegressionModel | None:
+        return self.fitted.regressor_model if self.fitted else None
 
     # -- fit ---------------------------------------------------------------
     def fit(self, df: DataFrame, append: bool = False) -> None:
         """``df`` columns: scale_outs INT, throughput_rates DOUBLE,
         latencies DOUBLE. With ``append=True`` previous training data is
         concatenated first (latency/models.py:89-90, U1)."""
-        if append and self.previous_data is not None:
-            df = self.previous_data.unionByName(df)
+        prev = self.fitted
+        if append and prev is not None:
+            df = prev.data.unionByName(df)
         df = df.cache()
         n = df.count()
         # Profile tables are O(scale-outs x profiling rounds) rows (the
@@ -64,7 +100,6 @@ class LatencyModel:
         # so the guard was redundant.
         target_parts = max(1, -(-n // 5000))
         df = df.coalesce(target_parts)
-        self.previous_data = df
 
         # clustering features: RobustScaler(quantile_range=(0.0, 1.0)) on
         # latencies then log-clamp (latency/models.py:39-45 + :56-58).
@@ -84,18 +119,17 @@ class LatencyModel:
         assembler = VectorAssembler(inputCols=["_lat_feat"], outputCol="_cl_features")
         feat_v = assembler.transform(feat)
         bkm = BisectingKMeans(k=2, featuresCol="_cl_features", predictionCol="_cluster", seed=42)
-        self.cluster_model = bkm.fit(feat_v)
+        cluster_model = bkm.fit(feat_v)
 
         # relabel so cluster 0 = low latency (latency/models.py:60-84)
-        labeled = self.cluster_model.transform(feat_v)
+        labeled = cluster_model.transform(feat_v)
         stats = (
             labeled.groupBy("_cluster")
             .agg(F.min("latencies").alias("mn"), F.max("latencies").alias("mx"))
             .orderBy("mn")
             .collect()
         )
-        self.label_map = {int(r["_cluster"]): i for i, r in enumerate(stats)}
-        self._cluster_meta = {"q0": qs["q0"], "q1": qs["q1"], "med": qs["med"], "scale": scale}
+        label_map = {int(r["_cluster"]): i for i, r in enumerate(stats)}
 
         # regressor: standard-scale (scale_outs, throughput_rates) -> GBT
         reg_assembler = VectorAssembler(
@@ -105,8 +139,8 @@ class LatencyModel:
             inputCol="_raw_features", outputCol="_features", withMean=True, withStd=True
         )
         reg_v = reg_assembler.transform(df)
-        self.scaler_model = scaler.fit(reg_v)
-        scaled = self.scaler_model.transform(reg_v)
+        scaler_model = scaler.fit(reg_v)
+        scaled = scaler_model.transform(reg_v)
         gbt = GBTRegressor(
             featuresCol="_features",
             labelCol="latencies",
@@ -114,60 +148,54 @@ class LatencyModel:
             maxIter=min(ESTIMATOR_FACTOR * n, 200),
             seed=42,
         )
-        self.regressor_model = gbt.fit(scaled)
+        regressor_model = gbt.fit(scaled)
+        self.fitted = Fitted(
+            df, cluster_model, label_map, qs["med"], scale, scaler_model, regressor_model
+        )
 
     # -- predict -----------------------------------------------------------
-    def _score(self, grid: DataFrame) -> DataFrame:
-        """Attach predicted latency + relabeled latency class to a grid with
-        columns (scale_outs, throughput_rates)."""
-        reg_assembler = VectorAssembler(
-            inputCols=["scale_outs", "throughput_rates"], outputCol="_raw_features"
-        )
-        scored = self.regressor_model.transform(
-            self.scaler_model.transform(reg_assembler.transform(grid))
-        ).withColumnRenamed("prediction", "latency")
-        m = self._cluster_meta
-        feat = scored.withColumn(
-            "_lat_feat",
-            F.log(F.greatest(F.lit(1.0), (F.col("latency") - F.lit(m["med"])) / F.lit(m["scale"]))),
-        )
-        assembler = VectorAssembler(inputCols=["_lat_feat"], outputCol="_cl_features")
-        clustered = self.cluster_model.transform(assembler.transform(feat))
-        mapping = F.create_map(
-            *[x for k, v in self.label_map.items() for x in (F.lit(k), F.lit(v))]
-        )
-        return clustered.withColumn("latency_class", mapping[F.col("_cluster")]).select(
-            "scale_outs", "throughput_rates", "latency", "latency_class"
-        )
-
     def predict(
         self,
-        spark: SparkSession,
         throughput_rate: float,
-        min_scale_out: int,
-        max_scale_out: int,
-        previously_valid: list[int] | None = None,
-    ) -> DataFrame:
-        """Candidate-grid evaluation (latency/models.py:116-148): replicate
-        the request across the scale-out range (J4), dedupe (A14), score,
-        and finalize — validity = latency_class < 1, i.e. the candidate must
-        fall in the low-latency cluster, AND membership in previously_valid
-        (common/schemes.py:47-48); best = first valid by scale_out."""
-        grid = (
-            spark.range(min_scale_out, max_scale_out + 1)
-            .select(F.col("id").cast("int").alias("scale_outs"))
-            .withColumn("throughput_rates", F.lit(float(throughput_rate)))
-            .dropDuplicates(["scale_outs"])
-        )
-        scored = self._score(grid)
-        valid = F.col("latency_class") < 1
-        if previously_valid is not None:
-            valid = valid & F.col("scale_outs").isin(*[int(s) for s in previously_valid])
-        out = scored.withColumn("is_valid", valid)
-        w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        first_valid = F.min(F.when(F.col("is_valid"), F.col("scale_outs"))).over(
-            Window.orderBy("scale_outs").rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        )
-        return out.withColumn(
-            "is_best", F.col("is_valid") & (F.col("scale_outs") == first_valid)
-        )
+        scale_outs: Iterable[int],
+        previously_valid: Iterable[int] | None = None,
+    ) -> list[dict]:
+        """Candidate evaluation (latency/models.py:116-148): one row per
+        distinct scale-out, sorted, as dicts with ``scale_outs``,
+        ``latency``, ``latency_class``, ``is_valid`` and ``is_best``.
+
+        Validity = latency_class < 1, i.e. the candidate must fall in the
+        low-latency cluster, AND membership in ``previously_valid`` when
+        given (common/schemes.py:47-48); best = first valid by scale-out.
+        Raises ``ValueError`` when ``scale_outs`` is empty."""
+        f = self.fitted
+        if f is None:
+            raise RuntimeError("LatencyModel.predict called before fit")
+        sos = sorted({int(s) for s in scale_outs})
+        if not sos:
+            raise ValueError("no scale-outs to evaluate: the candidate set is empty")
+        prev = None if previously_valid is None else {int(s) for s in previously_valid}
+
+        # StandardScalerModel: (x - mean) * (1 / std), the factor 0 where std is 0
+        std = f.scaler_model.std.toArray()
+        inv_std = np.divide(1.0, std, out=np.zeros_like(std), where=std != 0)
+        raw = np.array([[so, float(throughput_rate)] for so in sos])
+        x = (raw - f.scaler_model.mean.toArray()) * inv_std
+        log = SparkContext._jvm.java.lang.StrictMath.log  # Spark's Log expression
+        rows = []
+        for so, features in zip(sos, x):
+            latency = f.regressor_model.predict(Vectors.dense(features))
+            feat = log(max(1.0, (latency - f.med) / f.scale))
+            latency_class = f.label_map[f.cluster_model.predict(Vectors.dense([feat]))]
+            rows.append({
+                "scale_outs": so,
+                "latency": latency,
+                "latency_class": latency_class,
+                "is_valid": latency_class < 1 and (prev is None or so in prev),
+                "is_best": False,
+            })
+        for r in rows:
+            if r["is_valid"]:
+                r["is_best"] = True
+                break
+        return rows

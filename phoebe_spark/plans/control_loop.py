@@ -150,13 +150,13 @@ def optimize_step(
     # recovery-time response's predicted peak throughput (Graph.java:257 +
     # ClientsManager.latencyEvaluate:531), not the current trailing average
     prev_valid = [c.scale_out for c in rec_cands if c.is_valid] or None
-    lat_df = latency_model.predict(
-        spark, rec["predicted_peak"], min_scale_out, max_scale_out, previously_valid=prev_valid
+    lat_rows = latency_model.predict(
+        rec["predicted_peak"],
+        range(min_scale_out, max_scale_out + 1),
+        previously_valid=prev_valid,
     )
-    lat_rows = lat_df.orderBy("scale_outs").collect()
     lat_cands = [
-        Candidate(r["scale_outs"], r["latency"], bool(r["is_valid"]), bool(r["is_best"]))
-        for r in lat_rows
+        Candidate(r["scale_outs"], r["latency"], r["is_valid"], r["is_best"]) for r in lat_rows
     ]
     lat_current = next(c for c in lat_cands if c.scale_out == current_scale_out)
     best_by_latency = best_scale_out_by_min_value(lat_current, lat_cands)

@@ -80,7 +80,9 @@ def test_workload_train_poll_predict(client):
     assert r.status_code == 412
 
 
-def test_latency_train_predict(client):
+@pytest.fixture(scope="module")
+def latency_job(client):
+    """Train the TEST job's latency model once for the /latency/* tests."""
     rng = np.random.default_rng(42)
     rows = []
     for so in SCALE_OUTS:
@@ -105,11 +107,29 @@ def test_latency_train_predict(client):
     )
     assert r.status_code == 200
     _poll(client, r.get_json()["task_hash"])
+    return "TEST"
 
+
+def _latency_evaluation(client, job, scale_outs, thr, valid=()):
+    cands = [
+        {"scale_out": so, "recovery_time": 100.0, "is_valid": so in valid, "is_best": False}
+        for so in scale_outs
+    ]
+    return client.post(
+        "/latency/evaluation",
+        json={
+            "job": job, "predicted_throughput_rate": thr,
+            "current": cands[0] if cands else {"scale_out": 2},
+            "candidates": cands, "slope": 0.0,
+        },
+    )
+
+
+def test_latency_train_predict(client, latency_job):
     r = client.post(
         "/latency/prediction",
         json={
-            "job": "TEST",
+            "job": latency_job,
             "min_scale_out": 2,
             "max_scale_out": 24,
             "scale_out": 12,
@@ -173,7 +193,7 @@ def test_recoverytime_and_twres_composition(client):
     assert isinstance(r.get_json()["scale_out"], int)
 
 
-def test_cross_model_evaluation_flows(client):
+def test_cross_model_evaluation_flows(client, latency_job):
     """The reference's rt->latency-eval and latency->rt-eval composition
     tests (api_test.py test_recoverytime_plus_latency / reverse)."""
     t, v = _sine_ts()
@@ -219,3 +239,79 @@ def test_cross_model_evaluation_flows(client):
     out = r.get_json()
     assert len(out["candidates"]) == len(lat["candidates"])
     assert sum(c["is_best"] for c in out["candidates"]) <= 1
+
+
+# two new profile rows for an append refit; they move the scaler and the trees
+_APPEND_PROFILE = {
+    "append": True, "scale_outs": [24, 2],
+    "throughput_rates": [110000.0, 5000.0], "latencies": [60000.0, 700.0],
+}
+
+
+def test_latency_evaluation_scores_exactly_the_candidates(client, latency_job):
+    """A non-contiguous candidate set: is_best lands on a candidate (the
+    smallest valid one), never on a scale-out between candidates."""
+    r = _latency_evaluation(client, latency_job, [2, 8, 24], 30000.0)
+    assert r.status_code == 200
+    cands = r.get_json()["candidates"]
+    assert [c["scale_out"] for c in cands] == [2, 8, 24]
+    valid = [c["scale_out"] for c in cands if c["is_valid"]]
+    assert valid
+    assert [c["scale_out"] for c in cands if c["is_best"]] == [min(valid)]
+
+
+def test_latency_routes_reject_empty_scale_out_sets(client, latency_job):
+    r = _latency_evaluation(client, latency_job, [], 30000.0)
+    assert r.status_code == 400
+    assert "empty" in r.get_json()["message"]
+    r = client.post(
+        "/latency/prediction",
+        json={
+            "job": latency_job, "min_scale_out": 10, "max_scale_out": 5,
+            "scale_out": 10, "throughput_rate": 30000.0,
+        },
+    )
+    assert r.status_code == 400
+    assert "empty" in r.get_json()["message"]
+
+
+@pytest.mark.filterwarnings("ignore::pytest.PytestUnhandledThreadExceptionWarning")
+def test_failed_latency_refit_keeps_previous_model(client, latency_job, monkeypatch):
+    """A refit that raises part-way (here in the GBT fit, after the
+    clusterer and scaler of the new data are built) must leave the previous
+    model serving unchanged results."""
+    from pyspark.ml.regression import GBTRegressor
+
+    before = _latency_evaluation(client, latency_job, range(2, 25), 50379.1, valid=range(2, 25))
+    assert before.status_code == 200
+
+    def boom(self, dataset, params=None):
+        raise RuntimeError("injected GBT failure")
+
+    monkeypatch.setattr(GBTRegressor, "fit", boom)
+    r = client.post("/latency/training", json=dict(_APPEND_PROFILE, job=latency_job))
+    _poll(client, r.get_json()["task_hash"])
+    after = _latency_evaluation(client, latency_job, range(2, 25), 50379.1, valid=range(2, 25))
+    assert after.status_code == 200
+    assert after.data == before.data
+
+
+def test_latency_reads_during_refit_see_one_model(client, latency_job):
+    """Reads served while an append refit runs answer from the old model or
+    the new one, never from a mix of the two."""
+    def read():
+        r = _latency_evaluation(client, latency_job, range(2, 25), 50379.1, valid=range(2, 25))
+        assert r.status_code == 200
+        return r.data
+
+    before = read()
+    r = client.post("/latency/training", json=dict(_APPEND_PROFILE, job=latency_job))
+    task = r.get_json()["task_hash"]
+    during = []
+    deadline = time.time() + 120
+    while client.get(f"/common/tasks/{task}").get_json() and time.time() < deadline:
+        during.append(read())
+    after = read()
+    assert after != before
+    assert during
+    assert set(during) <= {before, after}

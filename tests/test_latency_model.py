@@ -46,13 +46,14 @@ def fitted(spark):
     return m, rows
 
 
-def test_clustering_relabels_low_latency_as_zero(fitted, spark):
+def test_clustering_relabels_low_latency_as_zero(fitted):
     m, rows = fitted
     # score the training grid itself: low-latency rows must map to class 0
-    grid = spark.createDataFrame(
-        [(r[0], r[1]) for r in rows], "scale_outs INT, throughput_rates DOUBLE"
-    )
-    scored = m._score(grid).collect()
+    scored = [
+        r
+        for thr in sorted({r[1] for r in rows})
+        for r in m.predict(thr, [so for so, t, _ in rows if t == thr])
+    ]
     c0 = [r["latency"] for r in scored if r["latency_class"] == 0]
     c1 = [r["latency"] for r in scored if r["latency_class"] == 1]
     assert c0 and c1
@@ -63,10 +64,9 @@ def test_clustering_relabels_low_latency_as_zero(fitted, spark):
     assert max(c1) == max(r["latency"] for r in scored)
 
 
-def test_candidate_grid_evaluation(fitted, spark):
+def test_candidate_grid_evaluation(fitted):
     m, _ = fitted
-    out = m.predict(spark, throughput_rate=50379.1, min_scale_out=2, max_scale_out=24)
-    rows = out.orderBy("scale_outs").collect()
+    rows = m.predict(throughput_rate=50379.1, scale_outs=range(2, 25))
     assert [r["scale_outs"] for r in rows] == list(range(2, 25))
     bests = [r for r in rows if r["is_best"]]
     assert len(bests) <= 1
@@ -128,7 +128,7 @@ def test_models_on_reference_profiles2(spark):
     )
     m = LatencyModel()
     m.fit(train)
-    out = m.predict(spark, 20000.0, 2, 24).orderBy("scale_outs").collect()
+    out = m.predict(20000.0, range(2, 25))
     valid = [r["scale_outs"] for r in out if r["is_valid"]]
     # at the sustained profiling rate most of the profiled range holds the
     # latency band; the model must not reject everything nor accept nothing
