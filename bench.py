@@ -9,6 +9,10 @@ Each query is forced to full execution with a count-style noop write
 The 10 slowest entries are re-run twice more and reported as the MEDIAN of
 3 runs (raw samples in ``rerun_runs``), so slow-tail trends are judgeable
 against the run-to-run spread instead of a single draw.
+
+An entry that raises does not stop the run: its error goes into the
+additive ``errors`` map (``{name: "Type: message"}``), it stays out of
+``queries`` and ``value``, and the process exits 1 after printing.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -40,6 +45,32 @@ def _qnum(name: str) -> tuple[int, str]:
 BENCH_QUERIES = sorted(
     (n for n in QUERIES if n not in BENCH_EXCLUDE), key=_qnum
 )
+
+
+def run_entry(
+    name: str,
+    fn,
+    timings: dict[str, float],
+    errors: dict[str, str],
+) -> float | None:
+    """Time ``fn()`` into ``timings[name]``; if it raises, print the
+    traceback to stderr, record ``"Type: first message line"`` in
+    ``errors[name]``, drop any earlier timing of ``name`` and return None."""
+    t0 = time.time()
+    try:
+        fn()
+    except Exception as e:  # noqa: BLE001 - one entry must not end the run
+        traceback.print_exc(file=sys.stderr)
+        msg = str(e).strip().splitlines()
+        errors[name] = f"{type(e).__name__}: {msg[0] if msg else ''}"
+        timings.pop(name, None)
+        return None
+    timings[name] = round(time.time() - t0, 3)
+    return timings[name]
+
+
+def _noop_write(name: str, spark, sf_dir: str):
+    return lambda: QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -102,14 +133,12 @@ def main() -> None:
     # `queries` map are unchanged (VERDICT r11 ask #7).
     entry_ts: dict[str, float] = {}
     timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
     for i, name in enumerate(BENCH_QUERIES):
         if i and i % 50 == 0:
             release_session_state()
-        t0 = time.time()
-        entry_ts[name] = round(t0, 3)
-        df = QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
+        entry_ts[name] = round(time.time(), 3)
+        run_entry(name, _noop_write(name, spark, sf_dir), timings, errors)
 
     # The slow tail dominates round-over-round comparisons, and single-shot
     # timings at these magnitudes carry a 120-145 s run-to-run spread — so
@@ -135,13 +164,14 @@ def main() -> None:
         rerun_ts[name] = [entry_ts[name]]
         for _ in range(2):
             release_session_state()
-            t0 = time.time()
-            rerun_ts[name].append(round(t0, 3))
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.time() - t0, 3))
+            rerun_ts[name].append(round(time.time(), 3))
+            sample = run_entry(name, _noop_write(name, spark, sf_dir), timings, errors)
+            if sample is None:
+                break
+            runs.append(sample)
         rerun_runs[name] = runs
-        timings[name] = round(statistics.median(runs), 3)
+        if name not in errors:
+            timings[name] = round(statistics.median(runs), 3)
 
     # Model-pipeline throughput vs the reference (BASELINE.md: the
     # analytics engine processes 6 h of 1 Hz samples, 21,600 points, with a
@@ -150,23 +180,18 @@ def main() -> None:
 
     from phoebe_spark.models.workload import WorkloadForecaster
 
-    def _begin(stage_name: str) -> float:
-        ts = time.time()
-        entry_ts[stage_name] = round(ts, 3)
-        return ts
+    def stage(stage_name: str, fn) -> None:
+        entry_ts[stage_name] = round(time.time(), 3)
+        run_entry(stage_name, fn, timings, errors)
 
     rng = np.random.default_rng(42)
     t = np.arange(21_600)
     vals = np.abs(
         (100_000 * np.sin(2 * np.pi * t / 7_200) + 100_000) * (1 + rng.normal(0, 0.01, len(t)))
     )
-    t0 = _begin("m1_fit_20_models_6h_series")
     forecaster = WorkloadForecaster()
-    forecaster.fit(spark, t, vals)
-    timings["m1_fit_20_models_6h_series"] = round(time.time() - t0, 3)
-    t0 = _begin("m2_forecast_600s")
-    forecaster.predict(t, vals, horizon_s=600)
-    timings["m2_forecast_600s"] = round(time.time() - t0, 3)
+    stage("m1_fit_20_models_6h_series", lambda: forecaster.fit(spark, t, vals))
+    stage("m2_forecast_600s", lambda: forecaster.predict(t, vals, horizon_s=600))
 
     # m4-m8: the remaining §2.8 model pipelines as named bench stages
     # (VERDICT r10 ask #3), on the profiles2-shaped fixture the reference
@@ -201,40 +226,40 @@ def main() -> None:
     # corpus scale. m5 scores the 23-row candidate grid on the driver
     # (single-instance model predicts, no Spark job); it and the other
     # stages are sub-second.
-    t0 = _begin("m4_latency_fit_profiles")
     latency_model = LatencyModel()
-    latency_model.fit(prof)
-    timings["m4_latency_fit_profiles"] = round(time.time() - t0, 3)
-    t0 = _begin("m5_latency_candidate_grid")
-    latency_model.predict(throughput_rate=50379.1, scale_outs=range(2, 25))
-    timings["m5_latency_candidate_grid"] = round(time.time() - t0, 3)
+    stage("m4_latency_fit_profiles", lambda: latency_model.fit(prof))
+    stage(
+        "m5_latency_candidate_grid",
+        lambda: latency_model.predict(throughput_rate=50379.1, scale_outs=range(2, 25)),
+    )
 
     max_thr = [18000.0 + 2400.0 * so for so in scale_outs]
-    t0 = _begin("m6_capacity_ridge")
-    cap = CapacityModel()
-    cap.fit(scale_outs, max_thr)
-    cap.predict(list(range(2, 25)))
-    timings["m6_capacity_ridge"] = round(time.time() - t0, 3)
+    def m6() -> None:
+        cap = CapacityModel()
+        cap.fit(scale_outs, max_thr)
+        cap.predict(list(range(2, 25)))
 
-    t0 = _begin("m7_recovery_iterative_simpson")
-    recovery = RecoveryTimeModel()
-    recovery.fit(scale_outs, max_thr)
-    recovery.predict(
-        forecaster, t, vals, scale_out_range=list(range(2, 25)),
-        prediction_period_s=150, max_recovery_time=240.0, downtime=10.0,
-        last_checkpoint=90.0,
-    )
-    timings["m7_recovery_iterative_simpson"] = round(time.time() - t0, 3)
+    def m7() -> None:
+        recovery = RecoveryTimeModel()
+        recovery.fit(scale_outs, max_thr)
+        recovery.predict(
+            forecaster, t, vals, scale_out_range=list(range(2, 25)),
+            prediction_period_s=150, max_recovery_time=240.0, downtime=10.0,
+            last_checkpoint=90.0,
+        )
 
-    t0 = _begin("m8_twres_decision")
-    twres = TwresModel()
-    twres.fit(scale_outs, max_thr)
-    twres.predict(
-        forecaster, t, vals, current_scale_out=10, min_scale_out=2,
-        max_scale_out=24, time_window_interval=600, avg_latency=100,
-        max_latency_constraint=2000,
-    )
-    timings["m8_twres_decision"] = round(time.time() - t0, 3)
+    def m8() -> None:
+        twres = TwresModel()
+        twres.fit(scale_outs, max_thr)
+        twres.predict(
+            forecaster, t, vals, current_scale_out=10, min_scale_out=2,
+            max_scale_out=24, time_window_interval=600, avg_latency=100,
+            max_latency_constraint=2000,
+        )
+
+    stage("m6_capacity_ridge", m6)
+    stage("m7_recovery_iterative_simpson", m7)
+    stage("m8_twres_decision", m8)
 
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -251,6 +276,7 @@ def main() -> None:
         "rerun_runs": rerun_runs,
         "entry_ts": entry_ts,
         "rerun_ts": rerun_ts,
+        "errors": errors,
     }
     print(json.dumps(full, separators=(",", ":")))
     # The driver's BENCH artifact keeps only a 2000-char tail, so also
@@ -281,11 +307,14 @@ def main() -> None:
                 "sf": sf_val,
                 "entries": len(timings),
                 "queries": top5,
-                "slow_tail_medians3": {n: timings[n] for n in rerun_runs},
+                "slow_tail_medians3": {n: timings[n] for n in rerun_runs if n in timings},
+                "errors": errors,
             },
             separators=(",", ":"),
         )
     )
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -6,7 +6,6 @@
                    winnowing, components, decontamination
 - ``similarity`` — embedding cosine top-k (brute force + LSH-bucketed +
                    IVF), all-pairs GEMM, quantization
-- ``candidates`` — scale-out candidate grid + ResponseFinalizer (W9)
 - ``sampling``   — hash split/sample, stratified + weighted sampling
 - ``curation``   — quality rules, repetition, packing, mixture weights
 - ``skyline``    — 2D Pareto-frontier preference queries
@@ -16,7 +15,6 @@
 """
 
 from phoebe_spark.operators import (  # noqa: F401
-    candidates,
     curation,
     dedup,
     layout,

@@ -2530,7 +2530,7 @@ def q229_event_timer_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFra
     arrives, or by WATERMARK-driven timer firings (including the
     availableNow finalization batch, which is what lets the drain
     self-terminate — unlike processing-time timers, documented at
-    :func:`stateful.streaming_session_finalizer`).
+    :func:`stateful.idle_session_finalizer`).
 
     The fixture makes every divergence class unrepresentable:
       - synthetic EVEN-millisecond event times ``2*(epoch_s*1000 +

@@ -6,9 +6,7 @@ phoebe.properties:13 ``TopSpeedWindowing``) define the semantics:
 Kafka source -> filter/join (static campaign table) -> keyed 10 s windowed
 aggregation -> sink, with checkpointing and watermark-based late-data
 handling. Kafka itself is transport; these builders work over any streaming
-DataFrame (rate source, file source, kafka source) so tests can drive them
-with file/rate sources while production uses
-``spark.readStream.format("kafka")``.
+DataFrame, so tests drive them with file and rate sources.
 
 Workload generation mirrors the reference's sine-modulated generators
 (execution/Workload.java:56-67; prepare_model.py:24-47): a rate source
@@ -199,44 +197,6 @@ def stream_static_anti_dedup(
     re-deliveries are streaming_dedup's job, composable upstream)."""
     fps = history.select(fingerprint_col).distinct()
     return stream.join(fps, on=fingerprint_col, how="left_anti")
-
-
-def kafka_source(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """S8 Kafka transport, source side (``execution/Job.java:94-99``
-    --brokerList/--consumerTopic): value bytes + event timestamp. Requires
-    a broker + the spark-sql-kafka package at runtime; semantics-only here
-    (no broker in the test container)."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-        .select(
-            F.col("timestamp").alias("event_time"),
-            F.col("key").cast("string").alias("key"),
-            F.col("value").cast("string").alias("value"),
-        )
-    )
-
-
-def kafka_sink(result: DataFrame, brokers: str, topic: str, checkpoint_dir: str):
-    """S8 Kafka transport, sink side (--producerTopic): rows serialized to
-    the value column; exactly-once via the checkpoint."""
-    payload = result.select(
-        F.to_json(F.struct(*result.columns)).alias("value")
-    )
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
 
 
 def run_to_sink(

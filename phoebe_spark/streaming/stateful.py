@@ -6,6 +6,14 @@ In Structured Streaming that state lives in the state store, keyed by
 group, surviving micro-batches and checkpoint restarts — the pattern the
 brief names for "custom stateful operators".
 
+:func:`keyed_fold` is the one way to write an update-mode per-key fold:
+the operator selects its columns (key first) and supplies a pure
+``fold(key, carried, batch) -> (state, frame)``; the harness owns the
+state-store protocol (chunk concat, optional sort, read or initialise the
+state, store it, emit the frame). Twelve operators below are such folds.
+The rest need what the harness deliberately leaves out — append output,
+timeouts or sharded keys — and speak ``applyInPandasWithState`` directly.
+
 ``keyed_ewma`` maintains a per-key exponentially-weighted moving average of
 the value column (the streaming analogue of the reference's smoothed
 workload rate): each micro-batch folds its rows (in event-time order) into
@@ -15,12 +23,55 @@ state. State size is O(keys), bounded and checkpointed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+
+def keyed_fold(
+    rows: DataFrame,
+    fold: Callable[[Any, tuple, pd.DataFrame], tuple[tuple, pd.DataFrame]],
+    init: tuple,
+    output_schema: str,
+    state_schema: str,
+    order: str | None = None,
+) -> DataFrame:
+    """Group ``rows`` by their first column and run ``fold`` over each
+    key's micro-batch with its state carried in the state store (update
+    output, ``NoTimeout``).
+
+    Spark hands the handler an iterator of Arrow chunks (a group larger
+    than ``spark.sql.execution.arrow.maxRecordsPerBatch`` arrives split),
+    so the chunks are concatenated into one frame and, when ``order`` is
+    given, sorted by it once: a per-chunk sort would fold an
+    order-sensitive recursion in chunk order. ``fold(key, carried, batch)``
+    receives the grouping value as is (a null key stays ``None``), the
+    carried state tuple or ``init`` the first time the key is seen, and
+    returns ``(state, frame)``: the tuple to store and the rows to emit.
+    ``fold`` must not mutate ``init`` in place — it is shared by every key.
+    Under ``NoTimeout`` the handler only runs for keys with rows, so
+    ``batch`` is never empty."""
+
+    def _update(key, pdfs, state: GroupState):
+        batch = pd.concat(list(pdfs))
+        if order is not None:
+            batch = batch.sort_values(order)
+        carried, out = fold(key[0], state.get if state.exists else init, batch)
+        state.update(carried)
+        yield out
+
+    return rows.groupBy(rows.columns[0]).applyInPandasWithState(
+        _update,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
 
 EWMA_OUTPUT_SCHEMA = "key STRING, ewma DOUBLE, n_obs LONG, last_ts TIMESTAMP"
 EWMA_STATE_SCHEMA = "ewma DOUBLE, n_obs LONG"
@@ -39,43 +90,26 @@ def keyed_ewma(
     ``ewma_t = alpha * x_t + (1 - alpha) * ewma_{t-1}``, folded across
     batches through the state store."""
 
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ewma, n = state.get
-        else:
-            ewma, n = None, 0
+    def _fold(key, carried, batch):
+        ewma, n = carried
         last_ts = None
-        # pdfs is an ITERATOR of Arrow chunks (a >maxRecordsPerBatch group
-        # arrives split): the EWMA recursion is order-sensitive, so sort
-        # the whole batch once — a per-chunk sort would fold values in
-        # chunk order, not event-time order (same fix as keyed_cusum).
-        frames = list(pdfs) if pdfs is not None else []
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if len(batch):
-            batch = batch.sort_values(ts_col)
-            for v, ts in zip(batch[value_col], batch[ts_col]):
-                ewma = float(v) if ewma is None else alpha * float(v) + (1 - alpha) * ewma
-                n += 1
-                last_ts = ts
-        state.update((ewma, n))
-        yield pd.DataFrame(
-            {"key": [str(key[0])], "ewma": [ewma], "n_obs": [n], "last_ts": [last_ts]}
+        for v, ts in zip(batch[value_col], batch[ts_col]):
+            ewma = float(v) if ewma is None else alpha * float(v) + (1 - alpha) * ewma
+            n += 1
+            last_ts = ts
+        return (ewma, n), pd.DataFrame(
+            {"key": [key], "ewma": [ewma], "n_obs": [n], "last_ts": [last_ts]}
         )
 
-    return (
+    return keyed_fold(
         # key normalized to string so any upstream key type (long campaign
         # ids, string event types) flows through one output schema
-        stream.select(F.col(key_col).cast("string").alias(key_col), ts_col, value_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=EWMA_OUTPUT_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        stream.select(F.col(key_col).cast("string").alias(key_col), ts_col, value_col),
+        _fold,
+        (None, 0),
+        EWMA_OUTPUT_SCHEMA,
+        EWMA_STATE_SCHEMA,
+        order=ts_col,
     )
 
 
@@ -103,37 +137,22 @@ def keyed_cusum(
     the batch CUSUM runs the same recursion as a prefix-sum window plan,
     so alert thresholds tuned offline transfer unchanged."""
 
-    def _update(key, pdfs, state: GroupState):
-        if state.exists:
-            s, n = state.get
-        else:
-            s, n = 0.0, 0
-        # pdfs is an ITERATOR of Arrow chunks of one key's micro-batch
-        # (a >maxRecordsPerBatch group arrives split): the CUSUM recursion
-        # is order-sensitive, so sort the whole batch once — a per-chunk
-        # sort would fold values in chunk order, not event-time order.
-        frames = list(pdfs) if pdfs is not None else []
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if len(batch):
-            batch = batch.sort_values(ts_col)
-            for v in batch[value_col]:
-                s = max(0.0, s + float(v) - k)
-                n += 1
-        state.update((s, n))
-        yield pd.DataFrame(
-            {"key": [str(key[0])], "stat": [s], "alarm": [s > h], "n_obs": [n]}
+    def _fold(key, carried, batch):
+        s, n = carried
+        for v in batch[value_col]:
+            s = max(0.0, s + float(v) - k)
+            n += 1
+        return (s, n), pd.DataFrame(
+            {"key": [key], "stat": [s], "alarm": [s > h], "n_obs": [n]}
         )
 
-    return (
-        stream.select(F.col(key_col).cast("string").alias(key_col), ts_col, value_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=CUSUM_OUTPUT_SCHEMA,
-            stateStructType=CUSUM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        stream.select(F.col(key_col).cast("string").alias(key_col), ts_col, value_col),
+        _fold,
+        (0.0, 0),
+        CUSUM_OUTPUT_SCHEMA,
+        CUSUM_STATE_SCHEMA,
+        order=ts_col,
     )
 
 
@@ -182,39 +201,29 @@ def keyed_heavy_hitters(
     for a support threshold phi > 1/k.
     """
 
-    def _update(key, pdfs, state: GroupState):
-        if state.exists:
-            items, counts, n_total = state.get
-            counters = dict(zip(list(items), list(counts)))
-        else:
-            counters, n_total = {}, 0
-        for pdf in pdfs:
-            counters, n_total = mg_update(counters, n_total, pdf[item_col], k)
+    def _fold(key, carried, batch):
+        items, counts, n_total = carried
+        counters, n_total = mg_update(dict(zip(items, counts)), n_total, batch[item_col], k)
         items = sorted(counters)
-        state.update((items, [int(counters[i]) for i in items], int(n_total)))
         out = sorted(counters.items(), key=lambda ic: (-ic[1], ic[0]))
-        yield pd.DataFrame(
+        return (items, [int(counters[i]) for i in items], int(n_total)), pd.DataFrame(
             {
-                "key": [str(key[0])] * len(out),
+                "key": [key] * len(out),
                 "item": [i for i, _ in out],
                 "count_lb": [c for _, c in out],
                 "n_total": [n_total] * len(out),
             }
         )
 
-    return (
+    return keyed_fold(
         stream.select(
             F.col(key_col).cast("string").alias(key_col),
             F.col(item_col).cast("string").alias(item_col),
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=HH_OUTPUT_SCHEMA,
-            stateStructType=HH_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        _fold,
+        ((), (), 0),
+        HH_OUTPUT_SCHEMA,
+        HH_STATE_SCHEMA,
     )
 
 
@@ -377,6 +386,8 @@ def keyed_quota_gate(
     trigger) and each file holds a disjoint ascending ``ord_col`` range,
     the admitted set equals the batch answer
     ``row_number() OVER (PARTITION BY key ORDER BY ord, id) <= quota``.
+    A null key is a key like any other: its rows get their own quota and
+    leave with the key still null, in both forms.
 
     ``shards`` (round-12, guide §4 — cut the per-key Python/state-store
     protocol round-trips when the key domain is SMALL): with ``shards=n``
@@ -398,10 +409,7 @@ def keyed_quota_gate(
     if shards is not None:
 
         def _update_shard(_gkey, pdfs, state: GroupState):
-            frames = list(pdfs)
-            batch = pd.concat(frames) if frames else pd.DataFrame()
-            if not len(batch):
-                return
+            batch = pd.concat(list(pdfs))
             if state.exists:
                 ks, us = state.get
                 used = dict(zip(list(ks or []), list(us or [])))
@@ -409,7 +417,11 @@ def keyed_quota_gate(
                 used = {}
             batch = batch.sort_values(["ord", "seq_id"])
             outs = []
-            for k, grp in batch.groupby("key", sort=False):
+            # dropna=False: a null key is a key like any other; it is read
+            # back from the rows (None), not from the group label (NaN), so
+            # it matches its None entry in the carried state
+            for _, grp in batch.groupby("key", sort=False, dropna=False):
+                k = grp["key"].iloc[0]
                 room = quota - used.get(k, 0)
                 if room <= 0:
                     continue
@@ -423,7 +435,7 @@ def keyed_quota_gate(
                 o = pd.concat(outs)
                 yield pd.DataFrame(
                     {
-                        "key": o["key"].astype(str).tolist(),
+                        "key": o["key"].tolist(),
                         "seq_id": o["seq_id"].astype(str).tolist(),
                         "ord": o["ord"].astype("int64").tolist(),
                         "value": o["value"].astype(float).tolist(),
@@ -448,13 +460,7 @@ def keyed_quota_gate(
         )
 
     def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:  # pragma: no cover - no TTL configured
-            state.remove()
-            return
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
+        batch = pd.concat(list(pdfs))
         used = state.get[0] if state.exists else 0
         room = quota - used
         if room <= 0:
@@ -463,7 +469,7 @@ def keyed_quota_gate(
         state.update((used + len(batch),))
         yield pd.DataFrame(
             {
-                "key": [str(key[0])] * len(batch),
+                "key": [key[0]] * len(batch),
                 "seq_id": batch["seq_id"].astype(str).tolist(),
                 "ord": batch["ord"].astype("int64").tolist(),
                 "value": batch["value"].astype(float).tolist(),
@@ -506,7 +512,7 @@ def session_close_event_time(
     (``hasTimedOut`` invocation, state removed). This is the
     applyInPandasWithState twin of the built-in session window (q203)
     with the timer path exercised — and unlike the processing-time
-    finalizer (:func:`streaming_session_finalizer`), event-time timers
+    finalizer (:func:`idle_session_finalizer`), event-time timers
     fire on watermark advance, so an ``availableNow`` drain terminates
     on its own (the finalization batch fires every expired timer).
 
@@ -691,16 +697,8 @@ def streaming_holt(
     million tiny rows, not a million folds' worth of history.
     """
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            x1, l, b, n = state.get
-        else:
-            x1, l, b, n = 0.0, 0.0, 0.0, 0
-        batch = batch.sort_values(seq_col)
+    def _fold(key, carried, batch):
+        x1, l, b, n = carried
         for x in batch[value_col]:
             x = float(x)
             if n == 0:
@@ -716,10 +714,9 @@ def streaming_holt(
                 nb = gamma * (nl - l) + (1 - gamma) * b
                 l, b = nl, nb
             n += 1
-        state.update((float(x1), float(l), float(b), int(n)))
-        yield pd.DataFrame(
+        return (float(x1), float(l), float(b), int(n)), pd.DataFrame(
             {
-                "key": [str(key[0])],
+                "key": [key],
                 "n": [int(n)],
                 "level": [float(l)],
                 "trend": [float(b)],
@@ -731,12 +728,8 @@ def streaming_holt(
         F.col(seq_col),
         F.col(value_col),
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=HOLT_OUTPUT_SCHEMA,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        rows, _fold, (0.0, 0.0, 0.0, 0), HOLT_OUTPUT_SCHEMA, HOLT_STATE_SCHEMA, order=seq_col
     )
 
 
@@ -768,16 +761,8 @@ def streaming_croston(
     workload-forecast refresh loop, applied to sparse demand).
     """
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            z, p, q, st, nd, idx = state.get
-        else:
-            z, p, q, st, nd, idx = 0.0, 0.0, 0.0, 0, 0.0, 0.0
-        batch = batch.sort_values(seq_col)
+    def _fold(key, carried, batch):
+        z, p, q, st, nd, idx = carried
         for x in batch[value_col]:
             x = float(x)
             idx += 1.0
@@ -793,10 +778,9 @@ def streaming_croston(
                     nd += 1.0
                 else:
                     q += 1.0
-        state.update((float(z), float(p), float(q), int(st), float(nd), float(idx)))
-        yield pd.DataFrame(
+        return (float(z), float(p), float(q), int(st), float(nd), float(idx)), pd.DataFrame(
             {
-                "key": [str(key[0])],
+                "key": [key],
                 "n": [int(idx)],
                 "nd": [int(nd)],
                 "z": [float(z)],
@@ -809,12 +793,13 @@ def streaming_croston(
         F.col(seq_col),
         F.col(value_col),
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=CROSTON_OUTPUT_SCHEMA,
-        stateStructType=CROSTON_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        rows,
+        _fold,
+        (0.0, 0.0, 0.0, 0, 0.0, 0.0),
+        CROSTON_OUTPUT_SCHEMA,
+        CROSTON_STATE_SCHEMA,
+        order=seq_col,
     )
 
 
@@ -850,17 +835,10 @@ def streaming_burn_rate(
     monotone hour value.
     """
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            hrs, ns, errs = (list(v) for v in state.get)
-        else:
-            hrs, ns, errs = [], [], []
+    def _fold(_key, carried, batch):
+        hrs, ns, errs = (list(v) for v in carried)
         out = []
-        for row in batch.sort_values("hr").itertuples(index=False):
+        for row in batch.itertuples(index=False):
             hr, n, er = int(row.hr), int(row.n), int(row.errs)
             if n <= 0:
                 continue  # empty hour: no traffic, no burn signal
@@ -882,20 +860,15 @@ def streaming_burn_rate(
             out.append(
                 (hr, n, er, bs, bl, 1 if (bs > short_thr and bl > long_thr) else 0)
             )
-        state.update((hrs, ns, errs))
-        yield pd.DataFrame(
+        return (hrs, ns, errs), pd.DataFrame(
             out, columns=["hr", "n", "errs", "burn_short", "burn_long", "page"]
         )
 
     rows = stream.select(
         F.lit("slo").alias("key"), F.col("hr"), F.col("n"), F.col("errs")
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=BURN_OUTPUT_SCHEMA,
-        stateStructType=BURN_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        rows, _fold, ((), (), ()), BURN_OUTPUT_SCHEMA, BURN_STATE_SCHEMA, order="hr"
     )
 
 
@@ -922,16 +895,8 @@ def streaming_sprt(
     adds with no further branching.
     """
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            n, s, decision, n_obs, d_stop = state.get
-        else:
-            n, s, decision, n_obs, d_stop = 0, 0, 0, 0, 0
-        batch = batch.sort_values(seq_col)
+    def _fold(key, carried, batch):
+        n, s, decision, n_obs, d_stop = carried
         for x in batch[x_col]:
             n += 1
             s += int(x)
@@ -941,10 +906,9 @@ def streaming_sprt(
                     decision = 1 if d > 0 else -1
                     n_obs = n
                     d_stop = d
-        state.update((int(n), int(s), int(decision), int(n_obs), int(d_stop)))
-        yield pd.DataFrame(
+        return (int(n), int(s), int(decision), int(n_obs), int(d_stop)), pd.DataFrame(
             {
-                "key": [str(key[0])],
+                "key": [key],
                 "n": [int(n)],
                 "decision": [int(decision)],
                 "n_obs": [int(n_obs if decision != 0 else n)],
@@ -957,12 +921,13 @@ def streaming_sprt(
         F.col(seq_col),
         F.col(x_col),
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType="key STRING, n LONG, decision INT, n_obs LONG, d_stop LONG",
-        stateStructType="n LONG, s LONG, decision INT, n_obs LONG, d_stop LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        rows,
+        _fold,
+        (0, 0, 0, 0, 0),
+        "key STRING, n LONG, decision INT, n_obs LONG, d_stop LONG",
+        "n LONG, s LONG, decision INT, n_obs LONG, d_stop LONG",
+        order=seq_col,
     )
 
 
@@ -994,16 +959,8 @@ def streaming_page_hinkley(
     an unbounded metric stream at O(1) memory per series.
     """
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            t, mean, u, minu, alarm = state.get
-        else:
-            t, mean, u, minu, alarm = 0, 0.0, 0.0, 0.0, 0
-        batch = batch.sort_values(seq_col)
+    def _fold(key, carried, batch):
+        t, mean, u, minu, alarm = carried
         for x in batch[value_col]:
             x = float(x)
             t += 1
@@ -1012,10 +969,9 @@ def streaming_page_hinkley(
             minu = min(minu, u)
             if alarm == 0 and u - minu > lam:
                 alarm = t
-        state.update((int(t), float(mean), float(u), float(minu), int(alarm)))
-        yield pd.DataFrame(
+        return (int(t), float(mean), float(u), float(minu), int(alarm)), pd.DataFrame(
             {
-                "key": [str(key[0])],
+                "key": [key],
                 "n": [int(t)],
                 "mean": [float(mean)],
                 "u": [float(u)],
@@ -1029,12 +985,8 @@ def streaming_page_hinkley(
         F.col(seq_col),
         F.col(value_col),
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=PH_OUTPUT_SCHEMA,
-        stateStructType=PH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        rows, _fold, (0, 0.0, 0.0, 0.0, 0), PH_OUTPUT_SCHEMA, PH_STATE_SCHEMA, order=seq_col
     )
 
 
@@ -1063,16 +1015,9 @@ def streaming_bin_counts(
     State: 2 x n_bins longs per key, O(keys) total, TTL-free.
     """
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            c0, c1, n = state.get
-            c0, c1 = list(c0), list(c1)
-        else:
-            c0, c1, n = [0] * n_bins, [0] * n_bins, 0
+    def _fold(key, carried, batch):
+        c0, c1, n = carried
+        c0, c1 = list(c0), list(c1)
         for row in batch.itertuples(index=False):
             b, arm, c = int(getattr(row, bin_col)), int(getattr(row, arm_col)), int(
                 getattr(row, cnt_col)
@@ -1087,10 +1032,9 @@ def streaming_bin_counts(
             else:
                 c1[b] += c
             n += c
-        state.update((c0, c1, int(n)))
-        yield pd.DataFrame(
+        return (c0, c1, int(n)), pd.DataFrame(
             {
-                "key": [str(key[0])],
+                "key": [key],
                 "n": [int(n)],
                 "c0": [c0],
                 "c1": [c1],
@@ -1103,12 +1047,8 @@ def streaming_bin_counts(
         F.col(arm_col),
         F.col(cnt_col),
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=PSI_OUTPUT_SCHEMA,
-        stateStructType=PSI_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        rows, _fold, ((0,) * n_bins, (0,) * n_bins, 0), PSI_OUTPUT_SCHEMA, PSI_STATE_SCHEMA
     )
 
 
@@ -1137,26 +1077,18 @@ def streaming_bottom_k(
     total, TTL-free. Ties break on id so replays are idempotent.
     """
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            hs, ids, n_seen = state.get
-            pool = list(zip(hs, ids))
-        else:
-            pool, n_seen = [], 0
+    def _fold(key, carried, batch):
+        hs, ids, n_seen = carried
+        pool = list(zip(hs, ids))
         for row in batch.itertuples(index=False):
             pool.append((int(getattr(row, hash_col)), int(getattr(row, id_col))))
             n_seen += 1
         pool = sorted(set(pool))[:k]
         hs = [h for h, _ in pool]
         ids = [i for _, i in pool]
-        state.update((hs, ids, int(n_seen)))
-        yield pd.DataFrame(
+        return (hs, ids, int(n_seen)), pd.DataFrame(
             {
-                "key": [str(key[0])],
+                "key": [key],
                 "n_seen": [int(n_seen)],
                 "hs": [hs],
                 "ids": [ids],
@@ -1168,13 +1100,7 @@ def streaming_bottom_k(
         F.col(hash_col).cast("long").alias(hash_col),
         F.col(id_col).cast("long").alias(id_col),
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=BOTTOMK_OUTPUT_SCHEMA,
-        stateStructType=BOTTOMK_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_fold(rows, _fold, ((), (), 0), BOTTOMK_OUTPUT_SCHEMA, BOTTOMK_STATE_SCHEMA)
 
 
 MOMENTS_OUTPUT_SCHEMA = "key STRING, n LONG, s1 LONG, s2 LONG"
@@ -1201,21 +1127,13 @@ def streaming_moments(
 
     State: three longs per key, O(keys) total, TTL-free."""
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            n, s1, s2 = state.get
-        else:
-            n, s1, s2 = 0, 0, 0
+    def _fold(key, carried, batch):
+        n, s1, s2 = carried
         n += int(batch[n_col].sum())
         s1 += int(batch[s1_col].sum())
         s2 += int(batch[s2_col].sum())
-        state.update((int(n), int(s1), int(s2)))
-        yield pd.DataFrame(
-            {"key": [str(key[0])], "n": [int(n)], "s1": [int(s1)], "s2": [int(s2)]}
+        return (int(n), int(s1), int(s2)), pd.DataFrame(
+            {"key": [key], "n": [int(n)], "s1": [int(s1)], "s2": [int(s2)]}
         )
 
     rows = stream.select(
@@ -1224,13 +1142,7 @@ def streaming_moments(
         F.col(s1_col).cast("long").alias(s1_col),
         F.col(s2_col).cast("long").alias(s2_col),
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=MOMENTS_OUTPUT_SCHEMA,
-        stateStructType=MOMENTS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_fold(rows, _fold, (0, 0, 0), MOMENTS_OUTPUT_SCHEMA, MOMENTS_STATE_SCHEMA)
 
 
 HLL_OUTPUT_SCHEMA = "key STRING, n_batches LONG, regs ARRAY<LONG>, nonzero LONG"
@@ -1259,25 +1171,17 @@ def streaming_hll(
 
     State: m longs per key, O(keys * m) total, TTL-free."""
 
-    def _update(key, pdfs, state: GroupState):
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if not len(batch):
-            return
-        if state.exists:
-            regs_t, nb = state.get
-            regs = list(regs_t)
-        else:
-            regs, nb = [0] * m, 0
+    def _fold(key, carried, batch):
+        regs, nb = carried
+        regs = list(regs)
         for idx, r in zip(batch[idx_col], batch[rank_col]):
             i = int(idx)
             if int(r) > regs[i]:
                 regs[i] = int(r)
         nb += 1
-        state.update((regs, int(nb)))
-        yield pd.DataFrame(
+        return (regs, int(nb)), pd.DataFrame(
             {
-                "key": [str(key[0])],
+                "key": [key],
                 "n_batches": [int(nb)],
                 "regs": [regs],
                 "nonzero": [int(sum(1 for v in regs if v > 0))],
@@ -1289,10 +1193,4 @@ def streaming_hll(
         F.col(idx_col).cast("long").alias(idx_col),
         F.col(rank_col).cast("long").alias(rank_col),
     )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=HLL_OUTPUT_SCHEMA,
-        stateStructType=HLL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_fold(rows, _fold, ((0,) * m, 0), HLL_OUTPUT_SCHEMA, HLL_STATE_SCHEMA)

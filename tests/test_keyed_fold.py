@@ -1,0 +1,121 @@
+"""The update-mode per-key fold harness (stateful.keyed_fold) and the quota
+gate's two forms: chunked groups fold in order, state carries across
+micro-batches, a null key stays null, and the sharded gate admits exactly
+what the per-key gate admits."""
+
+from __future__ import annotations
+
+from datetime import datetime, timedelta
+
+import pandas as pd
+import pytest
+
+from phoebe_spark.streaming import drain
+from phoebe_spark.streaming.stateful import keyed_cusum, keyed_ewma, keyed_quota_gate
+
+ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+EVENTS = "key STRING, event_time TIMESTAMP, value DOUBLE"
+
+
+@pytest.fixture
+def small_arrow_chunks(spark):
+    """Arrow chunks of 4 rows, so one key's micro-batch arrives split."""
+    prev = spark.conf.get(ARROW_BATCH)
+    spark.conf.set(ARROW_BATCH, "4")
+    yield
+    spark.conf.set(ARROW_BATCH, prev)
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(
+        [(k, datetime(2024, 1, 1) + timedelta(seconds=int(t)), v) for k, t, v in rows], EVENTS
+    )
+
+
+def _drain(spark, slices, build):
+    """Stage ``slices`` one micro-batch each, drain ``build(stream)`` in
+    update mode and return every emitted row."""
+    with drain.scratch("t_keyed_fold_") as work:
+        src = f"{work}/src"
+        drain.stage_slices(slices, src)
+        stream = spark.readStream.schema(EVENTS).option("maxFilesPerTrigger", 1).parquet(src)
+        out = drain.run(build(stream), work, output_mode="update")
+        return spark.read.parquet(out).collect()
+
+
+def test_split_group_folds_in_order(spark, small_arrow_chunks):
+    # 30 rows of one key, written newest first: folded in file order or
+    # per-chunk order the CUSUM below comes out different
+    vals = [float((7 * i) % 11) for i in range(30)]
+    rows = [("a", t, vals[t]) for t in reversed(range(30))]
+    got = _drain(spark, [_events(spark, rows)], lambda s: keyed_cusum(s, k=5.0, h=1e9))
+
+    def cusum(xs):
+        s = 0.0
+        for x in xs:
+            s = max(0.0, s + x - 5.0)
+        return s
+
+    assert [(r.key, r.n_obs) for r in got] == [("a", 30)]
+    assert got[0].stat == cusum(vals)
+    assert cusum(vals) != cusum(list(reversed(vals)))
+
+
+def test_state_carries_across_three_batches(spark):
+    pdf = pd.DataFrame(
+        [(k, t, float((t * 13 + len(k)) % 17)) for k in ("x", "yy") for t in range(24)],
+        columns=["key", "t", "value"],
+    )
+    slices = [
+        _events(spark, pdf[(pdf.t >= lo) & (pdf.t < lo + 8)].itertuples(index=False))
+        for lo in (0, 8, 16)
+    ]
+    got = _drain(spark, slices, lambda s: keyed_ewma(s, alpha=0.3))
+    final = {r.key: r for r in got if r.n_obs == 24}
+    assert sorted(r.n_obs for r in got) == [8, 8, 16, 16, 24, 24]
+    for key, grp in pdf.groupby("key"):
+        want = grp.sort_values("t")["value"].ewm(alpha=0.3, adjust=False).mean().iloc[-1]
+        assert final[key].ewma == pytest.approx(want, rel=1e-12)
+
+
+def test_null_key_stays_null(spark):
+    rows = [(None, 0, 1.0), ("None", 1, 2.0), (None, 2, 3.0)]
+    got = _drain(spark, [_events(spark, rows)], lambda s: keyed_ewma(s, alpha=0.5))
+    assert sorted(((r.key, r.n_obs) for r in got), key=repr) == [("None", 1), (None, 2)]
+
+
+def test_keyed_quota_gate_sharded_identical(spark):
+    """With ``shards=n`` the quota fold runs a dict of counters per shard:
+    the admitted set must be IDENTICAL to the per-key form on the same
+    staged stream, including keys that saturate mid-stream, keys that
+    share a shard (2 shards for 6 keys forces collisions), a null key,
+    and cross-batch counter carry."""
+    keys = ["a", "b", "c", "d", "e", None]
+    slices = [
+        spark.createDataFrame(
+            [(k, f"{bi}{i:05d}", bi * 100 + i, float(i)) for k in keys for i in range(3)],
+            "key STRING, sid STRING, ord LONG, value DOUBLE",
+        )
+        for bi in range(3)
+    ]
+    results = {}
+    with drain.scratch("t_quota_") as work:
+        drain.stage_slices(slices, f"{work}/src")
+        for shards in (None, 2):
+            stream = (
+                spark.readStream.schema("key STRING, sid STRING, ord LONG, value DOUBLE")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(f"{work}/src")
+            )
+            admitted = keyed_quota_gate(
+                stream, quota=5, key_col="key", id_col="sid", ord_col="ord", shards=shards
+            )
+            out = drain.run(admitted, f"{work}/{shards}", output_mode="append")
+            results[shards] = {
+                (r.key, r.seq_id, r.ord, r.value) for r in spark.read.parquet(out).collect()
+            }
+    # quota 5 on 3x3 rows/key: saturation happens inside batch 2 for
+    # every key — the carried counter decides the cut in both forms
+    assert results[2] == results[None]
+    assert len(results[None]) == 5 * 6
+    assert sum(1 for r in results[None] if r[0] is None) == 5

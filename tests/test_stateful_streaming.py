@@ -358,67 +358,6 @@ def test_keyed_quota_gate_cross_batch_counter(spark, tmp_path):
     assert got == want
 
 
-def test_keyed_quota_gate_sharded_identical(spark, tmp_path):
-    """Round-12 sharded quota gate: with ``shards=n`` the per-key fold
-    runs dict-of-counters inside shard groups — the admitted set must be
-    IDENTICAL to the per-key form on the same staged stream, including
-    keys that saturate mid-stream, keys that share a shard (2 shards for
-    5 keys forces collisions), and cross-batch counter carry."""
-    import glob as _glob
-    import os
-    import shutil as _shutil
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    keys = ["a", "b", "c", "d", "e"]
-    rows_by_batch = [
-        [(k, bi * 100 + i, float(i)) for k in keys for i in range(3)]
-        for bi in range(3)
-    ]
-    for bi, rows in enumerate(rows_by_batch):
-        df = spark.createDataFrame(
-            [(k, f"{bi}{i:05d}", bi * 100 + i, v) for k, i, v in rows],
-            "key string, sid string, ord long, value double",
-        )
-        df.coalesce(1).write.parquet(f"{str(tmp_path)}/sstage{bi}")
-        (part,) = _glob.glob(f"{str(tmp_path)}/sstage{bi}/part-*.parquet")
-        dst = f"{src}/{bi:03d}.parquet"
-        _shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 10 * bi, 1_000_000_000 + 10 * bi))
-
-    from phoebe_spark.streaming.stateful import keyed_quota_gate
-
-    results = {}
-    for tag, shards in (("perkey", None), ("sharded", 2)):
-        stream = (
-            spark.readStream.schema("key STRING, sid STRING, ord LONG, value DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        admitted = keyed_quota_gate(
-            stream, quota=5, key_col="key", id_col="sid", ord_col="ord",
-            shards=shards,
-        )
-        sink, ck = str(tmp_path / f"out_{tag}"), str(tmp_path / f"ck_{tag}")
-        q = (
-            admitted.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        results[tag] = {
-            (r["key"], r["seq_id"], r["ord"], r["value"])
-            for r in spark.read.parquet(sink).collect()
-        }
-    # quota 5 on 3x3 rows/key: saturation happens inside batch 2 for
-    # every key — the carried counter decides the cut in both forms
-    assert results["sharded"] == results["perkey"]
-    assert len(results["perkey"]) == 5 * 5
-
-
 def test_first_match_within_out_of_order(spark, tmp_path):
     """CEP first-match under genuine OUT-OF-ORDER arrival: a
     within-watermark late B (earlier event time, later file) must BEAT an
