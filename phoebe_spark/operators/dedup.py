@@ -52,18 +52,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def word_shingles(text_col, n: int = 3):
-    """Word n-gram shingle array (distinct) from whitespace tokens.
-
-    Column-expression form (array in, array out). For corpus-scale work use
-    :func:`shingle_postings` instead — per-position ``slice`` on arrays is
-    interpreted per element, while the posting form stays in codegen."""
-    toks = tokens(text_col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>")))
-
-
 def shingle_postings(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
     distinct: bool = True,

@@ -21,9 +21,10 @@ Video is REAL for MJPEG-in-AVI: :func:`avi_mjpeg_frames` demuxes the
 RIFF container (stdlib) and :func:`video_frame_features` decodes sampled
 frames through the baseline-JPEG decoder; other codecs raise through the
 ``frame_decoder=`` hook (no ffmpeg in this container — plug a real codec
-stack there in production). The ``_fake_decode_*`` stubs remain available
-as explicit opt-in test doubles. Everything around the codecs — schemas,
-UDF signatures, batching, partitioning — is real and tested either way.
+stack there in production). The ``_fake_decode_image`` stub remains
+available as an explicit opt-in test double. Everything around the
+codecs — schemas, UDF signatures, batching, partitioning — is real and
+tested either way.
 """
 
 from __future__ import annotations
@@ -97,22 +98,13 @@ def _fake_decode_image(content: bytes, width: int, height: int) -> np.ndarray:
     return rng.integers(0, 256, size=(height, width, 3), dtype=np.uint8)
 
 
-def _fake_decode_audio(content: bytes, n_samples: int) -> np.ndarray:
-    """STUB decoder: deterministic PCM from the content hash (real:
-    ffmpeg/librosa)."""
-    seed = int.from_bytes(hashlib.sha256(content).digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(n_samples).astype(np.float32)
-
-
 @_malformed_guard("WAV")
 def wav_decode(content: bytes, n_samples: int = -1) -> np.ndarray:
     """REAL decoder for RIFF/WAVE PCM via stdlib ``wave`` — zero external
     dependencies, so this path is fully functional in any environment.
     Returns mono float32 in [-1, 1] (multi-channel averaged); accepts
-    8/16/32-bit integer PCM. Pass as ``decoder=`` to
-    :func:`audio_features` to run the audio pipeline on real bytes instead
-    of the hash-seeded stub."""
+    8/16/32-bit integer PCM. The default :func:`auto_decode_audio`
+    dispatches WAV bytes here."""
     import io
     import wave
 

@@ -1769,7 +1769,7 @@ def q179_streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = spark.readStream.schema(
             "fp STRING, doc_id STRING, event_time TIMESTAMP"
         ).parquet(src_dir)
-        gate = streaming_dedup_gate(stream)  # ttl_ms=None: drain terminates
+        gate = streaming_dedup_gate(stream)
         sink = drain.run(gate, work, output_mode="append")
 
         staged = spark.read.parquet(src_dir)
@@ -2888,6 +2888,26 @@ def q196_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _even_odd_event_streams(
+    spark: SparkSession, ev: DataFrame, work: str
+) -> tuple[DataFrame, DataFrame]:
+    """The events table staged under ``work`` and read back as two file
+    streams, even event_ids on the left and odd on the right, each with
+    (event_id, user_id, event_time, v): the two sides of the q197/q218
+    stream-stream interval joins."""
+    staged = ev.select(
+        "event_id",
+        "user_id",
+        F.expr("timestamp_micros(ts div 1000)").alias("event_time"),
+        _dec("value").alias("v"),
+    )
+    staged.filter(F.col("event_id") % 2 == 0).write.parquet(f"{work}/left")
+    staged.filter(F.col("event_id") % 2 == 1).write.parquet(f"{work}/right")
+    schema = "event_id LONG, user_id LONG, event_time TIMESTAMP, v DECIMAL(18,4)"
+    read = spark.readStream.schema(schema).parquet
+    return read(f"{work}/left"), read(f"{work}/right")
+
+
 @query(
     "q197_stream_join_drain",
     oracle=f"""
@@ -2929,45 +2949,23 @@ def q197_stream_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     The drain runs with 8 state partitions and a fresh checkpoint
     (streaming/drain.py)."""
     from phoebe_spark.streaming import drain
+    from phoebe_spark.streaming.jobs import stream_stream_interval_join
 
     ev = _t(spark, sf_dir, "events")
     with drain.scratch("q197_") as work:
-        staged = ev.select(
-            "event_id",
-            "user_id",
-            F.expr("timestamp_micros(ts div 1000)").alias("event_time"),
-            _dec("value").alias("v"),
-        )
-        staged.filter(F.col("event_id") % 2 == 0).write.parquet(f"{work}/left")
-        staged.filter(F.col("event_id") % 2 == 1).write.parquet(f"{work}/right")
-
-        schema = "event_id LONG, user_id LONG, event_time TIMESTAMP, v DECIMAL(18,4)"
-        left = (
-            spark.readStream.schema(schema)
-            .parquet(f"{work}/left")
-            .withWatermark("event_time", "0 seconds")
-            .select("user_id", F.col("event_time").alias("a_time"))
-        )
-        right = (
-            spark.readStream.schema(schema)
-            .parquet(f"{work}/right")
-            .withWatermark("event_time", "0 seconds")
-            .select(
-                F.col("user_id").alias("r_user"),
-                F.col("event_time").alias("b_time"),
-                "v",
-            )
-        )
-        joined = left.join(
+        left, right = _even_odd_event_streams(spark, ev, work)
+        joined = stream_stream_interval_join(
+            left,
             right,
-            F.expr(
-                "user_id = r_user AND b_time >= a_time "
-                "AND b_time <= a_time + INTERVAL 30 MINUTES"
-            ),
+            key_col="user_id",
+            left_watermark="0 seconds",
+            right_watermark="0 seconds",
+            upper="30 minutes",
+            how="inner",
         ).select(
             "user_id",
-            "v",
-            (F.col("b_time").cast("long") - F.col("a_time").cast("long")).alias(
+            F.col("v_r").alias("v"),
+            (F.col("event_time_r").cast("long") - F.col("event_time_l").cast("long")).alias(
                 "lag_s"
             ),
         )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ._core import EPOCH_SQL, ORACLE, _dec, _dim, _dsum2, _epoch, _t, query
 from .q001_050 import _MD5H_SQL, _PREFIX_FP_SQL, _TOKS_SQL, _prefix_fp
+from .q151_200 import _even_odd_event_streams
 
 @query(
     "q201_tpch_q4_semi",
@@ -1664,43 +1665,24 @@ def q218_stream_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens before anything leaves the executors; the drain runs with 8
     state partitions and a fresh checkpoint (streaming/drain.py)."""
     from phoebe_spark.streaming import drain
+    from phoebe_spark.streaming.jobs import stream_stream_interval_join
 
     ev = _t(spark, sf_dir, "events")
     with drain.scratch("q218_") as work:
-        staged = ev.select(
-            "event_id",
-            "user_id",
-            F.expr("timestamp_micros(ts div 1000)").alias("event_time"),
-            _dec("value").alias("v"),
-        )
-        staged.filter(F.col("event_id") % 2 == 0).write.parquet(f"{work}/left")
-        staged.filter(F.col("event_id") % 2 == 1).write.parquet(f"{work}/right")
-
-        schema = "event_id LONG, user_id LONG, event_time TIMESTAMP, v DECIMAL(18,4)"
-        left = (
-            spark.readStream.schema(schema)
-            .parquet(f"{work}/left")
-            .withWatermark("event_time", "0 seconds")
-            .select("user_id", F.col("event_time").alias("a_time"))
-        )
-        right = (
-            spark.readStream.schema(schema)
-            .parquet(f"{work}/right")
-            .withWatermark("event_time", "0 seconds")
-            .select(
-                F.col("user_id").alias("r_user"),
-                F.col("event_time").alias("b_time"),
-                "v",
-            )
-        )
-        joined = left.join(
+        left, right = _even_odd_event_streams(spark, ev, work)
+        joined = stream_stream_interval_join(
+            left,
             right,
-            F.expr(
-                "user_id = r_user AND b_time >= a_time "
-                "AND b_time <= a_time + INTERVAL 30 MINUTES"
-            ),
-            "leftOuter",
-        ).select("user_id", "v", F.col("r_user").isNotNull().alias("matched"))
+            key_col="user_id",
+            left_watermark="0 seconds",
+            right_watermark="0 seconds",
+            upper="30 minutes",
+            how="left_outer",
+        ).select(
+            "user_id",
+            F.col("v_r").alias("v"),
+            F.col("event_time_r").isNotNull().alias("matched"),
+        )
         sink = drain.run(joined, work, output_mode="append")
 
         out = (
@@ -2529,8 +2511,7 @@ def q229_event_timer_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFra
     sessions close by in-batch gap splits when the next same-key event
     arrives, or by WATERMARK-driven timer firings (including the
     availableNow finalization batch, which is what lets the drain
-    self-terminate — unlike processing-time timers, documented at
-    :func:`stateful.idle_session_finalizer`).
+    self-terminate).
 
     The fixture makes every divergence class unrepresentable:
       - synthetic EVEN-millisecond event times ``2*(epoch_s*1000 +

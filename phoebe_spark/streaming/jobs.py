@@ -6,7 +6,8 @@ phoebe.properties:13 ``TopSpeedWindowing``) define the semantics:
 Kafka source -> filter/join (static campaign table) -> keyed 10 s windowed
 aggregation -> sink, with checkpointing and watermark-based late-data
 handling. Kafka itself is transport; these builders work over any streaming
-DataFrame, so tests drive them with file and rate sources.
+DataFrame, so registry drains and tests drive them with file and rate
+sources.
 
 Workload generation mirrors the reference's sine-modulated generators
 (execution/Workload.java:56-67; prepare_model.py:24-47): a rate source
@@ -120,55 +121,6 @@ def windowed_keyed_agg(
     )
 
 
-def sessionized_agg(
-    stream: DataFrame,
-    key_col: str = "key",
-    ts_col: str = "event_time",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming sessionization via Spark's native session windows — the
-    streaming twin of the batch q46 sessionize (gap-based session ids by
-    window lag): events for a key closer than ``gap`` merge into one
-    session whose window extends until the gap passes. State is bounded by
-    the watermark (sessions older than it finalize and emit). Output:
-    (session_start, session_end, key, events)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("sess"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("events"))
-        .select(
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            key_col,
-            "events",
-        )
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    key_cols: list[str] | None = None,
-    ts_col: str = "event_time",
-    watermark: str = "30 seconds",
-) -> DataFrame:
-    """Streaming exact dedup: drop records whose dedup key was already
-    seen, keeping state only within the watermark horizon
-    (``dropDuplicatesWithinWatermark``) — the in-flight twin of the batch
-    exact dedup (operators/dedup.py), for at-least-once sources that
-    re-deliver (Kafka producer retries, replayed partitions).
-
-    Scale notes: state is hash-partitioned on the dedup key (uniform if
-    the key is an id/fingerprint) and BOUNDED by the watermark — the
-    classic unbounded-state trap of a plain streaming dropDuplicates is
-    exactly what the within-watermark variant exists to avoid. Keys
-    re-delivered farther apart than the watermark are the source's
-    duplicate-window contract, not state the engine should hold forever.
-    """
-    keys = key_cols or ["key"]
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
 def stream_static_join(
     stream: DataFrame, static_dim: DataFrame, on: str, how: str = "inner"
 ) -> DataFrame:
@@ -176,27 +128,6 @@ def stream_static_join(
     baseline.properties:25-26). Spark broadcasts the static side per
     micro-batch — no stream state, no shuffle of the stream."""
     return stream.join(F.broadcast(static_dim), on=on, how=how)
-
-
-def stream_static_anti_dedup(
-    stream: DataFrame,
-    history: DataFrame,
-    fingerprint_col: str = "fingerprint",
-) -> DataFrame:
-    """Streaming incremental dedup against a STATIC corpus history: keep
-    only stream records whose fingerprint has never been seen in the
-    history frame — the in-flight twin of the batch daily-drop dedup
-    (queries.py q102), for ingest pipelines where the deduped corpus
-    accumulates between runs.
-
-    Scale notes: the history reduces to its DISTINCT fingerprints (the
-    only state that matters) and joins left_anti per micro-batch. Spark
-    broadcasts it when small; for corpus-scale histories leave off the
-    broadcast hint and let the micro-batch shuffle-join — either way no
-    streaming state accrues (the history is static; within-stream
-    re-deliveries are streaming_dedup's job, composable upstream)."""
-    fps = history.select(fingerprint_col).distinct()
-    return stream.join(fps, on=fingerprint_col, how="left_anti")
 
 
 def run_to_sink(
@@ -244,15 +175,16 @@ def stream_stream_interval_join(
 ) -> DataFrame:
     """Watermarked stream-stream interval join — the canonical streaming
     enrichment shape (impression x click attribution: each left event
-    matches right events with the same key inside ``(left.ts, left.ts +
-    upper]``). Both sides carry watermarks plus the time-range predicate,
-    which is exactly what lets Spark BOUND THE JOIN STATE: a buffered left
-    row is dropped once the right watermark passes ``left.ts + upper``
-    (and vice versa) instead of accumulating forever — the stream-stream
-    analog of the windowed-agg state bound the reference monitors via
-    consumer lag. State is partitioned by the join key, the natural
-    uniform key at scale. Outer variants emit nulls only after the
-    watermark proves no match can arrive.
+    matches right events with the same key inside ``[left.ts, left.ts +
+    upper]``, both ends inclusive; q197 (inner) and q218 (left outer) pin
+    this against their batch oracles). Both sides carry watermarks plus
+    the time-range predicate, which is exactly what lets Spark BOUND THE
+    JOIN STATE: a buffered left row is dropped once the right watermark
+    passes ``left.ts + upper`` (and vice versa) instead of accumulating
+    forever — the stream-stream analog of the windowed-agg state bound
+    the reference monitors via consumer lag. State is partitioned by the
+    join key, the natural uniform key at scale. Outer variants emit nulls
+    only after the watermark proves no match can arrive.
 
     Value columns are suffixed; output keeps the left timestamps plus the
     matched right timestamp.

@@ -12,7 +12,8 @@ the operator selects its columns (key first) and supplies a pure
 state-store protocol (chunk concat, optional sort, read or initialise the
 state, store it, emit the frame). Twelve operators below are such folds.
 The rest need what the harness deliberately leaves out — append output,
-timeouts or sharded keys — and speak ``applyInPandasWithState`` directly.
+event-time timers or sharded keys — and speak ``applyInPandasWithState``
+directly.
 
 ``keyed_ewma`` maintains a per-key exponentially-weighted moving average of
 the value column (the streaming analogue of the reference's smoothed
@@ -236,7 +237,6 @@ def streaming_dedup_gate(
     fp_col: str = "fp",
     id_col: str = "doc_id",
     ts_col: str = "event_time",
-    ttl_ms: int | None = None,
 ) -> DataFrame:
     """STREAMING exact-dedup gate over a fingerprint column — the live
     form of the batch fingerprint dedup (q08) and the incremental-merge
@@ -245,40 +245,21 @@ def streaming_dedup_gate(
     ingest. Append output: downstream sees ONLY survivors, so the gate
     composes with any batch sink.
 
-    ``ttl_ms`` bounds state by age — ``ttl_ms`` of processing time after
-    the fingerprint's FIRST occurrence it is forgotten and the next copy
-    passes again (first-seen TTL: later duplicates do NOT extend the
-    window, so "dedup within N days of first occurrence", not
-    last-seen). An unbounded fingerprint domain cannot keep state
-    forever; first-seen keeps the hot path write-free for duplicates.
-    State is one (doc_id, ts) pair per live fingerprint, checkpointed and rescale-safe; within a micro-batch ties
-    break on (event time, doc_id), deterministically.
-
-    Trigger note: with ``ttl_ms`` set, armed processing-time timeouts keep
-    the engine triggering (possibly empty) micro-batches to fire them, so
-    an ``availableNow`` run will NOT self-terminate — use a continuous
-    trigger in production, and stop on a sink condition in drain-style
-    jobs. With ``ttl_ms=None`` the query drains and stops normally."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms else GroupStateTimeout.NoTimeout
-    )
+    State is one (doc_id, ts) pair per seen fingerprint, checkpointed and
+    rescale-safe; within a micro-batch ties break on (event time,
+    doc_id), deterministically. Under ``NoTimeout`` the handler only runs
+    for fingerprints with rows, and an ``availableNow`` drain stops once
+    its input is read."""
 
     def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            # TTL expired: forget the fingerprint; the next copy re-enters
-            state.remove()
-            return
-        frames = list(pdfs)
-        batch = pd.concat(frames) if frames else pd.DataFrame()
-        if state.exists or not len(batch):
-            return  # already gated (TTL, if any, keeps running from first-seen)
+        batch = pd.concat(list(pdfs))
+        if state.exists:
+            return  # already gated
         first = batch.sort_values(["ts_ms", "doc_id"]).iloc[0]
         state.update((str(first["doc_id"]), int(first["ts_ms"])))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
         yield pd.DataFrame(
             {
-                "fp": [str(key[0])],
+                "fp": [key[0]],
                 "doc_id": [str(first["doc_id"])],
                 "first_seen_ms": [int(first["ts_ms"])],
             }
@@ -294,64 +275,7 @@ def streaming_dedup_gate(
         outputStructType=DEDUP_GATE_OUTPUT_SCHEMA,
         stateStructType=DEDUP_GATE_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-SESSION_FINAL_OUTPUT_SCHEMA = "key STRING, n_events LONG, total_value DOUBLE, closed BOOLEAN"
-SESSION_FINAL_STATE_SCHEMA = "n LONG, total DOUBLE"
-
-
-def idle_session_finalizer(
-    stream: DataFrame,
-    gap_ms: int,
-    key_col: str = "key",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key session aggregate emitted ONLY once the key has been idle
-    for ``gap_ms`` of processing time — the timeout-driven counterpart of
-    watermark-closed event-time sessionization (q46): use this form when
-    the trigger is feed SILENCE (a source going quiet, a crawler
-    finishing a host) rather than event-time gaps inside the data.
-    Every batch that touches a key re-arms its timeout; the timeout
-    firing emits the session row exactly once (append mode) and clears
-    state. State is two scalars per ACTIVE key only.
-
-    Trigger note: timeout firing needs the engine to keep triggering
-    micro-batches, so an ``availableNow`` run will NOT self-terminate
-    while keys are active — use a continuous trigger in production, and
-    stop on a sink condition in drain-style jobs."""
-
-    def _update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            n, total = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "key": [str(key[0])],
-                    "n_events": [int(n)],
-                    "total_value": [float(total)],
-                    "closed": [True],
-                }
-            )
-            return
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].sum())
-        state.update((int(n), float(total)))
-        state.setTimeoutDuration(gap_ms)
-
-    rows = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias(value_col),
-    )
-    return rows.groupBy("key").applyInPandasWithState(
-        _update,
-        outputStructType=SESSION_FINAL_OUTPUT_SCHEMA,
-        stateStructType=SESSION_FINAL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -511,10 +435,9 @@ def session_close_event_time(
     when the WATERMARK passes ``end + gap_ms`` and the timer fires
     (``hasTimedOut`` invocation, state removed). This is the
     applyInPandasWithState twin of the built-in session window (q203)
-    with the timer path exercised — and unlike the processing-time
-    finalizer (:func:`idle_session_finalizer`), event-time timers
-    fire on watermark advance, so an ``availableNow`` drain terminates
-    on its own (the finalization batch fires every expired timer).
+    with the timer path exercised. Event-time timers fire on watermark
+    advance, so an ``availableNow`` drain terminates on its own (the
+    finalization batch fires every expired timer).
 
     State: three scalars per OPEN session only. Emission is exactly-once
     per closed session (append mode)."""
@@ -525,7 +448,7 @@ def session_close_event_time(
             state.remove()
             yield pd.DataFrame(
                 {
-                    "key": [str(key[0])],
+                    "key": [key[0]],
                     "session_start": [int(s)],
                     "session_end": [int(e)],
                     "n_events": [int(n)],
@@ -553,7 +476,7 @@ def session_close_event_time(
         if closed:
             yield pd.DataFrame(
                 {
-                    "key": [str(key[0])] * len(closed),
+                    "key": [key[0]] * len(closed),
                     "session_start": [c[0] for c in closed],
                     "session_end": [c[1] for c in closed],
                     "n_events": [c[2] for c in closed],
@@ -650,7 +573,7 @@ def first_match_within(
         if out:
             yield pd.DataFrame(
                 {
-                    "key": [str(key[0])] * len(out),
+                    "key": [key[0]] * len(out),
                     "a_time": [a for a, _ in out],
                     "b_time": [b for _, b in out],
                     "lag_ms": [b - a for a, b in out],

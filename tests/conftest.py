@@ -31,7 +31,6 @@ SLOW_FILES = {
     "test_plans_round11b.py",    # 60 s
     "test_streaming_lag.py",     # 54 s
     "test_anomaly.py",           # 47 s
-    "test_tws_streaming.py",     # 47 s
 }
 
 

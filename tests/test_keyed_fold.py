@@ -1,7 +1,8 @@
 """The update-mode per-key fold harness (stateful.keyed_fold) and the quota
 gate's two forms: chunked groups fold in order, state carries across
-micro-batches, a null key stays null, and the sharded gate admits exactly
-what the per-key gate admits."""
+micro-batches, a null key stays null (in the folds and in the append-mode
+operators that emit their key themselves), and the sharded gate admits
+exactly what the per-key gate admits."""
 
 from __future__ import annotations
 
@@ -11,10 +12,17 @@ import pandas as pd
 import pytest
 
 from phoebe_spark.streaming import drain
-from phoebe_spark.streaming.stateful import keyed_cusum, keyed_ewma, keyed_quota_gate
+from phoebe_spark.streaming.stateful import (
+    first_match_within,
+    keyed_cusum,
+    keyed_ewma,
+    keyed_quota_gate,
+    streaming_dedup_gate,
+)
 
 ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 EVENTS = "key STRING, event_time TIMESTAMP, value DOUBLE"
+TYPED_EVENTS = "key STRING, event_time TIMESTAMP, event_type STRING"
 
 
 @pytest.fixture
@@ -26,20 +34,22 @@ def small_arrow_chunks(spark):
     spark.conf.set(ARROW_BATCH, prev)
 
 
-def _events(spark, rows):
+def _events(spark, rows, schema=EVENTS):
     return spark.createDataFrame(
-        [(k, datetime(2024, 1, 1) + timedelta(seconds=int(t)), v) for k, t, v in rows], EVENTS
+        [(k, datetime(2024, 1, 1) + timedelta(seconds=int(t)), v) for k, t, v in rows], schema
     )
 
 
-def _drain(spark, slices, build):
-    """Stage ``slices`` one micro-batch each, drain ``build(stream)`` in
-    update mode and return every emitted row."""
+def _drain(spark, slices, build, output_mode="update"):
+    """Stage ``slices`` one micro-batch each, drain ``build(stream)`` and
+    return every emitted row."""
     with drain.scratch("t_keyed_fold_") as work:
         src = f"{work}/src"
         drain.stage_slices(slices, src)
-        stream = spark.readStream.schema(EVENTS).option("maxFilesPerTrigger", 1).parquet(src)
-        out = drain.run(build(stream), work, output_mode="update")
+        stream = (
+            spark.readStream.schema(slices[0].schema).option("maxFilesPerTrigger", 1).parquet(src)
+        )
+        out = drain.run(build(stream), work, output_mode=output_mode)
         return spark.read.parquet(out).collect()
 
 
@@ -82,6 +92,27 @@ def test_null_key_stays_null(spark):
     rows = [(None, 0, 1.0), ("None", 1, 2.0), (None, 2, 3.0)]
     got = _drain(spark, [_events(spark, rows)], lambda s: keyed_ewma(s, alpha=0.5))
     assert sorted(((r.key, r.n_obs) for r in got), key=repr) == [("None", 1), (None, 2)]
+
+    got = _drain(
+        spark,
+        [_events(spark, rows)],
+        lambda s: streaming_dedup_gate(s, fp_col="key", id_col="value"),
+        output_mode="append",
+    )
+    assert sorted(((r.fp, r.doc_id) for r in got), key=repr) == [("None", "2.0"), (None, "1.0")]
+
+    # key "z" at t=100 lifts the watermark past both match windows, so the
+    # finalization batch fires the timers that emit the matches
+    typed = [(None, 0, "a"), (None, 5, "b"), ("None", 1, "a"), ("None", 3, "b"), ("z", 100, "c")]
+    got = _drain(
+        spark,
+        [_events(spark, typed, TYPED_EVENTS)],
+        lambda s: first_match_within(
+            s.withWatermark("event_time", "0 seconds"), window_ms=10_000, a_type="a", b_type="b"
+        ),
+        output_mode="append",
+    )
+    assert sorted(((r.key, r.lag_ms) for r in got), key=repr) == [("None", 2000), (None, 5000)]
 
 
 def test_keyed_quota_gate_sharded_identical(spark):

@@ -177,78 +177,6 @@ def test_dataset_replay_source(spark):
     assert len({r["value"] for r in rows}) > 1
 
 
-def test_session_window_stream(spark, tmp_path):
-    """Native streaming session windows (the streaming twin of batch q46):
-    a file-sourced stream with availableNow trigger — fully deterministic —
-    must merge events within the gap into one session per key and split
-    across larger gaps."""
-    from pyspark.sql import functions as F
-
-    from phoebe_spark.streaming.jobs import run_to_sink, sessionized_agg
-
-    src_dir = tmp_path / "sessions_in"
-    rows = [
-        ("u1", 0), ("u1", 10), ("u1", 25),      # one session: gaps < 30s
-        ("u1", 100), ("u1", 110),               # second session after 75s gap
-        ("u2", 5),                              # singleton session
-    ]
-    spark.createDataFrame(rows, "key STRING, ts LONG").select(
-        "key", F.col("ts").cast("timestamp").alias("event_time")
-    ).write.parquet(str(src_dir))
-
-    stream = (
-        spark.readStream.schema("key STRING, event_time TIMESTAMP")
-        .parquet(str(src_dir))
-    )
-    agg = sessionized_agg(stream, gap="30 seconds", watermark="10 minutes")
-    q = run_to_sink(
-        agg, str(tmp_path / "chk"), output_mode="complete",
-        queryName="sess_win", trigger_available_now=True,
-    )
-    q.awaitTermination(60)
-    out = spark.sql("SELECT * FROM sess_win").collect()
-    sessions = {
-        (r["key"], int(r["session_start"].timestamp()), int(r["session_end"].timestamp())): r["events"]
-        for r in out
-    }
-    assert sessions == {
-        ("u1", 0, 55): 3,      # 0,10,25 merge; window extends 30s past last
-        ("u1", 100, 140): 2,   # 100,110
-        ("u2", 5, 35): 1,
-    }
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    from phoebe_spark.streaming.jobs import streaming_dedup
-
-    src = str(tmp_path / "dup_src")
-    # two micro-batch files; event 2 is re-delivered within the watermark
-    # horizon (same timestamp), event 3 twice within one batch
-    spark.createDataFrame(
-        [("2024-01-01 00:00:00", 1, 10.0), ("2024-01-01 00:00:01", 2, 20.0),
-         ("2024-01-01 00:00:03", 3, 30.0), ("2024-01-01 00:00:03", 3, 30.0)],
-        "ts string, event_id long, value double",
-    ).select(F.col("ts").cast("timestamp").alias("event_time"), "event_id", "value") \
-     .coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(
-        [("2024-01-01 00:00:01", 2, 20.0), ("2024-01-01 00:00:05", 4, 40.0)],
-        "ts string, event_id long, value double",
-    ).select(F.col("ts").cast("timestamp").alias("event_time"), "event_id", "value") \
-     .coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("event_time TIMESTAMP, event_id LONG, value DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = streaming_dedup(stream, key_cols=["event_id"], watermark="1 minute")
-    q = run_to_sink(out, str(tmp_path / "ck_dedup"), queryName="dedup_sink")
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT event_id, count(*) AS n FROM dedup_sink GROUP BY event_id").collect()
-    got = {r["event_id"]: r["n"] for r in rows}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
-
-
 def test_stream_stream_interval_join_matches_batch(spark, events_stream_dir, tmp_path):
     """Stream-stream interval join must equal the identical batch join
     (impressions = all events; conversions = high-value events; match
@@ -283,37 +211,3 @@ def test_stream_stream_interval_join_matches_batch(spark, events_stream_dir, tmp
     assert got.count() == exp.count() > 0
     assert got.exceptAll(exp).count() == 0
     assert exp.exceptAll(got).count() == 0
-
-
-def test_stream_static_anti_dedup_matches_batch(spark, tmp_path):
-    """Incremental ingest dedup: stream records whose fingerprint exists
-    in the static history are dropped; survivors match the batch
-    left_anti answer exactly."""
-    from phoebe_spark.streaming.jobs import stream_static_anti_dedup
-
-    history = spark.createDataFrame(
-        [(f"fp{i}",) for i in range(0, 10, 2)] * 3,  # dups in history are fine
-        "fingerprint string",
-    )
-    src = str(tmp_path / "ingest_src")
-    batch = spark.createDataFrame(
-        [(f"fp{i}", i) for i in range(10)], "fingerprint string, doc_id long"
-    )
-    batch.coalesce(2).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema("fingerprint STRING, doc_id LONG")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = stream_static_anti_dedup(stream, history)
-    q = run_to_sink(out, str(tmp_path / "ck_anti"), queryName="anti_sink")
-    q.awaitTermination(120)
-    got = sorted(
-        r["doc_id"] for r in spark.sql("SELECT doc_id FROM anti_sink").collect()
-    )
-    want = sorted(
-        r["doc_id"]
-        for r in batch.join(history.distinct(), "fingerprint", "left_anti").collect()
-    )
-    assert got == want == [1, 3, 5, 7, 9]
