@@ -219,7 +219,7 @@ def q203_session_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: complete mode is the DRAIN contract only; production
     session aggregation runs append + watermark so closed sessions emit
     and state stays bounded by open sessions per key. The drain runs
-    with 8 state partitions (streaming/drain.py)."""
+    with 1 state partition (streaming/drain.py)."""
     from phoebe_spark.streaming import drain
 
     ev = _t(spark, sf_dir, "events")
@@ -1662,8 +1662,8 @@ def q218_stream_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: both sides are watermarked so join state is
     eviction-bounded exactly as in production; per-user aggregation
-    happens before anything leaves the executors; the drain runs with 8
-    state partitions and a fresh checkpoint (streaming/drain.py)."""
+    happens before anything leaves the executors; the drain runs with 1
+    state partition and a fresh checkpoint (streaming/drain.py)."""
     from phoebe_spark.streaming import drain
     from phoebe_spark.streaming.jobs import stream_stream_interval_join
 
@@ -2565,7 +2565,10 @@ def q229_event_timer_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFra
         sessions = session_close_event_time(
             stream, gap_ms=_Q229_GAP_MS, key_col="user_id"
         )
-        sink = drain.run(sessions, work, output_mode="append")
+        # Python fold over 1,500 raw users; width 1 measured +40% wall
+        # (sf0.1, 4 vCPUs).
+        # Sharded timers (ROADMAP item 2) would let this drop to 1.
+        sink = drain.run(sessions, work, output_mode="append", state_partitions=8)
 
         out = spark.read.parquet(sink).select(
             "key", "session_start", "session_end", "n_events"
@@ -3789,7 +3792,10 @@ def q246_stream_first_match_drain(spark: SparkSession, sf_dir: str) -> DataFrame
             b_type="purchase",
             key_col="user_id",
         )
-        sink = drain.run(matches, work, output_mode="append")
+        # Python fold over 1,500 raw users; width 1 measured +76% wall
+        # (sf0.1, 4 vCPUs).
+        # Sharded timers (ROADMAP item 2) would let this drop to 1.
+        sink = drain.run(matches, work, output_mode="append", state_partitions=8)
 
         out = spark.read.parquet(sink).select("key", "a_time", "b_time", "lag_ms")
         return out.localCheckpoint(eager=True)
@@ -4004,11 +4010,7 @@ def q249_streaming_cdc_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFra
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        # no stateful exchange for the override to narrow: the merge job's
-        # own shuffle keeps the session width (8 partitions measured slower)
-        drain.run(
-            stream, work, output_mode="append", sink=_merge, state_partitions=None
-        )
+        drain.run(stream, work, output_mode="append", sink=_merge)
         snaps = sorted(glob.glob(f"{store}/v*"))
         final = spark.read.parquet(snaps[-1])
         out = (

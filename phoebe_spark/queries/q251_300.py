@@ -4452,7 +4452,7 @@ def q300_streaming_hist_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: the streaming agg is all-JVM (no Python stateful
     operator) with O(256) state cells; the drain stages narrow
-    (8 state partitions, fresh checkpoint; see streaming/drain.py).
+    (1 state partition, fresh checkpoint; see streaming/drain.py).
     """
     from phoebe_spark.streaming import drain
 

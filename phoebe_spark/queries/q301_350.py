@@ -500,7 +500,7 @@ def q306_streaming_sprt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the live event feed and stopping EARLY).
 
     Scale notes: five integers of state per experiment key; the drain
-    stages narrow (8 state partitions, fresh checkpoint; see
+    stages narrow (1 state partition, fresh checkpoint; see
     streaming/drain.py)."""
     import math
 

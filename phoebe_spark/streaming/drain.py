@@ -20,11 +20,16 @@ these functions; the query logic, including any unusual staging or
 
 State partitions: the state store fixes its partition count from
 ``spark.sql.shuffle.partitions`` when a query first runs (as Flink fixes
-its key groups), and every micro-batch pays per-partition state-store and
-Python-worker cost. Drains hold few keys and start from a fresh
-checkpoint, so :func:`run` drains with 8 partitions and restores the
-previous value; the count changes task bucketing, never results. At real
-key cardinality this is the knob that scales out, sized to keys.
+its key groups), and every micro-batch pays one state-store load and
+commit per partition, plus one Python worker per partition for an
+``applyInPandasWithState`` fold, whether or not the partition holds a
+key. So :func:`run` drains with 1 partition and restores the previous
+value afterwards; the count changes task bucketing, never results. Only
+a Python fold over thousands of raw keys passes more: there the per-key
+handler work outweighs the per-partition cost and spreads over cores
+(q179, q229 and q246 pass 8). On the 25 registry drains at sf0.1 on 4
+vCPUs, width 1 used less CPU on every drain and those three were slower
+in wall time at 1 than at 8.
 
 The override is set on the caller's session, not on ``spark.newSession()``:
 ``StreamingQueryManager`` is per session, so a stream started on a child
@@ -85,7 +90,7 @@ def run(
     *,
     output_mode: str,
     sink: Callable[[DataFrame, int], None] | None = None,
-    state_partitions: int | None = 8,
+    state_partitions: int = 1,
 ) -> str | None:
     """Drain the streaming frame ``result`` (availableNow, checkpoint under
     ``work``) and return once every staged file is processed.
@@ -93,7 +98,7 @@ def run(
     With no ``sink``, each micro-batch is written as parquet under ``work``
     (overwrite in ``complete`` mode, append otherwise) and that path is
     returned; a callable ``sink`` is the foreachBatch function itself.
-    ``state_partitions=None`` keeps the session's shuffle width."""
+    ``state_partitions`` is the shuffle width while the query runs."""
     path = None
     if sink is None:
         path = f"{work}/out"
@@ -104,8 +109,7 @@ def run(
 
     spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         q = (
             result.writeStream.outputMode(output_mode)

@@ -9,6 +9,7 @@ import time
 
 import pytest
 from pyspark.errors import StreamingQueryException
+from pyspark.sql import functions as F
 
 from phoebe_spark.streaming import drain
 
@@ -21,7 +22,7 @@ def _stream(spark, src_dir):
 
 @pytest.fixture
 def session_parts(spark):
-    """A session shuffle width distinct from the drain's 8, restored after."""
+    """A session shuffle width distinct from both drain widths, restored after."""
     prev = spark.conf.get(PARTS)
     spark.conf.set(PARTS, "13")
     yield "13"
@@ -44,12 +45,28 @@ def test_slices_replay_in_order_one_batch_each(spark, session_parts):
             0, 1, 10, 11, 12, 13, 20, 21, 22
         ]
     assert seen == [
-        (0, [20, 21, 22], "8"),
-        (1, [0, 1], "8"),
-        (2, [10, 11, 12, 13], "8"),
+        (0, [20, 21, 22], "1"),
+        (1, [0, 1], "1"),
+        (2, [10, 11, 12, 13], "1"),
     ]
     assert spark.conf.get(PARTS) == session_parts
     assert not os.path.exists(work)
+
+
+def test_explicit_state_partitions_reach_the_sink(spark, session_parts):
+    seen = []
+
+    def sink(bdf, bid):
+        # a stateful sink must read every partition, or the commit fails
+        rows = sorted((r.k, r["count"]) for r in bdf.collect())
+        seen.append((bid, bdf.sparkSession.conf.get(PARTS), bdf.rdd.getNumPartitions(), rows))
+
+    with drain.scratch("t_drain_") as work:
+        drain.stage_slices([spark.range(3)], f"{work}/src")
+        grouped = _stream(spark, f"{work}/src").groupBy((F.col("id") % 2).alias("k")).count()
+        drain.run(grouped, work, output_mode="complete", sink=sink, state_partitions=8)
+    assert seen == [(0, "8", 8, [(0, 2), (1, 1)])]
+    assert spark.conf.get(PARTS) == session_parts
 
 
 def test_failing_sink_restores_conf_and_removes_scratch(spark, session_parts):

@@ -115,12 +115,14 @@ def test_null_key_stays_null(spark):
     assert sorted(((r.key, r.lag_ms) for r in got), key=repr) == [("None", 2000), (None, 5000)]
 
 
-def test_keyed_quota_gate_sharded_identical(spark):
+@pytest.mark.parametrize("state_partitions", [1, 8])
+def test_keyed_quota_gate_sharded_identical(spark, state_partitions):
     """With ``shards=n`` the quota fold runs a dict of counters per shard:
     the admitted set must be IDENTICAL to the per-key form on the same
     staged stream, including keys that saturate mid-stream, keys that
     share a shard (2 shards for 6 keys forces collisions), a null key,
-    and cross-batch counter carry."""
+    and cross-batch counter carry. At 8 state partitions the keys and
+    shards spread over several Python workers; at 1 they share one."""
     keys = ["a", "b", "c", "d", "e", None]
     slices = [
         spark.createDataFrame(
@@ -141,7 +143,12 @@ def test_keyed_quota_gate_sharded_identical(spark):
             admitted = keyed_quota_gate(
                 stream, quota=5, key_col="key", id_col="sid", ord_col="ord", shards=shards
             )
-            out = drain.run(admitted, f"{work}/{shards}", output_mode="append")
+            out = drain.run(
+                admitted,
+                f"{work}/{shards}",
+                output_mode="append",
+                state_partitions=state_partitions,
+            )
             results[shards] = {
                 (r.key, r.seq_id, r.ord, r.value) for r in spark.read.parquet(out).collect()
             }
