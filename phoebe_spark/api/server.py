@@ -150,11 +150,8 @@ def create_app(spark=None) -> Flask:
         )
 
         def _fit():
-            df = spark.createDataFrame(
-                rows, "scale_outs INT, throughput_rates DOUBLE, latencies DOUBLE"
-            )
             m = latency_models.get(job) or LatencyModel()
-            m.fit(df, append=bool(body.get("append")) and m.previous_data is not None)
+            m.fit(rows, append=bool(body.get("append")) and m.previous_data is not None)
             latency_models[job] = m
 
         return jsonify(schedule(_fit))
@@ -163,7 +160,7 @@ def create_app(spark=None) -> Flask:
     def latency_prediction():
         body = request.get_json()
         m = latency_models.get(body["job"])
-        if m is None or m.regressor_model is None:
+        if m is None or m.fitted is None:
             return jsonify({"message": "The required model was not yet trained!"}), 412
         try:
             out = m.predict(
@@ -191,7 +188,7 @@ def create_app(spark=None) -> Flask:
         .latencyEvaluate)."""
         body = request.get_json()
         m = latency_models.get(body["job"])
-        if m is None or m.regressor_model is None:
+        if m is None or m.fitted is None:
             return jsonify({"message": "The required model was not yet trained!"}), 412
         cand_in = body["candidates"]
         prev_valid = [int(c["scale_out"]) for c in cand_in if c.get("is_valid")]

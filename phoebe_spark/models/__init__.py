@@ -4,7 +4,8 @@
               per-model strided AR; ensemble combine per the reference's
               EWM/interpolate/rolling pipeline)
 - latency   — M4-M5: two-cluster latency classifier + boosted-tree latency
-              regressor on MLlib, candidate-grid evaluation
+              regressor, fitted and scored on the driver bit-identically
+              to MLlib, candidate-grid evaluation
 - capacity  — M6: ridge capacity model (closed-form, LOO-CV)
 - recovery  — M7: Simpson catch-up recovery-time estimator
 - twres     — M8: TWRES baseline (NNLS MST curve + decision rules)
@@ -12,8 +13,9 @@
 
 Library note: the container has no scipy/sklearn/pmdarima, so scipy kernels
 are re-implemented in numpy (phoebe_spark.functions.numeric) and sklearn
-estimators map to MLlib (Birch -> BisectingKMeans, GradientBoostingRegressor
--> GBTRegressor, RidgeCV -> closed-form ridge). auto_arima maps to a strided
+estimators map to MLlib's algorithms (Birch -> BisectingKMeans,
+GradientBoostingRegressor -> GBTRegressor, both re-implemented on the driver
+in MLlib's floating-point operation order; RidgeCV -> closed-form ridge). auto_arima maps to a strided
 AR(p) model with the same update/predict contract; statistical acceptance is
 threshold-based (MAPE), as in SURVEY §5.
 """

@@ -124,11 +124,10 @@ def optimize_step(
     avg_thr = trailing_avg(metrics, "thrRate", now - avg_window, now)
 
     # 2. incremental latency training (append)
-    train = spark.createDataFrame(
+    latency_model.fit(
         [(int(current_scale_out), float(avg_thr), float(avg_lat))],
-        "scale_outs INT, throughput_rates DOUBLE, latencies DOUBLE",
+        append=latency_model.previous_data is not None,
     )
-    latency_model.fit(train, append=latency_model.previous_data is not None)
 
     # 3. recovery-time prediction over the full range
     rec = recovery_model.predict(

@@ -27,7 +27,6 @@ SLOW_FILES = {
     "test_graph_stats_privacy.py",  # 116 s
     "test_plans_round9.py",      # 82 s
     "test_round11b_properties.py",  # 82 s
-    "test_latency_model.py",     # 64 s
     "test_plans_round11b.py",    # 60 s
     "test_streaming_lag.py",     # 54 s
     "test_anomaly.py",           # 47 s

@@ -278,17 +278,17 @@ def test_latency_routes_reject_empty_scale_out_sets(client, latency_job):
 @pytest.mark.filterwarnings("ignore::pytest.PytestUnhandledThreadExceptionWarning")
 def test_failed_latency_refit_keeps_previous_model(client, latency_job, monkeypatch):
     """A refit that raises part-way (here in the GBT fit, after the
-    clusterer and scaler of the new data are built) must leave the previous
-    model serving unchanged results."""
-    from pyspark.ml.regression import GBTRegressor
+    percentiles, clusterer and scaler of the new data are computed) must
+    leave the previous model serving unchanged results."""
+    from phoebe_spark.models import latency
 
     before = _latency_evaluation(client, latency_job, range(2, 25), 50379.1, valid=range(2, 25))
     assert before.status_code == 200
 
-    def boom(self, dataset, params=None):
+    def boom(x, y):
         raise RuntimeError("injected GBT failure")
 
-    monkeypatch.setattr(GBTRegressor, "fit", boom)
+    monkeypatch.setattr(latency, "_boost", boom)
     r = client.post("/latency/training", json=dict(_APPEND_PROFILE, job=latency_job))
     _poll(client, r.get_json()["task_hash"])
     after = _latency_evaluation(client, latency_job, range(2, 25), 50379.1, valid=range(2, 25))

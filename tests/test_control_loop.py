@@ -109,7 +109,7 @@ def test_optimize_step_composition(spark):
     latency = LatencyModel()
     # pre-train on a profile-like table so the incremental step appends
     pre = [(so, 20000.0 * k, 900.0 + 100.0 * k) for so in SCALE_OUTS for k in range(1, 4)]
-    latency.fit(spark.createDataFrame(pre, "scale_outs INT, throughput_rates DOUBLE, latencies DOUBLE"))
+    latency.fit(pre)
 
     out = optimize_step(
         spark, metrics, t, vals,

@@ -1,4 +1,4 @@
-"""M4-M5 latency model tests (MLlib pipeline), mirroring the reference's
+"""M4-M5 latency model tests (driver fit), mirroring the reference's
 test_latency flow (/root/reference/analytics/app/test/api_test.py:98-133):
 train on the non-backpressure profile rows, evaluate a candidate grid at a
 mid-range throughput."""
@@ -40,9 +40,8 @@ def _profile_rows():
 @pytest.fixture(scope="module")
 def fitted(spark):
     rows = _profile_rows()
-    df = spark.createDataFrame(rows, "scale_outs INT, throughput_rates DOUBLE, latencies DOUBLE")
     m = LatencyModel()
-    m.fit(df)
+    m.fit(rows)
     return m, rows
 
 
@@ -80,16 +79,44 @@ def test_candidate_grid_evaluation(fitted):
     assert lat_small > lat_big
 
 
-def test_append_mode_unions_training_data(fitted, spark):
+def test_append_mode_unions_training_data(fitted):
     m, rows = fitted
-    extra = spark.createDataFrame(
-        [(24, 200000.0, 45000.0)], "scale_outs INT, throughput_rates DOUBLE, latencies DOUBLE"
-    )
     m2 = LatencyModel()
-    base = spark.createDataFrame(rows, "scale_outs INT, throughput_rates DOUBLE, latencies DOUBLE")
-    m2.fit(base)
-    m2.fit(extra, append=True)
-    assert m2.previous_data.count() == len(rows) + 1
+    m2.fit(rows)
+    m2.fit([(24, 200000.0, 45000.0)], append=True)
+    assert len(m2.previous_data) == len(rows) + 1
+    assert m2.previous_data[-1] == (24, 200000.0, 45000.0)
+
+
+def test_refits_persist_nothing(fitted, spark):
+    """A fit and three append refits leave the session's persisted RDDs as
+    they were: the training rows stay on the driver."""
+    _, rows = fitted
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persisted())
+    m = LatencyModel()
+    m.fit(rows)
+    for so, thr in ((5, 31_000.0), (11, 47_500.0), (17, 52_250.0)):
+        m.fit([(so, thr, 1_500.0)], append=True)
+    assert len(persisted()) == before
+
+
+def test_fit_and_predict_run_no_spark_job(fitted, spark):
+    """A fit, an append refit and a candidate-grid predict start no Spark
+    job."""
+    _, rows = fitted
+    sc = spark.sparkContext
+    group = "latency-model-no-job"
+    sc.setJobGroup(group, "latency fit, refit and predict")
+    try:
+        m = LatencyModel()
+        m.fit(rows)
+        m.fit([(14, 44_000.0, 2_100.0)], append=True)
+        m.predict(50_379.1, range(2, 25), previously_valid=range(2, 25, 2))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 # -- reference profiling ground truth (BASELINE.md "profiling ground truth")
@@ -123,11 +150,8 @@ def test_models_on_reference_profiles2(spark):
     ]
     assert len(lat_rows) == 79 and len(cap_rows) == 8
 
-    train = spark.createDataFrame(
-        lat_rows, "scale_outs INT, throughput_rates DOUBLE, latencies DOUBLE"
-    )
     m = LatencyModel()
-    m.fit(train)
+    m.fit(lat_rows)
     out = m.predict(20000.0, range(2, 25))
     valid = [r["scale_outs"] for r in out if r["is_valid"]]
     # at the sustained profiling rate most of the profiled range holds the

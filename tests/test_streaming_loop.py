@@ -144,13 +144,7 @@ def test_qos_loop_profile_optimize_rescale(spark, tmp_path):
 
     # --- MODEL: fit from the profile store (prepare_model.py flow)
     latency = LatencyModel()
-    latency.fit(
-        prof.selectExpr(
-            "scaleOut AS scale_outs",
-            "avgThr AS throughput_rates",
-            "avgLat AS latencies",
-        )
-    )
+    latency.fit((r["scaleOut"], r["avgThr"], r["avgLat"]) for r in prof_rows)
     sos = list(range(FAST, SLOW + 1, 10))
     recovery = RecoveryTimeModel()
     recovery.fit(sos, [18_000 + 2_400 * so for so in sos])
