@@ -190,7 +190,7 @@ def main() -> None:
         (100_000 * np.sin(2 * np.pi * t / 7_200) + 100_000) * (1 + rng.normal(0, 0.01, len(t)))
     )
     forecaster = WorkloadForecaster()
-    stage("m1_fit_20_models_6h_series", lambda: forecaster.fit(spark, t, vals))
+    stage("m1_fit_20_models_6h_series", lambda: forecaster.fit(t, vals))
     stage("m2_forecast_600s", lambda: forecaster.predict(t, vals, horizon_s=600))
 
     # m4-m8: the remaining §2.8 model pipelines as named bench stages

@@ -74,6 +74,8 @@ def latency_candidates(rows: list[dict]) -> list[dict]:
 
 def create_app(spark=None) -> Flask:
     app = Flask("phoebe-spark")
+    # Every model fits on the driver, but LatencyModel reads StrictMath.log
+    # and the vector lane count from the JVM, so a session must be running.
     if spark is None:
         from phoebe_spark.session import get_spark
 
@@ -117,7 +119,7 @@ def create_app(spark=None) -> Flask:
 
         def _fit():
             f = WorkloadForecaster()
-            f.fit(spark, t, v)
+            f.fit(t, v)
             forecasters[job] = f
 
         return jsonify(schedule(_fit))

@@ -1,15 +1,17 @@
-"""The four model families of the reference engine (SURVEY §2.8), Spark-first.
+"""The four model families of the reference engine (SURVEY §2.8).
 
-- workload  — M1-M3: ensemble workload forecaster (fit fan-out on Spark,
-              per-model strided AR; ensemble combine per the reference's
-              EWM/interpolate/rolling pipeline)
+- workload  — M1-M3: ensemble workload forecaster (per-model strided AR
+              histories sliced on the driver; ensemble combine per the
+              reference's EWM/interpolate/rolling pipeline)
 - latency   — M4-M5: two-cluster latency classifier + boosted-tree latency
               regressor, fitted and scored on the driver bit-identically
               to MLlib, candidate-grid evaluation
 - capacity  — M6: ridge capacity model (closed-form, LOO-CV)
 - recovery  — M7: Simpson catch-up recovery-time estimator
 - twres     — M8: TWRES baseline (NNLS MST curve + decision rules)
-- registry  — model artifact store keyed {env}_{job}_{kind}
+
+Every family fits and predicts on the driver: the inputs are one series
+of a few thousand points or a profile table of a few dozen rows.
 
 Library note: the container has no scipy/sklearn/pmdarima, so scipy kernels
 are re-implemented in numpy (phoebe_spark.functions.numeric) and sklearn
@@ -19,7 +21,3 @@ in MLlib's floating-point operation order; RidgeCV -> closed-form ridge). auto_a
 AR(p) model with the same update/predict contract; statistical acceptance is
 threshold-based (MAPE), as in SURVEY §5.
 """
-
-from phoebe_spark.models.registry import ModelRegistry
-
-__all__ = ["ModelRegistry"]

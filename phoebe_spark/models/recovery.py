@@ -14,8 +14,8 @@ Reference (/root/reference/analytics/app/recoverytime/models.py:41-129):
 
 Scale note: candidate grids are <= 23 rows and workload series a few
 thousand points, so the per-candidate loop runs driver-side over the
-collected total-workload arrays (SURVEY §7.6) — the expensive parts
-(forecast model fits) are the Spark-distributed stage.
+collected total-workload arrays (SURVEY §7.6), as do the forecaster's fit
+and predict.
 """
 
 from __future__ import annotations

@@ -7,8 +7,10 @@ Reference pipeline (/root/reference/analytics/app/workload/models.py):
 - fit (``:75-94, 149-164``): for model_id 1..num_models, subsample the
   processed series at stride model_id*step_size (anchored at the newest
   point) and fit a per-stride forecaster; the reference fans the 20 fits
-  over a multiprocessing.Pool — here the fan-out is a Spark job
-  (one task per model via ``applyInPandas`` over a model_id key).
+  over a multiprocessing.Pool. Here a "fit" is only a strided slice of a
+  series the driver already holds (the least squares runs in ``predict``),
+  so the models are built in a plain loop on the driver and no Spark job
+  runs.
 - predict (``:96-136, 166-183``): per model, merge cached+new workload
   (Python merge = overwrite+interpolate), incrementally update with
   observations at the model's stride, forecast onto a shared
@@ -26,18 +28,28 @@ bit-exact, so the substitution is observable only through forecast quality.
 
 from __future__ import annotations
 
-import pickle
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
 from phoebe_spark.functions.numeric import exp_rolling_mean, savgol_filter
 
 NUM_MODELS = 20
 STEP_SIZE = 30
 SMOOTH_ARGS = (51, 3)
+AR_ORDER = 3
+
+
+def _series(timestamps: np.ndarray, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The workload as two arrays; raises ``ValueError`` on an empty series
+    or on timestamp and value arrays of different lengths."""
+    ts, vals = np.asarray(timestamps), np.asarray(values)
+    if len(ts) != len(vals):
+        raise ValueError(f"{len(ts)} timestamps but {len(vals)} values")
+    if not len(ts):
+        raise ValueError("empty workload series")
+    return ts, vals
 
 
 def process_workload(
@@ -65,20 +77,15 @@ def process_workload(
 class ArModelWrapper:
     """Per-stride forecaster with the reference ArimaModelWrapper contract
     (step_size, last_learned_timestamp, cached history, update, predict).
-    Model: AR(p) on the strided series, refit-on-update least squares —
-    cheap (p<=6, history <= a few thousand points) and pickle-able."""
+    Model: AR(AR_ORDER) on the strided series, refit-on-update least
+    squares — cheap (history <= a few thousand points)."""
 
     step_size: int
     last_learned_timestamp: int
     history: np.ndarray = field(default_factory=lambda: np.array([], dtype=float))
-    order: int = 3
-    # Box-Jenkins identification instead of the fixed default: re-derive
-    # the AR order from the history's PACF cutoff at each refit (the
-    # auto_arima order-search stand-in; see select_ar_order below).
-    auto_order: bool = False
 
     def _design(self, series: np.ndarray):
-        p = min(self.order, max(1, len(series) - 2))
+        p = min(AR_ORDER, max(1, len(series) - 2))
         rows = len(series) - p
         if rows < 1:
             return None, None, p
@@ -94,8 +101,6 @@ class ArModelWrapper:
         series = self.history
         if len(series) == 0:
             return np.zeros(n_periods)
-        if self.auto_order:
-            self.order = select_ar_order(series, max_p=6)
         X, y, p = self._design(series)
         if X is None:
             return np.full(n_periods, series[-1])
@@ -112,8 +117,9 @@ class ArModelWrapper:
 
 
 class WorkloadForecaster:
-    """Ensemble forecaster; fit fans out over Spark, predict is a per-model
-    update+forecast with the reference's ensemble combine."""
+    """Ensemble forecaster; fit slices the per-model histories on the
+    driver, predict is a per-model update+forecast with the reference's
+    ensemble combine."""
 
     def __init__(self, num_models: int = NUM_MODELS, step_size: int = STEP_SIZE):
         self.num_models = num_models
@@ -122,50 +128,39 @@ class WorkloadForecaster:
         self.predicted: tuple[np.ndarray, np.ndarray] | None = None
 
     # -- fit ---------------------------------------------------------------
-    def fit(self, spark: SparkSession, timestamps: np.ndarray, values: np.ndarray) -> None:
-        """Fit num_models strided AR models. The reference uses a local
-        process Pool (workload/models.py:153-161); here the same fan-out is
-        a Spark job: one group per model_id via applyInPandas, models
-        shipped back as pickled bytes (Arrow batches, not Manager dicts)."""
-        processed = process_workload(timestamps, values, self.step_size)
-        ts = np.asarray(timestamps)
+    def fit(self, timestamps: np.ndarray, values: np.ndarray) -> None:
+        """Fit num_models strided AR models (workload/models.py:149-164):
+        model ``i`` keeps every ``i*step_size``-th processed point, anchored
+        at the newest. Raises ``ValueError`` on an empty series or on
+        arrays of different lengths."""
+        ts, vals = _series(timestamps, values)
+        processed = process_workload(ts, vals, self.step_size)
         end_time = int(ts[-1])
-        step = self.step_size
-        payload = pickle.dumps((ts, processed))
-        bpayload = spark.sparkContext.broadcast(payload)
-
-        def _fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
-            model_id = int(pdf["model_id"].iloc[0])
-            t, v = pickle.loads(bpayload.value)
-            stride = model_id * step
-            count = len(v)
-            idx = (count - 1) - np.arange(0, count, stride)
-            idx = idx[::-1].astype(int)
+        count = len(processed)
+        self.models = {}
+        for model_id in range(1, self.num_models + 1):
+            stride = model_id * self.step_size
+            idx = ((count - 1) - np.arange(0, count, stride))[::-1]
             w = ArModelWrapper(step_size=stride, last_learned_timestamp=end_time)
-            w.update(v[idx])
-            return pd.DataFrame({"model_id": [model_id], "blob": [pickle.dumps(w)]})
-
-        fitted = (
-            spark.createDataFrame([(i,) for i in range(1, self.num_models + 1)], "model_id INT")
-            .groupBy("model_id")
-            .applyInPandas(_fit_one, "model_id INT, blob BINARY")
-            .collect()
-        )
-        self.models = {r["model_id"]: pickle.loads(bytes(r["blob"])) for r in fitted}
+            w.update(processed[idx])
+            self.models[model_id] = w
 
     # -- predict -----------------------------------------------------------
     def predict(self, timestamps: np.ndarray, values: np.ndarray, horizon_s: int) -> tuple[np.ndarray, np.ndarray]:
         """Forecast ``horizon_s`` seconds past the end of the given
         workload. Ensemble combine follows workload/models.py:128-136:
         EWM(span 5) across model columns, interpolate along time, centered
-        rolling(120), last column, rows [1:], truncated to horizon."""
+        rolling(120), last column, rows [1:], truncated to horizon. Raises
+        ``ValueError`` on an empty series, on arrays of different lengths
+        or on a horizon past the cap."""
         if not self.models:
             raise RuntimeError("not fitted")
         max_horizon = self.num_models * self.step_size
         if horizon_s > max_horizon:
             raise ValueError(f"horizon {horizon_s} > cap {max_horizon}")
-        processed = process_workload(timestamps, values, self.step_size)
-        ts = np.asarray(timestamps).astype(int)
+        ts, vals = _series(timestamps, values)
+        processed = process_workload(ts, vals, self.step_size)
+        ts = ts.astype(int)
         end_time = int(ts[-1])
         horizon_grid = np.arange(end_time, end_time + len(self.models) * self.step_size + 1)
         df = pd.DataFrame(index=horizon_grid, columns=sorted(self.models), dtype=float)
@@ -221,53 +216,6 @@ class WorkloadForecaster:
         self.predicted = (out_ts[:horizon_s], vals[:horizon_s])
         return self.predicted
 
-    @staticmethod
-    def fit_many(
-        spark: SparkSession,
-        series_df: DataFrame,
-        num_models: int = NUM_MODELS,
-        step_size: int = STEP_SIZE,
-    ) -> dict[str, "WorkloadForecaster"]:
-        """Fit forecasters for MANY jobs in one Spark job — the scale form
-        of M1. Input: DataFrame (job STRING, timestamp LONG, value DOUBLE).
-
-        One grouped-map task per job fits that job's full model ensemble
-        (the per-model AR fits are cheap; per-job granularity avoids
-        shuffling each series num_models times). With thousands of jobs the
-        fan-out saturates the cluster; a single job degenerates to the
-        per-model fan-out in :meth:`fit`."""
-        import pickle as _pickle
-
-        def _fit_job(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("timestamp")
-            t = pdf["timestamp"].to_numpy()
-            v = pdf["value"].to_numpy(dtype=float)
-            processed = process_workload(t, v, step_size)
-            end_time = int(t[-1])
-            models = {}
-            for model_id in range(1, num_models + 1):
-                stride = model_id * step_size
-                idx = (len(processed) - 1) - np.arange(0, len(processed), stride)
-                idx = idx[::-1].astype(int)
-                w = ArModelWrapper(step_size=stride, last_learned_timestamp=end_time)
-                w.update(processed[idx])
-                models[model_id] = w
-            return pd.DataFrame(
-                {"job": [pdf["job"].iloc[0]], "blob": [_pickle.dumps(models)]}
-            )
-
-        rows = (
-            series_df.groupBy("job")
-            .applyInPandas(_fit_job, "job STRING, blob BINARY")
-            .collect()
-        )
-        out: dict[str, WorkloadForecaster] = {}
-        for r in rows:
-            f = WorkloadForecaster(num_models=num_models, step_size=step_size)
-            f.models = pickle.loads(bytes(r["blob"]))
-            out[r["job"]] = f
-        return out
-
     def eval_accuracy(self, timestamps: np.ndarray, values: np.ndarray) -> dict[str, float] | None:
         """M3: compare the previous forecast to realized values over the
         overlap (workload/models.py:138-147)."""
@@ -291,48 +239,3 @@ class WorkloadForecaster:
             "rmse": float(np.sqrt(np.mean(d * d))),
         }
 
-
-def pacf_durbin_levinson(series: np.ndarray, max_lag: int) -> np.ndarray:
-    """Partial autocorrelations phi_{kk} for k=1..max_lag via the
-    Durbin-Levinson recursion on the sample ACF — the order-selection
-    statistic auto_arima derives its AR(p) candidates from (the
-    distributed form of the same ACF is timeseries.anomaly.autocorr /
-    q76). Pure numpy on a driver-side series (model fitting operates on
-    the strided per-model history, which is bounded by construction)."""
-    x = np.asarray(series, dtype=float)
-    n = len(x)
-    if n < 3:
-        return np.zeros(max_lag)
-    xc = x - x.mean()
-    denom = float(xc @ xc)
-    if denom == 0.0:
-        return np.zeros(max_lag)
-    acf = np.array([float(xc[k:] @ xc[: n - k]) / denom for k in range(max_lag + 1)])
-    pacf = np.zeros(max_lag + 1)
-    phi_prev = np.zeros(0)
-    for k in range(1, max_lag + 1):
-        if k == 1:
-            phi_kk = acf[1]
-            phi = np.array([phi_kk])
-        else:
-            num = acf[k] - float(phi_prev @ acf[1:k][::-1])
-            den = 1.0 - float(phi_prev @ acf[1:k])
-            phi_kk = 0.0 if den == 0.0 else num / den
-            phi = np.concatenate([phi_prev - phi_kk * phi_prev[::-1], [phi_kk]])
-        pacf[k] = phi_kk
-        phi_prev = phi
-    return pacf[1:]
-
-
-def select_ar_order(series: np.ndarray, max_p: int = 6) -> int:
-    """AR order from the PACF cutoff rule: the largest lag whose partial
-    autocorrelation exceeds the 95% white-noise band 1.96/sqrt(n)
-    (clamped to [1, max_p]) — the classic Box-Jenkins identification
-    step, standing in for auto_arima's order search."""
-    x = np.asarray(series, dtype=float)
-    if len(x) < 8:
-        return 1
-    band = 1.96 / np.sqrt(len(x))
-    pacf = pacf_durbin_levinson(x, max_p)
-    signif = [k + 1 for k, v in enumerate(pacf) if abs(v) > band]
-    return max(signif) if signif else 1

@@ -303,29 +303,6 @@ def column_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     )
 
 
-def observed_quality_gate(
-    df: DataFrame, name: str, metrics: dict[str, Column]
-):
-    """Attach an inline QA observation to a pipeline frame: the named
-    aggregate metrics are collected DURING whatever action consumes the
-    returned frame (the write/count the pipeline runs anyway), so the
-    gate costs zero extra scans — vs the usual ``df.agg(...)`` sidecar,
-    which re-reads the whole source a second time.
-
-    Returns ``(observed_df, observation)``; after the first action on
-    ``observed_df``, ``observation.get`` holds the metric dict. Compose
-    with :func:`check_gate` for threshold enforcement. This is the
-    Spark-idiomatic form of the reference's post-hoc sanity asserts
-    (`analytics/app/test/api_test.py` checks row counts after the fact):
-    at 100 TB the second pass IS the cost, so the gate must ride the
-    production action."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    named = [col.alias(alias) for alias, col in metrics.items()]
-    return df.observe(obs, *named), obs
-
-
 def importance_weights(
     df: DataFrame,
     target: Column,
@@ -389,38 +366,6 @@ def importance_weights(
             F.sum("log_ratio").alias("log_importance"),
         )
     )
-
-
-def check_gate(observation, rules: dict[str, tuple[float, float]]) -> list[str]:
-    """Evaluate (lo, hi) inclusive bounds against a completed
-    observation; returns the list of violation messages (empty = gate
-    passes). Must be called after an action ran on the observed frame —
-    probed via the JVM's non-blocking ``getOrEmpty`` so a mis-ordered
-    pipeline raises immediately instead of deadlocking on
-    ``Observation.get`` (which waits forever for a first action)."""
-    jo = getattr(observation, "_jo", None)
-    if jo is not None:
-        not_ready = False
-        try:
-            not_ready = jo.getOrEmpty().isEmpty()
-        except Exception as e:
-            # Spark 4.x: getOrEmpty NPEs before the first action completes
-            # (internal schema still null) — that IS the not-ready signal.
-            # A py4j 'method does not exist' (API drift) falls through to
-            # the blocking .get instead.
-            not_ready = type(e).__name__ == "Py4JJavaError"
-        if not_ready:
-            raise RuntimeError(
-                "check_gate called before any action ran on the observed "
-                "frame - run the pipeline's write/count first"
-            )
-    got = observation.get
-    violations = []
-    for metric, (lo, hi) in rules.items():
-        v = got.get(metric)
-        if v is None or not (lo <= v <= hi):
-            violations.append(f"{metric}={v} outside [{lo}, {hi}]")
-    return violations
 
 
 def greedy_max_coverage(

@@ -250,19 +250,6 @@ def audio_features(
     )
 
 
-def frame_sample(df: DataFrame, every_n: int = 30, max_frames: int = 8) -> DataFrame:
-    """Video frame sampling plan: one output row per sampled frame index
-    (frame extraction itself is the stubbed decode). The explode is JVM-side
-    (sequence), so the fan-out is distributed and the decoder UDF downstream
-    sees one row per frame — the natural unit of parallelism."""
-    n_frames = F.least(
-        F.lit(max_frames), F.greatest((F.col("n_samples") / every_n).cast("int"), F.lit(1))
-    )
-    return df.select(
-        "media_id", F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_no")
-    ).withColumn("frame_index", F.col("frame_no") * every_n)
-
-
 def partition_by_size(df: DataFrame, num_buckets: int = 64, content_col: str = "content") -> DataFrame:
     """Even out blob-size skew before a decode stage: hash-salt rows into
     ``num_buckets`` partitions keyed off the content bytes so each decode

@@ -5617,9 +5617,9 @@ def q445_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     a literal expression ladder with every intermediate 12-dp-rounded so
     both engines walk bit-identical recursions (the q401 MM-unroll
     policy): phi_kk is the lag-k partial correlation after regressing
-    out lags 1..k-1, THE Box-Jenkins AR(p) order-selection plot — the
-    registry-query form of the PACF order selector inside the m1
-    workload forecaster (disclosed kinship), with the +/-1.96/sqrt(n)
+    out lags 1..k-1, THE Box-Jenkins AR(p) order-selection plot (the
+    identification step auto_arima automates; the m1 forecaster's
+    strided AR stand-in keeps a fixed order), with the +/-1.96/sqrt(n)
     white-noise band. ACF inputs r1..r4 use q443's exact
     overlap-moment construction from one aggregate (disclosed kinship).
 

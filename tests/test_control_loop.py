@@ -100,7 +100,7 @@ def test_optimize_step_composition(spark):
     )
 
     forecaster = WorkloadForecaster(num_models=5, step_size=30)
-    forecaster.fit(spark, t, vals)
+    forecaster.fit(t, vals)
 
     SCALE_OUTS = [2, 5, 8, 11, 14, 17, 20, 23]
     recovery = RecoveryTimeModel()

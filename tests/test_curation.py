@@ -154,52 +154,6 @@ def test_event_funnel_ordering_rules(spark, tmp_path):
     assert got == {1: 3, 2: 2, 3: 1}
 
 
-def test_observed_quality_gate_single_pass(spark, sf_dir):
-    """The QA metrics ride the production action (one job, no second
-    scan) and check_gate flags threshold violations."""
-    from pyspark.sql import functions as F
-
-    from phoebe_spark.operators.curation import check_gate, observed_quality_gate
-    from phoebe_spark.sources.testdata import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    observed, obs = observed_quality_gate(
-        d,
-        "ingest_gate",
-        {
-            "n_rows": F.count(F.lit(1)),
-            "empty_frac": F.avg((F.trim("text") == "").cast("double")),
-            "null_lang": F.sum(F.col("lang").isNull().cast("long")),
-        },
-    )
-    observed.write.format("noop").mode("overwrite").save()  # the production action
-    got = obs.get
-    assert got["n_rows"] == d.count()
-    assert 0.0 <= got["empty_frac"] < 0.5
-    assert got["null_lang"] == 0
-    # bounds: pass on the real values, fail when impossible bounds given
-    assert check_gate(obs, {"n_rows": (1, 10**12), "empty_frac": (0.0, 0.5)}) == []
-    bad = check_gate(obs, {"null_lang": (1, 5)})
-    assert bad and "null_lang" in bad[0]
-
-
-def test_check_gate_before_action_raises(spark, sf_dir):
-    """Calling check_gate before the observed frame's first action must
-    raise immediately, not deadlock on Observation.get."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from phoebe_spark.operators.curation import check_gate, observed_quality_gate
-    from phoebe_spark.sources.testdata import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    _observed_unused, obs = observed_quality_gate(
-        d, "premature_gate", {"n_rows": F.count(F.lit(1))}
-    )
-    with pytest.raises(RuntimeError, match="before any action"):
-        check_gate(obs, {"n_rows": (1, 10**12)})
-
-
 def test_column_profile_odd_names(spark):
     """Column names with spaces, dots, and quotes must not break the
     generated aggregation or the stack() unpivot."""

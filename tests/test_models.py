@@ -150,10 +150,10 @@ def test_process_workload_smooths():
     assert np.std(np.diff(out)) < np.std(np.diff(v))
 
 
-def test_workload_forecaster_fit_predict(spark):
+def test_workload_forecaster_fit_predict():
     t, v = _sine_workload(3600)
     f = WorkloadForecaster()
-    f.fit(spark, t, v)
+    f.fit(t, v)
     assert len(f.models) == f.num_models
     fut_ts, fut_vals = f.predict(t, v, horizon_s=120)
     assert len(fut_ts) == len(fut_vals) == 120
@@ -167,12 +167,114 @@ def test_workload_forecaster_fit_predict(spark):
     assert metrics is not None and metrics["mape"] < 0.5
 
 
-def test_workload_forecaster_horizon_cap(spark):
+def test_workload_forecaster_horizon_cap():
     t, v = _sine_workload(1200)
     f = WorkloadForecaster(num_models=3, step_size=30)
-    f.fit(spark, t, v)
+    f.fit(t, v)
     with pytest.raises(ValueError):
         f.predict(t, v, horizon_s=91)
+
+
+@pytest.mark.parametrize("method", ["fit", "predict"])
+@pytest.mark.parametrize(
+    "ts, vals",
+    [([], []), ([0, 1, 2], [1.0, 2.0]), ([0, 1], [1.0, 2.0, 3.0])],
+    ids=["empty", "fewer_values", "fewer_timestamps"],
+)
+def test_workload_forecaster_rejects_degenerate_series(method, ts, vals):
+    f = WorkloadForecaster(num_models=3, step_size=30)
+    t, v = _sine_workload(600)
+    f.fit(t, v)
+    with pytest.raises(ValueError):
+        if method == "fit":
+            f.fit(np.array(ts), np.array(vals))
+        else:
+            f.predict(np.array(ts), np.array(vals), horizon_s=60)
+
+
+def _spark_fan_out_fit(spark, f: WorkloadForecaster, timestamps, values) -> None:
+    """The former ``WorkloadForecaster.fit``: the processed series is
+    broadcast, one ``applyInPandas`` group per model_id slices it and the
+    models come back as pickled blobs."""
+    import pickle
+
+    import pandas as pd
+
+    from phoebe_spark.models.workload import ArModelWrapper
+
+    processed = process_workload(timestamps, values, f.step_size)
+    ts = np.asarray(timestamps)
+    end_time = int(ts[-1])
+    step = f.step_size
+    bpayload = spark.sparkContext.broadcast(pickle.dumps((ts, processed)))
+
+    def _fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
+        model_id = int(pdf["model_id"].iloc[0])
+        t, v = pickle.loads(bpayload.value)
+        stride = model_id * step
+        count = len(v)
+        idx = (count - 1) - np.arange(0, count, stride)
+        idx = idx[::-1].astype(int)
+        w = ArModelWrapper(step_size=stride, last_learned_timestamp=end_time)
+        w.update(v[idx])
+        return pd.DataFrame({"model_id": [model_id], "blob": [pickle.dumps(w)]})
+
+    fitted = (
+        spark.createDataFrame([(i,) for i in range(1, f.num_models + 1)], "model_id INT")
+        .groupBy("model_id")
+        .applyInPandas(_fit_one, "model_id INT, blob BINARY")
+        .collect()
+    )
+    f.models = {r["model_id"]: pickle.loads(bytes(r["blob"])) for r in fitted}
+
+
+def _bench_m1_series():
+    """bench.py's m1/m2 series: 6 h of 1 Hz samples."""
+    rng = np.random.default_rng(42)
+    t = np.arange(21_600)
+    vals = np.abs(
+        (100_000 * np.sin(2 * np.pi * t / 7_200) + 100_000) * (1 + rng.normal(0, 0.01, len(t)))
+    )
+    return t, vals
+
+
+def _fitted_and_forecasts(f: WorkloadForecaster, t, v):
+    """Every model's (history bytes, stride, last learned timestamp) right
+    after the fit, then the forecast bytes at horizons 120 and 600 on the
+    full series."""
+    models = {
+        i: (w.history.tobytes(), w.step_size, w.last_learned_timestamp)
+        for i, w in f.models.items()
+    }
+    forecasts = [
+        tuple(a.tobytes() for a in f.predict(t, v, horizon_s=h)) for h in (120, 600)
+    ]
+    return models, forecasts
+
+
+@pytest.mark.parametrize("series", ["sine_1h", "bench_m1_6h"])
+def test_driver_fit_matches_spark_fan_out(spark, series):
+    """The driver loop builds the same models as the former Spark fan-out
+    and the same forecasts, and fit + predict start no Spark job. The fit
+    leaves out the last 300 points so predict's incremental update runs."""
+    t, v = _sine_workload(3600) if series == "sine_1h" else _bench_m1_series()
+    oracle = WorkloadForecaster()
+    _spark_fan_out_fit(spark, oracle, t[:-300], v[:-300])
+    want = _fitted_and_forecasts(oracle, t, v)
+
+    sc = spark.sparkContext
+    group = "workload-forecaster-no-job"
+    sc.setJobGroup(group, "workload fit and predict")
+    try:
+        f = WorkloadForecaster()
+        f.fit(t[:-300], v[:-300])
+        got = _fitted_and_forecasts(f, t, v)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sorted(got[0]) == list(range(1, 21))
+    assert got == want
 
 
 # -- M7 recovery time ------------------------------------------------------
@@ -195,11 +297,11 @@ def test_eval_single_converges():
     assert 10.5 < catch_up < 12.5
 
 
-def test_recovery_time_model_end_to_end(spark):
+def test_recovery_time_model_end_to_end():
     so, thr = _capacity_rows()
     t, v = _sine_workload(3600)
     f = WorkloadForecaster(num_models=5, step_size=30)
-    f.fit(spark, t, v)
+    f.fit(t, v)
     m = RecoveryTimeModel()
     m.fit(so, thr)
     out = m.predict(
@@ -219,31 +321,6 @@ def test_recovery_time_model_end_to_end(spark):
         first_valid = next(c for c in cands if c["is_valid"])
         assert bests[0]["scale_out"] == first_valid["scale_out"]
     assert out["predicted_peak"] > 0
-
-
-def test_fit_many_jobs_one_spark_job(spark):
-    """M1 scale form: several jobs' ensembles fitted in one grouped-map
-    pass; per-job forecasts reflect each job's own period/level."""
-    rows = []
-    for job, period, level in (("ads", 600, 2000.0), ("cars", 300, 500.0)):
-        t, _ = _sine_workload(2400, period=period)
-        rng = np.random.default_rng(7)
-        vals = np.abs((level / 2 * np.sin(2 * np.pi * t / period) + level) * (1 + rng.normal(0, 0.01, len(t))))
-        rows += [(job, int(ts), float(v)) for ts, v in zip(t, vals)]
-    df = spark.createDataFrame(rows, "job STRING, timestamp LONG, value DOUBLE")
-
-    from phoebe_spark.models.workload import WorkloadForecaster
-
-    fleet = WorkloadForecaster.fit_many(spark, df, num_models=4, step_size=30)
-    assert set(fleet) == {"ads", "cars"}
-    for job, period, level in (("ads", 600, 2000.0), ("cars", 300, 500.0)):
-        t = np.arange(2400)
-        rng = np.random.default_rng(7)
-        vals = np.abs((level / 2 * np.sin(2 * np.pi * t / period) + level) * (1 + rng.normal(0, 0.01, len(t))))
-        fut_ts, fut_vals = fleet[job].predict(t, vals, horizon_s=60)
-        assert len(fut_vals) == 60
-        # forecast stays near the job's own level, not the other job's
-        assert 0.2 * level < np.mean(fut_vals) < 3 * level
 
 
 # -- CARS dataset replay (VERDICT r1 #9) -----------------------------------
@@ -274,47 +351,9 @@ def test_forecaster_on_cars_replay(spark):
     ts = np.arange(need)
 
     f = WorkloadForecaster(num_models=10, step_size=60)
-    f.fit(spark, ts[:train], vals[:train])
+    f.fit(ts[:train], vals[:train])
     fut_ts, fut_vals = f.predict(ts[: train + update], vals[: train + update], horizon_s=test)
     y_true = vals[-test:]
     mape = float(np.mean(np.abs((y_true - fut_vals) / np.where(y_true == 0, 1, y_true))))
     assert mape < 0.25, f"CARS replay forecast MAPE {mape:.3f} too high"
 
-
-def test_select_ar_order_recovers_true_order():
-    import numpy as np
-
-    from phoebe_spark.models.workload import pacf_durbin_levinson, select_ar_order
-
-    rng = np.random.default_rng(3)
-    # AR(2): x_t = 0.6 x_{t-1} - 0.3 x_{t-2} + e
-    x = np.zeros(3000)
-    e = rng.normal(0, 1, 3000)
-    for t in range(2, 3000):
-        x[t] = 0.6 * x[t - 1] - 0.3 * x[t - 2] + e[t]
-    assert select_ar_order(x[500:], max_p=6) == 2
-    # white noise: no significant partial autocorrelation -> order 1 floor
-    wn = rng.normal(0, 1, 2000)
-    assert select_ar_order(wn, max_p=6) == 1
-    # PACF of AR(2) cuts off: lags 1,2 big, lag 3+ inside the band
-    p = pacf_durbin_levinson(x[500:], 5)
-    band = 1.96 / np.sqrt(2500)
-    assert abs(p[0]) > band and abs(p[1]) > band
-    assert all(abs(v) < 3 * band for v in p[2:])
-
-
-def test_auto_order_wrapper_forecasts_ar2():
-    import numpy as np
-
-    from phoebe_spark.models.workload import ArModelWrapper
-
-    rng = np.random.default_rng(9)
-    x = np.zeros(1200)
-    e = rng.normal(0, 0.5, 1200)
-    for t in range(2, 1200):
-        x[t] = 0.6 * x[t - 1] - 0.3 * x[t - 2] + e[t]
-    m = ArModelWrapper(step_size=1, last_learned_timestamp=0, auto_order=True)
-    m.update(x[:1000])
-    fc = m.predict(5)
-    assert m.order == 2  # PACF identification kicked in
-    assert np.all(np.isfinite(fc))

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from phoebe_spark.operators.multimodal import (
     attach_media_metadata,
     audio_features,
-    frame_sample,
     image_features,
     image_resize,
     partition_by_size,
@@ -360,15 +359,6 @@ def test_audio_features(audio):
         assert r["duration_s"] == pytest.approx(2.0)
         assert r["rms"] == pytest.approx(0.5 / np.sqrt(2), rel=1e-2)  # sine, amp 0.5
         assert 0 < r["zero_crossing_rate"] < 1
-
-
-def test_frame_sample_plan(audio):
-    out = frame_sample(audio.withColumnRenamed("n_samples", "n_samples"), every_n=8000, max_frames=3)
-    rows = out.collect()
-    per = {}
-    for r in rows:
-        per.setdefault(r["media_id"], []).append(r["frame_index"])
-    assert all(sorted(v) == [0, 8000, 16000] for v in per.values())
 
 
 def test_partition_by_size_spreads(images):

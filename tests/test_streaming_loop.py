@@ -161,7 +161,7 @@ def test_qos_loop_profile_optimize_rescale(spark, tmp_path):
     rng = np.random.default_rng(7)
     vals = np.abs(3000.0 - 0.2 * (t - t[0]) + rng.normal(0, 5.0, t.size))  # falling load
     forecaster = WorkloadForecaster(num_models=5, step_size=30)
-    forecaster.fit(spark, t, vals)
+    forecaster.fit(t, vals)
     # listener timestamps are batch ordinals; rebase onto wall-clock so the
     # optimize step's trailing window covers them
     max_id = max(ts for ts, _, _ in rows)
