@@ -15,6 +15,10 @@ reference can point at this service unchanged:
 - GET  /common/tasks/<task_hash>    (poll: true while running)
 - POST /common/regression           (per-series slope/intercept)
 
+A model's ``ValueError`` (an empty, mismatched or null-valued series, an
+empty scale-out set) answers 400 with its message on every route;
+``/workload/training`` checks the series before it schedules the fit.
+
 TimeSeries JSON is the reference wire format (S9):
 ``{"observations": [{"timestamp": t, "value": v}, ...], "count": n}``.
 The async-training + poll pattern maps to daemon threads with a task-hash
@@ -36,7 +40,7 @@ from phoebe_spark.models.capacity import CapacityModel
 from phoebe_spark.models.latency import LatencyModel
 from phoebe_spark.models.recovery import RecoveryTimeModel
 from phoebe_spark.models.twres import TwresModel
-from phoebe_spark.models.workload import WorkloadForecaster
+from phoebe_spark.models.workload import WorkloadForecaster, _series
 
 
 def ts_to_arrays(ts_json: dict) -> tuple[np.ndarray, np.ndarray]:
@@ -94,6 +98,10 @@ def create_app(spark=None) -> Flask:
         th.start()
         return {"message": "task scheduled", "task_hash": h}
 
+    @app.errorhandler(ValueError)
+    def bad_request(ex: ValueError):
+        return jsonify({"message": str(ex)}), 400
+
     # -- common ------------------------------------------------------------
     @app.get("/common/tasks/<task_hash>")
     def task_status(task_hash: str):
@@ -115,7 +123,7 @@ def create_app(spark=None) -> Flask:
     def workload_training():
         body = request.get_json()
         job = body["job"]
-        t, v = ts_to_arrays(body["workload"])
+        t, v = _series(*ts_to_arrays(body["workload"]))
 
         def _fit():
             f = WorkloadForecaster()
@@ -164,13 +172,10 @@ def create_app(spark=None) -> Flask:
         m = latency_models.get(body["job"])
         if m is None or m.fitted is None:
             return jsonify({"message": "The required model was not yet trained!"}), 412
-        try:
-            out = m.predict(
-                float(body["throughput_rate"]),
-                range(int(body["min_scale_out"]), int(body["max_scale_out"]) + 1),
-            )
-        except ValueError as ex:
-            return jsonify({"message": str(ex)}), 400
+        out = m.predict(
+            float(body["throughput_rate"]),
+            range(int(body["min_scale_out"]), int(body["max_scale_out"]) + 1),
+        )
         cands = latency_candidates(out)
         current = next(
             (c for c in cands if c["scale_out"] == int(body["scale_out"])), cands[0]
@@ -195,14 +200,11 @@ def create_app(spark=None) -> Flask:
         cand_in = body["candidates"]
         prev_valid = [int(c["scale_out"]) for c in cand_in if c.get("is_valid")]
         thr = body.get("predicted_throughput_rate", body.get("throughput_rate"))
-        try:
-            out = m.predict(
-                float(thr),
-                [int(c["scale_out"]) for c in cand_in],
-                previously_valid=prev_valid or None,
-            )
-        except ValueError as ex:
-            return jsonify({"message": str(ex)}), 400
+        out = m.predict(
+            float(thr),
+            [int(c["scale_out"]) for c in cand_in],
+            previously_valid=prev_valid or None,
+        )
         cands = latency_candidates(out)
         current = next(
             (c for c in cands if c["scale_out"] == int(body["current"]["scale_out"])), cands[0]

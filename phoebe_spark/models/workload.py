@@ -42,13 +42,22 @@ AR_ORDER = 3
 
 
 def _series(timestamps: np.ndarray, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """The workload as two arrays; raises ``ValueError`` on an empty series
-    or on timestamp and value arrays of different lengths."""
+    """The workload as two arrays; raises ``ValueError`` on an empty series,
+    on timestamp and value arrays of different lengths, or on a null/NaN
+    timestamp or value (naming the first one): one NaN would survive the
+    smoothing into every strided history and fail the least squares."""
     ts, vals = np.asarray(timestamps), np.asarray(values)
     if len(ts) != len(vals):
         raise ValueError(f"{len(ts)} timestamps but {len(vals)} values")
     if not len(ts):
         raise ValueError("empty workload series")
+    bad = np.flatnonzero(pd.isna(ts) | pd.isna(vals))
+    if len(bad):
+        i = int(bad[0])
+        raise ValueError(
+            f"null or NaN in the workload series at timestamp {ts[i]} (index {i}); "
+            f"{len(bad)} of {len(ts)} points"
+        )
     return ts, vals
 
 
@@ -131,8 +140,8 @@ class WorkloadForecaster:
     def fit(self, timestamps: np.ndarray, values: np.ndarray) -> None:
         """Fit num_models strided AR models (workload/models.py:149-164):
         model ``i`` keeps every ``i*step_size``-th processed point, anchored
-        at the newest. Raises ``ValueError`` on an empty series or on
-        arrays of different lengths."""
+        at the newest. Raises ``ValueError`` on an empty series, on
+        arrays of different lengths or on a null/NaN point."""
         ts, vals = _series(timestamps, values)
         processed = process_workload(ts, vals, self.step_size)
         end_time = int(ts[-1])
@@ -151,8 +160,8 @@ class WorkloadForecaster:
         workload. Ensemble combine follows workload/models.py:128-136:
         EWM(span 5) across model columns, interpolate along time, centered
         rolling(120), last column, rows [1:], truncated to horizon. Raises
-        ``ValueError`` on an empty series, on arrays of different lengths
-        or on a horizon past the cap."""
+        ``ValueError`` on an empty series, on arrays of different lengths,
+        on a null/NaN point or on a horizon past the cap."""
         if not self.models:
             raise RuntimeError("not fitted")
         max_horizon = self.num_models * self.step_size

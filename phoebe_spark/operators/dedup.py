@@ -409,89 +409,6 @@ def simhash(
     )
 
 
-def simhash_hamming_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, using the block/banding
-    trick: split the 64-bit fingerprint into ``bands`` blocks — any pair
-    within ``max_hamming < bands`` distance must agree on at least one full
-    block (pigeonhole), so candidate pairs come from an equi-join on
-    (block_idx, block_bits) instead of a cross join.
-
-    The join runs over DISTINCT fingerprints (the :func:`hamming_pairs`
-    collapse): an exact-dup mega-cluster — k copies of one boilerplate doc,
-    or k empty texts sharing the all-zeros simhash — would otherwise
-    contribute k rows to every band group and emit O(k²) join rows PER
-    BAND. After the collapse it is one fingerprint row per band; the
-    member expansion emits each doc pair exactly once (intra-fingerprint
-    pairs at Hamming 0, cross-fingerprint pairs through the one
-    fingerprint pair that covers them). Fingerprint groups are
-    materialized once before the self-join (see :func:`minhash_lsh_pairs`
-    — same double-evaluation trap)."""
-    if not (0 <= max_hamming < bands):
-        # the pigeonhole only holds for max_hamming < bands: a pair with
-        # one differing bit in every block agrees on no block and would be
-        # silently missing from the candidates (same guard as
-        # :func:`hamming_pairs`)
-        raise ValueError(
-            f"pigeonhole requires 0 <= max_hamming < bands "
-            f"(got max_hamming={max_hamming}, bands={bands})"
-        )
-    if not 1 <= bands <= 64 or 64 % bands != 0:
-        raise ValueError(f"bands must divide 64 (got bands={bands})")
-    width = 64 // bands
-    groups = (
-        simhash(df, id_col, text_col)
-        .groupBy("simhash")
-        .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
-        .localCheckpoint(eager=True)
-    )
-    # intra-fingerprint: identical docs pair at Hamming 0
-    intra = (
-        groups.filter(F.size("docs") >= 2)
-        .select(F.explode(_ordered_pair_structs(F.col("docs"), "doc_a", "doc_b")).alias("p"))
-        .select("p.doc_a", "p.doc_b", F.lit(0).alias("hamming"))
-    )
-    blocks = groups.select(
-        "simhash",
-        "docs",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("block"),
-    ).withColumn("block_bits", F.substring(F.col("simhash"), F.col("block") * width + 1, width))
-    a = blocks.select("block", "block_bits", F.col("simhash").alias("sig_a"), F.col("docs").alias("docs_a"))
-    b = blocks.select("block", "block_bits", F.col("simhash").alias("sig_b"), F.col("docs").alias("docs_b"))
-    cand = (
-        a.join(b, ["block", "block_bits"])
-        .filter(F.col("sig_a") < F.col("sig_b"))
-        .dropDuplicates(["sig_a", "sig_b"])
-    )
-    hamming = F.size(
-        F.filter(
-            F.zip_with(F.split("sig_a", ""), F.split("sig_b", ""), lambda x, y: x != y),
-            lambda m: m,
-        )
-    )
-    # expand fingerprint pairs to doc pairs: each doc has ONE fingerprint,
-    # so a doc pair appears through exactly one fingerprint pair
-    cross = (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.explode("docs_a").alias("da"), F.col("docs_b"), "hamming")
-        .select(
-            "da", F.explode("docs_b").alias("db"), "hamming"
-        )
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "hamming",
-        )
-    )
-    return intra.union(cross)
-
-
 def winnow_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",

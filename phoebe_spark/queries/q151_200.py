@@ -2302,8 +2302,8 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     across SEVERAL micro-batches before saturating — the carried counter
     state, not single-batch truncation, decides the cut.
 
-    Scale shape: state is one monotone counter per key (write-free once
-    saturated); the staging global sort is drain scaffolding only — the
+    Scale shape: state is one monotone counter per key, held in 8 hash
+    shards; the staging global sort is drain scaffolding only — the
     production source is a Kafka topic whose per-partition order is the
     arrival order. Money policy: DECIMAL(18,4) accumulate, round(2),
     cast DOUBLE."""
@@ -2354,15 +2354,11 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        # shards=8 (round-12, guide §4): 1500 user keys mean ~1500 state
-        # get/put protocol exchanges per micro-batch in the per-key form;
-        # the sharded gate folds each shard's keys in one handler call (8
-        # exchanges/batch, ~190 keys per shard's state row) and the
-        # admitted set is provably identical (key-decomposable fold; see
-        # the operator docstring). Probe: stream phase 7.1 -> 4.6 s median.
+        # the gate folds each of its 8 shards' keys in one handler call:
+        # 8 state get/put exchanges per micro-batch instead of ~1500 (one
+        # per user), ~190 keys per shard's state row
         admitted = stateful.keyed_quota_gate(
-            stream, quota=40, key_col="key", id_col="sid", ord_col="ord_ns",
-            shards=8,
+            stream, quota=40, key_col="key", id_col="sid", ord_col="ord_ns"
         )
         sink = drain.run(admitted, work, output_mode="append")
         out = (

@@ -2496,21 +2496,21 @@ def q323_robust_zscore_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q324_streaming_psi_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING Population Stability Index drained in the hash-checked
     gate — q318's bin counts accumulated ACROSS micro-batches in the
-    state store (:func:`stateful.streaming_bin_counts`): the per-(type,
-    bin, arm) pre-counts arrive as three event-time-sliced micro-batches,
-    the two 10-bin count vectors ADD per key across batches, and the
-    final drained vectors feed the identical PSI arithmetic — hash-
-    matching q318's DuckDB oracle. Where the Holt/Page-Hinkley drains
-    certify ORDER-SENSITIVE cross-batch recursions, this one certifies
-    the COMMUTATIVE-state contract: batch boundaries and arrival order
-    provably cannot move the score, which is why a PSI monitor can run
-    continuously on a shuffled feed.
+    state store: the per-(type, bin, arm) pre-counts arrive as three
+    event-time-sliced micro-batches, a native streaming ``groupBy(type,
+    bin)`` sums each arm's count across batches (complete mode), and the
+    drained counts, filled out to the 10-bin grid, feed the identical
+    PSI arithmetic — hash-matching q318's DuckDB oracle. Where the
+    Holt/Page-Hinkley drains certify ORDER-SENSITIVE cross-batch
+    recursions, this one certifies the COMMUTATIVE-state contract: batch
+    boundaries and arrival order provably cannot move the score, which
+    is why a PSI monitor can run continuously on a shuffled feed.
 
-    Scale: state is 20 longs per key; each micro-batch does O(new bins)
-    work — continuous drift scoring at O(1) memory per monitored stream.
+    Scale: state is at most 10 (bin, two counts) rows per key; each
+    micro-batch does O(new bins) work — continuous drift scoring at O(1)
+    memory per monitored stream.
     """
     from phoebe_spark.streaming import drain
-    from phoebe_spark.streaming.stateful import streaming_bin_counts
 
     e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     s = e.select(
@@ -2543,30 +2543,34 @@ def q324_streaming_psi_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        out = streaming_bin_counts(stream, n_bins=10, key_col="event_type")
-        sink = drain.run(out, work, output_mode="update")
-        final = drain.latest(spark.read.parquet(sink)).select(
-            F.col("key").alias("event_type"), "c0", "c1"
+        out = stream.groupBy("event_type", "bin").agg(
+            F.sum(F.when(F.col("arm") == 0, F.col("cnt"))).alias("c0"),
+            F.sum(F.when(F.col("arm") == 1, F.col("cnt"))).alias("c1"),
         )
-        grid = final.select(
-            "event_type",
+        sink = drain.run(out, work, output_mode="complete")
+        # one row per type: its drained bins as maps, and the totals of
+        # its 10 smoothed cells (integers and halves add exactly in double)
+        per_type = (
+            spark.read.parquet(sink)
+            .groupBy("event_type")
+            .agg(
+                F.map_from_entries(F.collect_list(F.struct("bin", "c0"))).alias("m0"),
+                F.map_from_entries(F.collect_list(F.struct("bin", "c1"))).alias("m1"),
+                (F.sum(F.coalesce("c0", F.lit(0))) + 5.0).alias("n0"),
+                (F.sum(F.coalesce("c1", F.lit(0))) + 5.0).alias("n1"),
+            )
+        )
+        grid = per_type.select(
+            "event_type", "m0", "m1", "n0", "n1",
             F.explode(F.sequence(F.lit(0), F.lit(9))).alias("bin"),
-            "c0",
-            "c1",
-        ).select(
-            "event_type",
-            (F.element_at(F.col("c0"), F.col("bin") + 1) + 0.5).alias("c0"),
-            (F.element_at(F.col("c1"), F.col("bin") + 1) + 0.5).alias("c1"),
-        ).localCheckpoint(eager=True)
-        tot = grid.groupBy("event_type").agg(
-            F.sum("c0").alias("n0"), F.sum("c1").alias("n1")
         )
-        j = grid.join(F.broadcast(tot), "event_type")
-        p = F.col("c0") / F.col("n0")
-        qq = F.col("c1") / F.col("n1")
+        c0 = F.coalesce(F.element_at("m0", F.col("bin")), F.lit(0)) + 0.5
+        c1 = F.coalesce(F.element_at("m1", F.col("bin")), F.lit(0)) + 0.5
+        p = c0 / F.col("n0")
+        qq = c1 / F.col("n1")
         x = (p - qq) * F.log(p / qq)
         psi = F.sum(F.round(x, 12).cast("decimal(38,12)")).cast("double")
-        res = j.groupBy("event_type").agg(
+        res = grid.groupBy("event_type").agg(
             F.lit(10).cast("long").alias("n_bins"),
             (F.round(psi, 6) + F.lit(0.0)).alias("psi"),
             F.when(psi > 0.2, 1).otherwise(0).alias("drifted"),

@@ -793,23 +793,23 @@ def q355_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING count-min sketch drained in the hash-checked gate —
     q141's depth-4 x width-256 CMS cells accumulated ACROSS micro-batches
-    in the state store (:func:`stateful.streaming_bin_counts` keyed by
-    hash seed, 256 cells per key): the corpus arrives as three
+    in the state store (a native streaming ``groupBy(seed, bucket)
+    .agg(sum)``, complete mode): the corpus arrives as three
     doc-id-sliced micro-batches of per-(seed, bucket) pre-counts, the
-    cell vectors ADD per key across batches (the commutative-state
-    family with q324's PSI drain — arrival order and batch boundaries
-    provably cannot change the counters, which is the sketch's
-    mergeability promise executed by a real state store), and the
-    drained counters feed the IDENTICAL top-20 heavy-hitter estimate
-    arithmetic — hash-matching q141's batch oracle digit-for-digit.
+    cell counts ADD across batches (the commutative-state family with
+    q324's PSI drain — arrival order and batch boundaries provably
+    cannot change the counters, which is the sketch's mergeability
+    promise executed by a real state store), and the drained counters
+    feed the IDENTICAL top-20 heavy-hitter estimate arithmetic —
+    hash-matching q141's batch oracle digit-for-digit. Only nonzero
+    cells are drained; every probe token hashes to cells it counted in.
 
     100 TB story: per-batch pre-aggregation bounds every micro-batch's
-    state traffic to d x w = 1,024 cells per slice; state is O(seeds),
-    TTL-free; the probe join broadcasts 20 rows. One operator, two
-    execution models, one answer."""
+    state traffic to d x w = 1,024 cells per slice; state is at most
+    1,024 cells, TTL-free; the probe join broadcasts 20 rows. One
+    operator, two execution models, one answer."""
     from phoebe_spark.operators.dedup import md5_hash64
     from phoebe_spark.streaming import drain
-    from phoebe_spark.streaming.stateful import streaming_bin_counts
 
     d = _t(spark, sf_dir, "documents").filter(F.trim("text") != "")
     toks = d.select("doc_id", F.explode(text.tokens(F.col("text"))).alias("tok"))
@@ -837,32 +837,21 @@ def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 slice_counts.filter(F.col("sl") == sl)
                 .select("tok", "tn", seeds)
-                .select(
-                    F.col("s").cast("string").alias("key"),
-                    bucket.cast("int").alias("bin"),
-                    F.lit(0).alias("arm"),
-                    F.col("tn").cast("long").alias("cnt"),
-                )
-                .groupBy("key", "bin", "arm")
-                .agg(F.sum("cnt").alias("cnt"))
+                .groupBy("s", bucket.cast("int").alias("bucket"))
+                .agg(F.sum("tn").cast("long").alias("cnt"))
                 for sl in range(3)
             ),
             src_dir,
         )
 
         stream = (
-            spark.readStream.schema("key STRING, bin INT, arm INT, cnt LONG")
+            spark.readStream.schema("s INT, bucket INT, cnt LONG")
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        out = streaming_bin_counts(stream, n_bins=256, key_col="key")
-        sink = drain.run(out, work, output_mode="update")
-        final = drain.latest(spark.read.parquet(sink)).select(
-            F.col("key").cast("int").alias("s"), "c0"
-        )
-        counters = final.select(
-            "s", F.posexplode("c0").alias("bucket", "c")
-        ).localCheckpoint(eager=True)
+        out = stream.groupBy("s", "bucket").agg(F.sum("cnt").alias("c"))
+        sink = drain.run(out, work, output_mode="complete")
+        counters = spark.read.parquet(sink).localCheckpoint(eager=True)
         est = (
             probes.select("tok", "n", seeds)
             .select("tok", "n", "s", bucket.cast("int").alias("bucket"))

@@ -1756,22 +1756,21 @@ def q414_ipw_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q415_streaming_moments_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING exact per-key moments drained in the hash-checked gate:
     cents-quantized event values accumulate per type as three BIGINT
-    sums (count, sum, sum of squares) in
-    :func:`stateful.streaming_moments` — the exact-arithmetic form of
+    sums (count, sum, sum of squares) — the exact-arithmetic form of
     Welford/Chan parallel variance — carried in a real state store
     across three event-id-sliced micro-batches, each PRE-REDUCED
-    map-side to one moment row per key before it reaches the operator.
-    Integer moments make the merge commutative and exact, so the
-    drained mean/variance hash-match the batch oracle digit-for-digit
-    regardless of batch boundaries or arrival order — the 21st
-    hash-checked drain, and the streaming form of the moment policy
-    every batch estimator in this registry uses.
+    map-side to one moment row per key. The state is a native streaming
+    ``groupBy().agg(sum)`` drained in complete mode: integer moments
+    make the merge commutative and exact, so the drained mean/variance
+    hash-match the batch oracle digit-for-digit regardless of batch
+    boundaries or arrival order — the 21st hash-checked drain, and the
+    streaming form of the moment policy every batch estimator in this
+    registry uses.
 
     100 TB story: O(keys) state (three longs per key), one row per key
     per micro-batch of state traffic; the final statistics are computed
     from the drained state frame, corpus-size-independent."""
     from phoebe_spark.streaming import drain
-    from phoebe_spark.streaming.stateful import streaming_moments
 
     e = (
         _t(spark, sf_dir, "events")
@@ -1788,7 +1787,7 @@ def q415_streaming_moments_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain.stage_slices(
             (
                 e.filter(F.col("event_id") % 3 == r)
-                .groupBy(F.col("event_type").alias("key"))
+                .groupBy("event_type")
                 .agg(
                     F.count(F.lit(1)).cast("long").alias("n"),
                     F.sum("yc").cast("long").alias("s1"),
@@ -1800,19 +1799,17 @@ def q415_streaming_moments_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         stream = (
-            spark.readStream.schema("key STRING, n LONG, s1 LONG, s2 LONG")
+            spark.readStream.schema("event_type STRING, n LONG, s1 LONG, s2 LONG")
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        out = streaming_moments(stream)
-        sink = drain.run(out, work, output_mode="update")
-        final = (
-            drain.latest(spark.read.parquet(sink))
-            .select("key", "n", "s1", "s2")
-            .localCheckpoint(eager=True)
+        out = stream.groupBy("event_type").agg(
+            F.sum("n").alias("n"), F.sum("s1").alias("s1"), F.sum("s2").alias("s2")
         )
+        sink = drain.run(out, work, output_mode="complete")
+        final = spark.read.parquet(sink).localCheckpoint(eager=True)
         return final.select(
-            F.col("key").alias("event_type"),
+            "event_type",
             "n",
             F.round(F.col("s1") / (100.0 * F.col("n")), 6).alias("mean_value"),
             F.round(
@@ -4048,21 +4045,21 @@ def q433_streaming_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 22nd hash-checked drain): q283's deterministic HyperLogLog
     (degski-mixer hash, p=6, m=64, linear-counting small-range
     correction — disclosed kinship) carried as REAL streaming state per
-    event type across three event-id-sliced micro-batches via
-    :func:`stateful.streaming_hll`. Each batch PRE-REDUCES map-side to
-    at most 64 (key, idx, rank) register rows per key; the state merge
-    is register-wise max — commutative, associative, and IDEMPOTENT, so
-    the drained registers (and therefore the estimate, digit for digit)
-    are provably invariant to batch boundaries, arrival order, restart
-    replays, and duplicate delivery — the strongest invariance class in
-    the drain family, and the property that makes sketch-union the
-    right 100-TB distinct-count plan.
+    event type across three event-id-sliced micro-batches. Each batch
+    PRE-REDUCES map-side to at most 64 (key, idx, rank) register rows
+    per key; the state is a native streaming ``groupBy(key, idx)
+    .agg(max)`` drained in complete mode, and register-wise max is
+    commutative, associative, and IDEMPOTENT, so the drained registers
+    (and therefore the estimate, digit for digit) are provably invariant
+    to batch boundaries, arrival order, restart replays, and duplicate
+    delivery — the strongest invariance class in the drain family, and
+    the property that makes sketch-union the right 100-TB distinct-count
+    plan.
 
     100 TB story: O(keys * 64) state, at most 64 rows/key/batch of
     state traffic; the estimate is computed from the drained register
     frame, corpus-size-independent."""
     from phoebe_spark.streaming import drain
-    from phoebe_spark.streaming.stateful import streaming_hll
 
     e = _t(spark, sf_dir, "events").select(
         "event_id", F.col("event_type").alias("key"), "user_id"
@@ -4106,24 +4103,26 @@ def q433_streaming_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        out = streaming_hll(stream)
-        sink = drain.run(out, work, output_mode="update")
-        final = (
-            drain.latest(spark.read.parquet(sink), order="n_batches")
-            .select("key", "regs")
-            .localCheckpoint(eager=True)
-        )
-        est = final.select(
-            "key",
-            F.expr(
-                "aggregate(regs, cast(0.0 as double), (acc, m) -> "
-                "acc + 1.0 / cast(shiftleft(1L, cast(m as int)) as double))"
-            ).alias("harm"),
-            F.expr("size(filter(regs, m -> m = 0))").cast("long").alias("v"),
-        ).select(
-            "key",
-            "v",
-            (F.lit(0.709 * 64 * 64) / F.col("harm")).alias("e_raw"),
+        out = stream.groupBy("key", "idx").agg(F.max("r").alias("r"))
+        sink = drain.run(out, work, output_mode="complete")
+        regs = spark.read.parquet(sink).localCheckpoint(eager=True)
+        # every drained register has r >= 1 and each absent one counts
+        # 2^-0 = 1: a sum of powers of two in [2^-27, 1] is exact in
+        # double, so the row order cannot change it
+        est = (
+            regs.groupBy("key")
+            .agg(
+                (
+                    F.sum(F.expr("1.0 / cast(shiftleft(1L, cast(r as int)) as double)"))
+                    + (64 - F.count(F.lit(1)))
+                ).alias("harm"),
+                (64 - F.count(F.lit(1))).cast("long").alias("v"),
+            )
+            .select(
+                "key",
+                "v",
+                (F.lit(0.709 * 64 * 64) / F.col("harm")).alias("e_raw"),
+            )
         )
         fin = est.select(
             "key",

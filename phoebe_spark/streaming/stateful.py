@@ -10,10 +10,16 @@ brief names for "custom stateful operators".
 the operator selects its columns (key first) and supplies a pure
 ``fold(key, carried, batch) -> (state, frame)``; the harness owns the
 state-store protocol (chunk concat, optional sort, read or initialise the
-state, store it, emit the frame). Twelve operators below are such folds.
+state, store it, emit the frame). Nine operators below are such folds.
 The rest need what the harness deliberately leaves out — append output,
 event-time timers or sharded keys — and speak ``applyInPandasWithState``
 directly.
+
+A fold that is only a sum or a max per key is not written here: its
+drain runs a native streaming ``groupBy().agg()`` in complete mode
+(q324, q353, q415, q433). The state store then keeps the partial
+aggregate in the JVM, so no micro-batch pays a Python worker per state
+partition, and an exact integer sum or max comes out bit-identical.
 
 ``keyed_ewma`` maintains a per-key exponentially-weighted moving average of
 the value column (the streaming analogue of the reference's smoothed
@@ -280,8 +286,8 @@ def streaming_dedup_gate(
 
 
 QUOTA_GATE_OUTPUT_SCHEMA = "key STRING, seq_id STRING, ord LONG, value DOUBLE"
-QUOTA_GATE_STATE_SCHEMA = "admitted LONG"
 QUOTA_GATE_SHARD_STATE_SCHEMA = "ks ARRAY<STRING>, us ARRAY<LONG>"
+QUOTA_GATE_SHARDS = 8
 
 
 def keyed_quota_gate(
@@ -291,7 +297,6 @@ def keyed_quota_gate(
     id_col: str = "id",
     ord_col: str = "ord_ms",
     value_col: str = "value",
-    shards: int | None = None,
 ) -> DataFrame:
     """Per-key admission QUOTA at ingest: the first ``quota`` rows of each
     key (in arrival order; within a micro-batch ties break on
@@ -299,11 +304,6 @@ def keyed_quota_gate(
     per-source document cap a training-data intake enforces so one feed
     cannot flood the mix, and the per-tenant rate cap of a shared
     ingest endpoint. Append output: downstream sees only admitted rows.
-
-    State is ONE counter per key, monotone up to ``quota`` — bounded by
-    the key domain regardless of stream length, checkpoint-safe, and
-    write-free once a key is saturated (the state stops changing, so
-    RocksDB sees no more puts for that key).
 
     Determinism contract for drain-style certification: if the source
     replays files in a fixed order (sequenced mtimes + one file per
@@ -313,103 +313,62 @@ def keyed_quota_gate(
     A null key is a key like any other: its rows get their own quota and
     leave with the key still null, in both forms.
 
-    ``shards`` (round-12, guide §4 — cut the per-key Python/state-store
-    protocol round-trips when the key domain is SMALL): with ``shards=n``
-    the operator groups by ``pmod(xxhash64(key), n)`` and one handler
-    invocation folds every key of its shard (a dict of counters carried
-    as two parallel state arrays), so a micro-batch performs n state
-    get/put protocol exchanges instead of one per distinct key. The
-    admitted set is IDENTICAL: the quota fold is key-decomposable and the
-    handler applies exactly the per-key rule (sort by (ord, id) within
-    key, admit into the key's remaining room), independently of which
-    shard a key lands in — measured ~35% off q188's drain at 1500 keys.
-    Trade-off, and why per-key stays the default: a shard's state row is
-    O(keys/shard) and is rewritten on every batch that touches the shard,
-    losing the per-key form's write-free-once-saturated property — size
-    ``shards`` so keys/shard stays bounded (hundreds), i.e. the knob
-    scales OUT with the key domain, and keep ``shards=None`` (per-key
-    RocksDB state) for unbounded key domains.
+    State is sharded: keys hash into :data:`QUOTA_GATE_SHARDS` shards
+    (``pmod(xxhash64(key), n)``) and one handler call folds every key of
+    its shard, carrying a dict of per-key counters as two parallel state
+    arrays. So a micro-batch makes one state get/put per shard instead
+    of one per distinct key (~35% off q188's drain at 1500 keys). The admitted set is the per-key one: the quota fold is
+    key-decomposable, and each key gets the per-key rule (sort by (ord,
+    id), admit into the key's remaining room) whatever shard it lands
+    in. A shard's state row holds O(keys/shard) counters and is
+    rewritten on every batch that touches the shard, so the key domain
+    must stay bounded (hundreds of keys per shard).
     """
-    if shards is not None:
 
-        def _update_shard(_gkey, pdfs, state: GroupState):
-            batch = pd.concat(list(pdfs))
-            if state.exists:
-                ks, us = state.get
-                used = dict(zip(list(ks or []), list(us or [])))
-            else:
-                used = {}
-            batch = batch.sort_values(["ord", "seq_id"])
-            outs = []
-            # dropna=False: a null key is a key like any other; it is read
-            # back from the rows (None), not from the group label (NaN), so
-            # it matches its None entry in the carried state
-            for _, grp in batch.groupby("key", sort=False, dropna=False):
-                k = grp["key"].iloc[0]
-                room = quota - used.get(k, 0)
-                if room <= 0:
-                    continue
-                take = grp.head(room)
-                used[k] = used.get(k, 0) + len(take)
-                outs.append(take)
-            state.update(
-                (list(used.keys()), [int(v) for v in used.values()])
-            )
-            if outs:
-                o = pd.concat(outs)
-                yield pd.DataFrame(
-                    {
-                        "key": o["key"].tolist(),
-                        "seq_id": o["seq_id"].astype(str).tolist(),
-                        "ord": o["ord"].astype("int64").tolist(),
-                        "value": o["value"].astype(float).tolist(),
-                    }
-                )
-
-        rows = stream.select(
-            F.col(key_col).cast("string").alias("key"),
-            F.col(id_col).cast("string").alias("seq_id"),
-            F.col(ord_col).cast("long").alias("ord"),
-            F.col(value_col).cast("double").alias("value"),
-            F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(shards)).alias(
-                "_shard"
-            ),
-        )
-        return rows.groupBy("_shard").applyInPandasWithState(
-            _update_shard,
-            outputStructType=QUOTA_GATE_OUTPUT_SCHEMA,
-            stateStructType=QUOTA_GATE_SHARD_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    def _update(key, pdfs, state: GroupState):
+    def _update(_shard, pdfs, state: GroupState):
         batch = pd.concat(list(pdfs))
-        used = state.get[0] if state.exists else 0
-        room = quota - used
-        if room <= 0:
-            return
-        batch = batch.sort_values(["ord", "seq_id"]).head(room)
-        state.update((used + len(batch),))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * len(batch),
-                "seq_id": batch["seq_id"].astype(str).tolist(),
-                "ord": batch["ord"].astype("int64").tolist(),
-                "value": batch["value"].astype(float).tolist(),
-            }
-        )
+        if state.exists:
+            ks, us = state.get
+            used = dict(zip(list(ks or []), list(us or [])))
+        else:
+            used = {}
+        batch = batch.sort_values(["ord", "seq_id"])
+        outs = []
+        # dropna=False: a null key is a key like any other; it is read
+        # back from the rows (None), not from the group label (NaN), so
+        # it matches its None entry in the carried state
+        for _, grp in batch.groupby("key", sort=False, dropna=False):
+            k = grp["key"].iloc[0]
+            room = quota - used.get(k, 0)
+            if room <= 0:
+                continue
+            take = grp.head(room)
+            used[k] = used.get(k, 0) + len(take)
+            outs.append(take)
+        state.update((list(used.keys()), [int(v) for v in used.values()]))
+        if outs:
+            o = pd.concat(outs)
+            yield pd.DataFrame(
+                {
+                    "key": o["key"].tolist(),
+                    "seq_id": o["seq_id"].astype(str).tolist(),
+                    "ord": o["ord"].astype("int64").tolist(),
+                    "value": o["value"].astype(float).tolist(),
+                }
+            )
 
+    key = F.col(key_col).cast("string")
     rows = stream.select(
-        F.col(key_col).cast("string").alias("key"),
+        key.alias("key"),
         F.col(id_col).cast("string").alias("seq_id"),
         F.col(ord_col).cast("long").alias("ord"),
         F.col(value_col).cast("double").alias("value"),
+        F.pmod(F.xxhash64(key), F.lit(QUOTA_GATE_SHARDS)).alias("_shard"),
     )
-    return rows.groupBy("key").applyInPandasWithState(
+    return rows.groupBy("_shard").applyInPandasWithState(
         _update,
         outputStructType=QUOTA_GATE_OUTPUT_SCHEMA,
-        stateStructType=QUOTA_GATE_STATE_SCHEMA,
+        stateStructType=QUOTA_GATE_SHARD_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -913,68 +872,6 @@ def streaming_page_hinkley(
     )
 
 
-PSI_OUTPUT_SCHEMA = (
-    "key STRING, n LONG, c0 ARRAY<LONG>, c1 ARRAY<LONG>"
-)
-PSI_STATE_SCHEMA = "c0 ARRAY<LONG>, c1 ARRAY<LONG>, n LONG"
-
-
-def streaming_bin_counts(
-    stream: DataFrame,
-    n_bins: int = 10,
-    key_col: str = "key",
-    bin_col: str = "bin",
-    arm_col: str = "arm",
-    cnt_col: str = "cnt",
-) -> DataFrame:
-    """Per-key streaming (bin x arm) count accumulator — the state behind
-    a continuously-updated Population Stability Index: each micro-batch
-    ADDS its per-bin counts into two fixed-width count vectors carried in
-    the state store. Unlike the order-sensitive drains (Holt, CUSUM,
-    Page-Hinkley), this state is COMMUTATIVE — arrival order and batch
-    boundaries provably cannot change the final vectors, which is exactly
-    the property the drain certifies against the batch oracle.
-
-    State: 2 x n_bins longs per key, O(keys) total, TTL-free.
-    """
-
-    def _fold(key, carried, batch):
-        c0, c1, n = carried
-        c0, c1 = list(c0), list(c1)
-        for row in batch.itertuples(index=False):
-            b, arm, c = int(getattr(row, bin_col)), int(getattr(row, arm_col)), int(
-                getattr(row, cnt_col)
-            )
-            if not 0 <= b < n_bins:
-                continue  # out-of-domain bin: drop loudly-typed garbage
-            if arm not in (0, 1):
-                continue  # unknown arm: mirror the bin guard instead of
-                # silently folding garbage into c1/n and skewing the PSI
-            if arm == 0:
-                c0[b] += c
-            else:
-                c1[b] += c
-            n += c
-        return (c0, c1, int(n)), pd.DataFrame(
-            {
-                "key": [key],
-                "n": [int(n)],
-                "c0": [c0],
-                "c1": [c1],
-            }
-        )
-
-    rows = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(bin_col),
-        F.col(arm_col),
-        F.col(cnt_col),
-    )
-    return keyed_fold(
-        rows, _fold, ((0,) * n_bins, (0,) * n_bins, 0), PSI_OUTPUT_SCHEMA, PSI_STATE_SCHEMA
-    )
-
-
 BOTTOMK_OUTPUT_SCHEMA = "key STRING, n_seen LONG, hs ARRAY<LONG>, ids ARRAY<LONG>"
 BOTTOMK_STATE_SCHEMA = "hs ARRAY<LONG>, ids ARRAY<LONG>, n_seen LONG"
 
@@ -988,8 +885,8 @@ def streaming_bottom_k(
 ) -> DataFrame:
     """Per-key streaming bottom-k-by-hash sample — the KMV-style
     DETERMINISTIC reservoir: keep the k (hash, id) pairs with the
-    smallest salted hashes seen so far. Like :func:`streaming_bin_counts`
-    this state is COMMUTATIVE (bottom-k of a union is the bottom-k of
+    smallest salted hashes seen so far. This state is COMMUTATIVE
+    (bottom-k of a union is the bottom-k of
     per-batch bottom-ks), so arrival order and micro-batch boundaries
     provably cannot change the drained sample — the mergeability promise
     that makes hash-bottom-k the distributed-sampling primitive (same
@@ -1024,96 +921,3 @@ def streaming_bottom_k(
         F.col(id_col).cast("long").alias(id_col),
     )
     return keyed_fold(rows, _fold, ((), (), 0), BOTTOMK_OUTPUT_SCHEMA, BOTTOMK_STATE_SCHEMA)
-
-
-MOMENTS_OUTPUT_SCHEMA = "key STRING, n LONG, s1 LONG, s2 LONG"
-MOMENTS_STATE_SCHEMA = "n LONG, s1 LONG, s2 LONG"
-
-
-def streaming_moments(
-    stream: DataFrame,
-    key_col: str = "key",
-    n_col: str = "n",
-    s1_col: str = "s1",
-    s2_col: str = "s2",
-) -> DataFrame:
-    """Per-key streaming integer moment accumulator (count, sum, sum of
-    squares) — the exact-arithmetic form of Welford/Chan parallel
-    variance: because the state is three BIGINT sums of an
-    integer-quantized measure, the merge is COMMUTATIVE AND EXACT (no
-    float accumulation order anywhere), so arrival order, micro-batch
-    boundaries, and restart replays provably cannot change the drained
-    mean/variance by even an ulp. Each micro-batch is expected
-    PRE-REDUCED to one (key, n, s1, s2) row per key (a map-side
-    aggregate), so per-batch state traffic is one row per key no matter
-    the batch size.
-
-    State: three longs per key, O(keys) total, TTL-free."""
-
-    def _fold(key, carried, batch):
-        n, s1, s2 = carried
-        n += int(batch[n_col].sum())
-        s1 += int(batch[s1_col].sum())
-        s2 += int(batch[s2_col].sum())
-        return (int(n), int(s1), int(s2)), pd.DataFrame(
-            {"key": [key], "n": [int(n)], "s1": [int(s1)], "s2": [int(s2)]}
-        )
-
-    rows = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(n_col).cast("long").alias(n_col),
-        F.col(s1_col).cast("long").alias(s1_col),
-        F.col(s2_col).cast("long").alias(s2_col),
-    )
-    return keyed_fold(rows, _fold, (0, 0, 0), MOMENTS_OUTPUT_SCHEMA, MOMENTS_STATE_SCHEMA)
-
-
-HLL_OUTPUT_SCHEMA = "key STRING, n_batches LONG, regs ARRAY<LONG>, nonzero LONG"
-HLL_STATE_SCHEMA = "regs ARRAY<LONG>, n_batches LONG"
-
-
-def streaming_hll(
-    stream: DataFrame,
-    m: int = 64,
-    key_col: str = "key",
-    idx_col: str = "idx",
-    rank_col: str = "r",
-) -> DataFrame:
-    """Per-key streaming HyperLogLog register accumulator (q283's
-    deterministic p=6 / m=64 sketch carried as streaming state): the
-    state is the m-register array and the merge is register-wise MAX —
-    commutative, associative, and idempotent, so arrival order,
-    micro-batch boundaries, restart replays, and even DUPLICATE
-    delivery provably cannot change the drained registers (the
-    strongest batch-invariance class of any drain in this registry:
-    max-merge absorbs at-least-once delivery, which the additive
-    moment/count drains do not). Each micro-batch is expected
-    PRE-REDUCED map-side to at most m (key, idx, rank) rows per key, so
-    per-batch state traffic is register-bounded no matter the batch
-    size.
-
-    State: m longs per key, O(keys * m) total, TTL-free."""
-
-    def _fold(key, carried, batch):
-        regs, nb = carried
-        regs = list(regs)
-        for idx, r in zip(batch[idx_col], batch[rank_col]):
-            i = int(idx)
-            if int(r) > regs[i]:
-                regs[i] = int(r)
-        nb += 1
-        return (regs, int(nb)), pd.DataFrame(
-            {
-                "key": [key],
-                "n_batches": [int(nb)],
-                "regs": [regs],
-                "nonzero": [int(sum(1 for v in regs if v > 0))],
-            }
-        )
-
-    rows = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(idx_col).cast("long").alias(idx_col),
-        F.col(rank_col).cast("long").alias(rank_col),
-    )
-    return keyed_fold(rows, _fold, ((0,) * m, 0), HLL_OUTPUT_SCHEMA, HLL_STATE_SCHEMA)

@@ -731,11 +731,7 @@ def run_streaming_scale(spark, n_keys: int, days: int = 30) -> dict:
 
     from pyspark.sql import Window
 
-    from phoebe_spark.streaming.stateful import (
-        streaming_holt,
-        streaming_moments,
-        streaming_page_hinkley,
-    )
+    from phoebe_spark.streaming.stateful import streaming_holt, streaming_page_hinkley
 
     dense = (
         spark.range(n_keys)
@@ -756,14 +752,12 @@ def run_streaming_scale(spark, n_keys: int, days: int = 30) -> dict:
         ("streaming_holt", lambda s: streaming_holt(s, alpha=0.5, gamma=0.3, key_col="k")),
         ("streaming_page_hinkley", lambda s: streaming_page_hinkley(s, delta=5.0, lam=200.0, key_col="k")),
         (
+            # exact integer moments: a native streaming aggregate, no Python fold
             "streaming_moments",
-            lambda s: streaming_moments(
-                s.select(
-                    F.col("k").alias("key"),
-                    F.lit(1).cast("long").alias("n"),
-                    F.col("c").cast("long").alias("s1"),
-                    (F.col("c").cast("long") * F.col("c").cast("long")).alias("s2"),
-                )
+            lambda s: s.groupBy(F.col("k").alias("key")).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("c").cast("long")).alias("s1"),
+                F.sum(F.col("c").cast("long") * F.col("c").cast("long")).alias("s2"),
             ),
         ),
     ):

@@ -193,6 +193,59 @@ def test_recoverytime_and_twres_composition(client):
     assert isinstance(r.get_json()["scale_out"], int)
 
 
+def test_bad_workload_series_answer_400(client):
+    """An empty series or one with a null value is the client's error on
+    every route that reads a workload: 400 with the forecaster's message,
+    and /workload/training refuses it before scheduling a fit."""
+    t, v = _sine_ts()
+    job = "BAD_SERIES"
+    cap = [18000.0 + 2400 * so for so in SCALE_OUTS]
+    for route, body in (
+        ("/workload/training", {"workload": arrays_to_ts(t, v)}),
+        ("/recoverytime/training", {"scale_outs": SCALE_OUTS, "max_throughput_rates": cap}),
+        ("/baselines/twres_training", {"scale_outs": SCALE_OUTS, "throughput_rates": cap}),
+    ):
+        r = client.post(route, json=dict(body, job=job))
+        _poll(client, r.get_json()["task_hash"])
+
+    null_value = arrays_to_ts(t, v)
+    null_value["observations"][1000]["value"] = None
+    recovery = {
+        "prediction_period_in_s": 150, "downtime": 10.0,
+        "last_checkpoint": 90, "max_recovery_time": 240,
+    }
+    reads = {
+        "/workload/prediction": {"prediction_period_in_s": 120},
+        "/recoverytime/prediction": dict(
+            recovery, min_scale_out=2, max_scale_out=24, scale_out=4
+        ),
+        "/recoverytime/evaluation": dict(
+            recovery,
+            current={"scale_out": 5},
+            candidates=[{"scale_out": so, "is_valid": True} for so in SCALE_OUTS],
+        ),
+        "/baselines/twres_prediction": {
+            "avg_latency": 1000, "max_latency_constraint": 2000, "scale_out": 10,
+            "time_window_interval": 600, "min_scale_out": 4, "max_scale_out": 24,
+        },
+    }
+    for workload, message in (
+        ({"observations": [], "count": 0}, "empty workload series"),
+        (null_value, "at timestamp 1000 "),
+    ):
+        r = client.post("/workload/training", json={"job": "NEVER_FIT", "workload": workload})
+        assert r.status_code == 400 and message in r.get_json()["message"]
+        for route, body in reads.items():
+            r = client.post(route, json=dict(body, job=job, workload=workload))
+            assert r.status_code == 400, route
+            assert message in r.get_json()["message"], route
+    r = client.post(
+        "/workload/prediction",
+        json={"job": "NEVER_FIT", "workload": arrays_to_ts(t, v), "prediction_period_in_s": 60},
+    )
+    assert r.status_code == 412
+
+
 def test_cross_model_evaluation_flows(client, latency_job):
     """The reference's rt->latency-eval and latency->rt-eval composition
     tests (api_test.py test_recoverytime_plus_latency / reverse)."""

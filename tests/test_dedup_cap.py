@@ -326,37 +326,3 @@ def test_prefix_filter_boundary_threshold(spark):
     )
     got = prefix_filter_jaccard_pairs(df, n=1, threshold=1 / 3).collect()
     assert len(got) == 1 and abs(got[0]["jaccard"] - 1 / 3) < 1e-12
-
-
-def test_simhash_hamming_pairs_equals_bruteforce_with_dup_cluster(spark):
-    """simhash_hamming_pairs must equal the brute-force all-pairs result —
-    including a planted exact-dup cluster (identical fingerprints), the
-    case the distinct-fingerprint collapse exists for — and reject
-    out-of-pigeonhole parameters."""
-    import itertools
-
-    import pytest
-
-    from phoebe_spark.operators.dedup import simhash, simhash_hamming_pairs
-
-    texts = (
-        [(i, "alpha beta gamma delta epsilon") for i in range(5)]  # exact dups
-        + [(10, "alpha beta gamma delta zeta")]                     # near dup
-        + [(11, "totally different words entirely here")]
-    )
-    df = spark.createDataFrame(texts, "doc_id long, text string")
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_hamming_pairs(df, max_hamming=3, bands=4).collect()
-    }
-    fps = {r["doc"]: r["simhash"] for r in simhash(df).collect()}
-    brute = {}
-    for a, b in itertools.combinations(sorted(fps), 2):
-        h = sum(x != y for x, y in zip(fps[a], fps[b]))
-        if h <= 3:
-            brute[(a, b)] = h
-    assert got == brute
-    assert sum(1 for (a, b) in got if a < 5 and b < 5) == 10  # C(5,2) dups
-
-    with pytest.raises(ValueError):
-        simhash_hamming_pairs(df, max_hamming=4, bands=4)

@@ -1,6 +1,6 @@
 """The streaming drain harness (phoebe_spark.streaming.drain): ordered
-slice replay, the scoped state-partition override, scratch cleanup and the
-timeout path."""
+slice replay, the scoped state-partition override, scratch cleanup, the
+timeout path, and the native-aggregate drains against their oracles."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from phoebe_spark.streaming import drain
+from test_oracle_parity import assert_matches_oracle, ddb  # noqa: F401  (ddb is a fixture)
 
 PARTS = "spark.sql.shuffle.partitions"
 
@@ -102,3 +103,18 @@ def test_latest_keeps_largest_order_per_key(spark):
     got = {r.key: (r.n, r.v) for r in drain.latest(states).collect()}
     assert got == {"a": (3, 30.0), "b": (1, 5.0)}
     assert drain.latest(states).columns == ["key", "n", "v"]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q324_streaming_psi_drain",
+        "q353_streaming_cms_drain",
+        "q415_streaming_moments_drain",
+        "q433_streaming_hll_drain",
+    ],
+)
+def test_native_aggregate_drains_match_oracle(name, spark, sf_dir, ddb):
+    """The drains whose state is a native streaming sum or max (complete
+    mode) still match their DuckDB oracle."""
+    assert_matches_oracle(name, spark, sf_dir, ddb)

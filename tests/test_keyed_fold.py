@@ -1,8 +1,8 @@
-"""The update-mode per-key fold harness (stateful.keyed_fold) and the quota
-gate's two forms: chunked groups fold in order, state carries across
+"""The update-mode per-key fold harness (stateful.keyed_fold) and the
+sharded quota gate: chunked groups fold in order, state carries across
 micro-batches, a null key stays null (in the folds and in the append-mode
 operators that emit their key themselves), and the sharded gate admits
-exactly what the per-key gate admits."""
+exactly what a per-key gate admits."""
 
 from __future__ import annotations
 
@@ -10,9 +10,13 @@ from datetime import datetime, timedelta
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from phoebe_spark.streaming import drain
 from phoebe_spark.streaming.stateful import (
+    QUOTA_GATE_OUTPUT_SCHEMA,
+    QUOTA_GATE_SHARDS,
     first_match_within,
     keyed_cusum,
     keyed_ewma,
@@ -115,15 +119,51 @@ def test_null_key_stays_null(spark):
     assert sorted(((r.key, r.lag_ms) for r in got), key=repr) == [("None", 2000), (None, 5000)]
 
 
+def _per_key_quota_gate(stream, quota):
+    """The quota gate with one counter per key in the state store: the
+    oracle the sharded gate must reproduce."""
+
+    def _update(key, pdfs, state: GroupState):
+        used = state.get[0] if state.exists else 0
+        room = quota - used
+        if room <= 0:
+            return
+        batch = pd.concat(list(pdfs)).sort_values(["ord", "sid"]).head(room)
+        state.update((used + len(batch),))
+        yield pd.DataFrame(
+            {
+                "key": [key[0]] * len(batch),
+                "seq_id": batch["sid"].tolist(),
+                "ord": batch["ord"].tolist(),
+                "value": batch["value"].tolist(),
+            }
+        )
+
+    return stream.groupBy("key").applyInPandasWithState(
+        _update,
+        outputStructType=QUOTA_GATE_OUTPUT_SCHEMA,
+        stateStructType="admitted LONG",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 @pytest.mark.parametrize("state_partitions", [1, 8])
 def test_keyed_quota_gate_sharded_identical(spark, state_partitions):
-    """With ``shards=n`` the quota fold runs a dict of counters per shard:
-    the admitted set must be IDENTICAL to the per-key form on the same
-    staged stream, including keys that saturate mid-stream, keys that
-    share a shard (2 shards for 6 keys forces collisions), a null key,
-    and cross-batch counter carry. At 8 state partitions the keys and
-    shards spread over several Python workers; at 1 they share one."""
-    keys = ["a", "b", "c", "d", "e", None]
+    """The gate folds a dict of counters per hash shard: the admitted set
+    must be IDENTICAL to the per-key form on the same staged stream,
+    including keys that saturate mid-stream, keys that share a shard
+    (10 keys over 8 shards), a null key, and cross-batch counter carry.
+    At 8 state partitions the shards spread over several Python workers;
+    at 1 they share one."""
+    keys = ["a", "b", "c", "d", "e", "f", "g", "h", "i", None]
+    shard_of = {
+        r.key: r.shard
+        for r in spark.createDataFrame([(k,) for k in keys], "key STRING")
+        .select("key", F.pmod(F.xxhash64("key"), F.lit(QUOTA_GATE_SHARDS)).alias("shard"))
+        .collect()
+    }
+    assert len(set(shard_of.values())) < len(keys)
     slices = [
         spark.createDataFrame(
             [(k, f"{bi}{i:05d}", bi * 100 + i, float(i)) for k in keys for i in range(3)],
@@ -131,29 +171,32 @@ def test_keyed_quota_gate_sharded_identical(spark, state_partitions):
         )
         for bi in range(3)
     ]
+    gates = {
+        "sharded": lambda s: keyed_quota_gate(
+            s, quota=5, key_col="key", id_col="sid", ord_col="ord"
+        ),
+        "per_key": lambda s: _per_key_quota_gate(s, quota=5),
+    }
     results = {}
     with drain.scratch("t_quota_") as work:
         drain.stage_slices(slices, f"{work}/src")
-        for shards in (None, 2):
+        for name, gate in gates.items():
             stream = (
                 spark.readStream.schema("key STRING, sid STRING, ord LONG, value DOUBLE")
                 .option("maxFilesPerTrigger", 1)
                 .parquet(f"{work}/src")
             )
-            admitted = keyed_quota_gate(
-                stream, quota=5, key_col="key", id_col="sid", ord_col="ord", shards=shards
-            )
             out = drain.run(
-                admitted,
-                f"{work}/{shards}",
+                gate(stream),
+                f"{work}/{name}",
                 output_mode="append",
                 state_partitions=state_partitions,
             )
-            results[shards] = {
+            results[name] = {
                 (r.key, r.seq_id, r.ord, r.value) for r in spark.read.parquet(out).collect()
             }
     # quota 5 on 3x3 rows/key: saturation happens inside batch 2 for
     # every key — the carried counter decides the cut in both forms
-    assert results[2] == results[None]
-    assert len(results[None]) == 5 * 6
-    assert sum(1 for r in results[None] if r[0] is None) == 5
+    assert results["sharded"] == results["per_key"]
+    assert len(results["per_key"]) == 5 * len(keys)
+    assert sum(1 for r in results["per_key"] if r[0] is None) == 5

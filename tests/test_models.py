@@ -192,6 +192,21 @@ def test_workload_forecaster_rejects_degenerate_series(method, ts, vals):
             f.predict(np.array(ts), np.array(vals), horizon_s=60)
 
 
+@pytest.mark.parametrize("method", ["fit", "predict"])
+def test_workload_forecaster_rejects_null_value(method):
+    """One NaN value names its timestamp in a ``ValueError`` instead of
+    failing the least squares with ``LinAlgError``."""
+    f = WorkloadForecaster(num_models=3, step_size=30)
+    t, v = _sine_workload(3600)
+    f.fit(t, v)
+    v[1000] = np.nan
+    with pytest.raises(ValueError, match=f"at timestamp {t[1000]} "):
+        if method == "fit":
+            f.fit(t, v)
+        else:
+            f.predict(t, v, horizon_s=60)
+
+
 def _spark_fan_out_fit(spark, f: WorkloadForecaster, timestamps, values) -> None:
     """The former ``WorkloadForecaster.fit``: the processed series is
     broadcast, one ``applyInPandas`` group per model_id slices it and the

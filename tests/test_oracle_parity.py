@@ -156,8 +156,9 @@ def _normalize(rows, cols):
     return out
 
 
-@pytest.mark.parametrize("name", sorted(ORACLE))
-def test_query_matches_oracle(name, spark, sf_dir, ddb):
+def assert_matches_oracle(name, spark, sf_dir, ddb):
+    """Run registry entry ``name`` and compare it with its DuckDB oracle the
+    way the driver does (plan guard, columns, row count, values)."""
     with capture_checkpoints() as caps:
         sdf = QUERIES[name](spark, sf_dir)
         _guard_plans(name, list(caps) + [explain_formatted(sdf)])
@@ -178,6 +179,11 @@ def test_query_matches_oracle(name, spark, sf_dir, ddb):
         (a, b) for a, b in zip(s_norm, d_norm) if a != b
     ]
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+
+
+@pytest.mark.parametrize("name", sorted(ORACLE))
+def test_query_matches_oracle(name, spark, sf_dir, ddb):
+    assert_matches_oracle(name, spark, sf_dir, ddb)
 
 
 def test_rows_only_queries_run(spark, sf_dir):

@@ -538,56 +538,6 @@ def test_streaming_page_hinkley_matches_batch_fold(spark, tmp_path):
     assert final.alarm == alarm and alarm > 0  # the jump at x=20 pages
 
 
-def test_streaming_bin_counts_commutative_across_batch_splits(spark, tmp_path):
-    """The PSI count state must be split-invariant: two different batch
-    partitions of the same rows drain to identical vectors."""
-    import glob
-    import os
-    import shutil
-
-    from phoebe_spark.streaming.stateful import streaming_bin_counts
-
-    rows = [("k", b, arm, c) for b in range(3) for arm in (0, 1) for c in (2, 5)]
-    # poison rows: out-of-domain bin AND out-of-domain arms (2, -1) must
-    # be dropped by the guards, not folded into c1/n (ADVICE r8)
-    rows += [("k", 9, 0, 1000), ("k", 1, 2, 1000), ("k", 2, -1, 1000)]
-
-    def drain(split_at: int, tag: str):
-        src = str(tmp_path / f"src{tag}")
-        os.makedirs(src)
-        for i, part in enumerate((rows[:split_at], rows[split_at:]), start=1):
-            df = spark.createDataFrame(
-                part, "key STRING, bin INT, arm INT, cnt LONG"
-            )
-            stage = str(tmp_path / f"st{tag}{i}")
-            df.coalesce(1).write.parquet(stage)
-            pf = glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{src}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
-        stream = (
-            spark.readStream.schema("key STRING, bin INT, arm INT, cnt LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        sink = str(tmp_path / f"sink{tag}")
-        q = (
-            streaming_bin_counts(stream, n_bins=3)
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda b, _i: b.write.mode("append").parquet(sink))
-            .option("checkpointLocation", str(tmp_path / f"ck{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-        f = spark.read.parquet(sink).orderBy("n").collect()[-1]
-        return list(f.c0), list(f.c1), f.n
-
-    a = drain(3, "a")
-    b = drain(9, "b")
-    assert a == b == ([7, 7, 7], [7, 7, 7], 42)
-
-
 def test_streaming_page_hinkley_checkpoint_restart(spark, tmp_path):
     """The PH (t, mean, U, minU, alarm) state must round-trip through a
     checkpointed stop-and-restart: a run stopped after the first batch and
@@ -688,54 +638,3 @@ def test_streaming_bottom_k_split_invariant_and_replay_idempotent(spark, tmp_pat
     a = drain(2, "a")
     b = drain(7, "b")
     assert a == b == ([5, 10, 20, 30], [6, 1, 4, 3])
-
-
-def test_streaming_moments_split_invariant_and_exact(spark, tmp_path):
-    """The integer moment accumulator must be split-invariant (BIGINT
-    sums commute exactly) and match the closed-form moments of the full
-    sequence regardless of where the micro-batch boundary falls."""
-    import glob
-    import os
-    import shutil
-
-    from phoebe_spark.streaming.stateful import streaming_moments
-
-    vals = [3, 7, 1, 9, 4, 4, 2, 8]
-
-    def drain(split_at: int, tag: str):
-        src = str(tmp_path / f"src{tag}")
-        os.makedirs(src)
-        parts = (vals[:split_at], vals[split_at:])
-        for i, part in enumerate(parts, start=1):
-            df = spark.createDataFrame(
-                [("k", len(part), sum(part), sum(v * v for v in part))],
-                "key STRING, n LONG, s1 LONG, s2 LONG",
-            )
-            stage = str(tmp_path / f"st{tag}{i}")
-            df.coalesce(1).write.parquet(stage)
-            pf = glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{src}/{i:03d}.parquet"
-            shutil.copyfile(pf, dst)
-            os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
-        stream = (
-            spark.readStream.schema("key STRING, n LONG, s1 LONG, s2 LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        sink = str(tmp_path / f"sink{tag}")
-        q = (
-            streaming_moments(stream)
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda b, _i: b.write.mode("append").parquet(sink))
-            .option("checkpointLocation", str(tmp_path / f"ck{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-        f = spark.read.parquet(sink).orderBy("n").collect()[-1]
-        return (f.n, f.s1, f.s2)
-
-    a = drain(2, "a")
-    b = drain(6, "b")
-    expect = (len(vals), sum(vals), sum(v * v for v in vals))
-    assert a == b == expect
