@@ -10,11 +10,11 @@ re-expresses that surface idiomatically on Spark DataFrames:
   linear interpolation, merge-sum / merge-overwrite, slicing, strided
   resampling, rolling windows, slope/regression aggregates).
 - ``phoebe_spark.operators`` — relational + LLM-data-pipeline operators
-  (dedup, similarity search, text analysis, candidate evaluation).
+  (dedup, similarity, text, curation, sampling, graph, skyline, skew).
 - ``phoebe_spark.sources`` — CSV/parquet/table IO mirroring the
   reference's scan/sink surface.
 - ``phoebe_spark.models`` — the model families (workload forecast,
-  latency, recovery-time, TWRES baseline) on MLlib / applyInPandas.
+  latency, recovery-time, TWRES baseline), fitted on the driver; no JVM.
 - ``phoebe_spark.streaming`` — Structured Streaming equivalents of the
   reference's monitored jobs (windowed keyed aggregation, watermarks).
 

@@ -15,9 +15,9 @@ reference can point at this service unchanged:
 - GET  /common/tasks/<task_hash>    (poll: true while running)
 - POST /common/regression           (per-series slope/intercept)
 
-A model's ``ValueError`` (an empty, mismatched or null-valued series, an
-empty scale-out set) answers 400 with its message on every route;
-``/workload/training`` checks the series before it schedules the fit.
+A ``ValueError`` (an empty, mismatched or null-valued series, an empty
+scale-out set) answers 400 with its message on every route; the training
+routes check their input before they schedule a fit.
 
 TimeSeries JSON is the reference wire format (S9):
 ``{"observations": [{"timestamp": t, "value": v}, ...], "count": n}``.
@@ -36,7 +36,6 @@ import uuid
 import numpy as np
 from flask import Flask, jsonify, request
 
-from phoebe_spark.models.capacity import CapacityModel
 from phoebe_spark.models.latency import LatencyModel
 from phoebe_spark.models.recovery import RecoveryTimeModel
 from phoebe_spark.models.twres import TwresModel
@@ -45,7 +44,10 @@ from phoebe_spark.models.workload import WorkloadForecaster, _series
 
 def ts_to_arrays(ts_json: dict) -> tuple[np.ndarray, np.ndarray]:
     obs = ts_json.get("observations", [])
-    t = np.array([o["timestamp"] for o in obs], dtype=int)
+    t = [o["timestamp"] for o in obs]
+    if None in t:
+        raise ValueError(f"null timestamp at index {t.index(None)} of the series")
+    t = np.array(t, dtype=int)
     v = np.array(
         [np.nan if o.get("value") is None else float(o["value"]) for o in obs], dtype=float
     )
@@ -60,6 +62,18 @@ def arrays_to_ts(t: np.ndarray, v: np.ndarray) -> dict:
         ],
         "count": int(len(t)),
     }
+
+
+def training_lists(body: dict, **types) -> list[list]:
+    """Each ``body[key]`` converted by ``types[key]``; raises ``ValueError``
+    unless the lists are non-empty, of one length and free of nulls."""
+    lengths = {k: len(body[k]) for k in types}
+    if len(set(lengths.values())) != 1 or not any(lengths.values()):
+        raise ValueError(f"training lists must be non-empty and of one length: {lengths}")
+    for k in types:
+        if None in body[k]:
+            raise ValueError(f"null in {k} at index {body[k].index(None)}")
+    return [[t(x) for x in body[k]] for k, t in types.items()]
 
 
 def latency_candidates(rows: list[dict]) -> list[dict]:
@@ -77,14 +91,9 @@ def latency_candidates(rows: list[dict]) -> list[dict]:
 
 
 def create_app(spark=None) -> Flask:
+    """The Flask app. ``spark`` is accepted and unused: no route needs a
+    Spark session."""
     app = Flask("phoebe-spark")
-    # Every model fits on the driver, but LatencyModel reads StrictMath.log
-    # and the vector lane count from the JVM, so a session must be running.
-    if spark is None:
-        from phoebe_spark.session import get_spark
-
-        spark = get_spark("phoebe-api")
-
     tasks: dict[str, threading.Thread] = {}
     forecasters: dict[str, WorkloadForecaster] = {}
     latency_models: dict[str, LatencyModel] = {}
@@ -114,6 +123,8 @@ def create_app(spark=None) -> Flask:
         for key, ts_json in request.get_json().items():
             t, v = ts_to_arrays(ts_json)
             mask = ~np.isnan(v)
+            if not mask.any():
+                raise ValueError(f"series {key!r} has no non-null value to regress")
             slope, intercept = np.polyfit(t[mask].astype(float), v[mask], 1)
             out[key] = {"slope": float(slope), "intercept": float(intercept)}
         return jsonify(out)
@@ -151,13 +162,7 @@ def create_app(spark=None) -> Flask:
     def latency_training():
         body = request.get_json()
         job = body["job"]
-        rows = list(
-            zip(
-                [int(x) for x in body["scale_outs"]],
-                [float(x) for x in body["throughput_rates"]],
-                [float(x) for x in body["latencies"]],
-            )
-        )
+        rows = list(zip(*training_lists(body, scale_outs=int, throughput_rates=float, latencies=float)))
 
         def _fit():
             m = latency_models.get(job) or LatencyModel()
@@ -217,8 +222,7 @@ def create_app(spark=None) -> Flask:
     def recoverytime_training():
         body = request.get_json()
         job = body["job"]
-        sos = [int(x) for x in body["scale_outs"]]
-        thr = [float(x) for x in body["max_throughput_rates"]]
+        sos, thr = training_lists(body, scale_outs=int, max_throughput_rates=float)
 
         def _fit():
             m = RecoveryTimeModel()
@@ -307,8 +311,7 @@ def create_app(spark=None) -> Flask:
     def twres_training():
         body = request.get_json()
         job = body["job"]
-        sos = [int(x) for x in body["scale_outs"]]
-        thr = [float(x) for x in body["throughput_rates"]]
+        sos, thr = training_lists(body, scale_outs=int, throughput_rates=float)
 
         def _fit():
             m = TwresModel()

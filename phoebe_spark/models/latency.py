@@ -30,7 +30,8 @@ to the MLlib pipeline on one partition:
   cumulative counts, position ``(n-1)*p``, linear interpolation
   ``(hi - pos) * lowKey + (pos - lo) * highKey``;
 - clustering feature: ``log(max(1, (x - med) / scale))`` with
-  ``java.lang.StrictMath.log`` (Spark's ``Log``);
+  ``java.lang.StrictMath.log`` (Spark's ``Log``), ported from fdlibm
+  ``__ieee754_log`` (``math.log`` differs from it in the last bit);
 - StandardScaler: Summarizer's incremental mean and M2n over the non-zero
   values, the weight correction, the unbiased variance, ``sqrt``; features
   are ``(x - mean) * (1 / std)``;
@@ -51,8 +52,9 @@ to the MLlib pipeline on one partition:
 - ensemble sum: ``BLAS.ddot`` as netlib's ``VectorBLAS`` computes it —
   ``DoubleVector.SPECIES_MAX`` lanes of fused multiply-add accumulators
   added in lane order, then a plain multiply-add tail. The lane count is
-  read from the JVM once (a property of the host); the fused multiply-add
-  is emulated exactly with integers.
+  the host JVM's ``MaxVectorSize`` over 8, probed once with
+  ``java -XX:+PrintFlagsFinal``; the fused multiply-add is emulated exactly
+  with integers.
 
 Scope: the fit is exact up to 5,000 rows, where MLlib trains on one
 partition and does not sample split candidates. Above that the driver fit
@@ -70,13 +72,16 @@ from __future__ import annotations
 
 import functools
 import math
+import os
+import re
+import struct
+import subprocess
 from bisect import bisect_left
 from collections import Counter
 from itertools import accumulate
 from typing import Iterable, NamedTuple
 
 import numpy as np
-from pyspark import SparkContext
 
 ESTIMATOR_FACTOR = 3
 MAX_DEPTH = 10
@@ -234,7 +239,54 @@ def _percentile(values: list[float], p: float) -> float:
 
 def _cluster_feature(latency: float, med: float, scale: float) -> float:
     x = max(1.0, (latency - med) / scale)
-    return 0.0 if x == 1.0 else SparkContext._jvm.java.lang.StrictMath.log(x)
+    return 0.0 if x == 1.0 else _strict_log(x)
+
+
+_LN2_HI = 6.93147180369123816490e-01  # 3fe62e42 fee00000
+_LN2_LO = 1.90821492927058770002e-10  # 3dea39ef 35793c76
+_LG1 = 6.666666666666735130e-01  # 3fe55555 55555593
+_LG2 = 3.999999999940941908e-01  # 3fd99999 9997fa04
+_LG3 = 2.857142874366239149e-01  # 3fd24924 94229359
+_LG4 = 2.222219843214978396e-01  # 3fcc71c5 1d8e78af
+_LG5 = 1.818357216161805012e-01  # 3fc74664 96cb03de
+_LG6 = 1.531383769920937332e-01  # 3fc39a09 d078c69f
+_LG7 = 1.479819860511658591e-01  # 3fc2f112 df3e5244
+
+
+def _strict_log(x: float) -> float:
+    """``java.lang.StrictMath.log``: fdlibm ``__ieee754_log`` (e_log.c),
+    every step an IEEE double ``+ - * /``. Only the path for positive normal
+    doubles and ``+inf`` is ported: ``_cluster_feature`` passes ``x > 1``,
+    so the zero, negative, NaN and subnormal branches are left out."""
+    lx, hx = struct.unpack("<II", struct.pack("<d", x))  # low, high word
+    if hx >= 0x7FF00000:
+        return x + x
+    k = (hx >> 20) - 1023
+    hx &= 0x000FFFFF
+    i = (hx + 0x95F64) & 0x100000  # normalize x or x/2
+    (x,) = struct.unpack("<d", struct.pack("<II", lx, hx | (i ^ 0x3FF00000)))
+    k += i >> 20
+    f = x - 1.0
+    dk = float(k)
+    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2**-20
+        if f == 0.0:
+            return 0.0 if k == 0 else dk * _LN2_HI + dk * _LN2_LO
+        r = f * f * (0.5 - 0.33333333333333333 * f)
+        return f - r if k == 0 else dk * _LN2_HI - ((r - dk * _LN2_LO) - f)
+    s = f / (2.0 + f)
+    z = s * s
+    w = z * z
+    t1 = w * (_LG2 + w * (_LG4 + w * _LG6))
+    t2 = z * (_LG1 + w * (_LG3 + w * (_LG5 + w * _LG7)))
+    r = t2 + t1
+    if ((hx - 0x6147A) | (0x6B851 - hx)) > 0:
+        hfsq = 0.5 * f * f
+        if k == 0:
+            return f - (hfsq - s * (hfsq + r))
+        return dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f)
+    if k == 0:
+        return f - s * (f - r)
+    return dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f)
 
 
 def _standard_scaler(raw: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -444,8 +496,18 @@ def _boost(x: np.ndarray, y: np.ndarray) -> Ensemble:
 
 @functools.cache
 def _lanes() -> int:
-    """``DoubleVector.SPECIES_MAX.length()`` of the JVM (read once)."""
-    return int(SparkContext._jvm.jdk.incubator.vector.DoubleVector.SPECIES_MAX.length())
+    """``DoubleVector.SPECIES_MAX.length()``: the JVM's ``MaxVectorSize``
+    (bytes) over 8, probed once from the ``java`` that pyspark launches
+    (``$JAVA_HOME/bin/java``, else ``java`` on ``PATH``)."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else "java"
+    flags = subprocess.run(
+        [java, "-XX:+PrintFlagsFinal", "-version"], capture_output=True, text=True, check=True
+    ).stdout
+    m = re.search(r"\bMaxVectorSize\s*=\s*(\d+)", flags)
+    if m is None:
+        raise RuntimeError(f"{java} -XX:+PrintFlagsFinal prints no MaxVectorSize flag")
+    return int(m.group(1)) // 8
 
 
 def _fma(a: float, b: float, c: float) -> float:

@@ -16,9 +16,9 @@ phoebe/Graph.java:228-284), every evaluation interval:
    a 1-2 step downscale.
 6. record a prediction row.
 
-The distributed work (model fits, metric aggregation) runs as Spark jobs;
-this module is the driver-side composition, as in the reference where the
-Java FSM orchestrates.
+The models fit and predict on the driver; only the metric aggregation and
+the profile-store write use the session. This module is the driver-side
+composition, as in the reference where the Java FSM orchestrates.
 
 Decision rules (clients/analytics/responses/LatencyResponse.java:35-73 and
 RecTimeResponse.java:42-61):
@@ -31,8 +31,7 @@ RecTimeResponse.java:42-61):
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession

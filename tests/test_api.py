@@ -16,8 +16,8 @@ SCALE_OUTS = [2, 5, 8, 11, 14, 17, 20, 23]
 
 
 @pytest.fixture(scope="module")
-def client(spark):
-    app = create_app(spark)
+def client():
+    app = create_app()
     app.config["TESTING"] = True
     return app.test_client()
 
@@ -194,9 +194,9 @@ def test_recoverytime_and_twres_composition(client):
 
 
 def test_bad_workload_series_answer_400(client):
-    """An empty series or one with a null value is the client's error on
-    every route that reads a workload: 400 with the forecaster's message,
-    and /workload/training refuses it before scheduling a fit."""
+    """An empty series or one with a null value or timestamp is the
+    client's error on every route that reads a workload: 400 with the
+    message, and /workload/training refuses it before scheduling a fit."""
     t, v = _sine_ts()
     job = "BAD_SERIES"
     cap = [18000.0 + 2400 * so for so in SCALE_OUTS]
@@ -210,6 +210,8 @@ def test_bad_workload_series_answer_400(client):
 
     null_value = arrays_to_ts(t, v)
     null_value["observations"][1000]["value"] = None
+    null_timestamp = arrays_to_ts(t, v)
+    null_timestamp["observations"][1000]["timestamp"] = None
     recovery = {
         "prediction_period_in_s": 150, "downtime": 10.0,
         "last_checkpoint": 90, "max_recovery_time": 240,
@@ -232,6 +234,7 @@ def test_bad_workload_series_answer_400(client):
     for workload, message in (
         ({"observations": [], "count": 0}, "empty workload series"),
         (null_value, "at timestamp 1000 "),
+        (null_timestamp, "null timestamp at index 1000 "),
     ):
         r = client.post("/workload/training", json={"job": "NEVER_FIT", "workload": workload})
         assert r.status_code == 400 and message in r.get_json()["message"]
@@ -244,6 +247,57 @@ def test_bad_workload_series_answer_400(client):
         json={"job": "NEVER_FIT", "workload": arrays_to_ts(t, v), "prediction_period_in_s": 60},
     )
     assert r.status_code == 412
+
+
+@pytest.mark.parametrize(
+    "series, message",
+    [
+        ({"observations": [], "count": 0}, "has no non-null value"),
+        (arrays_to_ts(np.arange(3), np.full(3, np.nan)), "has no non-null value"),
+        (
+            {"observations": [{"timestamp": 0, "value": 1.0}, {"timestamp": None, "value": 2.0}],
+             "count": 2},
+            "null timestamp at index 1 ",
+        ),
+    ],
+    ids=["empty", "all_null", "null_timestamp"],
+)
+def test_bad_regression_series_answer_400(client, series, message):
+    t = np.arange(10)
+    r = client.post("/common/regression", json={"ok": arrays_to_ts(t, 1.0 * t), "bad": series})
+    assert r.status_code == 400
+    assert message in r.get_json()["message"]
+
+
+@pytest.mark.parametrize(
+    "route, lists, message",
+    [
+        ("/latency/training", ([], [], []), "'scale_outs': 0, 'throughput_rates': 0"),
+        ("/latency/training", ([2, 5, 8], [1e4, 2e4], [900.0, 950.0, 990.0]),
+         "'scale_outs': 3, 'throughput_rates': 2, 'latencies': 3"),
+        ("/recoverytime/training", ([], []), "'scale_outs': 0, 'max_throughput_rates': 0"),
+        ("/recoverytime/training", ([2, 5], [2e4, 3e4, 4e4]),
+         "'scale_outs': 2, 'max_throughput_rates': 3"),
+        ("/baselines/twres_training", ([], []), "'scale_outs': 0, 'throughput_rates': 0"),
+        ("/baselines/twres_training", ([2, 5, 8], [2e4]), "'scale_outs': 3, 'throughput_rates': 1"),
+        ("/latency/training", ([2, 5], [1e4, None], [900.0, 950.0]),
+         "null in throughput_rates at index 1"),
+    ],
+    ids=["latency_empty", "latency_mismatched", "recovery_empty", "recovery_mismatched",
+         "twres_empty", "twres_mismatched", "latency_null"],
+)
+def test_bad_training_lists_answer_400(client, route, lists, message):
+    """Empty, mismatched or null-holding training lists answer 400 before
+    a fit is scheduled: the answer carries no task hash."""
+    keys = {
+        "/latency/training": ("scale_outs", "throughput_rates", "latencies"),
+        "/recoverytime/training": ("scale_outs", "max_throughput_rates"),
+        "/baselines/twres_training": ("scale_outs", "throughput_rates"),
+    }[route]
+    r = client.post(route, json={"job": "BAD_LISTS", **dict(zip(keys, lists))})
+    assert r.status_code == 400
+    assert message in r.get_json()["message"]
+    assert "task_hash" not in r.get_json()
 
 
 def test_cross_model_evaluation_flows(client, latency_job):

@@ -5,13 +5,17 @@ mid-range throughput."""
 
 from __future__ import annotations
 
+import json
+import math
 import os
+import subprocess
+import sys
 
 import numpy as np
 import pytest
 
 from phoebe_spark.models.capacity import CapacityModel
-from phoebe_spark.models.latency import LatencyModel
+from phoebe_spark.models.latency import LatencyModel, _lanes, _strict_log
 
 SCALE_OUTS = [2, 5, 8, 11, 14, 17, 20, 23]
 
@@ -38,7 +42,7 @@ def _profile_rows():
 
 
 @pytest.fixture(scope="module")
-def fitted(spark):
+def fitted():
     rows = _profile_rows()
     m = LatencyModel()
     m.fit(rows)
@@ -88,35 +92,89 @@ def test_append_mode_unions_training_data(fitted):
     assert m2.previous_data[-1] == (24, 200000.0, 45000.0)
 
 
-def test_refits_persist_nothing(fitted, spark):
-    """A fit and three append refits leave the session's persisted RDDs as
-    they were: the training rows stay on the driver."""
-    _, rows = fitted
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = len(persisted())
-    m = LatencyModel()
-    m.fit(rows)
-    for so, thr in ((5, 31_000.0), (11, 47_500.0), (17, 52_250.0)):
-        m.fit([(so, thr, 1_500.0)], append=True)
-    assert len(persisted()) == before
+def _log_probe_values() -> list[float]:
+    """Edge cases, 5,000 uniform in [1, 1.5), 5,000 ``exp(U(0, 50))`` and
+    5,000 random bit patterns from 1.0 up to (not including) +inf."""
+    one_minus, one_plus = 1.0 - 2.0**-20, 1.0 + 2.0**-20
+    edges = [
+        1.0, math.nextafter(1.0, 2.0), 2.0, math.e, 1.797e308, math.inf,
+        *(y for c in (one_minus, one_plus)
+          for y in (math.nextafter(c, 0.0), c, math.nextafter(c, 2.0))),
+    ]
+    rng = np.random.default_rng(11)
+    bits = rng.integers(0x3FF0000000000000, 0x7FF0000000000000, 5_000, dtype=np.uint64)
+    return edges + [
+        *rng.uniform(1.0, 1.5, 5_000).tolist(),
+        *np.exp(rng.uniform(0.0, 50.0, 5_000)).tolist(),
+        *bits.view(np.float64).tolist(),
+    ]
 
 
-def test_fit_and_predict_run_no_spark_job(fitted, spark):
-    """A fit, an append refit and a candidate-grid predict start no Spark
-    job."""
-    _, rows = fitted
-    sc = spark.sparkContext
-    group = "latency-model-no-job"
-    sc.setJobGroup(group, "latency fit, refit and predict")
-    try:
-        m = LatencyModel()
-        m.fit(rows)
-        m.fit([(14, 44_000.0, 2_100.0)], append=True)
-        m.predict(50_379.1, range(2, 25), previously_valid=range(2, 25, 2))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+def test_strict_log_matches_java_strict_math(spark):
+    """The fdlibm port equals ``StrictMath.log`` bit for bit: the expected
+    values come from one Spark SQL ``log`` (``StrictMath.log``) query."""
+    from pyspark.sql import functions as F
+
+    xs = _log_probe_values()
+    df = spark.createDataFrame(list(enumerate(xs)), "i long, x double")
+    expected = [r[0] for r in df.orderBy("i").select(F.log("x")).collect()]
+    got = [_strict_log(x) for x in xs]
+    wrong = [(x, g, e) for x, g, e in zip(xs, got, expected) if g != e]
+    assert not wrong, f"{len(wrong)} of {len(xs)} differ, first {wrong[:3]}"
+    # the probe set tells StrictMath from the platform libm
+    assert any(math.log(x) != e for x, e in zip(xs, expected))
+
+
+def test_lanes_match_the_jvm_species(spark):
+    species = spark._jvm.jdk.incubator.vector.DoubleVector.SPECIES_MAX
+    assert _lanes() == species.length()
+
+
+_NO_JVM_SCRIPT = """
+import json, sys, time
+from pyspark import SparkContext
+from phoebe_spark.api import create_app
+from phoebe_spark.models.latency import LatencyModel
+
+rows = [tuple(r) for r in json.load(sys.stdin)]
+client = create_app().test_client()
+r = client.post("/latency/training", json={
+    "job": "J", "scale_outs": [r[0] for r in rows],
+    "throughput_rates": [r[1] for r in rows], "latencies": [r[2] for r in rows],
+})
+task = r.get_json()["task_hash"]
+while client.get(f"/common/tasks/{task}").get_json():
+    time.sleep(0.05)
+cands = [{"scale_out": so, "is_valid": True} for so in range(2, 25)]
+r = client.post("/latency/evaluation", json={
+    "job": "J", "predicted_throughput_rate": 50379.1,
+    "current": cands[0], "candidates": cands,
+})
+assert r.status_code == 200, r.get_data(as_text=True)
+m = LatencyModel()
+m.fit(rows)
+for so, thr in ((5, 31_000.0), (11, 47_500.0), (17, 52_250.0)):
+    m.fit([(so, thr, 1_500.0)], append=True)
+m.predict(50_379.1, range(2, 25), previously_valid=range(2, 25, 2))
+print(json.dumps({
+    "context": SparkContext._active_spark_context is None,
+    "gateway": SparkContext._gateway is None,
+}))
+"""
+
+
+def test_api_and_latency_fits_start_no_jvm():
+    """``create_app()``, a train-poll-evaluate round trip, a direct fit,
+    three append refits and a predict, in a fresh interpreter, leave no
+    Spark context and no py4j gateway: no Spark job can have run and no
+    RDD can be persisted."""
+    out = subprocess.run(
+        [sys.executable, "-c", _NO_JVM_SCRIPT], input=json.dumps(_profile_rows()),
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.splitlines()[-1]) == {"context": True, "gateway": True}
 
 
 # -- reference profiling ground truth (BASELINE.md "profiling ground truth")
@@ -125,7 +183,7 @@ _PROFILES2 = "/root/reference/analytics/app/test/profiles2.csv"
 
 
 @pytest.mark.skipif(not os.path.exists(_PROFILES2), reason="profiles2 fixture absent")
-def test_models_on_reference_profiles2(spark):
+def test_models_on_reference_profiles2():
     """Fit the latency and capacity models on the reference's shipped
     profiling ground truth (87 rows, scale-outs {2,5,8,11,14,17,20,23}):
     the latency model must separate the saturated high-latency profiles
