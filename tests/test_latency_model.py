@@ -92,6 +92,37 @@ def test_append_mode_unions_training_data(fitted):
     assert m2.previous_data[-1] == (24, 200000.0, 45000.0)
 
 
+def test_refits_persist_nothing(fitted, spark):
+    """A fit and three append refits leave the session's persisted RDDs as
+    they were: the training rows stay on the driver."""
+    _, rows = fitted
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persisted())
+    m = LatencyModel()
+    m.fit(rows)
+    for so, thr in ((5, 31_000.0), (11, 47_500.0), (17, 52_250.0)):
+        m.fit([(so, thr, 1_500.0)], append=True)
+    assert len(persisted()) == before
+
+
+def test_fit_and_predict_run_no_spark_job(fitted, spark):
+    """A fit, an append refit and a candidate-grid predict start no Spark
+    job."""
+    _, rows = fitted
+    sc = spark.sparkContext
+    group = "latency-model-no-job"
+    sc.setJobGroup(group, "latency fit, refit and predict")
+    try:
+        m = LatencyModel()
+        m.fit(rows)
+        m.fit([(14, 44_000.0, 2_100.0)], append=True)
+        m.predict(50_379.1, range(2, 25), previously_valid=range(2, 25, 2))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def _log_probe_values() -> list[float]:
     """Edge cases, 5,000 uniform in [1, 1.5), 5,000 ``exp(U(0, 50))`` and
     5,000 random bit patterns from 1.0 up to (not including) +inf."""
