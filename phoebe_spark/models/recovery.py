@@ -58,15 +58,19 @@ def eval_single(
     start_time: int,
     end_time: int,
 ) -> float:
-    """Iterative Simpson catch-up (recoverytime/models.py:41-70)."""
+    """Iterative Simpson catch-up (recoverytime/models.py:41-70).
+    ``grid_ts`` must be ascending, as ``merge_overwrite_np``'s dense grid
+    is: each window is a ``searchsorted`` slice of it. Raises
+    ``ValueError`` on a grid that is not."""
+    if np.any(grid_ts[1:] < grid_ts[:-1]):
+        raise ValueError("eval_single needs an ascending timestamp grid")
     partial: list[tuple[int, int, float]] = [(start_time, end_time, 0.0)]
     while True:
         s, e, _ = partial[-1]
-        mask = (grid_ts >= s) & (grid_ts <= e)
-        if not mask.any():
+        lo, hi = np.searchsorted(grid_ts, s, "left"), np.searchsorted(grid_ts, e, "right")
+        if lo == hi:
             break
-        t, v = grid_ts[mask], grid_vals[mask]
-        time_comp = simpson(v, t) * (1.0 / throughput_rate)
+        time_comp = simpson(grid_vals[lo:hi], grid_ts[lo:hi]) * (1.0 / throughput_rate)
         partial[-1] = (s, e, time_comp)
         if time_comp < 1:
             break

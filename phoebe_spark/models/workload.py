@@ -157,11 +157,14 @@ class WorkloadForecaster:
     # -- predict -----------------------------------------------------------
     def predict(self, timestamps: np.ndarray, values: np.ndarray, horizon_s: int) -> tuple[np.ndarray, np.ndarray]:
         """Forecast ``horizon_s`` seconds past the end of the given
-        workload. Ensemble combine follows workload/models.py:128-136:
-        EWM(span 5) across model columns, interpolate along time, centered
-        rolling(120), last column, rows [1:], truncated to horizon. Raises
-        ``ValueError`` on an empty series, on arrays of different lengths,
-        on a null/NaN point or on a horizon past the cap."""
+        workload. Each model forecasts onto its column of a numpy
+        [horizon second x model] grid whose row 0 holds the newest
+        processed value; the ensemble combine follows
+        workload/models.py:128-136: EWM(span 5) across model columns,
+        interpolate along time, centered rolling(120), last column, rows
+        [1:], truncated to horizon. Raises ``ValueError`` on an empty
+        series, on arrays of different lengths, on a null/NaN point or on
+        a horizon past the cap."""
         if not self.models:
             raise RuntimeError("not fitted")
         max_horizon = self.num_models * self.step_size
@@ -171,35 +174,33 @@ class WorkloadForecaster:
         processed = process_workload(ts, vals, self.step_size)
         ts = ts.astype(int)
         end_time = int(ts[-1])
-        horizon_grid = np.arange(end_time, end_time + len(self.models) * self.step_size + 1)
-        df = pd.DataFrame(index=horizon_grid, columns=sorted(self.models), dtype=float)
+        span = len(self.models) * self.step_size
+        M = np.full((span + 1, len(self.models)), np.nan)
+        M[0, :] = processed[-1]
+        # every update target lies past the oldest last_learned_timestamp
+        unseen = np.flatnonzero(
+            (ts > min(w.last_learned_timestamp for w in self.models.values())) & (ts <= end_time)
+        )
+        ts_unseen = ts[unseen]
 
-        for model_id in sorted(self.models):
+        for j, model_id in enumerate(sorted(self.models)):
             w = self.models[model_id]
             # incremental update at the model's stride, anchored FORWARD
             # from last_learned_timestamp (ArimaModelWrapper.
             # compute_target_timestamps, workload/models.py:27-38):
             # targets = arange(last_learned + stride, end + 1, stride)
             stride = max(w.step_size, 1)
-            targets = np.arange(w.last_learned_timestamp + stride, end_time + 1, stride)
-            sel = np.isin(ts, targets)
-            if sel.any():
+            first = w.last_learned_timestamp + stride
+            sel = unseen[(ts_unseen >= first) & ((ts_unseen - first) % stride == 0)]
+            if len(sel):
                 w.update(processed[sel])
-                w.last_learned_timestamp = int(ts[sel][-1])
-            if df.isnull().values.all():
-                df.iloc[0, :] = processed[-1]
+                w.last_learned_timestamp = int(ts[sel[-1]])
             # forecast targets continue the same phase past end_time
             # (workload/models.py:126-131)
-            tgts = [
-                t
-                for t in np.arange(
-                    w.last_learned_timestamp + stride, horizon_grid[-1] + 1, stride
-                )
-                if t > end_time
-            ]
-            if tgts:
-                preds = w.predict(len(tgts))
-                df.loc[tgts, model_id] = preds[: len(tgts)]
+            tg = np.arange(w.last_learned_timestamp + stride, end_time + span + 1, stride)
+            tg = tg[tg > end_time]
+            if len(tg):
+                M[tg - end_time, j] = w.predict(len(tg))
 
         # Only the LAST column of the horizontal EWM is consumed, and
         # interpolate/rolling are column-independent — so the reference's
@@ -208,8 +209,7 @@ class WorkloadForecaster:
         # acc + (x - acc)/3 over non-NaN values in column order, then the
         # 1-D interpolate + rolling on that single series (same closed form
         # as the JVM-side q36_ewm_ensemble).
-        M = df[sorted(df.columns)].to_numpy(dtype=float)
-        acc = np.full(len(df), np.nan)
+        acc = np.full(len(M), np.nan)
         for j in range(M.shape[1]):
             x = M[:, j]
             m = ~np.isnan(x)
@@ -217,7 +217,7 @@ class WorkloadForecaster:
             acc[start] = x[start]
             upd = m & ~start
             acc[upd] += (x[upd] - acc[upd]) / 3.0
-        s = pd.Series(acc, index=df.index)
+        s = pd.Series(acc)
         s = s.interpolate(method="linear", limit_direction="both")
         s = s.rolling(min_periods=1, window=120, center=True).mean()
         vals = s.to_numpy()[1:]

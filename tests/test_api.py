@@ -4,6 +4,7 @@ each model family over the reference wire formats."""
 
 from __future__ import annotations
 
+import json
 import time
 
 import numpy as np
@@ -259,10 +260,15 @@ def test_bad_workload_series_answer_400(client):
              "count": 2},
             "null timestamp at index 1 ",
         ),
+        (arrays_to_ts(np.arange(3), np.array([np.nan, 2.0, np.nan])), "two or more distinct"),
+        (arrays_to_ts(np.full(3, 1), np.array([2.0, 3.0, 4.0])), "two or more distinct"),
     ],
-    ids=["empty", "all_null", "null_timestamp"],
+    ids=["empty", "all_null", "null_timestamp", "one_point", "one_timestamp"],
 )
 def test_bad_regression_series_answer_400(client, series, message):
+    """A series with no line to fit names itself in a 400: no non-null
+    value, a null timestamp, or (rank-deficient, which ``np.polyfit``
+    only warns about) one non-null point or all points at one timestamp."""
     t = np.arange(10)
     r = client.post("/common/regression", json={"ok": arrays_to_ts(t, 1.0 * t), "bad": series})
     assert r.status_code == 400
@@ -422,3 +428,103 @@ def test_latency_reads_during_refit_see_one_model(client, latency_job):
     assert after != before
     assert during
     assert set(during) <= {before, after}
+
+
+# -- wire codec --------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def wire_reads(client, latency_job):
+    """One answer from every read route, on a job with every model family
+    fitted (the latency routes read ``latency_job``)."""
+    t, v = _sine_ts()
+    wl = arrays_to_ts(t, v)
+    cap = [18000.0 + 2400 * so for so in SCALE_OUTS]
+    tasks = [
+        client.post("/workload/training", json={"job": "WIRE", "workload": wl}),
+        client.post("/recoverytime/training",
+                    json={"job": "WIRE", "scale_outs": SCALE_OUTS, "max_throughput_rates": cap}),
+        client.post("/baselines/twres_training",
+                    json={"job": "WIRE", "scale_outs": SCALE_OUTS, "throughput_rates": cap}),
+    ]
+    for r in tasks:
+        _poll(client, r.get_json()["task_hash"])
+    recovery = {
+        "job": "WIRE", "workload": wl, "prediction_period_in_s": 150, "downtime": 10.0,
+        "last_checkpoint": 90, "max_recovery_time": 240,
+    }
+    out = {"/common/tasks": client.get(f"/common/tasks/{tasks[0].get_json()['task_hash']}")}
+    for route, body in (
+        ("/common/regression", {"a": arrays_to_ts(t, 2.0 * t + 5.0), "b": wl}),
+        ("/workload/prediction", {"job": "WIRE", "workload": wl, "prediction_period_in_s": 600}),
+        ("/recoverytime/prediction",
+         dict(recovery, min_scale_out=2, max_scale_out=24, scale_out=4)),
+        ("/latency/prediction", {
+            "job": latency_job, "min_scale_out": 2, "max_scale_out": 24, "scale_out": 12,
+            "throughput_rate": 50379.1,
+        }),
+        ("/baselines/twres_prediction", {
+            "job": "WIRE", "workload": wl, "avg_latency": 1000, "max_latency_constraint": 2000,
+            "scale_out": 10, "time_window_interval": 600, "min_scale_out": 4, "max_scale_out": 24,
+        }),
+    ):
+        out[route] = client.post(route, json=body)
+    rt = out["/recoverytime/prediction"].get_json()
+    out["/latency/evaluation"] = client.post("/latency/evaluation", json={
+        "job": latency_job, "predicted_throughput_rate": rt["predicted_throughput_rate"],
+        "current": rt["current"], "candidates": rt["candidates"], "slope": rt["slope"],
+    })
+    lat = out["/latency/evaluation"].get_json()
+    out["/recoverytime/evaluation"] = client.post(
+        "/recoverytime/evaluation",
+        json=dict(recovery, current=lat["current"], candidates=lat["candidates"]),
+    )
+    return out
+
+
+def _keys_sorted(obj) -> bool:
+    if isinstance(obj, dict):
+        return list(obj) == sorted(obj) and all(_keys_sorted(v) for v in obj.values())
+    if isinstance(obj, list):
+        return all(_keys_sorted(v) for v in obj)
+    return True
+
+
+def test_read_bodies_decode_alike_with_sorted_keys(client, wire_reads):
+    """Every read route's body decodes with the stdlib to the object the
+    server's own codec reads, with its keys in sorted order and no bare
+    ``NaN`` token."""
+    assert len(wire_reads) == 8
+    for route, r in wire_reads.items():
+        assert r.status_code == 200, (route, r.data[:200])
+        decoded = json.loads(r.data)
+        assert decoded == client.application.json.loads(r.data), route
+        assert _keys_sorted(decoded), route
+        assert b"NaN" not in r.data and b"Infinity" not in r.data, route
+
+
+def test_non_finite_float_is_written_as_null(client):
+    dumps = client.application.json.dumps
+    assert dumps({"b": float("nan"), "a": float("inf")}) == '{"a":null,"b":null}'
+
+
+_REGRESSION_BODY = (
+    '{"s": {"observations": [{"timestamp": 0, "value": %s}, {"timestamp": 1, "value": 1.0},'
+    ' {"timestamp": 2, "value": 2.5}], "count": 3}}'
+)
+
+
+@pytest.mark.parametrize(
+    "data",
+    [_REGRESSION_BODY % "NaN", _REGRESSION_BODY % "Infinity", (_REGRESSION_BODY % "0.5")[:-9]],
+    ids=["nan_literal", "infinity_literal", "truncated"],
+)
+def test_malformed_request_answers_400(client, data):
+    """A body that is not strict JSON (a ``NaN`` or ``Infinity`` literal, a
+    truncated document) answers 400, while the same body with a number
+    answers 200."""
+    r = client.post("/common/regression", data=data, content_type="application/json")
+    assert r.status_code == 400
+    ok = client.post("/common/regression", data=_REGRESSION_BODY % "0.5",
+                     content_type="application/json")
+    assert ok.status_code == 200

@@ -312,6 +312,13 @@ def test_eval_single_converges():
     assert 10.5 < catch_up < 12.5
 
 
+def test_eval_single_rejects_unsorted_grid():
+    """Each Simpson window is a ``searchsorted`` slice, so a grid that is not
+    ascending raises instead of integrating the wrong points."""
+    with pytest.raises(ValueError, match="ascending"):
+        eval_single(np.array([0, 2, 1, 3]), np.ones(4), 1.0, 0, 3)
+
+
 def test_recovery_time_model_end_to_end():
     so, thr = _capacity_rows()
     t, v = _sine_workload(3600)

@@ -128,8 +128,14 @@ def _guard_plans(name: str, plans: list[str]) -> None:
 
 
 @pytest.fixture(scope="session")
-def ddb(sf_dir):
+def ddb(sf_dir, tmp_path_factory):
     con = duckdb.connect()
+    # Resource bounds, not a looser check: one oracle may take neither the
+    # host's memory (q214 at sf0.1 ran a 15 GB host out of it unbounded)
+    # nor its disk (at 2GB it spilled past 20 GB before failing).
+    con.execute("SET memory_limit = '2GB'")
+    con.execute(f"SET temp_directory = '{tmp_path_factory.mktemp('duckdb')}'")
+    con.execute("SET max_temp_directory_size = '4GB'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
