@@ -1741,14 +1741,11 @@ def q50_profile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     DELETE WHERE expId/genType/isBckPres is a static-partition overwrite
     (see :mod:`phoebe_spark.sources.tables`) so at scale it swaps out one
     partition directory instead of rewriting the store. The oracle mirrors
-    the delete as an anti-filter over the same derived rows."""
-    import tempfile
-
+    the delete as an anti-filter over the same derived rows. The store
+    lives in a scratch dir: the result is frozen and both tables are
+    dropped before the dir is removed."""
     from phoebe_spark.sources import tables as store
-
-    spark.sql("DROP TABLE IF EXISTS profiles")
-    spark.sql("DROP TABLE IF EXISTS predictions")
-    store.create_profile_store(spark, tempfile.mkdtemp(prefix="phoebe_store_"))
+    from phoebe_spark.streaming import drain
 
     e = _t(spark, sf_dir, "events").withColumn("k", F.from_json("props", "k INT")["k"])
     base = (
@@ -1771,8 +1768,18 @@ def q50_profile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stopTs",
         )
     )
-    store.insert_profiles(spark, base)
-    store.delete_profiles(spark, 1, "click", is_bck_pres=1)
-    return store.select_profiles(spark, [1], "click").unionAll(
-        store.select_profiles(spark, [1], "view")
-    )
+    spark.sql("DROP TABLE IF EXISTS profiles")
+    spark.sql("DROP TABLE IF EXISTS predictions")
+    with drain.scratch("phoebe_store_") as work:
+        try:
+            store.create_profile_store(spark, work)
+            store.insert_profiles(spark, base)
+            store.delete_profiles(spark, 1, "click", is_bck_pres=1)
+            return (
+                store.select_profiles(spark, [1], "click")
+                .unionAll(store.select_profiles(spark, [1], "view"))
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            spark.sql("DROP TABLE IF EXISTS profiles")
+            spark.sql("DROP TABLE IF EXISTS predictions")

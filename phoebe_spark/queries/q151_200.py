@@ -1754,30 +1754,32 @@ def q179_streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     with drain.scratch("q179_") as work:
         src_dir = f"{work}/src"
-        # ONE fingerprint scan, materialized once: the same parquet is the
-        # streaming source (schema-pruned to the gate's 3 columns) AND the
-        # batch side of the final per-source aggregate. The gate tie-breaks
-        # doc_id as a STRING: zero-pad so string order == numeric order and
-        # the drained survivor is min(doc_id).
-        d.select(
-            _prefix_fp().alias("fp"),
-            F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("doc_id"),
-            F.lit("2026-01-01 00:00:00").cast("timestamp").alias("event_time"),
-            "source",
-        ).write.parquet(src_dir)
+        # ONE fingerprint scan, staged once as one micro-batch: the same
+        # parquet is the streaming source (the gate prunes it to its 3
+        # columns) AND the batch side of the final per-source aggregate.
+        # The gate tie-breaks doc_id as a STRING: zero-pad so string order
+        # == numeric order and the drained survivor is min(doc_id).
+        drain.stage_slices(
+            [
+                d.select(
+                    _prefix_fp().alias("fp"),
+                    F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("doc_id"),
+                    F.lit("2026-01-01 00:00:00").cast("timestamp").alias("event_time"),
+                    "source",
+                )
+            ],
+            src_dir,
+        )
 
-        stream = spark.readStream.schema(
-            "fp STRING, doc_id STRING, event_time TIMESTAMP"
-        ).parquet(src_dir)
-        gate = streaming_dedup_gate(stream)
+        gate = streaming_dedup_gate(drain.replay(spark, src_dir))
         # Python fold over <=5,000 raw fingerprints; width 1 measured +128%
         # wall (sf0.1, 4 vCPUs)
-        sink = drain.run(gate, work, output_mode="append", state_partitions=8)
+        survivors = drain.run(gate, work, output_mode="append", state_partitions=8)
 
         staged = spark.read.parquet(src_dir)
         # unhinted join: survivors ~= distinct fingerprints (corpus-sized at
         # scale) — let the planner pick the strategy
-        surv = spark.read.parquet(sink).select(F.col("doc_id").alias("_sid"))
+        surv = survivors.select(F.col("doc_id").alias("_sid"))
         out = (
             staged.join(surv, staged.doc_id == F.col("_sid"), "left")
             .groupBy("source")
@@ -1786,6 +1788,7 @@ def q179_streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("_sid").alias("n_survivors"),
             )
         )
+        # frozen: the batch side reads the staged file
         return out.localCheckpoint(eager=True)
 
 
@@ -1809,7 +1812,7 @@ def q180_streaming_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence the unit tests assert, promoted to the oracle gate.
 
     Scale notes: complete mode is the DRAIN contract only (final state
-    snapshot, foreachBatch overwrite); production uses append + watermark
+    snapshot: the drain keeps the last batch); production uses append + watermark
     (streaming/jobs.py `windowed_keyed_agg`). The value sum rides the
     DECIMAL policy so streaming partial-aggregation order matches the
     batch engines."""
@@ -1818,31 +1821,31 @@ def q180_streaming_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     with drain.scratch("q180_") as work:
         src_dir = f"{work}/src"
-        ev.select(
-            F.expr("timestamp_micros(ts div 1000)").alias("event_time"),
-            "event_type",
-            _dec("value").alias("v"),
-        ).write.parquet(src_dir)
-
-        stream = spark.readStream.schema(
-            "event_time TIMESTAMP, event_type STRING, v DECIMAL(18,4)"
-        ).parquet(src_dir)
+        # one staged file: the whole table is one micro-batch
+        drain.stage_slices(
+            [
+                ev.select(
+                    F.expr("timestamp_micros(ts div 1000)").alias("event_time"),
+                    "event_type",
+                    _dec("value").alias("v"),
+                )
+            ],
+            src_dir,
+        )
         agg = (
-            stream.groupBy(F.window("event_time", "1 minute"), "event_type")
+            drain.replay(spark, src_dir)
+            .groupBy(F.window("event_time", "1 minute"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.round(F.sum("v"), 2).cast("double").alias("total_value"),
             )
         )
-        sink = drain.run(agg, work, output_mode="complete")
-
-        out = spark.read.parquet(sink).select(
+        return drain.run(agg, work, output_mode="complete").select(
             F.col("window.start").cast("long").alias("win_start"),
             "event_type",
             "n_events",
             "total_value",
         )
-        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -2026,48 +2029,35 @@ def q183_source_length_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q184_streaming_profile_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING profile loop in the correctness gate (SURVEY §2.10's
     generator->profile-store cycle, tightened): the events table replays
-    as a RATE-LIMITED file stream (``maxFilesPerTrigger`` holds each
-    micro-batch to 2 of the 8 staged files — the file-source throttle a
-    backfill uses so one catch-up run cannot starve the live cluster), an
-    update-mode keyed aggregate maintains per-event-type profiles
-    INCREMENTALLY across micro-batches, and every batch APPENDS its
-    updated profile rows to a versioned store with its batch id — the
-    append-only profile-store layout (no in-place rewrite at 100 TB;
-    readers take the latest version per key). The drained read-back picks
-    each key's newest version; because update mode re-emits a key's full
-    running aggregate, that latest version must equal the one-pass batch
+    in 4 micro-batches (a quarter of the rows each — the file-source
+    throttle a backfill uses so one catch-up run cannot starve the live
+    cluster), an update-mode keyed aggregate maintains per-event-type
+    profiles INCREMENTALLY across micro-batches, and every batch APPENDS
+    its updated profile rows to the drained history — the append-only
+    profile-store layout (no in-place rewrite at 100 TB; readers take the
+    latest version per key). A key's version is its running event count:
+    update mode re-emits a key only when rows arrive for it, so the count
+    grows with every version. Because each emission is the key's full
+    running aggregate, the newest version must equal the one-pass batch
     answer the DuckDB oracle computes. Money-sum policy: DECIMAL(18,4)
     accumulate, round(2), cast DOUBLE — exact under any batch/partial
     ordering."""
     from phoebe_spark.streaming import drain
 
     with drain.scratch("q184_") as work:
-        src_dir, sink = f"{work}/src", f"{work}/profiles"
+        stage, src_dir = f"{work}/stage", f"{work}/src"
         e = _t(spark, sf_dir, "events").select("event_type", "value")
-        e.repartition(8).write.parquet(src_dir)
+        e.repartition(4).write.parquet(stage)
+        drain.stage_files(f"{stage}/part-*.parquet", src_dir)
 
-        stream = (
-            spark.readStream.schema("event_type STRING, value DOUBLE")
-            .option("maxFilesPerTrigger", 2)  # the rate limit: 4 micro-batches
-            .parquet(src_dir)
-        )
-        prof = stream.groupBy("event_type").agg(
+        prof = drain.replay(spark, src_dir).groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
             .cast("double")
             .alias("total_value"),
         )
-
-        def _append_version(bdf, bid: int) -> None:
-            bdf.withColumn("_ver", F.lit(bid)).write.mode("append").parquet(sink)
-
-        drain.run(prof, work, output_mode="update", sink=_append_version)
-
-        store = spark.read.parquet(sink)
-        out = drain.latest(store, key="event_type", order="_ver").select(
-            "event_type", "n_events", "total_value"
-        )
-        return out.localCheckpoint(eager=True)
+        history = drain.run(prof, work, output_mode="update")
+        return drain.latest(history, key="event_type", order="n_events")
 
 
 @query(
@@ -2349,20 +2339,18 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned.repartition(1).write.partitionBy("_slice").parquet(stage)
         drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
 
-        stream = (
-            spark.readStream.schema("key STRING, sid STRING, ord_ns LONG, value DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
         # the gate folds each of its 8 shards' keys in one handler call:
         # 8 state get/put exchanges per micro-batch instead of ~1500 (one
         # per user), ~190 keys per shard's state row
         admitted = stateful.keyed_quota_gate(
-            stream, quota=40, key_col="key", id_col="sid", ord_col="ord_ns"
+            drain.replay(spark, src_dir),
+            quota=40,
+            key_col="key",
+            id_col="sid",
+            ord_col="ord_ns",
         )
-        sink = drain.run(admitted, work, output_mode="append")
-        out = (
-            spark.read.parquet(sink)
+        return (
+            drain.run(admitted, work, output_mode="append")
             .groupBy("key")
             .agg(
                 F.count(F.lit(1)).alias("n_admitted"),
@@ -2372,7 +2360,6 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("ord").alias("max_ord"),
             )
         )
-        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -2889,21 +2876,24 @@ def q196_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _even_odd_event_streams(
     spark: SparkSession, ev: DataFrame, work: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The events table staged under ``work`` and read back as two file
-    streams, even event_ids on the left and odd on the right, each with
-    (event_id, user_id, event_time, v): the two sides of the q197/q218
-    stream-stream interval joins."""
+    """The events table staged under ``work`` and replayed as two file
+    streams of one micro-batch each, even event_ids on the left and odd on
+    the right, each with (event_id, user_id, event_time, v): the two sides
+    of the q197/q218 stream-stream interval joins."""
+    from phoebe_spark.streaming import drain
+
     staged = ev.select(
         "event_id",
         "user_id",
         F.expr("timestamp_micros(ts div 1000)").alias("event_time"),
         _dec("value").alias("v"),
     )
-    staged.filter(F.col("event_id") % 2 == 0).write.parquet(f"{work}/left")
-    staged.filter(F.col("event_id") % 2 == 1).write.parquet(f"{work}/right")
-    schema = "event_id LONG, user_id LONG, event_time TIMESTAMP, v DECIMAL(18,4)"
-    read = spark.readStream.schema(schema).parquet
-    return read(f"{work}/left"), read(f"{work}/right")
+
+    def side(name: str, parity: int) -> DataFrame:
+        drain.stage_slices([staged.filter(F.col("event_id") % 2 == parity)], f"{work}/{name}")
+        return drain.replay(spark, f"{work}/{name}")
+
+    return side("left", 0), side("right", 1)
 
 
 @query(
@@ -2967,10 +2957,8 @@ def q197_stream_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "lag_s"
             ),
         )
-        sink = drain.run(joined, work, output_mode="append")
-
-        out = (
-            spark.read.parquet(sink)
+        return (
+            drain.run(joined, work, output_mode="append")
             .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_pairs"),
@@ -2978,7 +2966,6 @@ def q197_stream_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("lag_s").alias("max_lag_s"),
             )
         )
-        return out.localCheckpoint(eager=True)
 
 
 @query(

@@ -224,20 +224,18 @@ def q203_session_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     with drain.scratch("q203_") as work:
-        ev.select(
-            "user_id", F.expr("timestamp_micros(ts div 1000)").alias("event_time")
-        ).write.parquet(f"{work}/src")
-
-        stream = spark.readStream.schema("user_id LONG, event_time TIMESTAMP").parquet(
-            f"{work}/src"
+        # one staged file: the whole table is one micro-batch
+        drain.stage_slices(
+            [ev.select("user_id", F.expr("timestamp_micros(ts div 1000)").alias("event_time"))],
+            f"{work}/src",
         )
-        sessions = stream.groupBy(
-            "user_id", F.session_window("event_time", "30 minutes").alias("sw")
-        ).agg(F.count(F.lit(1)).alias("ev"))
-        sink = drain.run(sessions, work, output_mode="complete")
-
-        out = (
-            spark.read.parquet(sink)
+        sessions = (
+            drain.replay(spark, f"{work}/src")
+            .groupBy("user_id", F.session_window("event_time", "30 minutes").alias("sw"))
+            .agg(F.count(F.lit(1)).alias("ev"))
+        )
+        return (
+            drain.run(sessions, work, output_mode="complete")
             .select(
                 "user_id",
                 "ev",
@@ -255,7 +253,6 @@ def q203_session_window_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.avg("dur"), 6).alias("avg_session_dur_s"),
             )
         )
-        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -394,7 +391,7 @@ def q205_watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     events table is sliced into 4 interleaved files (``event_id % 4``,
     so every micro-batch spans the full time range and later batches
     carry genuinely late rows), replayed one file per micro-batch
-    (``maxFilesPerTrigger=1``, mtime-ordered), and run through an
+    (``drain.replay``, mtime-ordered), and run through an
     append-mode 1-hour tumbling window with a 1-hour watermark. The
     oracle replays Spark's micro-batch watermark mechanics EXACTLY,
     validated empirically against this engine (Spark 4.x):
@@ -434,23 +431,17 @@ def q205_watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
 
-        stream = (
-            spark.readStream.schema("event_time TIMESTAMP, event_type STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        agg = (
+            drain.replay(spark, src_dir)
             .withWatermark("event_time", "1 hour")
+            .groupBy(F.window("event_time", "1 hour"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        agg = stream.groupBy(
-            F.window("event_time", "1 hour"), "event_type"
-        ).agg(F.count(F.lit(1)).alias("n_events"))
-        sink = drain.run(agg, work, output_mode="append")
-
-        out = spark.read.parquet(sink).select(
+        return drain.run(agg, work, output_mode="append").select(
             "event_type",
             F.col("window.start").cast("long").alias("win_start"),
             "n_events",
         )
-        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -875,23 +866,16 @@ def q209_streaming_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged.repartition(1).write.partitionBy("_slice").parquet(stage)
         drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
 
-        stream = (
-            spark.readStream.schema("key STRING, dev DOUBLE, ord LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
         monitored = stateful.keyed_cusum(
-            stream,
+            drain.replay(spark, src_dir),
             k=0.0,
             h=200_000_000.0,
             key_col="key",
             ts_col="ord",
             value_col="dev",
         )
-        sink = drain.run(monitored, work, output_mode="update")
-
-        out = (
-            spark.read.parquet(sink)
+        return (
+            drain.run(monitored, work, output_mode="update")
             .groupBy(F.col("key").alias("event_type"))
             .agg(
                 F.max_by("stat", "n_obs").cast("long").alias("final_stat"),
@@ -899,7 +883,6 @@ def q209_streaming_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("alarm").cast("long")).alias("n_alarm_batches"),
             )
         )
-        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -953,15 +936,8 @@ def q210_streaming_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged.repartition(1).write.partitionBy("_slice").parquet(stage)
         drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
 
-        stream = (
-            spark.readStream.schema("key STRING, item STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        hh = stateful.keyed_heavy_hitters(stream, k=K)
-        sink = drain.run(hh, work, output_mode="update")
-
-        emitted = spark.read.parquet(sink)
+        hh = stateful.keyed_heavy_hitters(drain.replay(spark, src_dir), k=K)
+        emitted = drain.run(hh, work, output_mode="update")
         w_last = Window.partitionBy("key")
         final = emitted.withColumn(
             "max_nt", F.max("n_total").over(w_last)
@@ -1012,7 +988,7 @@ def q210_streaming_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumnRenamed("key", "event_type")
         )
-        return audit.localCheckpoint(eager=True)
+        return audit
 
 
 @query(
@@ -1683,10 +1659,8 @@ def q218_stream_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v_r").alias("v"),
             F.col("event_time_r").isNotNull().alias("matched"),
         )
-        sink = drain.run(joined, work, output_mode="append")
-
-        out = (
-            spark.read.parquet(sink)
+        return (
+            drain.run(joined, work, output_mode="append")
             .groupBy("user_id")
             .agg(
                 F.count(F.when(F.col("matched"), 1)).alias("n_pairs"),
@@ -1696,7 +1670,6 @@ def q218_stream_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.when(~F.col("matched"), 1)).alias("n_expired_null"),
             )
         )
-        return out.localCheckpoint(eager=True)
 
 
 def _q219_oracle(iterations: int = 2, scale: int = 1_000_000) -> str:
@@ -1865,28 +1838,23 @@ def q220_dedup_within_watermark_drain(spark: SparkSession, sf_dir: str) -> DataF
         drain.stage_files(f"{work}/stage/slice=*/part-*.parquet", src_dir)
 
         stream = (
-            spark.readStream.schema("fp STRING, event_time TIMESTAMP")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+            drain.replay(spark, src_dir)
             .withWatermark("event_time", "61 seconds")
             .dropDuplicatesWithinWatermark(["fp"])
         )
-        sink = drain.run(stream, work, output_mode="append")
-
         admits = (
-            spark.read.parquet(sink)
+            drain.run(stream, work, output_mode="append")
             .groupBy("fp")
             .agg(F.count(F.lit(1)).alias("n_admits"))
         )
         copies = base.groupBy("fp").agg(F.count(F.lit(1)).alias("n_copies"))
-        out = copies.join(admits, "fp", "left").select(
+        return copies.join(admits, "fp", "left").select(
             "fp",
             F.coalesce("n_admits", F.lit(0)).alias("n_admits"),
             (F.col("n_copies") - F.coalesce("n_admits", F.lit(0))).alias(
                 "n_dropped"
             ),
         )
-        return out.localCheckpoint(eager=True)
 
 
 def _q221_oracle(seed_mod: int = 11, rounds: int = 2, num_hashes: int = 8, bands: int = 8) -> str:
@@ -2556,24 +2524,17 @@ def q229_event_timer_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFra
         staged.repartitionByRange(3, "event_time").write.parquet(f"{work}/stage")
         drain.stage_files(f"{work}/stage/part-*.parquet", src_dir)
 
-        stream = (
-            spark.readStream.schema("user_id LONG, event_time TIMESTAMP")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .withWatermark("event_time", "0 seconds")
-        )
         sessions = session_close_event_time(
-            stream, gap_ms=_Q229_GAP_MS, key_col="user_id"
+            drain.replay(spark, src_dir).withWatermark("event_time", "0 seconds"),
+            gap_ms=_Q229_GAP_MS,
+            key_col="user_id",
         )
         # Python fold over 1,500 raw users; width 1 measured +40% wall
         # (sf0.1, 4 vCPUs).
         # Sharded timers (ROADMAP item 2) would let this drop to 1.
-        sink = drain.run(sessions, work, output_mode="append", state_partitions=8)
-
-        out = spark.read.parquet(sink).select(
+        return drain.run(sessions, work, output_mode="append", state_partitions=8).select(
             "key", "session_start", "session_end", "n_events"
         )
-        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -3777,16 +3738,8 @@ def q246_stream_first_match_drain(spark: SparkSession, sf_dir: str) -> DataFrame
         staged.repartitionByRange(3, "event_time").write.parquet(f"{work}/stage")
         drain.stage_files(f"{work}/stage/part-*.parquet", src_dir)
 
-        stream = (
-            spark.readStream.schema(
-                "user_id LONG, event_type STRING, event_time TIMESTAMP"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .withWatermark("event_time", "0 seconds")
-        )
         matches = first_match_within(
-            stream,
+            drain.replay(spark, src_dir).withWatermark("event_time", "0 seconds"),
             window_ms=_Q246_WINDOW_MS,
             a_type="view",
             b_type="purchase",
@@ -3795,10 +3748,9 @@ def q246_stream_first_match_drain(spark: SparkSession, sf_dir: str) -> DataFrame
         # Python fold over 1,500 raw users; width 1 measured +76% wall
         # (sf0.1, 4 vCPUs).
         # Sharded timers (ROADMAP item 2) would let this drop to 1.
-        sink = drain.run(matches, work, output_mode="append", state_partitions=8)
-
-        out = spark.read.parquet(sink).select("key", "a_time", "b_time", "lag_ms")
-        return out.localCheckpoint(eager=True)
+        return drain.run(matches, work, output_mode="append", state_partitions=8).select(
+            "key", "a_time", "b_time", "lag_ms"
+        )
 
 
 @query(
@@ -3974,8 +3926,8 @@ def q249_streaming_cdc_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFra
             F.lit(2).alias("version"),
             F.lit("U").alias("op"),
             F.col("o_orderstatus").alias("status"),
-            # re-cast: decimal addition widens to (19,4), and the staged
-            # files must all carry the stream schema's exact (18,4)
+            # re-cast: decimal addition widens to (19,4), and stage_slices
+            # refuses slices whose schemas differ
             (_dec("o_totalprice") + F.lit(10).cast("decimal(18,4)"))
             .cast("decimal(18,4)")
             .alias("price"),
@@ -4003,14 +3955,7 @@ def q249_streaming_cdc_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFra
             merged = drain.latest(merged_src, key="k", order="version")
             merged.write.mode("overwrite").parquet(f"{store}/v{batch_id:05d}")
 
-        stream = (
-            spark.readStream.schema(
-                "k LONG, version INT, op STRING, status STRING, price DECIMAL(18,4)"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        drain.run(stream, work, output_mode="append", sink=_merge)
+        drain.run(drain.replay(spark, src_dir), work, output_mode="append", sink=_merge)
         snaps = sorted(glob.glob(f"{store}/v*"))
         final = spark.read.parquet(snaps[-1])
         out = (

@@ -2047,14 +2047,8 @@ def q275_streaming_holt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("k STRING, d INT, c DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = streaming_holt(stream, alpha=a, gamma=g, key_col="k")
-        sink = drain.run(out, work, output_mode="update")
-        final = drain.latest(spark.read.parquet(sink)).select(
+        out = streaming_holt(drain.replay(spark, src_dir), alpha=a, gamma=g, key_col="k")
+        return drain.latest(drain.run(out, work, output_mode="update")).select(
             F.col("key").alias("event_type"),
             (F.round("level", 6) + F.lit(0.0)).alias("level"),
             (F.round("trend", 6) + F.lit(0.0)).alias("trend"),
@@ -2062,7 +2056,6 @@ def q275_streaming_holt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round(F.col("level") + 2 * F.col("trend"), 6) + F.lit(0.0)).alias("f2"),
             (F.round(F.col("level") + 3 * F.col("trend"), 6) + F.lit(0.0)).alias("f3"),
         )
-        return final.localCheckpoint(eager=True)
 
 # ---------------------------------------------------------------------------
 # Round 7: QoS / operations analytics (the reference's own domain — QoS-aware
@@ -3507,14 +3500,8 @@ def q289_streaming_burn_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("hr LONG, n LONG, errs LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = streaming_burn_rate(stream)
-        sink = drain.run(out, work, output_mode="update")
-        res = spark.read.parquet(sink).select(
+        out = streaming_burn_rate(drain.replay(spark, src_dir))
+        return drain.run(out, work, output_mode="update").select(
             "hr",
             "n",
             "errs",
@@ -3522,7 +3509,6 @@ def q289_streaming_burn_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("burn_long", 6).alias("burn_long"),
             "page",
         )
-        return res.localCheckpoint(eager=True)
 
 
 # the drain must reproduce the batch operator's oracle exactly — batch
@@ -4442,7 +4428,7 @@ def q300_streaming_hist_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING histogram-sketch drain twinning the batch q292: the
     (parity-half, 128-bin) cell counts accumulate in a COMPLETE-mode
     streaming aggregation across 2 micro-batches — the source is staged
-    as one file PER HALF with maxFilesPerTrigger=1, so the cross-batch
+    as one file PER HALF, one micro-batch each, so the cross-batch
     state merge IS the half-sketch merge the batch query certifies — then
     the drained state feeds the exact same assembly
     (:func:`_hist_sketch_assembly`): merge certificate against the
@@ -4467,17 +4453,13 @@ def q300_streaming_hist_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("half LONG, bin LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        agg = (
+            drain.replay(spark, src_dir)
+            .groupBy("half", "bin")
+            .agg(F.count(F.lit(1)).alias("c"))
         )
-        agg = stream.groupBy("half", "bin").agg(F.count(F.lit(1)).alias("c"))
-        sink = drain.run(agg, work, output_mode="complete")
-
-        hb = spark.read.parquet(sink).select("half", "bin", "c")
-        out = _hist_sketch_assembly(spark, vals, binned, hb)
-        return out.localCheckpoint(eager=True)
+        hb = drain.run(agg, work, output_mode="complete").select("half", "bin", "c")
+        return _hist_sketch_assembly(spark, vals, binned, hb)
 
 
 # the streaming drain must reproduce the batch sketch's oracle exactly —

@@ -528,21 +528,13 @@ def q306_streaming_sprt_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("i LONG, x INT, key STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = streaming_sprt(stream, d_threshold=15)
-        sink = drain.run(out, work, output_mode="update")
-
-        final = drain.latest(spark.read.parquet(sink)).select(
+        out = streaming_sprt(drain.replay(spark, src_dir), d_threshold=15)
+        return drain.latest(drain.run(out, work, output_mode="update")).select(
             F.col("n_obs").cast("long").alias("n_obs"),
             F.col("decision").cast("int").alias("decision"),
             F.round(F.col("d_stop") * float(math.log(11.0 / 9.0)), 6).alias("llr"),
             F.lit(15).cast("long").alias("d_threshold"),
         )
-        return final.localCheckpoint(eager=True)
 
 
 # the streaming drain must reproduce the batch monitor's oracle exactly —
@@ -1521,14 +1513,10 @@ def q315_streaming_page_hinkley_drain(spark: SparkSession, sf_dir: str) -> DataF
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("k STRING, d INT, c DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        out = streaming_page_hinkley(
+            drain.replay(spark, src_dir), delta=delta, lam=lam, key_col="k"
         )
-        out = streaming_page_hinkley(stream, delta=delta, lam=lam, key_col="k")
-        sink = drain.run(out, work, output_mode="update")
-        final = drain.latest(spark.read.parquet(sink)).select(
+        return drain.latest(drain.run(out, work, output_mode="update")).select(
             F.col("key").alias("event_type"),
             F.col("n").alias("n_days"),
             (F.round("mean", 6) + F.lit(0.0)).alias("mean"),
@@ -1537,7 +1525,6 @@ def q315_streaming_page_hinkley_drain(spark: SparkSession, sf_dir: str) -> DataF
             (F.round(F.col("u") - F.col("min_u"), 6) + F.lit(0.0)).alias("ph_stat"),
             F.col("alarm").alias("alarm_day"),
         )
-        return final.localCheckpoint(eager=True)
 
 
 # the streaming drain must reproduce the batch detector's oracle exactly —
@@ -2538,20 +2525,14 @@ def q324_streaming_psi_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("event_type STRING, bin INT, arm INT, cnt LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("event_type", "bin").agg(
+        out = drain.replay(spark, src_dir).groupBy("event_type", "bin").agg(
             F.sum(F.when(F.col("arm") == 0, F.col("cnt"))).alias("c0"),
             F.sum(F.when(F.col("arm") == 1, F.col("cnt"))).alias("c1"),
         )
-        sink = drain.run(out, work, output_mode="complete")
         # one row per type: its drained bins as maps, and the totals of
         # its 10 smoothed cells (integers and halves add exactly in double)
         per_type = (
-            spark.read.parquet(sink)
+            drain.run(out, work, output_mode="complete")
             .groupBy("event_type")
             .agg(
                 F.map_from_entries(F.collect_list(F.struct("bin", "c0"))).alias("m0"),
@@ -2570,12 +2551,11 @@ def q324_streaming_psi_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         qq = c1 / F.col("n1")
         x = (p - qq) * F.log(p / qq)
         psi = F.sum(F.round(x, 12).cast("decimal(38,12)")).cast("double")
-        res = grid.groupBy("event_type").agg(
+        return grid.groupBy("event_type").agg(
             F.lit(10).cast("long").alias("n_bins"),
             (F.round(psi, 6) + F.lit(0.0)).alias("psi"),
             F.when(psi > 0.2, 1).otherwise(0).alias("drifted"),
         )
-        return res.localCheckpoint(eager=True)
 
 
 # the streaming drain must reproduce the batch PSI's oracle exactly —

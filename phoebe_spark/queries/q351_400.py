@@ -844,14 +844,8 @@ def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("s INT, bucket INT, cnt LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("s", "bucket").agg(F.sum("cnt").alias("c"))
-        sink = drain.run(out, work, output_mode="complete")
-        counters = spark.read.parquet(sink).localCheckpoint(eager=True)
+        out = drain.replay(spark, src_dir).groupBy("s", "bucket").agg(F.sum("cnt").alias("c"))
+        counters = drain.run(out, work, output_mode="complete")
         est = (
             probes.select("tok", "n", seeds)
             .select("tok", "n", "s", bucket.cast("int").alias("bucket"))
@@ -859,13 +853,12 @@ def q353_streaming_cms_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("tok", "n")
             .agg(F.min("c").alias("cms_est"))
         )
-        res = est.select(
+        return est.select(
             "tok",
             F.col("n").alias("exact_n"),
             F.col("cms_est").cast("long").alias("cms_est"),
             (F.col("cms_est") - F.col("n")).cast("long").alias("overcount"),
         )
-        return res.localCheckpoint(eager=True)
 
 
 # Poisson(1) cumulative probabilities for k = 0..7 (literal, both engines)
@@ -4766,17 +4759,13 @@ def q391_streaming_bottomk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("key STRING, h LONG, id LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        out = streaming_bottom_k(
+            drain.replay(spark, src_dir), k=20, key_col="key", hash_col="h", id_col="id"
         )
-        out = streaming_bottom_k(stream, k=20, key_col="key", hash_col="h", id_col="id")
-        sink = drain.run(out, work, output_mode="update")
-        final = drain.latest(spark.read.parquet(sink), order="n_seen").select(
+        final = drain.latest(drain.run(out, work, output_mode="update"), order="n_seen").select(
             "key", F.arrays_zip("hs", "ids").alias("z")
         )
-        res = (
+        return (
             final.select("key", F.posexplode("z").alias("pos", "pair"))
             .select(
                 F.col("key").alias("event_type"),
@@ -4786,7 +4775,6 @@ def q391_streaming_bottomk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type", "rank")
         )
-        return res.localCheckpoint(eager=True)
 
 
 @query(

@@ -1798,17 +1798,10 @@ def q415_streaming_moments_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("event_type STRING, n LONG, s1 LONG, s2 LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("event_type").agg(
+        out = drain.replay(spark, src_dir).groupBy("event_type").agg(
             F.sum("n").alias("n"), F.sum("s1").alias("s1"), F.sum("s2").alias("s2")
         )
-        sink = drain.run(out, work, output_mode="complete")
-        final = spark.read.parquet(sink).localCheckpoint(eager=True)
-        return final.select(
+        return drain.run(out, work, output_mode="complete").select(
             "event_type",
             "n",
             F.round(F.col("s1") / (100.0 * F.col("n")), 6).alias("mean_value"),
@@ -4098,14 +4091,8 @@ def q433_streaming_hll_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("key STRING, idx LONG, r LONG")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = stream.groupBy("key", "idx").agg(F.max("r").alias("r"))
-        sink = drain.run(out, work, output_mode="complete")
-        regs = spark.read.parquet(sink).localCheckpoint(eager=True)
+        out = drain.replay(spark, src_dir).groupBy("key", "idx").agg(F.max("r").alias("r"))
+        regs = drain.run(out, work, output_mode="complete")
         # every drained register has r >= 1 and each absent one counts
         # 2^-0 = 1: a sum of powers of two in [2^-27, 1] is exact in
         # double, so the row order cannot change it

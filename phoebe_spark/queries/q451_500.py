@@ -5316,14 +5316,8 @@ def q496_streaming_croston_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             src_dir,
         )
 
-        stream = (
-            spark.readStream.schema("brand STRING, d INT, c DOUBLE")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        out = streaming_croston(stream, alpha=a, key_col="brand")
-        sink = drain.run(out, work, output_mode="update")
-        final = drain.latest(spark.read.parquet(sink)).select(
+        out = streaming_croston(drain.replay(spark, src_dir), alpha=a, key_col="brand")
+        return drain.latest(drain.run(out, work, output_mode="update")).select(
             F.col("key").alias("brand"),
             F.col("nd").cast("long").alias("n_demand_days"),
             (F.round("z", 6) + F.lit(0.0)).alias("demand_size"),
@@ -5334,7 +5328,6 @@ def q496_streaming_croston_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.lit(0.0)
             ).alias("sba_rate"),
         )
-        return final.localCheckpoint(eager=True)
 
 
 # O'Brien-Fleming two-sided group-sequential z boundaries for K=4 equally

@@ -4,6 +4,13 @@ Tuned for the driver's local[32] harness but with settings that carry to a
 real cluster: AQE on (runtime re-planning, skew-join handling, partition
 coalescing), Arrow for any pandas exchange, UTC session time zone so epoch
 arithmetic is stable, and shuffle partitions sized to the core count.
+
+The session sets no checkpoint dir: the package freezes intermediate
+results with ``localCheckpoint`` (executor block storage, nothing on
+disk) and runs no iterative MLlib fit, so a reliable checkpoint dir would
+only leave a temp dir behind per session. A caller that runs such a fit
+(an MLlib GBT with ``checkpointInterval``) sets its own with
+``spark.sparkContext.setCheckpointDir``.
 """
 
 from __future__ import annotations
@@ -32,13 +39,4 @@ def get_spark(app_name: str = "phoebe-spark", shuffle_partitions: int | None = N
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("PHOEBE_DRIVER_MEM", "8g"))
     )
-    spark = builder.getOrCreate()
-    # Iterative algorithms (GBT's 200 boosting rounds, label propagation)
-    # need a checkpoint dir or their lineage grows until task serialization
-    # overflows the stack. MLlib's checkpointInterval only engages when one
-    # is set; cheap no-op for everything else.
-    if spark.sparkContext.getCheckpointDir() is None:
-        import tempfile
-
-        spark.sparkContext.setCheckpointDir(tempfile.mkdtemp(prefix="phoebe_ckpt_"))
-    return spark
+    return builder.getOrCreate()

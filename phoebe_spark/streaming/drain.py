@@ -1,21 +1,29 @@
 """One harness for the registry's streaming drains.
 
 A drain runs a Structured Streaming query to completion over staged input
-(``trigger(availableNow=True)``) and reads back the final result, so the
-streaming form of an operator can be held to the same oracle as its batch
-form. Every drain in :mod:`phoebe_spark.queries` runs and cleans up through
-these functions; the query logic, including any unusual staging or
-``readStream``, stays with the caller:
+(``trigger(availableNow=True)``) and returns the final result as a frozen
+DataFrame, so the streaming form of an operator can be held to the same
+oracle as its batch form. Every drain in :mod:`phoebe_spark.queries` stages,
+replays, runs and cleans up through these functions; the query modules hold
+only the staging projection and the operator:
 
-- :func:`scratch` owns the work dir. ``return out.localCheckpoint(eager=True)``
-  inside the ``with`` materializes the result JVM-side before the dir (and
-  the sink the result reads) is removed.
+- :func:`scratch` owns the work dir and removes it on exit.
 - :func:`stage_slices` and :func:`stage_files` lay input out one file per
-  micro-batch: with ``maxFilesPerTrigger=1`` the file source replays files
-  in mtime order, so each gets an increasing fixed mtime.
-- :func:`run` starts the query on a foreachBatch sink, waits at most
-  :data:`DRAIN_TIMEOUT_S` and raises ``TimeoutError`` rather than let a
-  partial result be read.
+  micro-batch, each with an increasing fixed mtime. :func:`stage_slices`
+  refuses slices whose schemas differ, because every file is replayed
+  with one schema.
+- :func:`replay` is the one way to read staged input back as a stream:
+  one file per micro-batch, in mtime order, with the schema Spark wrote
+  into the first staged file's parquet footer (its exact types: a
+  ``decimal(18,4)`` or an ``int`` comes back as itself, never as a
+  hand-written approximation).
+- :func:`run` drains the query on a foreachBatch sink, waits at most
+  :data:`DRAIN_TIMEOUT_S` and raises ``TimeoutError`` rather than return a
+  partial result. With no ``sink`` it freezes each micro-batch in memory
+  (``localCheckpoint``) and returns the result: the last batch in
+  ``complete`` mode, the union of every batch in ``append`` and
+  ``update`` mode. The frozen frame reads no file, so it outlives the
+  ``scratch`` dir and needs no freezing of its own.
 - :func:`latest` keeps each key's newest emitted state row.
 
 State partitions: the state store fixes its partition count from
@@ -34,22 +42,31 @@ in wall time at 1 than at 8.
 The override is set on the caller's session, not on ``spark.newSession()``:
 ``StreamingQueryManager`` is per session, so a stream started on a child
 session would escape the caller's ``spark.streams`` (its listeners, and
-anything that stops its active queries).
+anything that stops its active queries). The stream itself runs its
+micro-batches on a clone of the caller's session taken at start, so the
+returned result is rebound to the caller's session: later operators on it
+plan with the caller's settings, not the drain's width.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import glob
+import json
 import os
 import shutil
 import tempfile
 from collections.abc import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, Window
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DRAIN_TIMEOUT_S = 300
+# the footer key under which Spark's parquet writer stores the row schema
+SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @contextlib.contextmanager
@@ -77,11 +94,34 @@ def stage_files(pattern: str, src_dir: str) -> None:
 
 def stage_slices(frames: Iterable[DataFrame], src_dir: str) -> None:
     """Write each frame as one parquet file into ``src_dir``, in order, so
-    ``maxFilesPerTrigger=1`` replays one frame per micro-batch."""
+    :func:`replay` gives one frame per micro-batch. Raises ``ValueError``
+    naming the first slice whose schema differs from the first slice's."""
     stage = f"{src_dir}.stage"
+    first = None
     for i, frame in enumerate(frames, start=1):
+        shape = frame.schema.simpleString()
+        if first is None:
+            first = shape
+        elif shape != first:
+            raise ValueError(f"slice {i} is {shape}, but slice 1 is {first}")
         frame.coalesce(1).write.parquet(f"{stage}/{i:03d}")
     stage_files(f"{stage}/*/part-*.parquet", src_dir)
+
+
+def replay(spark: SparkSession, src_dir: str) -> DataFrame:
+    """The files staged in ``src_dir`` as a stream of one file per
+    micro-batch, typed by the schema in the first file's footer."""
+    files = sorted(glob.glob(f"{src_dir}/*.parquet"))
+    if not files:
+        raise FileNotFoundError(f"no staged parquet files in {src_dir}")
+    footer = pq.read_metadata(files[0]).metadata[SPARK_ROW_SCHEMA_KEY]
+    schema = StructType.fromJson(json.loads(footer))
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
+
+
+def _unpersist(frozen: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``-ed frame."""
+    frozen._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def run(
@@ -91,23 +131,26 @@ def run(
     output_mode: str,
     sink: Callable[[DataFrame, int], None] | None = None,
     state_partitions: int = 1,
-) -> str | None:
+) -> DataFrame | None:
     """Drain the streaming frame ``result`` (availableNow, checkpoint under
     ``work``) and return once every staged file is processed.
 
-    With no ``sink``, each micro-batch is written as parquet under ``work``
-    (overwrite in ``complete`` mode, append otherwise) and that path is
-    returned; a callable ``sink`` is the foreachBatch function itself.
-    ``state_partitions`` is the shuffle width while the query runs."""
-    path = None
+    With no ``sink``, each micro-batch is frozen in memory and the drained
+    result is returned on the caller's session: the last batch in
+    ``complete`` mode (each batch replaces the one before), the union of
+    every batch otherwise. A callable ``sink`` is the foreachBatch
+    function itself, and ``None`` is returned. ``state_partitions`` is the
+    shuffle width while the query runs."""
+    spark = result.sparkSession
+    batches: list[DataFrame] | None = None
     if sink is None:
-        path = f"{work}/out"
-        mode = "overwrite" if output_mode == "complete" else "append"
+        batches = []
 
         def sink(bdf: DataFrame, _bid: int) -> None:
-            bdf.write.mode(mode).parquet(path)
+            if output_mode == "complete" and batches:
+                _unpersist(batches.pop())
+            batches.append(bdf.localCheckpoint(eager=True))
 
-    spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -124,9 +167,20 @@ def run(
                 f"{os.path.basename(work)}: drain did not finish within "
                 f"{DRAIN_TIMEOUT_S} s; refusing to read a partial result"
             )
+    except BaseException:
+        for frozen in batches or ():
+            _unpersist(frozen)
+        raise
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return path
+    if batches is None:
+        return None
+    drained = functools.reduce(DataFrame.union, batches)
+    # the batches belong to the stream's session clone; rebind the plan
+    jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, drained._jdf.logicalPlan()
+    )
+    return DataFrame(jds, spark)
 
 
 def latest(states: DataFrame, key: str = "key", order: str = "n") -> DataFrame:

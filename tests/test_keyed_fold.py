@@ -50,11 +50,8 @@ def _drain(spark, slices, build, output_mode="update"):
     with drain.scratch("t_keyed_fold_") as work:
         src = f"{work}/src"
         drain.stage_slices(slices, src)
-        stream = (
-            spark.readStream.schema(slices[0].schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        out = drain.run(build(stream), work, output_mode=output_mode)
-        return spark.read.parquet(out).collect()
+        out = drain.run(build(drain.replay(spark, src)), work, output_mode=output_mode)
+        return out.collect()
 
 
 def test_split_group_folds_in_order(spark, small_arrow_chunks):
@@ -181,20 +178,13 @@ def test_keyed_quota_gate_sharded_identical(spark, state_partitions):
     with drain.scratch("t_quota_") as work:
         drain.stage_slices(slices, f"{work}/src")
         for name, gate in gates.items():
-            stream = (
-                spark.readStream.schema("key STRING, sid STRING, ord LONG, value DOUBLE")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{work}/src")
-            )
             out = drain.run(
-                gate(stream),
+                gate(drain.replay(spark, f"{work}/src")),
                 f"{work}/{name}",
                 output_mode="append",
                 state_partitions=state_partitions,
             )
-            results[name] = {
-                (r.key, r.seq_id, r.ord, r.value) for r in spark.read.parquet(out).collect()
-            }
+            results[name] = {(r.key, r.seq_id, r.ord, r.value) for r in out.collect()}
     # quota 5 on 3x3 rows/key: saturation happens inside batch 2 for
     # every key — the carried counter decides the cut in both forms
     assert results["sharded"] == results["per_key"]

@@ -6,6 +6,9 @@ candidate grid with the fitted trees and centres. The oracle below is the
 former Spark path, kept inline: the MLlib fit on one partition, then grid
 DataFrame -> assemble -> scale -> GBT transform -> log-clamp feature ->
 BisectingKMeans transform -> relabel -> validity -> first-valid window.
+The oracle scores every (throughput, previously-valid) case of a sweep in
+one pass: each grid row carries its case id and the first-valid window is
+partitioned by case, which changes no row (every transform is row-wise).
 Every fitted value and every field of every row must agree exactly.
 """
 
@@ -25,6 +28,15 @@ FIELDS = ("scale_outs", "latency", "latency_class", "is_valid", "is_best")
 SCHEMA = "scale_outs INT, throughput_rates DOUBLE, latencies DOUBLE"
 THROUGHPUTS = (9_377.1, 18_500.0, 27_912.6, 36_000.3, 50_379.1, 71_250.0)
 PREVIOUSLY_VALID = list(range(4, 25, 3))  # a non-contiguous previously-valid subset
+CASES = [(thr, pv) for thr in THROUGHPUTS for pv in (None, PREVIOUSLY_VALID)]
+
+
+@pytest.fixture(scope="module", autouse=True)
+def checkpoint_dir(spark, tmp_path_factory):
+    """MLlib's GBT checkpoints its lineage every 10 boosting rounds only
+    when a checkpoint dir is set; without one a 200-round oracle fit grows
+    its lineage until task serialization overflows the stack."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path_factory.mktemp("gbt_ckpt")))
 
 
 def _latency(rng, so: int, thr: float) -> float:
@@ -124,12 +136,18 @@ def _mllib_fit(spark, rows):
     )
 
 
-def _oracle_predict(spark, o, throughput_rate, lo, hi, previously_valid=None):
+def _oracle_predict(spark, o, lo, hi):
+    """The MLlib scoring of every ``CASES`` grid over scale-outs
+    ``lo..hi``, in one pass: one list of ``FIELDS`` rows per case."""
+    cases = spark.createDataFrame(
+        [(i, float(thr), pv is not None) for i, (thr, pv) in enumerate(CASES)],
+        "case INT, throughput_rates DOUBLE, pv_only BOOLEAN",
+    )
     grid = (
         spark.range(lo, hi + 1)
         .select(F.col("id").cast("int").alias("scale_outs"))
-        .withColumn("throughput_rates", F.lit(float(throughput_rate)))
-        .dropDuplicates(["scale_outs"])
+        .crossJoin(cases)
+        .dropDuplicates(["case", "scale_outs"])
     )
     reg_assembler = VectorAssembler(
         inputCols=["scale_outs", "throughput_rates"], outputCol="_raw_features"
@@ -147,17 +165,20 @@ def _oracle_predict(spark, o, throughput_rate, lo, hi, previously_valid=None):
         *[x for k, v in o["label_map"].items() for x in (F.lit(k), F.lit(v))]
     )
     out = clustered.withColumn("latency_class", mapping[F.col("_cluster")])
-    valid = F.col("latency_class") < 1
-    if previously_valid is not None:
-        valid = valid & F.col("scale_outs").isin(*[int(s) for s in previously_valid])
+    valid = (F.col("latency_class") < 1) & (
+        ~F.col("pv_only") | F.col("scale_outs").isin(*PREVIOUSLY_VALID)
+    )
     out = out.withColumn("is_valid", valid)
     first_valid = F.min(F.when(F.col("is_valid"), F.col("scale_outs"))).over(
-        Window.orderBy("scale_outs").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
+        Window.partitionBy("case")
+        .orderBy("scale_outs")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     out = out.withColumn("is_best", F.col("is_valid") & (F.col("scale_outs") == first_valid))
-    return [tuple(r[c] for c in FIELDS) for r in out.orderBy("scale_outs").collect()]
+    scored = [[] for _ in CASES]
+    for r in out.orderBy("case", "scale_outs").collect():
+        scored[r["case"]].append(tuple(r[c] for c in FIELDS))
+    return scored
 
 
 def _assert_matches_mllib(spark, m: LatencyModel):
@@ -175,16 +196,14 @@ def _assert_matches_mllib(spark, m: LatencyModel):
     assert f.regressor_model.getNumTrees == o["regressor_model"].getNumTrees
     assert list(f.regressor_model.weights) == list(o["regressor_model"].treeWeights)
     seen_classes, seen_best = set(), 0
-    for thr in THROUGHPUTS:
-        for pv in (None, PREVIOUSLY_VALID):
-            want = _oracle_predict(spark, o, thr, 2, 24, pv)
-            got = [
-                tuple(r[c] for c in FIELDS)
-                for r in m.predict(thr, range(2, 25), previously_valid=pv)
-            ]
-            assert got == want, (thr, pv)
-            seen_classes |= {r[2] for r in got}
-            seen_best += sum(r[4] for r in got)
+    for (thr, pv), want in zip(CASES, _oracle_predict(spark, o, 2, 24)):
+        got = [
+            tuple(r[c] for c in FIELDS)
+            for r in m.predict(thr, range(2, 25), previously_valid=pv)
+        ]
+        assert got == want, (thr, pv)
+        seen_classes |= {r[2] for r in got}
+        seen_best += sum(r[4] for r in got)
     return seen_classes, seen_best
 
 

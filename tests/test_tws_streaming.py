@@ -27,13 +27,10 @@ def test_streaming_dedup_gate_first_occurrence_wins(spark):
         drain.stage_slices(
             [spark.createDataFrame(rows, DEDUP_BATCHES_SCHEMA) for rows in batches], src
         )
-        stream = (
-            spark.readStream.schema(DEDUP_BATCHES_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        out = drain.run(
+            streaming_dedup_gate(drain.replay(spark, src)), work, output_mode="append"
         )
-        out = drain.run(streaming_dedup_gate(stream), work, output_mode="append")
-        rows = spark.read.parquet(out).collect()
+        rows = out.collect()
 
     # exactly one survivor per fingerprint, and it is the earliest occurrence
     assert len(rows) == 4
