@@ -2045,10 +2045,10 @@ def q184_streaming_profile_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from phoebe_spark.streaming import drain
 
     with drain.scratch("q184_") as work:
-        stage, src_dir = f"{work}/stage", f"{work}/src"
+        src_dir = f"{work}/src"
         e = _t(spark, sf_dir, "events").select("event_type", "value")
-        e.repartition(4).write.parquet(stage)
-        drain.stage_files(f"{stage}/part-*.parquet", src_dir)
+        quarter = (F.monotonically_increasing_id() % 4).alias("_slice")
+        drain.stage(e.select("*", quarter), "_slice", src_dir)
 
         prof = drain.replay(spark, src_dir).groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -2300,7 +2300,7 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from phoebe_spark.streaming import drain, stateful
 
     with drain.scratch("q188_") as work:
-        stage, src_dir = f"{work}/stage", f"{work}/src"
+        src_dir = f"{work}/src"
         e = _t(spark, sf_dir, "events").select(
             F.col("user_id").cast("string").alias("key"),
             F.lpad(F.col("event_id").cast("string"), 12, "0").alias("sid"),
@@ -2336,8 +2336,7 @@ def q188_streaming_quota_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("_rn") <= 40)
             .drop("_rn")
         )
-        pruned.repartition(1).write.partitionBy("_slice").parquet(stage)
-        drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
+        drain.stage(pruned, "_slice", src_dir)
 
         # the gate folds each of its 8 shards' keys in one handler call:
         # 8 state get/put exchanges per micro-batch instead of ~1500 (one

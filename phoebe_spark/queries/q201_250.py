@@ -412,24 +412,15 @@ def q205_watermark_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes: this IS the production late-data contract (state
     evicted at the watermark, bounded by in-flight windows x keys);
-    the drain's slice staging is one sorted write (q188's pattern)."""
+    the drain stages its 4 slices in one write (``drain.stage``)."""
     from phoebe_spark.streaming import drain
 
     ev = _t(spark, sf_dir, "events")
     with drain.scratch("q205_") as work:
         src_dir = f"{work}/src"
-        stage = f"{work}/stage"
-        (
-            ev.select(
-                F.expr("timestamp_micros(ts div 1000)").alias("event_time"),
-                "event_type",
-                (F.col("event_id") % 4 + 1).alias("_slice"),
-            )
-            .repartition(1)
-            .write.partitionBy("_slice")
-            .parquet(stage)
-        )
-        drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
+        slice_no = (F.col("event_id") % 4 + 1).alias("_slice")
+        event_time = F.expr("timestamp_micros(ts div 1000)").alias("event_time")
+        drain.stage(ev.select(event_time, "event_type", slice_no), "_slice", src_dir)
 
         agg = (
             drain.replay(spark, src_dir)
@@ -843,7 +834,7 @@ def q209_streaming_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from phoebe_spark.streaming import drain, stateful
 
     with drain.scratch("q209_") as work:
-        stage, src_dir = f"{work}/stage", f"{work}/src"
+        src_dir = f"{work}/src"
         e = (
             _t(spark, sf_dir, "events")
             .filter(F.col("value").isNotNull())
@@ -863,8 +854,7 @@ def q209_streaming_cusum_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w_ord).alias("ord"),
             F.ntile(4).over(w_ord).alias("_slice"),
         )
-        staged.repartition(1).write.partitionBy("_slice").parquet(stage)
-        drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
+        drain.stage(staged, "_slice", src_dir)
 
         monitored = stateful.keyed_cusum(
             drain.replay(spark, src_dir),
@@ -921,7 +911,7 @@ def q210_streaming_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     K = 10
     with drain.scratch("q210_") as work:
-        stage, src_dir = f"{work}/stage", f"{work}/src"
+        src_dir = f"{work}/src"
         ev = _t(spark, sf_dir, "events")
         e = ev.select(
             F.col("event_type").alias("key"),
@@ -933,8 +923,7 @@ def q210_streaming_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged = e.select(
             "key", "item", F.ntile(4).over(w_ord).alias("_slice")
         )
-        staged.repartition(1).write.partitionBy("_slice").parquet(stage)
-        drain.stage_files(f"{stage}/_slice=*/part-*.parquet", src_dir)
+        drain.stage(staged, "_slice", src_dir)
 
         hh = stateful.keyed_heavy_hitters(drain.replay(spark, src_dir), k=K)
         emitted = drain.run(hh, work, output_mode="update")
@@ -1834,8 +1823,7 @@ def q220_dedup_within_watermark_drain(spark: SparkSession, sf_dir: str) -> DataF
                 " + slice * 37) * 60)"
             ).alias("event_time"),
         )
-        rows.repartition(1).write.partitionBy("slice").parquet(f"{work}/stage")
-        drain.stage_files(f"{work}/stage/slice=*/part-*.parquet", src_dir)
+        drain.stage(rows, "slice", src_dir)
 
         stream = (
             drain.replay(spark, src_dir)
@@ -2509,20 +2497,13 @@ def q229_event_timer_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFra
                 "timestamp_millis(2 * ((ts div 1000000000) * 1000 + event_id % 1000))"
             ).alias("event_time"),
         )
-        # 3 time-range slices (round-11 optimization, was 4): each staged
-        # file is one micro-batch and every batch pays the fixed
-        # applyInPandasWithState per-key protocol cost (~1.4 s per
-        # micro-batch END-TO-END at 8 state partitions on this fixture;
-        # the trivial-handler floor experiment in OPTIMIZATION_r11.md
-        # measured ~0.64 s/stateful task on an EMPTY batch — two
-        # configurations, both measured), so one fewer value-monotone slice is one
-        # fewer fixed-cost batch. Output is staging-invariant by fixture
-        # design (monotone slices + the odd-gap/tie rules above); 3 data
-        # batches + the finalization batch still exercise cross-batch
-        # state handoff and the timer paths (nonvacuity asserted in
-        # tests/test_plans.py against the staging-independent oracle).
-        staged.repartitionByRange(3, "event_time").write.parquet(f"{work}/stage")
-        drain.stage_files(f"{work}/stage/part-*.parquet", src_dir)
+        # 3 time-range slices (was 4): every micro-batch pays the fixed
+        # applyInPandasWithState per-key cost (~1.4 s at 8 state partitions;
+        # OPTIMIZATION_r11.md). The odd-gap/tie rules above keep the output
+        # staging-invariant; 3 data batches and the finalization batch still
+        # exercise the state handoff and timers (tests/test_plans.py).
+        by_range = staged.repartitionByRange(3, "event_time")
+        drain.stage(by_range.withColumn("_slice", F.spark_partition_id()), "_slice", src_dir)
 
         sessions = session_close_event_time(
             drain.replay(spark, src_dir).withWatermark("event_time", "0 seconds"),
@@ -3723,20 +3704,9 @@ def q246_stream_first_match_drain(spark: SparkSession, sf_dir: str) -> DataFrame
                 "timestamp_millis((ts div 1000000000) * 1000 + event_id % 1000)"
             ).alias("event_time"),
         )
-        # 3 time-range slices (round-11 optimization, was 4): each staged
-        # file is one micro-batch and every batch pays the fixed
-        # applyInPandasWithState per-key protocol cost (~1.4 s per
-        # micro-batch END-TO-END at 8 state partitions on this fixture;
-        # the trivial-handler floor experiment in OPTIMIZATION_r11.md
-        # measured ~0.64 s/stateful task on an EMPTY batch — two
-        # configurations, both measured), so one fewer value-monotone slice is one
-        # fewer fixed-cost batch. Output is staging-invariant by fixture
-        # design (monotone slices + the odd-gap/tie rules above); 3 data
-        # batches + the finalization batch still exercise cross-batch
-        # state handoff and the timer paths (nonvacuity asserted in
-        # tests/test_plans.py against the staging-independent oracle).
-        staged.repartitionByRange(3, "event_time").write.parquet(f"{work}/stage")
-        drain.stage_files(f"{work}/stage/part-*.parquet", src_dir)
+        # 3 time-range slices, staged as q229 stages them (reason there)
+        by_range = staged.repartitionByRange(3, "event_time")
+        drain.stage(by_range.withColumn("_slice", F.spark_partition_id()), "_slice", src_dir)
 
         matches = first_match_within(
             drain.replay(spark, src_dir).withWatermark("event_time", "0 seconds"),

@@ -4449,7 +4449,7 @@ def q300_streaming_hist_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one file per half: batch 1 streams half 0, batch 2 half 1 —
         # state after the drain holds the merged sketch
         drain.stage_slices(
-            (binned.filter(F.col("half") == hv).repartition(1) for hv in (0, 1)),
+            (binned.filter(F.col("half") == hv) for hv in (0, 1)),
             src_dir,
         )
 

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "phoebe-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -37,6 +39,9 @@ def get_spark(app_name: str = "phoebe-spark", shuffle_partitions: int | None = N
         # Arrow for every pandas_udf / applyInPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # Python workers start in the JVM's working directory; a handler that
+        # references package code must import phoebe_spark from anywhere.
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("PHOEBE_DRIVER_MEM", "8g"))
     )
     return builder.getOrCreate()

@@ -8,10 +8,11 @@ replays, runs and cleans up through these functions; the query modules hold
 only the staging projection and the operator:
 
 - :func:`scratch` owns the work dir and removes it on exit.
-- :func:`stage_slices` and :func:`stage_files` lay input out one file per
-  micro-batch, each with an increasing fixed mtime. :func:`stage_slices`
-  refuses slices whose schemas differ, because every file is replayed
-  with one schema.
+- :func:`stage` owns the micro-batch layout: one write job, then one file
+  per value of an integer slice column, in ascending numeric order with
+  increasing fixed mtimes. :func:`stage_slices` stages a list of frames
+  the same way, an empty frame as a schema-only micro-batch, and refuses
+  slices whose schemas differ: every file is replayed with one schema.
 - :func:`replay` is the one way to read staged input back as a stream:
   one file per micro-batch, in mtime order, with the schema Spark wrote
   into the first staged file's parquet footer (its exact types: a
@@ -31,21 +32,20 @@ State partitions: the state store fixes its partition count from
 its key groups), and every micro-batch pays one state-store load and
 commit per partition, plus one Python worker per partition for an
 ``applyInPandasWithState`` fold, whether or not the partition holds a
-key. So :func:`run` drains with 1 partition and restores the previous
-value afterwards; the count changes task bucketing, never results. Only
-a Python fold over thousands of raw keys passes more: there the per-key
-handler work outweighs the per-partition cost and spreads over cores
-(q179, q229 and q246 pass 8). On the 25 registry drains at sf0.1 on 4
-vCPUs, width 1 used less CPU on every drain and those three were slower
-in wall time at 1 than at 8.
+key. So :func:`run` starts the stream with 1 partition; the count
+changes task bucketing, never results. Only a Python fold over thousands
+of raw keys passes more: there the per-key handler work outweighs the
+per-partition cost and spreads over cores (q179, q229 and q246 pass 8).
+On the 25 registry drains at sf0.1 on 4 vCPUs, width 1 used less CPU on
+every drain and those three were slower in wall time at 1 than at 8.
 
 The override is set on the caller's session, not on ``spark.newSession()``:
 ``StreamingQueryManager`` is per session, so a stream started on a child
 session would escape the caller's ``spark.streams`` (its listeners, and
-anything that stops its active queries). The stream itself runs its
-micro-batches on a clone of the caller's session taken at start, so the
-returned result is rebound to the caller's session: later operators on it
-plan with the caller's settings, not the drain's width.
+anything that stops its active queries). ``start()`` clones the session
+the batches run on, so the caller's value is restored as soon as it
+returns, and the result is rebound to the caller's session: other work
+there never plans with the drain's width.
 """
 
 from __future__ import annotations
@@ -79,33 +79,54 @@ def scratch(prefix: str) -> Iterator[str]:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def stage_files(pattern: str, src_dir: str) -> None:
-    """Move the files matching ``pattern``, in sorted path order, into
-    ``src_dir`` as one micro-batch each (increasing fixed mtimes). For
-    staging done in one write: a ``partitionBy`` directory per slice
-    (single-digit slice values sort correctly) or one part file per
-    range partition."""
+def _write(frame: DataFrame, slice_col: str, stage_dir: str) -> dict[int, str]:
+    """Write ``frame`` in one job; return each ``slice_col`` value's file."""
+    frame.coalesce(1).write.partitionBy(slice_col).parquet(stage_dir)
+    files = {}
+    for part_dir in glob.glob(f"{stage_dir}/{slice_col}=*"):
+        (files[int(part_dir.rsplit("=", 1)[1])],) = glob.glob(f"{part_dir}/part-*.parquet")
+    return files
+
+
+def _move(files: Iterable[str], src_dir: str) -> None:
+    """Move ``files`` into ``src_dir`` as one micro-batch each, in order,
+    and remove the staging dir they came from."""
     os.makedirs(src_dir, exist_ok=True)
-    for i, part in enumerate(sorted(glob.glob(pattern)), start=1):
+    for i, part in enumerate(files, start=1):
         dst = f"{src_dir}/{i:03d}.parquet"
         os.replace(part, dst)
         os.utime(dst, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
+    shutil.rmtree(f"{src_dir}.stage")
+
+
+def stage(frame: DataFrame, slice_col: str, src_dir: str) -> None:
+    """Stage ``frame`` into ``src_dir`` in one write, one micro-batch per
+    value of the integer ``slice_col`` in ascending order, without that
+    column and with each slice's rows in ``frame``'s order. A value with no
+    rows is no micro-batch."""
+    files = _write(frame, slice_col, f"{src_dir}.stage")
+    _move((files[v] for v in sorted(files)), src_dir)
 
 
 def stage_slices(frames: Iterable[DataFrame], src_dir: str) -> None:
-    """Write each frame as one parquet file into ``src_dir``, in order, so
-    :func:`replay` gives one frame per micro-batch. Raises ``ValueError``
-    naming the first slice whose schema differs from the first slice's."""
-    stage = f"{src_dir}.stage"
-    first = None
-    for i, frame in enumerate(frames, start=1):
-        shape = frame.schema.simpleString()
-        if first is None:
-            first = shape
-        elif shape != first:
+    """Stage each frame as one micro-batch into ``src_dir``, in order, in
+    one write. Raises ``ValueError`` naming the first slice whose schema
+    differs from the first slice's."""
+    frames = list(frames)
+    first = frames[0].schema.simpleString()
+    for i, frame in enumerate(frames[1:], start=2):
+        if (shape := frame.schema.simpleString()) != first:
             raise ValueError(f"slice {i} is {shape}, but slice 1 is {first}")
-        frame.coalesce(1).write.parquet(f"{stage}/{i:03d}")
-    stage_files(f"{stage}/*/part-*.parquet", src_dir)
+    tagged = (frame.withColumn("_slice", F.lit(i)) for i, frame in enumerate(frames, start=1))
+    files = _write(functools.reduce(DataFrame.union, tagged), "_slice", f"{src_dir}.stage")
+    order = range(1, len(frames) + 1)
+    if len(files) < len(frames):
+        # partitionBy writes no file for an empty slice; a write of no rows
+        # leaves one schema-only file, copied for each empty slice
+        frames[0].limit(0).write.parquet(empty_dir := f"{src_dir}.stage/empty")
+        (empty,) = glob.glob(f"{empty_dir}/part-*.parquet")
+        files |= {i: shutil.copy(empty, f"{empty_dir}/{i}") for i in order if i not in files}
+    _move((files[i] for i in order), src_dir)
 
 
 def replay(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -140,7 +161,7 @@ def run(
     ``complete`` mode (each batch replaces the one before), the union of
     every batch otherwise. A callable ``sink`` is the foreachBatch
     function itself, and ``None`` is returned. ``state_partitions`` is the
-    shuffle width while the query runs."""
+    shuffle width the stream's own session runs with."""
     spark = result.sparkSession
     batches: list[DataFrame] | None = None
     if sink is None:
@@ -161,6 +182,10 @@ def run(
             .trigger(availableNow=True)
             .start()
         )
+    finally:
+        # start() has cloned the session the batches run on
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    try:
         if not q.awaitTermination(DRAIN_TIMEOUT_S):
             q.stop()
             raise TimeoutError(
@@ -171,8 +196,6 @@ def run(
         for frozen in batches or ():
             _unpersist(frozen)
         raise
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     if batches is None:
         return None
     drained = functools.reduce(DataFrame.union, batches)

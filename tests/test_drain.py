@@ -1,7 +1,9 @@
-"""The streaming drain harness (phoebe_spark.streaming.drain): ordered
-slice replay with the staged files' own schema, the frozen in-memory
-result, the scoped state-partition override, scratch cleanup, the timeout
-path, and the native-aggregate drains against their oracles."""
+"""The streaming drain harness (phoebe_spark.streaming.drain): the one
+staging write (numeric slice order, empty slices kept, row order kept,
+no slice column), ordered slice replay with the staged files' own schema,
+the frozen in-memory result, the state-partition override scoped to the
+stream's own session, scratch cleanup, the timeout path, and the
+native-aggregate drains against their oracles."""
 
 from __future__ import annotations
 
@@ -22,6 +24,8 @@ from test_oracle_parity import assert_matches_oracle, ddb  # noqa: F401  (ddb is
 
 PARTS = "spark.sql.shuffle.partitions"
 TYPED = "d DECIMAL(18,4), ts TIMESTAMP, i INT, b BIGINT, s STRING, x DOUBLE"
+# 0..599 in a scrambled order (7919 is prime to 600)
+SCRAMBLED = [(i * 7919) % 600 for i in range(600)]
 
 
 @pytest.fixture
@@ -37,7 +41,9 @@ def test_slices_replay_in_order_one_batch_each(spark, session_parts):
     seen = []
 
     def sink(bdf, bid):
-        seen.append((bid, sorted(r.id for r in bdf.collect()), bdf.sparkSession.conf.get(PARTS)))
+        # the batch runs at the drain width; the caller's session keeps its own
+        widths = (bdf.sparkSession.conf.get(PARTS), spark.conf.get(PARTS))
+        seen.append((bid, sorted(r.id for r in bdf.collect()), widths))
 
     with drain.scratch("t_drain_") as work:
         src = f"{work}/src"
@@ -50,12 +56,62 @@ def test_slices_replay_in_order_one_batch_each(spark, session_parts):
     # bound to the caller's session, not to the stream's clone at the drain width
     assert out._jdf.sparkSession().conf().get(PARTS) == session_parts
     assert seen == [
-        (0, [20, 21, 22], "1"),
-        (1, [0, 1], "1"),
-        (2, [10, 11, 12, 13], "1"),
+        (0, [20, 21, 22], ("1", session_parts)),
+        (1, [0, 1], ("1", session_parts)),
+        (2, [10, 11, 12, 13], ("1", session_parts)),
     ]
     assert spark.conf.get(PARTS) == session_parts
     assert not os.path.exists(work)
+
+
+def _batches(spark, src, work):
+    """Drain the staged ``src`` and return each micro-batch's rows, in order."""
+    seen = []
+    drain.run(
+        drain.replay(spark, src),
+        work,
+        output_mode="append",
+        sink=lambda bdf, bid: seen.append([tuple(r) for r in bdf.collect()]),
+    )
+    return seen
+
+
+def test_an_empty_slice_stays_its_own_micro_batch(spark):
+    with drain.scratch("t_drain_") as work:
+        src = f"{work}/src"
+        drain.stage_slices([spark.range(3), spark.range(0), spark.range(5, 7), spark.range(0)], src)
+        assert _batches(spark, src, work) == [[(0,), (1,), (2,)], [], [(5,), (6,)], []]
+
+
+def test_twelve_slices_replay_in_numeric_order(spark):
+    with drain.scratch("t_drain_") as work:
+        src = f"{work}/src"
+        # slice 10 sorts before slice 2 as a string
+        drain.stage_slices([spark.range(i, i + 1) for i in range(12)], src)
+        assert _batches(spark, src, work) == [[(i,)] for i in range(12)]
+
+
+def test_stage_keeps_row_order_inside_a_slice_and_drops_the_slice_column(spark):
+    # interleaved over 12 slices
+    frame = spark.createDataFrame([(i, i % 12) for i in SCRAMBLED], "id BIGINT, s INT")
+    with drain.scratch("t_drain_") as work:
+        src = f"{work}/src"
+        drain.stage(frame, "s", src)
+        assert drain.replay(spark, src).columns == ["id"]
+        assert _batches(spark, src, work) == [
+            [(i,) for i in SCRAMBLED if i % 12 == s] for s in range(12)
+        ]
+
+
+def test_stage_slices_keeps_row_order_and_drops_its_slice_column(spark):
+    frames = [
+        spark.createDataFrame([(i,) for i in SCRAMBLED if i % 3 == r], "id BIGINT") for r in range(3)
+    ]
+    with drain.scratch("t_drain_") as work:
+        src = f"{work}/src"
+        drain.stage_slices(frames, src)
+        assert drain.replay(spark, src).columns == ["id"]
+        assert _batches(spark, src, work) == [[(i,) for i in SCRAMBLED if i % 3 == r] for r in range(3)]
 
 
 def test_explicit_state_partitions_reach_the_sink(spark, session_parts):

@@ -6,6 +6,9 @@ exactly what a per-key gate admits."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 from datetime import datetime, timedelta
 
 import pandas as pd
@@ -13,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from phoebe_spark.session import PACKAGE_ROOT
 from phoebe_spark.streaming import drain
 from phoebe_spark.streaming.stateful import (
     QUOTA_GATE_OUTPUT_SCHEMA,
@@ -20,6 +24,7 @@ from phoebe_spark.streaming.stateful import (
     first_match_within,
     keyed_cusum,
     keyed_ewma,
+    keyed_fold,
     keyed_quota_gate,
     streaming_dedup_gate,
 )
@@ -190,3 +195,81 @@ def test_keyed_quota_gate_sharded_identical(spark, state_partitions):
     assert results["sharded"] == results["per_key"]
     assert len(results["per_key"]) == 5 * len(keys)
     assert sum(1 for r in results["per_key"] if r[0] is None) == 5
+
+
+def test_fold_input_dtypes_are_pinned(spark, small_arrow_chunks):
+    """The pandas dtypes a fold receives, per call: a nullable bigint with
+    nulls arrives as float64, an all-NA chunk concatenated with a valued
+    one keeps the valued dtype's NA form, and an empty micro-batch calls
+    no fold. A later pandas or pyspark that changes any of them fails
+    here, not in a fold's arithmetic."""
+    schema = "key STRING, i BIGINT, x DOUBLE, s STRING, ts TIMESTAMP"
+    t = datetime(2024, 1, 1)
+
+    def fold(key, carried, batch):
+        dtypes = ",".join(f"{c}:{d}" for c, d in batch.dtypes.items())
+        (calls,) = carried
+        return (calls + 1,), pd.DataFrame(
+            {"key": [key], "call": [calls + 1], "n": [len(batch)], "dtypes": [dtypes]}
+        )
+
+    slices = [
+        spark.createDataFrame(
+            [("a", 1, 0.5, "u", t), ("a", 2, 1.5, "v", t), ("a", 3, 2.5, "w", t)]
+            + [("b", None, None, None, None)] * 2,
+            schema,
+        ),
+        spark.createDataFrame([], schema),
+        # 4-row Arrow chunks: the first chunk of key a is all-NA in i, x, s and ts
+        spark.createDataFrame(
+            [("a", None, None, None, None)] * 4 + [("a", 4, 3.5, "x", t)] * 2, schema
+        ),
+    ]
+    got = _drain(
+        spark,
+        slices,
+        lambda s: keyed_fold(
+            s, fold, (0,), "key STRING, call LONG, n LONG, dtypes STRING", "calls LONG"
+        ),
+    )
+    valued = "key:object,i:int64,x:float64,s:object,ts:datetime64[ns]"
+    with_na = "key:object,i:float64,x:float64,s:object,ts:datetime64[ns]"
+    assert sorted(tuple(r) for r in got) == [
+        ("a", 1, 3, valued),
+        ("a", 2, 6, with_na),
+        ("b", 1, 2, with_na),
+    ]
+
+
+WORKER_PATH_DRAIN = """
+import sys
+sys.path.insert(0, {root!r})
+from phoebe_spark.session import get_spark
+from phoebe_spark.streaming import drain, stateful
+
+spark = get_spark("t-worker-path", shuffle_partitions=1)
+rows = spark.createDataFrame([("a", "x"), ("a", "y"), ("a", "x")], "key STRING, item STRING")
+with drain.scratch("t_worker_path_") as work:
+    drain.stage_slices([rows], work + "/src")
+    hh = stateful.keyed_heavy_hitters(drain.replay(spark, work + "/src"), k=2)
+    print(sorted(tuple(r) for r in drain.run(hh, work, output_mode="update").collect()))
+spark.stop()
+"""
+
+
+def test_fold_runs_from_outside_the_checkout(tmp_path):
+    """A handler that unpickles a phoebe_spark reference on the Python
+    worker (keyed_heavy_hitters calls mg_update) runs when the process
+    starts in another directory with only the driver's sys.path set."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", PHOEBE_DRIVER_MEM="1g")
+    done = subprocess.run(
+        [sys.executable, "-c", WORKER_PATH_DRAIN.format(root=PACKAGE_ROOT)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert done.stdout.splitlines()[-1] == "[('a', 'x', 2, 3), ('a', 'y', 1, 3)]"
