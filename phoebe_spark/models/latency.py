@@ -198,9 +198,16 @@ class LatencyModel:
             raise ValueError("no scale-outs to evaluate: the candidate set is empty")
         prev = None if previously_valid is None else {int(s) for s in previously_valid}
 
-        x = _standardize(np.array([[so, float(throughput_rate)] for so in sos]), f.mean, f.std)
+        # _standardize in plain floats (the same IEEE products): numpy on a
+        # read's few rows drops and retakes the GIL per ufunc, and a stream
+        # of such reads starves a refit running on another thread.
+        mean = f.mean.tolist()
+        inv_std = [0.0 if s == 0 else 1.0 / s for s in f.std.tolist()]
         rows = []
-        for so, features in zip(sos, x):
+        for so in sos:
+            features = [
+                (v - m) * k for v, m, k in zip((float(so), float(throughput_rate)), mean, inv_std)
+            ]
             latency = f.regressor_model.predict(features)
             cluster = _nearest(f.centers, _cluster_feature(latency, f.med, f.scale))
             latency_class = f.label_map[cluster]

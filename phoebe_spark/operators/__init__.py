@@ -9,9 +9,10 @@
 - ``sampling``   — hash split/sample, stratified + weighted sampling
 - ``curation``   — quality rules, repetition, packing, mixture weights
 - ``skyline``    — 2D Pareto-frontier preference queries
-- ``skew``       — salted aggregation / salted broadcast join
-- ``multimodal`` — binary media columns: sniff, decode, features
-- ``layout``     — Z-order clustering for multi-column locality
+- ``skew``       — salted two-phase aggregation
+- ``multimodal`` — binary media columns: magic-byte mime sniff, PNG/WAV
+                   decode, image hashes, audio spectra
+- ``layout``     — Z-order (Morton) expressions, exact global ranks
 """
 
 from phoebe_spark.operators import (  # noqa: F401

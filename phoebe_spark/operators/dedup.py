@@ -756,124 +756,6 @@ def contamination_flags_bloom(
     )
 
 
-def hamming_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    hash_col: str = "hash64",
-    max_hamming: int = 8,
-    bands: int = 16,
-    max_group: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs over ANY 64-bit fingerprint column (perceptual image
-    ahash, audio fingerprint, simhash-as-long) by Hamming distance, with
-    the pigeonhole banding trick: split the 64 bits into ``bands`` blocks
-    — any pair within ``max_hamming < bands`` distance must agree on at
-    least one full block, so candidates come from an equi-join on
-    (block_idx, block_bits), never a cross join. Distance is
-    ``bit_count(a XOR b)`` — single codegen instruction, unlike the
-    bit-string zip the text simhash path uses.
-
-    Scale notes: the banded self-join runs over DISTINCT fingerprints —
-    identical hashes collapse to one row first, so an exact-dup
-    mega-cluster (k copies of one fingerprint) costs ONE banded row
-    instead of k rows pairing quadratically in every band. Member pairs expand back afterwards:
-    intra-cluster pairs (distance 0) via the grouped i<j expansion, and
-    cross-cluster pairs from the distinct-hash candidates. ``max_group``
-    (default None = exact, all pairs) optionally truncates a fingerprint
-    cluster to its smallest ``max_group`` doc ids before expansion (same
-    df-cap contract as ``max_docs_per_chunk``) for adversarial corpora
-    where a mega-cluster's O(k^2) pair output itself is the problem —
-    docs beyond the cap then appear in no pair, so run
-    :func:`exact_dedup` on the hash alongside. Output is one row per
-    unordered (doc_a < doc_b) pair with the MINIMUM distance across the
-    docs' fingerprints, so inputs carrying several fingerprints per doc
-    (multi-modality frames) cannot emit self-pairs or duplicates.
-    Combined with the combo-subset keys below, the 10x stress case
-    (50k docs, planted dup clusters) fell 165 s -> 6 s.
-
-    The multimodal dedup composition: PNG/WAV bytes -> feature hash
-    (image_features.ahash) -> hamming_pairs -> dedup_components."""
-    if max_hamming >= bands:
-        raise ValueError("pigeonhole requires max_hamming < bands")
-    if not 2 <= bands <= 64 or 64 % bands != 0:
-        # bands=1 would need the 64-bit all-ones mask literal, which Spark
-        # parses as DECIMAL(20,0) and rejects in BitwiseAnd — and a 1-band
-        # pigeonhole is just an exact-equality join (use exact_dedup)
-        raise ValueError(f"bands must divide 64 with 2 <= bands <= 64 (got {bands})")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    members = F.array_sort(F.collect_set("doc"))
-    if max_group is not None:
-        members = F.slice(members, 1, max_group)
-    grp = (
-        df.select(F.col(id_col).alias("doc"), F.col(hash_col).cast("long").alias("h"))
-        .groupBy("h")
-        .agg(members.alias("ds"))
-        .localCheckpoint(eager=True)
-    )
-    ds = F.col("ds")
-    # intra-cluster pairs: identical fingerprints, distance 0, i<j expansion
-    intra = (
-        grp.filter(F.size(ds) >= 2)
-        .select(F.explode(_ordered_pair_structs(ds, "doc_a", "doc_b")).alias("p"))
-        .select("p.doc_a", "p.doc_b", F.lit(0).cast("integer").alias("hamming"))
-    )
-    # cross-cluster candidates over distinct fingerprints only. Generalized
-    # pigeonhole: a pair within distance d agrees on >= bands - d whole
-    # blocks, so it shares at least one specific `combo`-subset of agreeing
-    # blocks whenever combo <= bands - d. Joining on combo-subsets widens
-    # the key from 64/bands to combo*64/bands bits — collision rate drops
-    # exponentially while the explode factor only grows C(bands, combo)
-    # (e.g. bands=8, d=6, combo=2: 28 combos of 16-bit keys ~ 2^-16
-    # collisions vs 8 combos of 8-bit keys at 2^-8).
-    from itertools import combinations
-
-    combo = max(1, min(bands - max_hamming, 2))
-    keys = [
-        F.struct(
-            F.lit(ci).alias("combo"),
-            F.expr(
-                " | ".join(
-                    f"((shiftrightunsigned(h, {blk * width}) & {mask}) << {pos * width})"
-                    for pos, blk in enumerate(subset)
-                )
-            ).alias("bits"),
-        )
-        for ci, subset in enumerate(combinations(range(bands), combo))
-    ]
-    blocks = grp.select(
-        "h", "ds", F.explode(F.array(*keys)).alias("bk")
-    ).select("h", "ds", F.col("bk.combo").alias("block"), F.col("bk.bits").alias("bits"))
-    a = blocks.select("block", "bits", F.col("h").alias("h_a"), F.col("ds").alias("ds_a"))
-    b = blocks.select("block", "bits", F.col("h").alias("h_b"), F.col("ds").alias("ds_b"))
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    cand = (
-        a.join(b, ["block", "bits"])
-        .filter(F.col("h_a") < F.col("h_b"))
-        .dropDuplicates(["h_a", "h_b"])
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    cross = (
-        cand.select(F.explode("ds_a").alias("da"), "ds_b", "hamming")
-        .select("da", F.explode("ds_b").alias("db"), "hamming")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            F.col("hamming").cast("integer").alias("hamming"),
-        )
-        # a doc carrying several distinct fingerprints is a member of
-        # several clusters: drop the resulting self-pairs and keep one row
-        # per unordered pair at its closest fingerprint distance
-        .filter(F.col("doc_a") != F.col("doc_b"))
-    )
-    return (
-        intra.unionByName(cross)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.min("hamming").cast("integer").alias("hamming"))
-    )
-
-
 def chunk_dedup_stats(
     df: DataFrame,
     id_col: str = "doc_id",

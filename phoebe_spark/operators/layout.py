@@ -46,44 +46,6 @@ def quantize_expr(c: str, cmin: str, cmax: str, buckets: int, div: str) -> str:
     return f"((({c}) - ({cmin})) * {buckets} {div} (({cmax}) - ({cmin}) + 1))"
 
 
-def zorder_layout(
-    df: DataFrame,
-    x: str,
-    y: str,
-    bits: int = 8,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Return ``df`` re-laid-out for two-dimension scan locality: rows are
-    range-partitioned AND sorted within partitions by the Morton code of
-    the quantized ``(x, y)`` pair, so a subsequent parquet write produces
-    row-groups whose min/max stats are narrow in both columns.
-
-    Scale notes: one tiny min/max aggregate (broadcast back as scalars — no
-    second scan of the fact side per Catalyst's reuse of the cross-joined
-    1-row frame), then ``repartitionByRange`` (range-exchange with a sampled
-    boundary pass) + ``sortWithinPartitions``. The z-value itself is pure
-    codegen arithmetic. No data-dependent driver logic: boundaries come
-    from Spark's range sampler, bit math is literal.
-    """
-    mm = df.agg(
-        F.min(x).alias("__xmin"),
-        F.max(x).alias("__xmax"),
-        F.min(y).alias("__ymin"),
-        F.max(y).alias("__ymax"),
-    )
-    q = 1 << bits
-    xq = quantize_expr(x, "__xmin", "__xmax", q, "div")
-    yq = quantize_expr(y, "__ymin", "__ymax", q, "div")
-    z = morton_expr(xq, yq, bits, "div")
-    with_z = (
-        df.crossJoin(F.broadcast(mm))
-        .withColumn("__z", F.expr(z).cast("long"))
-        .drop("__xmin", "__xmax", "__ymin", "__ymax")
-    )
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return with_z.repartitionByRange(n, "__z").sortWithinPartitions("__z")
-
-
 def global_rank_by_value(
     df: DataFrame,
     value_col: str,

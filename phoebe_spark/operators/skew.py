@@ -1,20 +1,14 @@
-"""Skew mitigation utilities for hot-key aggregations and joins.
+"""Skew mitigation for hot-key aggregations.
 
 At 100 TB a handful of hot keys (a viral campaign id, an empty-string
-document, a default user id) can stall a stage on one straggler task. Two
-standard remedies, packaged as composable DataFrame transforms:
-
-- salted_aggregate: two-phase aggregation — pre-aggregate on
-  (key, salt) to spread a hot key over N reducers, then combine partials.
-  Works for any algebraic aggregate (sum/count/min/max and avg via
-  sum+count).
-- salted_broadcast_join: replicate the small side N ways so a skewed big
-  side joins against salt-matched copies — equivalent results, N-way
-  parallelism on the hot key.
+document, a default user id) can stall a stage on one straggler task.
+salted_aggregate is the standard remedy, packaged as a composable
+DataFrame transform: two-phase aggregation — pre-aggregate on (key, salt)
+to spread a hot key over N reducers, then combine partials. Works for any
+algebraic aggregate (sum/count/min/max and avg via sum+count).
 
 AQE's skew-join splitting (enabled in session.py) covers sort-merge joins
-automatically; these helpers cover aggregations and broadcast patterns AQE
-does not rebalance.
+automatically; aggregations are what AQE does not rebalance.
 """
 
 from __future__ import annotations
@@ -34,7 +28,7 @@ def _content_salt(df: DataFrame, salt_buckets: int) -> F.Column:
     job keeps retry determinism (the property operators/sampling.py exists
     to protect). A hot KEY still spreads across buckets because its rows
     differ in the non-key columns; only exact duplicate rows co-locate,
-    which is benign for algebraic aggregates and replicated joins."""
+    which is benign for algebraic aggregates."""
     return F.pmod(
         F.xxhash64(*[F.col(c) for c in df.columns], F.lit("phoebe-salt")),
         F.lit(salt_buckets),
@@ -61,23 +55,3 @@ def salted_aggregate(
     if count:
         final_aggs.append(F.sum("_s_cnt").alias("count"))
     return partials.groupBy(*keys).agg(*final_aggs)
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Hot-key join: salt the big side deterministically into
-    ``salt_buckets`` (content hash — see :func:`_content_salt`; a seeded
-    ``rand`` salt would re-roll under AQE/retries, and hashing only the
-    join key would give a hot key ONE salt, i.e. no spread), replicate the
-    small side across every salt value, join on (key, salt). Result rows
-    identical to the unsalted join; the hot key's rows land on
-    ``salt_buckets`` tasks instead of one."""
-    big_salted = big.withColumn("_salt", _content_salt(big, salt_buckets))
-    salts = small.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("_salt"))
-    small_rep = small.crossJoin(F.broadcast(salts))
-    return big_salted.join(F.broadcast(small_rep), on=[on, "_salt"], how=how).drop("_salt")

@@ -1735,8 +1735,8 @@ def q132_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence that sorting by the z-value keeps every contiguous range
     narrow in both dimensions at once, which is what makes parquet
     row-group min/max stats prune two-column predicates after a
-    ``ZORDER``-style rewrite (:func:`layout.zorder_layout` is the write
-    path: ``repartitionByRange(__z) + sortWithinPartitions``).
+    ``ZORDER``-style rewrite (``repartitionByRange`` + ``sortWithinPartitions``
+    on the z-value).
 
     Scale notes: one tiny min/max aggregate broadcast back as four
     scalars; the interleave is literal div/mod integer arithmetic —

@@ -2121,7 +2121,7 @@ def q185_audio_dominant_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = d.mapInPandas(
         _gen, "media_id LONG, content BINARY, n_samples LONG, sample_rate LONG"
     )
-    feats = multimodal.audio_spectral_features(blobs, decoder=multimodal.wav_decode)
+    feats = multimodal.audio_spectral_features(blobs)
     return feats.select("media_id", F.round("dominant_freq_hz", 2).alias("dominant_freq_hz"))
 
 

@@ -335,21 +335,12 @@ def q204_image_ahash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i = np.arange(64, dtype=np.int64)
                 gray = ((int(doc_id) * 31 + i * 7) % 256).reshape(8, 8)
                 png = _png(gray.astype(np.uint8))
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "content": png,
-                        "width": 8,
-                        "height": 8,
-                    }
-                )
+                rows.append({"media_id": int(doc_id), "content": png})
             yield pd.DataFrame(rows)
 
     d = _t(spark, sf_dir, "documents").select("doc_id")
-    blobs = d.mapInPandas(
-        _gen, "media_id LONG, content BINARY, width INT, height INT"
-    )
-    feats = multimodal.image_features(blobs, decoder=multimodal.png_decode)
+    blobs = d.mapInPandas(_gen, "media_id LONG, content BINARY")
+    feats = multimodal.image_features(blobs)
     # ahash is the unsigned 64-bit hash re-biased into signed int64 by
     # subtracting 2^63 (= flipping the top bit of the two's-complement
     # pattern), so flipping it back with XOR min-long recovers the raw
@@ -755,21 +746,12 @@ def q208_image_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             for doc_id in pdf["doc_id"]:
                 i = np.arange(64, dtype=np.int64)
                 gray = ((int(doc_id) * 37 + i * 11) % 256).reshape(8, 8)
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "content": _png(gray.astype(np.uint8)),
-                        "width": 8,
-                        "height": 8,
-                    }
-                )
+                rows.append({"media_id": int(doc_id), "content": _png(gray.astype(np.uint8))})
             yield pd.DataFrame(rows)
 
     d = _t(spark, sf_dir, "documents").select("doc_id")
-    blobs = d.mapInPandas(
-        _gen, "media_id LONG, content BINARY, width INT, height INT"
-    )
-    out = multimodal.image_dct_phash(blobs, decoder=multimodal.png_decode)
+    blobs = d.mapInPandas(_gen, "media_id LONG, content BINARY")
+    out = multimodal.image_dct_phash(blobs)
     return out.select(F.col("media_id").alias("doc_id"), "phash", "n_on")
 
 
@@ -1272,11 +1254,14 @@ def _q214_oracle(max_piece_len: int = 4, max_word_len: int = 8) -> str:
     # Generated CTE chain replaying the Viterbi DP step by step — the
     # same treatment as the BPE-trainer oracles (q145/q160): the oracle
     # RE-RUNS the algorithm, it doesn't trust the engine's answer.
+    # best{i} and ub{i} both read ub{i-1}; DuckDB inlines a CTE at every
+    # reference, so unmaterialized the plan doubles per step (2^8 copies
+    # of ub0, out of memory) — MATERIALIZED computes each step once.
     steps = []
     prev_ub = "ub0"
     for i in range(1, max_word_len + 1):
         steps.append(f"""
-    best{i} AS (
+    best{i} AS MATERIALIZED (
       SELECT w, pos, score, seg FROM (
         SELECT b.w, {i} AS pos, b.score + s.l AS score,
                list_append(b.seg, s.piece) AS seg,
@@ -1285,7 +1270,7 @@ def _q214_oracle(max_piece_len: int = 4, max_word_len: int = 8) -> str:
         FROM {prev_ub} b JOIN so s ON s.w = b.w AND s.j = b.pos AND s.i = {i}
       ) WHERE rn = 1
     ),
-    ub{i} AS (SELECT * FROM {prev_ub} UNION ALL SELECT * FROM best{i})""")
+    ub{i} AS MATERIALIZED (SELECT * FROM {prev_ub} UNION ALL SELECT * FROM best{i})""")
         prev_ub = f"ub{i}"
     chain = ",".join(steps)
     return f"""

@@ -110,9 +110,11 @@ def stage(frame: DataFrame, slice_col: str, src_dir: str) -> None:
 
 def stage_slices(frames: Iterable[DataFrame], src_dir: str) -> None:
     """Stage each frame as one micro-batch into ``src_dir``, in order, in
-    one write. Raises ``ValueError`` naming the first slice whose schema
-    differs from the first slice's."""
+    one write. Raises ``ValueError`` for no slices, or naming the first
+    slice whose schema differs from the first slice's."""
     frames = list(frames)
+    if not frames:
+        raise ValueError("no slices to stage")
     first = frames[0].schema.simpleString()
     for i, frame in enumerate(frames[1:], start=2):
         if (shape := frame.schema.simpleString()) != first:

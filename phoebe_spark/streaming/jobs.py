@@ -130,38 +130,6 @@ def stream_static_join(
     return stream.join(F.broadcast(static_dim), on=on, how=how)
 
 
-def run_to_sink(
-    result: DataFrame,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-    queryName: str | None = None,
-    fmt: str = "memory",
-    trigger_available_now: bool = True,
-    **options,
-):
-    """Start the query with a checkpoint (exactly-once restart point —
-    the reference's ``--chkInterval`` / savepoint-restore mechanism maps to
-    the checkpoint directory here; rescaling = stop + restart the same
-    checkpoint with a different ``spark.sql.shuffle.partitions``)."""
-    if fmt == "memory" and not queryName:
-        raise ValueError(
-            "run_to_sink: the memory sink requires queryName (it names the "
-            "in-memory table)"
-        )
-    w = (
-        result.writeStream.outputMode(output_mode)
-        .format(fmt)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if queryName:
-        w = w.queryName(queryName)
-    for k, v in options.items():
-        w = w.option(k, v)
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
 def stream_stream_interval_join(
     left: DataFrame,
     right: DataFrame,

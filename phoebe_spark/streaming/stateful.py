@@ -10,7 +10,7 @@ brief names for "custom stateful operators".
 the operator selects its columns (key first) and supplies a pure
 ``fold(key, carried, batch) -> (state, frame)``; the harness owns the
 state-store protocol (chunk concat, optional sort, read or initialise the
-state, store it, emit the frame). Nine operators below are such folds.
+state, store it, emit the frame). Eight operators below are such folds.
 The rest need what the harness deliberately leaves out — append output,
 event-time timers or sharded keys — and speak ``applyInPandasWithState``
 directly.
@@ -20,12 +20,6 @@ drain runs a native streaming ``groupBy().agg()`` in complete mode
 (q324, q353, q415, q433). The state store then keeps the partial
 aggregate in the JVM, so no micro-batch pays a Python worker per state
 partition, and an exact integer sum or max comes out bit-identical.
-
-``keyed_ewma`` maintains a per-key exponentially-weighted moving average of
-the value column (the streaming analogue of the reference's smoothed
-workload rate): each micro-batch folds its rows (in event-time order) into
-the carried EWMA and emits one row per key per batch with the updated
-state. State size is O(keys), bounded and checkpointed.
 """
 
 from __future__ import annotations
@@ -77,46 +71,6 @@ def keyed_fold(
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-EWMA_OUTPUT_SCHEMA = "key STRING, ewma DOUBLE, n_obs LONG, last_ts TIMESTAMP"
-EWMA_STATE_SCHEMA = "ewma DOUBLE, n_obs LONG"
-
-
-def keyed_ewma(
-    stream: DataFrame,
-    alpha: float = 0.3,
-    key_col: str = "key",
-    ts_col: str = "event_time",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key streaming EWMA with explicit state.
-
-    adjust=False recursion (matching the reference's pandas ``ewm``):
-    ``ewma_t = alpha * x_t + (1 - alpha) * ewma_{t-1}``, folded across
-    batches through the state store."""
-
-    def _fold(key, carried, batch):
-        ewma, n = carried
-        last_ts = None
-        for v, ts in zip(batch[value_col], batch[ts_col]):
-            ewma = float(v) if ewma is None else alpha * float(v) + (1 - alpha) * ewma
-            n += 1
-            last_ts = ts
-        return (ewma, n), pd.DataFrame(
-            {"key": [key], "ewma": [ewma], "n_obs": [n], "last_ts": [last_ts]}
-        )
-
-    return keyed_fold(
-        # key normalized to string so any upstream key type (long campaign
-        # ids, string event types) flows through one output schema
-        stream.select(F.col(key_col).cast("string").alias(key_col), ts_col, value_col),
-        _fold,
-        (None, 0),
-        EWMA_OUTPUT_SCHEMA,
-        EWMA_STATE_SCHEMA,
-        order=ts_col,
     )
 
 

@@ -151,16 +151,6 @@ def run_scale(spark, scale: int) -> dict:
         "dedup_components",
         lambda: dedup.dedup_components(dedup.chunk_pairs(docs), id_col_a="id_a", id_col_b="id_b"),
     )
-    t_build(
-        "hamming_pairs",  # eager fingerprint-grouping checkpoint at construction
-        lambda: dedup.hamming_pairs(
-            docs.select("doc_id", F.xxhash64("text").alias("hash64")),
-            id_col="doc_id",
-            hash_col="hash64",
-            max_hamming=6,
-            bands=8,  # combo-2 pigeonhole: 28 x 16-bit keys, ~2^-16 collisions
-        ),
-    )
     t(
         "prefix_ssjoin",
         dedup.prefix_filter_jaccard_pairs(docs, n=5, threshold=0.5),

@@ -196,41 +196,6 @@ def test_stratified_hash_sample_rates_and_nesting(spark):
     assert small <= big
 
 
-def test_hamming_pairs_match_brute_force(spark):
-    """The generalized-pigeonhole candidate search (combo-subset keys over
-    distinct fingerprints) returns EXACTLY the brute-force pair set —
-    including a planted identical-fingerprint cluster and <=6-bit flips."""
-    from phoebe_spark.operators.dedup import hamming_pairs
-
-    base = F.when(F.col("id") % 10 == 1, F.col("id") - 1).otherwise(F.col("id"))
-    flip = F.when(
-        F.col("id") % 10 == 1,
-        F.expr("cast(1 as bigint) << cast(pmod(xxhash64(id), 60) as int)"),
-    ).otherwise(F.lit(0))
-    h = F.when(
-        F.col("id") % 17 == 2, F.xxhash64(F.lit("dupcluster"))
-    ).otherwise(F.xxhash64(base.cast("string")).bitwiseXOR(flip))
-    df = spark.range(800).select(
-        F.col("id").alias("doc_id"), h.alias("hash64")
-    ).localCheckpoint(eager=True)
-
-    got = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in hamming_pairs(df, max_hamming=6, bands=8, max_group=1000).collect()
-    }
-    a = df.select(F.col("doc_id").alias("da"), F.col("hash64").alias("ha"))
-    b = df.select(F.col("doc_id").alias("db"), F.col("hash64").alias("hb"))
-    brute = {
-        (r["da"], r["db"], r["hm"])
-        for r in a.crossJoin(b)
-        .filter(F.col("da") < F.col("db"))
-        .withColumn("hm", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .filter(F.col("hm") <= 6)
-        .collect()
-    }
-    assert got == brute and len(got) > 1000  # the planted cluster dominates
-
-
 def test_edit_distance_verify_exact_boundary(spark):
     """sim == min_sim pairs must survive the banded prefilter: 1-0.8
     rounds DOWN in binary FP, so an unpadded floor() threshold would
@@ -244,24 +209,6 @@ def test_edit_distance_verify_exact_boundary(spark):
     rows = edit_distance_verify(docs, pairs, min_sim=0.8).collect()
     assert len(rows) == 1
     assert rows[0]["lev"] == 1 and rows[0]["sim"] == 0.8
-
-
-def test_hamming_pairs_multi_fingerprint_doc(spark):
-    """A doc carrying several fingerprints (multi-modality frame) must
-    not produce self-pairs, and each unordered pair appears once at its
-    MINIMUM distance."""
-    from phoebe_spark.operators.dedup import hamming_pairs
-
-    # doc 1 has two fingerprints 1 bit apart; doc 2 matches one of them
-    # exactly and the other at distance 1
-    df = spark.createDataFrame(
-        [(1, 0b1000), (1, 0b1001), (2, 0b1001)], "doc_id long, hash64 long"
-    )
-    rows = hamming_pairs(df, max_hamming=6, bands=8).collect()
-    assert all(r["doc_a"] != r["doc_b"] for r in rows)
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["doc_a"], r["doc_b"], r["hamming"]) == (1, 2, 0)  # min over combos
 
 
 def test_prefix_filter_matches_brute_force(spark):

@@ -255,6 +255,13 @@ def test_stage_slices_refuses_a_slice_of_another_schema(spark):
             )
 
 
+def test_stage_slices_refuses_no_slices():
+    with drain.scratch("t_drain_") as work:
+        with pytest.raises(ValueError, match="no slices to stage"):
+            drain.stage_slices([], f"{work}/src")
+        assert not os.path.exists(f"{work}/src")
+
+
 def test_q50_leaves_no_profile_store_behind(spark, sf_dir):
     pattern = os.path.join(tempfile.gettempdir(), "phoebe_store_*")
     before = set(glob.glob(pattern))

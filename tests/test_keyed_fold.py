@@ -23,7 +23,6 @@ from phoebe_spark.streaming.stateful import (
     QUOTA_GATE_SHARDS,
     first_match_within,
     keyed_cusum,
-    keyed_ewma,
     keyed_fold,
     keyed_quota_gate,
     streaming_dedup_gate,
@@ -59,22 +58,23 @@ def _drain(spark, slices, build, output_mode="update"):
         return out.collect()
 
 
+def _cusum(xs, k):
+    """The CUSUM recursion ``s = max(0, s + x - k)`` in plain Python."""
+    s = 0.0
+    for x in xs:
+        s = max(0.0, s + x - k)
+    return s
+
+
 def test_split_group_folds_in_order(spark, small_arrow_chunks):
     # 30 rows of one key, written newest first: folded in file order or
     # per-chunk order the CUSUM below comes out different
     vals = [float((7 * i) % 11) for i in range(30)]
     rows = [("a", t, vals[t]) for t in reversed(range(30))]
     got = _drain(spark, [_events(spark, rows)], lambda s: keyed_cusum(s, k=5.0, h=1e9))
-
-    def cusum(xs):
-        s = 0.0
-        for x in xs:
-            s = max(0.0, s + x - 5.0)
-        return s
-
     assert [(r.key, r.n_obs) for r in got] == [("a", 30)]
-    assert got[0].stat == cusum(vals)
-    assert cusum(vals) != cusum(list(reversed(vals)))
+    assert got[0].stat == _cusum(vals, 5.0)
+    assert _cusum(vals, 5.0) != _cusum(list(reversed(vals)), 5.0)
 
 
 def test_state_carries_across_three_batches(spark):
@@ -86,18 +86,22 @@ def test_state_carries_across_three_batches(spark):
         _events(spark, pdf[(pdf.t >= lo) & (pdf.t < lo + 8)].itertuples(index=False))
         for lo in (0, 8, 16)
     ]
-    got = _drain(spark, slices, lambda s: keyed_ewma(s, alpha=0.3))
-    final = {r.key: r for r in got if r.n_obs == 24}
+    got = _drain(spark, slices, lambda s: keyed_cusum(s, k=7.0, h=1e9))
     assert sorted(r.n_obs for r in got) == [8, 8, 16, 16, 24, 24]
-    for key, grp in pdf.groupby("key"):
-        want = grp.sort_values("t")["value"].ewm(alpha=0.3, adjust=False).mean().iloc[-1]
-        assert final[key].ewma == pytest.approx(want, rel=1e-12)
+    # each batch's row carries the statistic of every row folded so far
+    for r in got:
+        vals = pdf[pdf.key == r.key].sort_values("t")["value"][: r.n_obs]
+        assert r.stat == _cusum(vals, 7.0), (r.key, r.n_obs)
+    assert len({r.stat for r in got}) > 2
 
 
 def test_null_key_stays_null(spark):
     rows = [(None, 0, 1.0), ("None", 1, 2.0), (None, 2, 3.0)]
-    got = _drain(spark, [_events(spark, rows)], lambda s: keyed_ewma(s, alpha=0.5))
-    assert sorted(((r.key, r.n_obs) for r in got), key=repr) == [("None", 1), (None, 2)]
+    got = _drain(spark, [_events(spark, rows)], lambda s: keyed_cusum(s, k=0.0, h=1e9))
+    assert sorted(((r.key, r.n_obs, r.stat) for r in got), key=repr) == [
+        ("None", 1, 2.0),
+        (None, 2, 4.0),
+    ]
 
     got = _drain(
         spark,

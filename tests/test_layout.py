@@ -1,12 +1,10 @@
-"""Z-order layout operator: interleave correctness against a pure-Python
-Morton reference, and the locality property the layout exists for —
-contiguous z-ranges bound BOTH dimensions."""
+"""Z-order layout expressions: the Morton interleave against a pure-Python
+reference, and the quantization's range and monotonicity. q132 checks the
+locality profile built from them against its oracle."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
-from phoebe_spark.operators.layout import morton_expr, quantize_expr, zorder_layout
+from phoebe_spark.operators.layout import morton_expr, quantize_expr
 
 
 def _morton_py(x: int, y: int, bits: int) -> int:
@@ -36,41 +34,3 @@ def test_quantize_expr_range_and_monotone(spark):
     qs = [q for _, q in rows]
     assert min(qs) == 0 and max(qs) == 255
     assert all(a <= b for a, b in zip(qs, qs[1:]))  # monotone in the input
-
-
-def test_zorder_layout_partitions_are_local_in_both_dims(spark):
-    # A 64x64 grid: after z-layout, each partition's span in x AND y must
-    # be far below the full extent (a 1-D sort on x would leave y spans
-    # at full width in every partition).
-    rows = [(x, y) for x in range(64) for y in range(64)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    out = zorder_layout(df, "x", "y", bits=6, num_partitions=16)
-    spans = (
-        out.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(
-            (F.max("x") - F.min("x")).alias("xs"),
-            (F.max("y") - F.min("y")).alias("ys"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    assert sum(r["n"] for r in spans) == 64 * 64
-    occupied = [r for r in spans if r["n"] > 0]
-    # every occupied partition bounds both dims well under the 63 extent
-    assert all(r["xs"] <= 32 and r["ys"] <= 32 for r in occupied), spans
-    # and the partitioning is actually spread, not one fat partition
-    assert len(occupied) >= 8
-
-
-def test_zorder_sorted_within_partitions(spark):
-    rows = [(x, y) for x in range(32) for y in range(32)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    out = zorder_layout(df, "x", "y", bits=5, num_partitions=4)
-
-    def _is_sorted(it):
-        zs = [r["__z"] for r in it]
-        return iter([zs == sorted(zs)])
-
-    flags = out.select("__z").rdd.mapPartitions(_is_sorted).collect()
-    assert all(flags)

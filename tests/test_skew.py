@@ -1,11 +1,11 @@
-"""Salted aggregation/join must produce identical results to the direct
-forms (the whole point: same answer, no straggler task)."""
+"""Salted aggregation must produce identical results to the direct form
+(the whole point: same answer, no straggler task)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from phoebe_spark.operators.skew import salted_aggregate, salted_broadcast_join
+from phoebe_spark.operators.skew import salted_aggregate
 
 
 def test_salted_aggregate_matches_direct(spark):
@@ -23,19 +23,6 @@ def test_salted_aggregate_matches_direct(spark):
         for r in salted_aggregate(df, ["key"], sum_cols=["v"]).collect()
     }
     assert salted == direct
-
-
-def test_salted_broadcast_join_matches_direct(spark):
-    big = spark.range(5_000).select(
-        F.when(F.col("id") % 5 < 4, 1).otherwise((F.col("id") % 50).cast("int")).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame([(i, f"dim{i}") for i in range(50)], "k INT, name STRING")
-    direct = big.join(small, "k").groupBy("k", "name").count()
-    salted = salted_broadcast_join(big, small, on="k").groupBy("k", "name").count()
-    d = {(r["k"], r["name"]): r["count"] for r in direct.collect()}
-    s = {(r["k"], r["name"]): r["count"] for r in salted.collect()}
-    assert d == s
 
 
 def test_salt_deterministic_across_layouts(spark):
@@ -60,7 +47,7 @@ def test_salt_deterministic_across_layouts(spark):
 
 def test_salt_spreads_hot_key(spark):
     """A hot key's rows must still fan out over many salt buckets (hashing
-    only the join key would collapse them into one)."""
+    only the key would collapse them into one)."""
     from phoebe_spark.operators.skew import _content_salt
 
     big = spark.range(5_000).select(F.lit(1).alias("k"), F.col("id").alias("payload"))

@@ -6,7 +6,6 @@ reference's monitor->analyze->decide loop in streaming mode (SURVEY §2.10 +
 
 from __future__ import annotations
 
-import tempfile
 import time
 
 import numpy as np
@@ -15,17 +14,27 @@ from pyspark.sql import functions as F
 
 from phoebe_spark.models.twres import TwresModel
 from phoebe_spark.streaming import ProgressMetricsListener, sine_rate_source, windowed_keyed_agg
-from phoebe_spark.streaming.jobs import run_to_sink
 from phoebe_spark.timeseries.aggregates import slope_intercept, ts_summary
 
 
-def test_stream_metrics_to_decision(spark):
+def _start(agg, checkpoint: str, name: str):
+    """Start the open-ended rate-source job on an in-memory sink."""
+    return (
+        agg.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+
+
+def test_stream_metrics_to_decision(spark, tmp_path):
     listener = ProgressMetricsListener()
     spark.streams.addListener(listener)
     try:
         src = sine_rate_source(spark, rows_per_second=2000, period=120, num_keys=10)
         agg = windowed_keyed_agg(src, window="2 seconds", watermark="4 seconds", aggs={"events": "count"})
-        q = run_to_sink(agg, tempfile.mkdtemp(), queryName="qos_loop", trigger_available_now=False)
+        q = _start(agg, str(tmp_path), "qos_loop")
         deadline = time.time() + 30
         while time.time() < deadline and len(listener.rows) < 12:
             time.sleep(0.5)
@@ -70,7 +79,7 @@ def _run_interval(spark, parallelism, checkpoint, name, min_batches=4, timeout_s
     try:
         src = sine_rate_source(spark, rows_per_second=500, period=120, num_keys=8)
         agg = windowed_keyed_agg(src, window="1 seconds", watermark="2 seconds", aggs={"events": "count"})
-        q = run_to_sink(agg, checkpoint, queryName=name, trigger_available_now=False)
+        q = _start(agg, checkpoint, name)
         start = time.time()
         deadline = start + timeout_s
         while time.time() < deadline:
